@@ -105,32 +105,29 @@ object SegyExport {
       s"format-$formatCode sample", checked = true)
   }
 
-  /** Format-1 sample payload: each float IBM32-encoded by the native
-    * [[graft.functions.IbmFloatEncode]] kernel and packed big-endian —
-    * `nSamples` is fixed per file, so the concat is a literal-width plan.
+  /** Format-1 sample payload: an `array<float>` trace IBM32-encoded
+    * ([[graft.functions.IbmFloatEncode.encode]]) and packed big-endian in
+    * one loop per trace ([[graft.functions.FloatArrayPackExpr]]) —
+    * `nSamples` is fixed per file, so the record width is a plan literal.
     */
   def ibmPayload(samples: Column, nSamples: Int): Column =
-    graft.functions.BeIntArrayPack(
-      transform(samples, s => graft.functions.IbmFloatEncode(s)),
-      4, nSamples, "ibm32 sample", checked = false)
+    graft.functions.SampleCodec.encodeFloatsColumn(samples, ibm = true,
+      nSamples, "ibm32 sample")
 
-  /** Format-6 sample payload (SEG-Y rev-2 IEEE float64): each double's RAW
-    * bits ([[graft.functions.DoubleBits]] — NaN payloads survive) packed as
-    * an 8-byte big-endian word. `hex` of a long is already the full 64-bit
-    * two's-complement image, so no mask is needed; lpad covers the
-    * leading-zero case. Encode inverse of
-    * [[graft.sources.SegyRead.ieee64Samples]].
-    */
-  /** Format-5 sample payload (IEEE float32): each float's RAW bits
-    * ([[graft.functions.FloatBits]] — NaN payloads survive) packed
-    * big-endian by the array kernel. Encode inverse of
+  /** Format-5 sample payload (IEEE float32): each float's RAW bits (NaN
+    * payloads survive) packed big-endian by the same one-loop kernel as
+    * [[ibmPayload]]. Encode inverse of
     * [[graft.sources.SegyRead.ieeeSamples]].
     */
   def ieee32Payload(samples: Column, nSamples: Int): Column =
-    graft.functions.BeIntArrayPack(
-      transform(samples, s => graft.functions.FloatBits(s)),
-      4, nSamples, "ieee32 sample", checked = false)
+    graft.functions.SampleCodec.encodeFloatsColumn(samples, ibm = false,
+      nSamples, "ieee32 sample")
 
+  /** Format-6 sample payload (SEG-Y rev-2 IEEE float64): each double's RAW
+    * bits ([[graft.functions.DoubleBits]] — NaN payloads survive) packed as
+    * an 8-byte big-endian word ([[graft.functions.BeBytesPack]]). Encode
+    * inverse of [[graft.sources.SegyRead.ieee64Samples]].
+    */
   def ieee64Payload(samples: Column, nSamples: Int): Column =
     concat((1 to nSamples).map { i =>
       graft.functions.BeBytesPack(

@@ -132,8 +132,7 @@ final case class BeDoubleAtExpr(bin: Expression, pos: Expression)
 
 /** `Double.doubleToRawLongBits` as a native expression — the encode dual of
   * [[BeDoubleAtExpr]] (raw bits, so even NaN payloads round-trip
-  * bit-exactly); the caller packs the long big-endian (hex/lpad, same
-  * shape as the IBM32 encode path).
+  * bit-exactly); the caller packs the long big-endian ([[BeBytesPack]]).
   */
 object DoubleBits {
   def apply(c: Column): Column =
@@ -232,7 +231,8 @@ final case class BeBytesPackExpr(child: Expression, width: Int,
 
 /** An `array<int>` sample vector packed big-endian at `width` bytes per
   * element in ONE kernel — the payload encoder of the SEG-Y export sink
-  * (formats 2/3/8 directly; format 1/5/6 feed it the encoded words).
+  * for the integer formats 2/3/8 (its float sibling for formats 1/5 is
+  * [[FloatArrayPackExpr]]).
   * Enforces the file's fixed sample count (`expectLen`; SEG-Y records are
   * fixed-length, a ragged array must fail at encode, not corrupt the
   * file), and per-element range when `checked` (widths below 4 bytes).
@@ -297,31 +297,5 @@ final case class BeIntArrayPackExpr(child: Expression, width: Int,
   }
 
   override protected def withNewChildInternal(newChild: Expression): BeIntArrayPackExpr =
-    copy(child = newChild)
-}
-
-/** `Float.floatToRawIntBits` as a native expression — the encode dual of
-  * [[IeeeFloat32]] (raw bits, NaN payloads included); the caller packs the
-  * int big-endian ([[BeIntArrayPack]]).
-  */
-object FloatBits {
-  def apply(c: Column): Column =
-    ColumnBridge.column(FloatBitsExpr(ColumnBridge.expression(c)))
-}
-
-final case class FloatBitsExpr(child: Expression)
-    extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "float_bits"
-
-  override protected def nullSafeEval(input: Any): Any =
-    java.lang.Float.floatToRawIntBits(input.asInstanceOf[Float])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, f =>
-      s"${ev.value} = java.lang.Float.floatToRawIntBits($f);")
-
-  override protected def withNewChildInternal(newChild: Expression): FloatBitsExpr =
     copy(child = newChild)
 }

@@ -20,13 +20,20 @@ import org.apache.spark.sql.types.{DataType, FloatType}
   * loop.
   */
 object IbmFloatDecode {
-  /** Scalar decode, shared by interpreted eval and tests. */
+  /** 16^(e − 64) for every 7-bit exponent e — the same doubles
+    * `math.pow(16.0, e − 64)` returns (each is a power of two, exact).
+    */
+  private val Pow16: Array[Double] =
+    Array.tabulate(128)(e => math.pow(16.0, (e - 64).toDouble))
+
+  /** Scalar decode, shared by interpreted eval, the whole-trace decode
+    * ([[SampleCodec.decode]]) and tests.
+    */
   def decode(bits: Int): Float = {
     if ((bits & 0x7fffffff) == 0) return 0.0f
     val sign = if ((bits & 0x80000000) != 0) -1.0 else 1.0
-    val exponent = (bits >>> 24) & 0x7f
     val fraction = (bits & 0x00ffffff).toDouble / 0x1000000.toDouble // 16^6 scale
-    (sign * fraction * math.pow(16.0, (exponent - 64).toDouble)).toFloat
+    (sign * fraction * Pow16((bits >>> 24) & 0x7f)).toFloat
   }
 
   def apply(c: Column): Column =
@@ -78,7 +85,8 @@ final case class IbmFloat32(child: Expression)
   * C encoder.
   */
 object IbmFloatEncode {
-  /** Scalar encode, shared by interpreted eval and tests. Exponent derives
+  /** Scalar encode, shared by the whole-trace encode
+    * ([[SampleCodec.encodeFloats]]) and tests. Exponent derives
     * from the IEEE bit layout (`getExponent`/`scalb`), not a log — exact at
     * every power-of-16 boundary.
     */
@@ -95,51 +103,4 @@ object IbmFloatEncode {
     if (biased < 0) return 0 // underflow to zero
     sign | (biased << 24) | (f24.toInt & 0x00ffffff)
   }
-
-  def apply(c: Column): Column =
-    ColumnBridge.column(IbmFloat32Enc(ColumnBridge.expression(c)))
-}
-
-final case class IbmFloat32Enc(child: Expression)
-    extends UnaryExpression with Serializable {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "ibm_float32_enc"
-
-  override protected def nullSafeEval(input: Any): Any =
-    IbmFloatEncode.encode(input.asInstanceOf[Float])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.IbmFloatEncode.encode($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): IbmFloat32Enc =
-    copy(child = newChild)
-}
-
-/** IEEE-754 bit pattern → float32 (SEG-Y sample format 5; the trivial
-  * sibling of [[IbmFloat32]] for rev-1+ files). Codegen inlines to the
-  * JVM intrinsic.
-  */
-object IeeeFloat32Decode {
-  def apply(c: Column): Column =
-    ColumnBridge.column(IeeeFloat32(ColumnBridge.expression(c)))
-}
-
-final case class IeeeFloat32(child: Expression)
-    extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = FloatType
-  override def prettyName: String = "ieee_float32"
-
-  override protected def nullSafeEval(input: Any): Any =
-    java.lang.Float.intBitsToFloat(input.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bits =>
-      s"${ev.value} = java.lang.Float.intBitsToFloat($bits);")
-
-  override protected def withNewChildInternal(newChild: Expression): IeeeFloat32 =
-    copy(child = newChild)
 }

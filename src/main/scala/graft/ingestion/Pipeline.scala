@@ -226,7 +226,7 @@ object IngestPipeline {
     // (graft.operators.Stats.ingestStatsAggs): the fsck recomputes exactly
     // what this records, so the two can never drift apart. Scalar path
     // masks non-zero values; array path (the CLI's standard-SEG-Y import)
-    // covers every non-zero sample inside higher-order functions — no
+    // folds every non-zero sample in one compiled pass per trace — no
     // explode, no extra shuffle — like the reference's per-sample ingest
     // stats (`segy/_workers.py:179-194`), and adds the max trace length
     // (the vertical dimension's size, recorded so export never scans).

@@ -80,11 +80,12 @@ object Stats {
     * the exact, no-tolerance comparison): masked non-zero count / native
     * min/max cast to double / exact decimal sums cast string→double
     * (decimal→double is engine-dependent past 2^53; string parse is
-    * correctly rounded everywhere). The array path filters per element
-    * inside higher-order functions and adds the max trace length. Keeping
-    * both consumers on this method is what makes validate's equality
-    * sound — a drift between recorder and recomputer is a false alarm
-    * factory.
+    * correctly rounded everywhere). The array path folds each trace once
+    * in [[graft.functions.TraceStatsExpr]] — DECIMAL(28, 6) sums per
+    * trace, NaN/±Inf samples rejected by name — and adds the max trace
+    * length. Keeping both consumers on this method is what makes
+    * validate's equality sound — a drift between recorder and recomputer
+    * is a false alarm factory.
     *
     * Returns (n, min, max, sum, sumSquares, maxLen — array path only),
     * unaliased: callers name them.
@@ -103,19 +104,15 @@ object Stats {
         sum(xd * xd).cast("string").cast("double"),
         None)
     } else {
-      val elems = filter(x, e => e.isNotNull && e =!= 0.0f)
-      val zero = lit(0).cast(DecimalType(28, 6))
-      // re-cast the accumulator each step: decimal + widens (29,6) and the
-      // higher-order aggregate requires the lambda to return the zero type
-      def decSum(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-        aggregate(elems, zero,
-          (acc, e) => (acc + f(e.cast(DecimalType(28, 6)))).cast(DecimalType(28, 6)))
-      (sum(coalesce(size(elems), lit(0)).cast("long")),
-        min(array_min(elems)).cast("double"),
-        max(array_max(elems)).cast("double"),
-        sum(decSum(identity)).cast("string").cast("double"),
-        sum(decSum(e => e * e)).cast("string").cast("double"),
-        Some(max(size(x)).cast("long")))
+      // one compiled pass per trace (graft.functions.TraceStatsExpr);
+      // Spark's sum/min/max merge the per-trace partials
+      val t = graft.functions.TraceStats(x)
+      (sum(t("n")),
+        min(t("min")).cast("double"),
+        max(t("max")).cast("double"),
+        sum(t("sum")).cast("string").cast("double"),
+        sum(t("sumsq")).cast("string").cast("double"),
+        Some(max(t("len")).cast("long")))
     }
   }
 

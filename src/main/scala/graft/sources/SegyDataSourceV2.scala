@@ -5,7 +5,6 @@ import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -77,13 +76,8 @@ private[graft] object SegyDataSourceV2 {
 
   def sampleType(formatCode: Int, raw: Boolean): DataType =
     if (raw) BinaryType
-    else formatCode match {
-      case 1 | 5     => ArrayType(FloatType, containsNull = false)
-      case 6         => ArrayType(DoubleType, containsNull = false)
-      case 2 | 3 | 8 => ArrayType(IntegerType, containsNull = false)
-      case c => throw new IllegalArgumentException(
-        s"unsupported SEG-Y sample format code $c (supported: 1, 2, 3, 5, 6, 8)")
-    }
+    else ArrayType(graft.functions.SampleCodec.elementType(formatCode),
+      containsNull = false)
 
   def resolveFields(csvOpt: Option[String]): Seq[HeaderField] =
     csvOpt.filter(_.nonEmpty) match {
@@ -578,44 +572,7 @@ private[sources] class SegyPartitionReader(path: String,
 
   private def decodeSamples(): Any =
     if (raw) java.util.Arrays.copyOf(payBuf, payBuf.length)
-    else formatCode match {
-      case 1 | 5 =>
-        val out = new Array[Float](nSamples)
-        var s = 0
-        while (s < nSamples) {
-          val o = s * 4
-          val bits = ((payBuf(o) & 0xff) << 24) | ((payBuf(o + 1) & 0xff) << 16) |
-            ((payBuf(o + 2) & 0xff) << 8) | (payBuf(o + 3) & 0xff)
-          out(s) =
-            if (formatCode == 1) graft.functions.IbmFloatDecode.decode(bits)
-            else java.lang.Float.intBitsToFloat(bits)
-          s += 1
-        }
-        new GenericArrayData(out)
-      case 6 =>
-        val out = new Array[Double](nSamples)
-        var s = 0
-        while (s < nSamples) {
-          var bits = 0L
-          var b = 0
-          while (b < 8) { bits = (bits << 8) | (payBuf(s * 8 + b) & 0xffL); b += 1 }
-          out(s) = java.lang.Double.longBitsToDouble(bits)
-          s += 1
-        }
-        new GenericArrayData(out)
-      case 2 | 3 | 8 =>
-        val out = new Array[Int](nSamples)
-        var s = 0
-        while (s < nSamples) {
-          var v = 0
-          var b = 0
-          while (b < sampleWidth) { v = (v << 8) | (payBuf(s * sampleWidth + b) & 0xff); b += 1 }
-          val shift = 32 - sampleWidth * 8
-          out(s) = (v << shift) >> shift
-          s += 1
-        }
-        new GenericArrayData(out)
-    }
+    else graft.functions.SampleCodec.decode(payBuf, 0, nSamples, formatCode)
 
   override def get(): InternalRow = row
 

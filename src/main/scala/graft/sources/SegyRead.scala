@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.export.SegyHeaders
-import graft.functions.IbmFloatDecode
 
 /** SEG-Y byte-stream ingest (S1/S2/S3 over a real file): the read half of
   * [[graft.export.SegyExport]] — 3200-byte EBCDIC/ASCII text header,
@@ -182,71 +181,45 @@ object SegyRead {
     close
   }
 
-  /** Decode an IBM32 sample payload to `array<float>` with the native
-    * [[graft.functions.IbmFloat32]] kernel — one codegen'd decode per
-    * 4-byte word, no UDF. `nSamples` is fixed per file (SEG-Y records are
-    * fixed-length), so the loop bound is a literal the optimizer sees.
+  /** Decode an IBM32 sample payload (SEG-Y format 1) to `array<float>`:
+    * one [[graft.functions.SampleCodec]] loop per trace, each 4-byte word
+    * through [[graft.functions.IbmFloatDecode.decode]]. `nSamples` is
+    * fixed per file (SEG-Y records are fixed-length).
     */
   def ibmSamples(payload: Column, nSamples: Int): Column =
-    transform(sequence(lit(0), lit(nSamples - 1)),
-      i => IbmFloatDecode(beInt(payload, i)))
+    decodeSamples(payload, nSamples, 1)
 
   /** Decode a big-endian IEEE float32 payload (SEG-Y sample format 5) to
-    * `array<float>` with the native [[graft.functions.IeeeFloat32]] kernel.
+    * `array<float>`, raw-bit exact (NaN payloads and −0 included).
     */
   def ieeeSamples(payload: Column, nSamples: Int): Column =
-    transform(sequence(lit(0), lit(nSamples - 1)),
-      i => graft.functions.IeeeFloat32Decode(beInt(payload, i)))
+    decodeSamples(payload, nSamples, 5)
 
   /** Decode a big-endian IEEE float64 payload (SEG-Y sample format 6,
-    * rev-2) to `array<double>` with the native
-    * [[graft.functions.BeDoubleAt]] kernel — eight-byte words, raw-bit
-    * exact (NaN payloads included).
+    * rev-2) to `array<double>`, raw-bit exact (NaN payloads included).
     */
   def ieee64Samples(payload: Column, nSamples: Int): Column =
-    transform(sequence(lit(0), lit(nSamples - 1)),
-      i => graft.functions.BeDoubleAt(payload, (i * 8).cast("int")))
+    decodeSamples(payload, nSamples, 6)
 
   /** Decode an integer sample payload (SEG-Y formats 2=int32, 3=int16,
-    * 8=int8) to `array<int>` — signed big-endian words read natively by
-    * [[graft.functions.BeIntAt]], one codegen'd array index per sample.
-    * Real field data very often ships format 3; the reference gets these
-    * from the `segy` package's transforms (`segy/file.py:152-186`).
+    * 8=int8) to `array<int>` — signed big-endian words. Real field data
+    * very often ships format 3; the reference gets these from the `segy`
+    * package's transforms (`segy/file.py:152-186`).
     */
   def intSamples(payload: Column, nSamples: Int, formatCode: Int): Column = {
     require(formatCode == 2 || formatCode == 3 || formatCode == 8,
       s"intSamples decodes formats 2/3/8, got $formatCode (use ibmSamples/ieeeSamples for 1/5)")
-    val w = bytesPerSample(formatCode)
-    transform(sequence(lit(0), lit(nSamples - 1)),
-      i => graft.functions.BeIntAt(payload, (i * w).cast("int"), w))
+    decodeSamples(payload, nSamples, formatCode)
   }
 
   /** Decode any supported sample format to its natural element type:
     * `array<float>` for 1 (IBM32) and 5 (IEEE32), `array<double>` for 6
-    * (IEEE64), `array<int>` for 2/3/8 — the per-format dispatch a
-    * standard-layout open path needs once [[standardInfo]] has read the
-    * format code.
+    * (IEEE64), `array<int>` for 2/3/8 — one compiled loop per trace
+    * ([[graft.functions.SampleDecodeExpr]]), the same codec the DSv2 scan
+    * decodes with. A payload shorter than `nSamples` samples fails loudly.
     */
   def decodeSamples(payload: Column, nSamples: Int, formatCode: Int): Column =
-    formatCode match {
-      case 1 => ibmSamples(payload, nSamples)
-      case 5 => ieeeSamples(payload, nSamples)
-      case 6 => ieee64Samples(payload, nSamples)
-      case 2 | 3 | 8 => intSamples(payload, nSamples, formatCode)
-      case 4 => throw new IllegalArgumentException(
-        "SEG-Y sample format 4 (obsolete fixed-point with gain code) is not " +
-          "supported — re-export the file as format 1 (IBM32), 5 (IEEE32) " +
-          "or 6 (IEEE64)")
-      case c => throw new IllegalArgumentException(
-        s"unsupported SEG-Y sample format code $c (supported: 1, 2, 3, 5, 6, 8)")
-    }
-
-  /** Signed big-endian 32-bit word `i` (0-based) of a binary column —
-    * native byte access ([[graft.functions.BeIntAt]]), no hex-string
-    * round-trip.
-    */
-  private def beInt(bin: Column, i: Column): Column =
-    graft.functions.BeIntAt(bin, (i * 4).cast("int"), 4)
+    graft.functions.SampleCodec.decodeColumn(payload, nSamples, formatCode)
 
   // ---------------------------------------------- standard rev-1 layout
 
@@ -292,18 +265,8 @@ object SegyRead {
   /** Bytes per sample for the standard binary-header format code
     * (1=IBM32, 2=int32, 3=int16, 5=IEEE32, 6=IEEE64, 8=int8).
     */
-  def bytesPerSample(formatCode: Int): Int = formatCode match {
-    case 1 | 2 | 5 => 4
-    case 3 => 2
-    case 6 => 8
-    case 8 => 1
-    case 4 => throw new IllegalArgumentException(
-      "SEG-Y sample format 4 (obsolete fixed-point with gain code) is not " +
-        "supported — re-export the file as format 1 (IBM32), 5 (IEEE32) " +
-        "or 6 (IEEE64)")
-    case c => throw new IllegalArgumentException(
-      s"unsupported SEG-Y sample format code $c (supported: 1, 2, 3, 5, 6, 8)")
-  }
+  def bytesPerSample(formatCode: Int): Int =
+    graft.functions.SampleCodec.bytesPerSample(formatCode)
 
   /** Self-describing file info for a STANDARD-layout file: samples per
     * trace (binary-header bytes 21-22), sample interval (17-18) and format

@@ -11,3 +11,15 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** Bridge to Spark's sql-package-private decimal precision check, so a
+  * native kernel rounds and overflows exactly as a DECIMAL cast does:
+  * HALF_UP to `scale`, and NUMERIC_VALUE_OUT_OF_RANGE (never null) when
+  * the value needs more than `precision` digits.
+  */
+object DecimalBridge {
+  def toPrecision(d: org.apache.spark.sql.types.Decimal, precision: Int,
+                  scale: Int): org.apache.spark.sql.types.Decimal =
+    d.toPrecision(precision, scale, org.apache.spark.sql.types.Decimal.ROUND_HALF_UP,
+      nullOnOverflow = false)
+}
