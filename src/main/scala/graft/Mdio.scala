@@ -86,7 +86,9 @@ object Mdio {
                     template: DatasetTemplate, overrides: GridOverrides,
                     path: String, valueCol: String,
                     sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
-                    ignoreChecks: Boolean = false): IngestPipeline.IngestResult = {
+                    ignoreChecks: Boolean = false,
+                    attributes: Map[String, String] = Map.empty)
+      : IngestPipeline.IngestResult = {
     val traces = spark.read.format("segy")
       .option("fields", fields.mkString(","))
       .load(segyDir)
@@ -96,19 +98,20 @@ object Mdio {
         "carry no source_file; use segyFileToMdio)")
     IngestPipeline.ingest(spark, traces, template, overrides, path,
       ordinal = Seq("source_file", "trace_index"), valueCol = valueCol,
-      sparsityWarn, sparsityError, ignoreChecks)
+      sparsityWarn, sparsityError, ignoreChecks, attributes = attributes)
   }
 
   /** E1–E5: masked, globally ordered SEG-Y export of an open store. The
     * samples column must survive the header projection, so it rides the
     * `headerFields` of the masked select and is then serialized as the
-    * trace payload.
+    * trace payload. The writer takes its trace order from the sort's
+    * partitions ([[graft.export.SegyExport.maskedOrder]]).
     */
   def mdioToSegy(handle: MdioDatasetHandle, outFile: String, mask: Column,
                  dims: Seq[String], headerFields: Seq[String],
                  orderKeys: Seq[String], samplesCol: String,
                  textHeader: Seq[String], binaryHeader: Array[Byte]): Unit = {
-    val ordered = graft.export.SegyExport.maskedExport(
+    val ordered = graft.export.SegyExport.maskedOrder(
       handle.df, mask, dims, (headerFields :+ samplesCol).distinct, orderKeys)
     val records = graft.export.SegyExport.serializeTraces(
       ordered, headerFields, samplesCol)
@@ -131,7 +134,7 @@ object Mdio {
                          textHeader: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.col
     val headerCols = fieldCols.map(_._2)
-    val ordered = graft.export.SegyExport.maskedExport(
+    val ordered = graft.export.SegyExport.maskedOrder(
       handle.df, mask, dims, (headerCols :+ samplesCol).distinct, orderKeys)
     val records = graft.export.SegyExport.serializeStandardTraces(
       ordered.withColumn("_pay",

@@ -16,6 +16,9 @@ import graft.operators.{GlobalOrder, Masking, Projection}
   */
 object SegyExport {
 
+  /** The object-store concat found a partition's part file missing. */
+  final class MissingPartFileError(msg: String) extends RuntimeException(msg)
+
   /** E1: export rechunk — repartition into ~`targetMb` range partitions on
     * the export order keys (`segy/utilities.py:146-198` targets ~300 MB,
     * fastest-varying axis first).
@@ -340,13 +343,20 @@ object SegyExport {
         finally os.close()
         Iterator.single(1)
       }.count().toInt
+      // every partition writes its part, empty or not: a missing one is
+      // lost traces, never a part to skip. A failed concat leaves no
+      // truncated output behind.
       val fs = outPath.getFileSystem(conf)
-      val os = fs.create(outPath, true)
+      val parts = new org.apache.hadoop.fs.Path(partsDir)
       try {
-        os.write(head)
-        (0 until nParts).foreach { i =>
-          val part = new org.apache.hadoop.fs.Path(f"$partsDir/part-$i%05d")
-          if (fs.exists(part)) {
+        val os = fs.create(outPath, true)
+        try {
+          os.write(head)
+          (0 until nParts).foreach { i =>
+            val part = new org.apache.hadoop.fs.Path(parts, f"part-$i%05d")
+            if (!fs.exists(part)) throw new MissingPartFileError(
+              s"SEG-Y export of $outFile: part file $part is missing " +
+                s"($nParts partitions wrote parts)")
             val in = fs.open(part)
             try {
               val buf = new Array[Byte](1 << 20)
@@ -354,22 +364,34 @@ object SegyExport {
               while (n > 0) { os.write(buf, 0, n); n = in.read(buf) }
             } finally in.close()
           }
-        }
-      } finally os.close()
-      fs.delete(new org.apache.hadoop.fs.Path(partsDir), true)
+        } finally os.close()
+      } catch {
+        case scala.util.control.NonFatal(e) => fs.delete(outPath, false); throw e
+      } finally fs.delete(parts, true)
     }
   }
 
-  /** E5: the masked-export pipeline. Returns the globally ordered, masked,
-    * projected trace table with a contiguous `seq` — what the part-file
-    * writer consumes.
+  /** E5: the masked-export pipeline — mask, header projection, then a
+    * range-partitioned global sort on `orderKeys`. The sort's partitions
+    * ARE the global order, which is all [[writeSegy]] needs: it takes its
+    * write order and byte offsets from them, so no sequence column is paid
+    * for.
     */
-  def maskedExport(df: DataFrame, mask: Column, dims: Seq[String],
-                   headerFields: Seq[String], orderKeys: Seq[String]): DataFrame = {
+  def maskedOrder(df: DataFrame, mask: Column, dims: Seq[String],
+                  headerFields: Seq[String], orderKeys: Seq[String]): DataFrame = {
     val selected = Masking.maskedSelect(df, mask, dims,
       (headerFields ++ orderKeys).distinct)
-    val projected = Projection.projectToSpec(selected,
+    Projection.projectToSpec(selected,
       (orderKeys ++ headerFields.filterNot(orderKeys.contains)).distinct)
-    GlobalOrder.withGlobalSeq(projected, orderKeys)
+      .orderBy(orderKeys.map(col): _*)
   }
+
+  /** [[maskedOrder]] plus a contiguous 0-based `seq` column
+    * ([[GlobalOrder.withGlobalSeq]]): each trace's position in the export,
+    * for callers that need it as data.
+    */
+  def maskedExport(df: DataFrame, mask: Column, dims: Seq[String],
+                   headerFields: Seq[String], orderKeys: Seq[String]): DataFrame =
+    GlobalOrder.withGlobalSeq(
+      maskedOrder(df, mask, dims, headerFields, orderKeys), orderKeys)
 }

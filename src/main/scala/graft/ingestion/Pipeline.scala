@@ -45,13 +45,16 @@ object IngestPipeline {
     *   240-byte `raw_headers` V240 variable stored beside the parsed columns
     *   (the reference's raw-headers ingest switch,
     *   `ingestion/segy/raw_headers.py:32-64`)
+    * @param attributes extra dataset attributes for the sidecar, beside the
+    *   grid-override provenance (e.g. the source file's sample interval)
     */
   def ingest(spark: SparkSession, traces: DataFrame, template: DatasetTemplate,
              overrides: GridOverrides, path: String,
              ordinal: Seq[String], valueCol: String,
              sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
              ignoreChecks: Boolean = false,
-             rawHeaderFields: Seq[String] = Nil): IngestResult = {
+             rawHeaderFields: Seq[String] = Nil,
+             attributes: Map[String, String] = Map.empty): IngestResult = {
 
     // 1-2: resolve schema; validate override/template pairing and required
     // header fields
@@ -143,7 +146,7 @@ object IngestPipeline {
         // jobs ONLY in the pathological case; the common case keeps the
         // single two-level aggregate (no countDistinct Expand riding along:
         // measured +0.9s on the sf0.1 ingest when it did).
-        val maxVals = math.min(driverMaxDimValues(spark), Int.MaxValue - 2L).toInt
+        val maxVals = math.min(Dimensions.driverMaxValues(spark), Int.MaxValue - 2L).toInt
         val aggs = Seq(sum(col("_cnt")).as("n_rows"),
             max(col("_cnt")).as("__max_cnt")) ++
           cells.map(d => slice(sort_array(collect_set(col(d))), 1, maxVals + 1)
@@ -261,7 +264,8 @@ object IngestPipeline {
            Left(ScalarType.Bytes240)))),
       metadata = DatasetMetadata(resolved.name, "1.0.0",
         java.time.Instant.now().toString,
-        attributes = overrides.toLegacyMap), // grid-override provenance (ingestion/metadata.py:12-19)
+        // grid-override provenance (ingestion/metadata.py:12-19)
+        attributes = overrides.toLegacyMap ++ attributes),
       dimensions = dimSizes(verticalSize))
 
     // the write IS the stats scan — observation resolves once it completes
@@ -293,7 +297,7 @@ object IngestPipeline {
     // each is an independent one-task job, and serial submission turns
     // per-job scheduling latency into wall time.
     val stored = MdioDataset.open(spark, path).df
-    val maxDimVals = driverMaxDimValues(spark)
+    val maxDimVals = Dimensions.driverMaxValues(spark)
     val tailWrites: Seq[() => Unit] = (dimValues match {
       case Some(vals) => gridDims.map(d => () => withDesc(spark, s"dim table $d") {
         if (vals.contains(d))
@@ -349,18 +353,6 @@ object IngestPipeline {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** Dim-vector cardinality gate (`graft.dims.driverMaxValues`, default
-    * 10⁶): a dim vector is normally metadata-sized — grid axis labels, held
-    * as in-memory arrays by the reference too — but nothing FORCES that, and
-    * a pathological 10⁸-distinct dim would OOM the driver on the collect_set
-    * round-trip. Above the gate the vector never visits the driver: the
-    * table writes as a distributed `distinct().orderBy().write`. Same
-    * size-vs-strategy trade as `graft.cc.driverMaxEdges`.
-    */
-  private[ingestion] def driverMaxDimValues(spark: SparkSession): Long =
-    spark.conf.getOption("graft.dims.driverMaxValues").map(_.toLong)
-      .getOrElse(1000000L)
-
   /** G1/C2 ingest tail: every DRIVER-SAFE dim vector from ONE column-pruned
     * aggregate scan (collect_set per dim, map-side combined, shuffle
     * O(cardinality)) — each table then sorts and writes its handful of rows
@@ -406,30 +398,10 @@ object IngestPipeline {
                              values: Seq[Any], path: String, d: String): Unit =
     spark.createDataFrame(
         spark.sparkContext.parallelize(
-          sortDriverSide(dt, values).map(org.apache.spark.sql.Row(_)), 1),
+          Dimensions.sortDriverSide(dt, values).map(org.apache.spark.sql.Row(_)), 1),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("dim_value", dt))))
       .write.mode("overwrite").parquet(s"$path/dims/$d")
-
-  /** Ascending sort of an in-driver dim vector, matching Spark's ORDER BY
-    * for the dim types a grid can carry (integral, fractional, string,
-    * date/time carried as their underlying numeric/comparable).
-    */
-  private[ingestion] def sortDriverSide(
-      dt: org.apache.spark.sql.types.DataType, values: Seq[Any]): Seq[Any] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        values.sortBy(_.asInstanceOf[Number].longValue())
-      case FloatType | DoubleType =>
-        values.sortBy(_.asInstanceOf[Number].doubleValue())
-      case _: DecimalType =>
-        values.sortBy(_.asInstanceOf[java.math.BigDecimal])(
-          Ordering.ordered[java.math.BigDecimal])
-      case StringType => values.sortBy(_.asInstanceOf[String])
-      case _ => values.sortBy(_.toString) // defensive: unknown dim type
-    }
-  }
 
   /** C1/C2 ingest tail: coordinates sharing a cell-dim set are reduced in
     * ONE groupBy pass (multiple min_by aggregates); each coordinate table is

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Dimension inference — the reference's grid-coordinate layer.
   *
@@ -54,5 +55,43 @@ object Dimensions {
           approx_count_distinct(col(d), rsd).as(s"${d}_n"))
     }
     df.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Dim-vector cardinality gate (`graft.dims.driverMaxValues`, default
+    * 10⁶): a dim vector is normally metadata-sized — grid axis labels, held
+    * as in-memory arrays by the reference too — but nothing FORCES that, and
+    * a pathological 10⁸-distinct dim would OOM the driver. At or below the
+    * gate a dim vector may visit the driver (the ingest's dim tables, the
+    * J1 broadcast index, `isel`'s position arithmetic); above it every one
+    * of those paths stays distributed. Same size-vs-strategy trade as
+    * `graft.cc.driverMaxEdges`.
+    */
+  def driverMaxValues(spark: SparkSession): Long =
+    spark.conf.getOption("graft.dims.driverMaxValues").map(_.toLong)
+      .getOrElse(1000000L)
+
+  /** Ascending sort of an in-driver dim vector, matching Spark's
+    * `ORDER BY … ASC` for the dim types a grid can carry: nulls first, NaN
+    * after every number, strings in UTF-8 byte order (date/time and other
+    * types fall back to their string form).
+    */
+  def sortDriverSide(dt: DataType, values: Seq[Any]): Seq[Any] = {
+    val (nulls, present) = values.partition(_ == null)
+    val sorted = dt match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        present.sortBy(_.asInstanceOf[Number].longValue())
+      case FloatType | DoubleType =>
+        present.sortBy(_.asInstanceOf[Number].doubleValue())(
+          Ordering.Double.TotalOrdering)
+      case _: DecimalType =>
+        present.sortBy(_.asInstanceOf[java.math.BigDecimal])(
+          Ordering.ordered[java.math.BigDecimal])
+      case StringType =>
+        present.sortBy(v => org.apache.spark.unsafe.types.UTF8String
+          .fromString(v.asInstanceOf[String]))(
+          Ordering.ordered[org.apache.spark.unsafe.types.UTF8String])
+      case _ => present.sortBy(_.toString) // defensive: unknown dim type
+    }
+    nulls ++ sorted
   }
 }

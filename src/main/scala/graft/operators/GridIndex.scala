@@ -34,11 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object GridIndex {
 
-  /** Same knob as the ingest tail's dim-vector gate (default 10⁶). */
-  private def dimGate(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.dims.driverMaxValues").map(_.toLong)
-      .getOrElse(1000000L)
-
   /** Sorted-distinct dim values with 0-based ordinal — the searchsorted table. */
   def dimIndex(df: DataFrame, dim: String): DataFrame = {
     val w = Window.orderBy(col(dim))
@@ -73,7 +68,7 @@ object GridIndex {
     */
   def withDimIndices(df: DataFrame, dims: Seq[String],
                      cardinalities: Map[String, Long] = Map.empty): DataFrame = {
-    val gate = dimGate(df)
+    val gate = Dimensions.driverMaxValues(df.sparkSession)
     val precheck = df.sparkSession.conf
       .getOption("graft.dims.precheck").forall(_.toBoolean)
     val unknown = dims.filterNot(cardinalities.contains)

@@ -49,53 +49,89 @@ object Selection {
   /** `isel(dim = [i1, i2, ...])` — position list. */
   final case class IValues(is: Seq[Long]) extends ISel
 
-  /** Resolve a positional selection against the dim's coordinate table
-    * (sorted distinct `dim_value`, the store's `dims/<dim>` sidecar) into a
-    * LABEL selection, which then prunes like any `sel`. Positions attach
-    * via the two-pass prefix-sum sequence (no single-partition window), and
-    * only parameter-many labels ever reach the driver: a point collects
-    * one row, a list collects its positions, and a slice reduces to its
-    * min/max label — contiguous positions on a sorted table ARE a label
-    * range, so the predicate stays `between` (row-group prunable).
-    *
-    * Reference: `api/io.py` datasets expose sel/isel; positional lookups
-    * there are xarray index arithmetic over the coordinate arrays.
+  /** Resolve a positional selection over a dim's SORTED label vector
+    * (Spark's `ORDER BY … ASC`: nulls first, NaN last) into a LABEL
+    * selection, which then prunes like any `sel`. Pure index arithmetic,
+    * as in the reference, where `isel` indexes the in-memory coordinate
+    * arrays of an opened dataset (`api/io.py`). A slice reduces to its
+    * first non-null and last labels: contiguous positions of a sorted
+    * vector ARE a label range, so the predicate stays `between` (row-group
+    * prunable). A null label matches no predicate, so a slice over nulls
+    * alone is empty.
     */
-  def resolvePositional(dimTable: DataFrame, isel: ISel): Sel = {
-    val seqd = GlobalOrder.withGlobalSeq(
-      dimTable.select(col("dim_value")), Seq("dim_value"))
-    // size is only needed to resolve negative indices — skip the count
-    // otherwise
-    def size(): Long = dimTable.count()
-    def norm(i: Long): Long = if (i < 0) size() + i else i
+  def resolvePositional(labels: IndexedSeq[Any], isel: ISel): Sel = {
+    val firstPresent = labels.indexWhere(_ != null)
+    val nulls = if (firstPresent < 0) labels.length else firstPresent
+    resolveAt(labels.length.toLong, nulls.toLong, isel)(
+      _.map(p => labels(p.toInt)))
+  }
+
+  /** The xarray semantics of [[ISel]] over a sorted vector of `size`
+    * labels whose first `nulls` are null. `labelsAt` fetches the labels at
+    * in-range positions, in the order asked.
+    */
+  private def resolveAt(size: Long, nulls: Long, isel: ISel)(
+      labelsAt: Seq[Long] => Seq[Any]): Sel = {
+    def norm(i: Long): Long = if (i < 0) size + i else i
+    def inBounds(i: Long): Boolean = i >= 0 && i < size
     isel match {
       case IPoint(i0) =>
         val i = norm(i0)
-        val hit = seqd.where(col("seq") === i).select("dim_value").collect()
-        if (hit.isEmpty) throw new IndexOutOfBoundsException(
-          s"isel position $i0 out of bounds for dim of size ${size()}")
-        Point(hit.head.get(0))
+        if (!inBounds(i)) throw new IndexOutOfBoundsException(
+          s"isel position $i0 out of bounds for dim of size $size")
+        Point(labelsAt(Seq(i)).head)
       case ISlice(s0, e0) =>
-        val (s, e) = (norm(s0), norm(e0))
+        val s = math.max(math.max(norm(s0), 0L), nulls)
+        val e = math.min(norm(e0), size)
         if (e <= s) Values(Nil)
         else {
-          val bounds = seqd.where(col("seq") >= s && col("seq") < e)
-            .agg(min(col("dim_value")), max(col("dim_value"))).collect().head
-          if (bounds.isNullAt(0)) Values(Nil) // start beyond the end: empty
-          else Range(bounds.get(0), bounds.get(1))
+          val Seq(lo, hi) = labelsAt(Seq(s, e - 1))
+          Range(lo, hi)
         }
       case IValues(is0) =>
-        if (is0.isEmpty) Values(Nil)
-        else {
-          val is = is0.map(norm)
-          val hits = seqd.where(col("seq").isInCollection(is))
-            .select("dim_value").collect().map(_.get(0))
-          if (hits.length != is.distinct.length)
-            throw new IndexOutOfBoundsException(
-              s"isel positions ${is0.mkString(",")} out of bounds for dim of " +
-                s"size ${size()}")
-          Values(hits.toSeq)
-        }
+        val is = is0.map(norm)
+        if (!is.forall(inBounds)) throw new IndexOutOfBoundsException(
+          s"isel positions ${is0.mkString(",")} out of bounds for dim of " +
+            s"size $size")
+        Values(if (is.isEmpty) Nil else labelsAt(is))
+    }
+  }
+
+  /** A dim's label vector, sorted driver-side, from ONE bounded collect of
+    * its coordinate table (distinct labels in a `dim_value` column) — or
+    * None when the table holds more labels than `graft.dims.driverMaxValues`
+    * (the collect stops at gate + 1 rows, so the driver never holds more).
+    */
+  def sortedLabels(dimTable: DataFrame): Option[IndexedSeq[Any]] = {
+    val gate = Dimensions.driverMaxValues(dimTable.sparkSession)
+    val rows = dimTable.select(col("dim_value"))
+      .limit(math.min(gate, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length > gate) None
+    else Some(Dimensions.sortDriverSide(dimTable.schema("dim_value").dataType,
+      rows.toSeq.map(_.get(0))).toIndexedSeq)
+  }
+
+  /** Resolve `isel` against a dim's coordinate table (distinct labels in a
+    * `dim_value` column, any order — the store's `dims/<dim>` table). A dim
+    * within the gate is one collect plus [[resolvePositional]]'s
+    * arithmetic. A dim above it never visits the driver: its labels are
+    * numbered distributed ([[GlobalOrder.withGlobalSeq]]) and only the
+    * labels at the asked positions are collected.
+    */
+  def resolve(dimTable: DataFrame, isel: ISel): Sel =
+    sortedLabels(dimTable).fold(resolveDistributed(dimTable, isel))(
+      resolvePositional(_, isel))
+
+  private def resolveDistributed(dimTable: DataFrame, isel: ISel): Sel = {
+    val labels = dimTable.select(col("dim_value"))
+    val counts = labels.agg(count(lit(1)), count(col("dim_value"))).head()
+    val size = counts.getLong(0)
+    val seqd = GlobalOrder.withGlobalSeq(labels, Seq("dim_value"))
+    resolveAt(size, size - counts.getLong(1), isel) { ps =>
+      val at = seqd.where(col("seq").isInCollection(ps.distinct))
+        .select("seq", "dim_value").collect()
+        .map(r => r.getLong(0) -> r.get(1)).toMap
+      ps.map(at)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.operators.Selection
 import graft.schema.{MdioSchema, SchemaJson, NamedDimension, StoreLayout}
@@ -241,24 +242,29 @@ final case class MdioDatasetHandle(df: DataFrame, schema: MdioSchema, path: Stri
     Selection.sel(df, sels.toMap)
 
   /** POSITIONAL selection (xarray `isel`): integer positions along each
-    * dim's sorted coordinate order, resolved through the store's
-    * `dims/<dim>` table into label predicates — so an isel prunes row
-    * groups exactly like the equivalent sel. Stores written without the
-    * ingest pipeline have no dim tables; the coordinate order then derives
-    * from a distinct scan of the dim column (correct, one extra scan).
+    * dim's sorted coordinate order, resolved into label predicates — so an
+    * isel prunes row groups exactly like the equivalent sel. Each dim's
+    * label vector comes from the store's `dims/<dim>` table in one small
+    * job (read with the dim column's type, so no schema-inference job
+    * runs) and positions resolve on the driver
+    * ([[Selection.resolvePositional]]). Stores written without the ingest
+    * pipeline have no dim tables; the labels then come from a distinct
+    * scan of the dim column. A dim above `graft.dims.driverMaxValues`
+    * resolves distributed ([[Selection.resolve]]).
     */
   def isel(sels: (String, Selection.ISel)*): DataFrame = {
     val spark = df.sparkSession
     sels.foldLeft(df) { case (d, (dim, is)) =>
       val dimDir = s"$path/dims/$dim"
-      val hp = new org.apache.hadoop.fs.Path(dimDir)
+      val hp = new Path(dimDir)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val dimTable =
-        if (fs.exists(hp)) spark.read.parquet(dimDir)
-        else df.select(org.apache.spark.sql.functions.col(dim).as("dim_value"))
-          .distinct()
-      d.where(Selection.predicate(dim,
-        Selection.resolvePositional(dimTable, is)))
+        if (fs.exists(hp))
+          spark.read.schema(StructType(Seq(
+              StructField("dim_value", df.schema(dim).dataType))))
+            .parquet(dimDir)
+        else df.select(col(dim).as("dim_value")).distinct()
+      d.where(Selection.predicate(dim, Selection.resolve(dimTable, is)))
     }
   }
 

@@ -185,11 +185,12 @@ object Cli {
           s"directory import resolves fields by standard catalog name ($why); " +
             "custom --header-locations/--header-types apply to single files only")
       }
-      val res = graft.Mdio.segyDirToMdio(spark, segyPath, names, tmpl,
-        overrides, mdioPath, valueCol = "amplitude", sparsityError = 1e9)
       val (_, members) = graft.sources.SegyDataSourceV2
         .resolveFiles(spark, segyPath)
-      (res, SegyRead.standardInfo(spark, members.head))
+      val fi = SegyRead.standardInfo(spark, members.head)
+      (graft.Mdio.segyDirToMdio(spark, segyPath, names, tmpl,
+        overrides, mdioPath, valueCol = "amplitude", sparsityError = 1e9,
+        attributes = intervalAttribute(fi)), fi)
     } else {
       if (fields.isEmpty)
         throw CliError("single-file import needs --header-locations")
@@ -199,7 +200,8 @@ object Cli {
           SegyRead.decodeSamples(col("samples"), fi.nSamples, fi.formatCode))
       (graft.ingestion.IngestPipeline.ingest(spark, traces, tmpl,
         overrides, mdioPath, ordinal = Seq("trace_index"),
-        valueCol = "amplitude", sparsityError = 1e9), fi)
+        valueCol = "amplitude", sparsityError = 1e9,
+        attributes = intervalAttribute(fi)), fi)
     }
     if (!lossless) {
       val handle = Mdio.openMdio(spark, mdioPath)
@@ -209,6 +211,22 @@ object Cli {
       s"(grid cells ${r.nCells}, format ${info.formatCode}, " +
       s"${info.nSamples} samples @ ${info.sampleInterval} us)")
   }
+
+  /** Sidecar attribute holding the imported file's sample interval in µs
+    * (binary-header bytes 17-18), which `segy export` writes back. */
+  private[tools] val SampleIntervalAttr = "segySampleIntervalUs"
+
+  private def intervalAttribute(fi: SegyRead.StandardInfo): Map[String, String] =
+    Map(SampleIntervalAttr -> fi.sampleInterval.toString)
+
+  /** The recorded sample interval; 0 ("unknown" in SEG-Y) for a store
+    * that records none. */
+  private def recordedInterval(schema: graft.schema.MdioSchema): Int =
+    schema.metadata.attributes.get(SampleIntervalAttr).fold(0) { v =>
+      v.toIntOption.filter(i => i >= 0 && i <= 0xffff).getOrElse(
+        throw CliError(s"sidecar attribute $SampleIntervalAttr=$v is not a " +
+          "sample interval in 0..65535 us"))
+    }
 
   private def segyExport(spark: SparkSession, pos: Seq[String],
                          opts: Map[String, String]): Unit = {
@@ -240,29 +258,36 @@ object Cli {
     val nSamples = vertical
       .flatMap(v => handle.schema.dimensions.find(_.name == v))
       .map(_.size.toInt).getOrElse(1)
-    // header slots: known standard names keep their spec bytes; the rest
-    // take sequential free 4-byte words
+    val interval = recordedInterval(handle.schema)
+    // header slots: known standard names keep their spec bytes, every trace
+    // carries its sample count and interval (bytes 115-118), and the other
+    // dims take sequential free 4-byte words
     val byName: Map[String, SegyRead.HeaderField] = Seq(
       SegyRead.StandardFields.Inline, SegyRead.StandardFields.Crossline,
       SegyRead.StandardFields.SourcePoint, SegyRead.StandardFields.Offset,
       SegyRead.StandardFields.FieldRecord, SegyRead.StandardFields.TraceField,
       SegyRead.StandardFields.CdpEnsemble).map(f => f.name -> f).toMap
-    val taken = dims.flatMap(byName.get).map(_.byteOffset).toSet
+    val geometry = Seq(SegyRead.StandardFields.NSamples -> "__n_samples",
+      SegyRead.StandardFields.SampleInterval -> "__sample_interval")
+    val taken = (dims.flatMap(byName.get) ++ geometry.map(_._1))
+      .flatMap(f => f.byteOffset until f.byteOffset + f.bytes).toSet
     val free = Iterator.from(0).map(1 + _ * 4)
-      .filter(o => !taken.contains(o) && o + 3 <= 240)
+      .filter(o => (o until o + 4).forall(b => !taken.contains(b)) && o + 3 <= 240)
     val fieldCols = dims.map { d =>
       byName.get(d).getOrElse(SegyRead.HeaderField(d, free.next(), 4)) -> d
-    }
+    } ++ geometry
     val samples: Column =
       if (handle.df.schema(dataVar.name).dataType
             .isInstanceOf[org.apache.spark.sql.types.ArrayType])
         col(dataVar.name).cast("array<float>")
       else array(col(dataVar.name).cast("float"))
     val staged = handle.df.withColumn("__samples", samples)
+      .withColumn("__n_samples", lit(nSamples))
+      .withColumn("__sample_interval", lit(interval))
     Mdio.mdioToStandardSegy(
       handle.copy(df = staged), segyPath, mask = lit(true), dims = dims,
       fieldCols = fieldCols, orderKeys = dims, samplesCol = "__samples",
-      nSamples = nSamples, sampleInterval = 4000,
+      nSamples = nSamples, sampleInterval = interval,
       textHeader = graft.`export`.SegyHeaders.sanitizeTextHeader(
         Seq(s"C 1 EXPORTED FROM ${dataVar.name.toUpperCase}")))
     println(s"exported $mdioFile to $segyPath ($nSamples samples/trace)")

@@ -31,6 +31,24 @@ class DimensionsSpec extends SparkSpec {
     val cols = Dimensions.dimSummary(df, Seq("a", "a")).columns.toSeq
     assert(cols == Seq("a_min", "a_max", "a_n"))
   }
+
+  test("sortDriverSide orders a dim vector as Spark's ORDER BY ASC does") {
+    def sparkOrder(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+      df.orderBy("k").collect().toSeq.map(_.get(0))
+    def driverOrder(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+      Dimensions.sortDriverSide(df.schema("k").dataType,
+        df.collect().toSeq.map(_.get(0)))
+    val doubles = Seq[java.lang.Double](2.5, Double.NaN, null, -1.0, 0.0)
+      .toDF("k")
+    // NaN equals itself under java equality, not under ==
+    assert(driverOrder(doubles).map(String.valueOf) ==
+      sparkOrder(doubles).map(String.valueOf))
+    // UTF-8 byte order: U+FF5E sorts before the supplementary U+1F600,
+    // though its UTF-16 code unit is the larger
+    val strings = Seq("～", "😀", null, "a").toDF("k")
+    assert(driverOrder(strings) == sparkOrder(strings))
+    assert(driverOrder(strings) == Seq(null, "a", "～", "😀"))
+  }
 }
 
 class CountersSpec extends SparkSpec {
@@ -256,12 +274,23 @@ class SelectionSpec extends SparkSpec {
   }
 }
 
-class IselSpec extends SparkSpec {
-  import spark.implicits._
-  import Selection._
+/** xarray `isel` semantics, run once per resolver: `dimTable` is a dim
+  * whose sorted labels are 10, 20, 30, 40, 50, in the form the resolver
+  * takes, and `session` builds the handle cases' frames.
+  */
+abstract class IselCases extends SparkSpec {
+  import Selection.{IPoint, ISel, ISlice, IValues, Point, Range, Sel, Values}
 
-  // sorted coordinate table for a dim with values 10,20,30,40,50
-  private def dimTable = Seq(10, 20, 30, 40, 50).toDF("dim_value")
+  type Table
+  protected def dimTable: Table
+  protected def resolvePositional(t: Table, isel: ISel): Sel
+  protected lazy val session: org.apache.spark.sql.SparkSession = spark
+  import session.implicits._
+
+  private def handleOf(df: org.apache.spark.sql.DataFrame, path: String) =
+    graft.storage.MdioDatasetHandle(
+      df, graft.schema.MdioSchema(Nil,
+        graft.schema.DatasetMetadata("t", "1", "2026-01-01T00:00:00Z")), path)
 
   test("IPoint resolves a position to its label; negative counts from end") {
     assert(resolvePositional(dimTable, IPoint(0)) == Point(10))
@@ -297,13 +326,69 @@ class IselSpec extends SparkSpec {
 
   test("handle.isel without dim tables falls back to a distinct scan") {
     val df = Seq((10, 1.0), (20, 2.0), (30, 3.0), (30, 4.0)).toDF("k", "v")
-    val handle = graft.storage.MdioDatasetHandle(
-      df, graft.schema.MdioSchema(Nil,
-        graft.schema.DatasetMetadata("t", "1", "2026-01-01T00:00:00Z")),
-      "/nonexistent/isel_test_path")
+    val handle = handleOf(df, "/nonexistent/isel_test_path")
     val got = handle.isel("k" -> ISlice(1, 3)).agg(sum($"v")).as[Double]
       .collect().head
     assert(got == 9.0) // k in {20, 30}
+  }
+
+  test("handle.isel fallback positions follow ORDER BY ASC: nulls first, NaN last") {
+    val df = Seq[(java.lang.Double, Double)]((1.0, 1.0), (null, 2.0),
+      (Double.NaN, 3.0), (2.0, 4.0), (1.0, 5.0)).toDF("k", "v")
+    val labels = df.select($"k".as("dim_value")).distinct()
+    val ordered = df.select($"k").distinct().orderBy($"k").collect()
+      .map(r => r.get(0)).toSeq
+    assert(ordered.length == 4 && ordered.head == null)
+    // NaN compares unequal to itself under ==; java equality matches it
+    def label(s: Sel): Any = s match { case Point(v) => v; case o => o }
+    ordered.indices.foreach { i =>
+      val got = label(Selection.resolve(labels, IPoint(i)))
+      assert(java.util.Objects.equals(got, ordered(i)), s"position $i: $got")
+    }
+    val handle = handleOf(df, "/nonexistent/isel_nan_path")
+    def vs(is: ISel): Set[Double] =
+      handle.isel("k" -> is).select($"v").as[Double].collect().toSet
+    assert(vs(ISlice(0, 2)) == Set(1.0, 5.0))        // the null label matches no row
+    assert(vs(ISlice(1, 4)) == Set(1.0, 3.0, 4.0, 5.0))
+    assert(vs(IPoint(-1)) == Set(3.0))               // NaN sorts last
+    assert(vs(ISlice(0, 1)).isEmpty)                 // nulls alone: empty
+    intercept[IndexOutOfBoundsException](vs(IPoint(4)))
+  }
+}
+
+class IselSpec extends IselCases {
+  type Table = IndexedSeq[Any]
+  protected def dimTable: Table = IndexedSeq(10, 20, 30, 40, 50)
+  protected def resolvePositional(t: Table, isel: Selection.ISel): Selection.Sel =
+    Selection.resolvePositional(t, isel)
+}
+
+/** [[IselCases]] with `graft.dims.driverMaxValues=2` on a session of its
+  * own: every dim is over the gate, so each case takes the distributed arm
+  * of [[Selection.resolve]].
+  */
+class IselOverGateSpec extends IselCases {
+  override protected lazy val session = {
+    val s = spark.newSession()
+    s.conf.set("graft.dims.driverMaxValues", "2")
+    s
+  }
+  type Table = org.apache.spark.sql.DataFrame
+  protected def dimTable: Table = {
+    val s = session
+    import s.implicits._
+    Seq(30, 10, 50, 20, 40).toDF("dim_value")
+  }
+  protected def resolvePositional(t: Table, isel: Selection.ISel): Selection.Sel = {
+    assert(Selection.sortedLabels(t).isEmpty, "the gate must route past the driver")
+    Selection.resolve(t, isel)
+  }
+
+  test("sortedLabels collects a within-gate vector in ORDER BY order") {
+    val s = session
+    import s.implicits._
+    assert(Selection.sortedLabels(Seq(2, 1).toDF("dim_value")) ==
+      Some(IndexedSeq(1, 2)))
   }
 }
 

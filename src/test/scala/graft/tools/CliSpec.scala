@@ -64,7 +64,7 @@ class CliSpec extends SparkSpec {
   // ------------------------------------------------------- end-to-end cycle
 
   /** A 3×2-grid standard SEG-Y, 2 IBM32 samples per trace. */
-  private def writeFixture(): String = {
+  private def writeFixture(sampleInterval: Int = 4000): String = {
     val src = Seq(
       (1, 10, Array(1.5f, 2.5f)), (1, 11, Array(3.0f, 4.0f)),
       (2, 10, Array(5.0f, 6.0f)), (2, 11, Array(7.5f, 8.5f)),
@@ -78,9 +78,43 @@ class CliSpec extends SparkSpec {
     val f = Files.createTempDirectory("clispec").toString + "/in.sgy"
     SegyExport.writeSegy(records, f,
       SegyHeaders.sanitizeTextHeader(Seq("C 1 CLI SPEC")),
-      SegyExport.standardBinaryHeader(nSamples = 2, sampleInterval = 4000,
+      SegyExport.standardBinaryHeader(nSamples = 2, sampleInterval = sampleInterval,
         formatCode = 1))
     f
+  }
+
+  test("segy export writes the imported sample interval and per-trace " +
+    "geometry; a store that records none writes 0") {
+    val segy = writeFixture(sampleInterval = 2500)
+    val dir = Files.createTempDirectory("cliinterval").toString
+    val store = s"$dir/i.mdio"
+    assert(Cli.run(Seq("segy", "import", segy, store,
+      "--header-locations", "189,193",
+      "--header-names", "inline,crossline"), spark) == 0)
+    val schema = graft.storage.MdioDataset.readSidecar(spark, store).get
+    assert(schema.metadata.attributes.get(Cli.SampleIntervalAttr) == Some("2500"))
+
+    /** (binary interval, binary samples, per-trace (samples, interval)). */
+    def exported(name: String): (Int, Int, Set[(Int, Int)]) = {
+      val out = s"$dir/$name.sgy"
+      assert(Cli.run(Seq("segy", "export", store, out), spark) == 0)
+      val b = java.nio.ByteBuffer.wrap(
+        Files.readAllBytes(java.nio.file.Paths.get(out)))
+      def u16(off1: Int) = b.getShort(off1 - 1) & 0xffff
+      val record = 240 + 2 * 4
+      val traces = (0 until 6).map { t =>
+        val h = 3600 + t * record
+        (u16(h + 115), u16(h + 117))
+      }.toSet
+      (u16(3217), u16(3221), traces)
+    }
+    assert(exported("with") == ((2500, 2, Set((2, 2500)))))
+
+    // a store written before the interval was recorded: 0 means unknown
+    graft.storage.MdioDataset.writeSidecar(spark, store, schema.copy(
+      metadata = schema.metadata.copy(
+        attributes = schema.metadata.attributes - Cli.SampleIntervalAttr)))
+    assert(exported("without") == ((0, 2, Set((2, 0)))))
   }
 
   test("segy import → info → export → copy drive the facade end to end") {
