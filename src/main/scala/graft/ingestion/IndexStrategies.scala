@@ -59,18 +59,25 @@ sealed trait IndexStrategy {
 
   /** When the strategy appends a uniqueness counter (G3/G4): the cell dims
     * the counter partitions by. `(cellDims, counter)` is then unique BY
-    * CONSTRUCTION, so grid invariants are computable from the RAW header
-    * columns without running the counter window — the ingest pipeline uses
-    * this to keep its QC pass a pruned aggregate scan. Composite chains
-    * return None (an earlier stage may rewrite dim values).
+    * CONSTRUCTION, so grid invariants are computable from the header
+    * columns the counter sees, without running the counter window — the
+    * ingest pipeline uses this to keep its QC pass a pruned aggregate scan.
     */
   def counterCellDims(ctx: StrategyContext, available: Seq[String]): Option[Seq[String]] = None
+
+  /** True when the transform maps each row on its own, with no exchange or
+    * window over the rows (a detection pass over pruned header columns may
+    * run first). The ingest pipeline runs these stages on the source, before
+    * the store-layout exchange.
+    */
+  def rowLocal: Boolean = false
 }
 
 /** G2: identity (`index_strategies.py:108-113`). */
 case object RegularGridStrategy extends IndexStrategy {
   val name = "RegularGrid"
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame = df
+  override def rowLocal: Boolean = true
 }
 
 /** G7: constant-1 synthesis for dims missing from headers
@@ -80,23 +87,28 @@ final case class ComponentSynthesisStrategy(dims: Seq[String]) extends IndexStra
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame =
     dims.filterNot(df.columns.contains)
       .foldLeft(df)((d, dim) => Counters.synthesizeComponent(d, dim))
+  override def rowLocal: Boolean = true
 }
 
 /** G5: detect Type A/B channel geometry; rebase to 1..N per cable when the
-  * numbering is sequential (Type B). Detection is a metadata-sized aggregate
-  * + overlap join (`index_strategies.py:206-233`, `header_analysis.py:82-139`).
+  * numbering is sequential (Type B). Detection collects the per-cable
+  * channel ranges once and tests overlap on the driver; the rebase is a
+  * broadcast lookup in those rows, so the stage is row-local
+  * (`index_strategies.py:206-233`, `header_analysis.py:82-139`).
   */
 final case class ChannelWrappingStrategy(cable: String = "cable",
                                          channel: String = "channel") extends IndexStrategy {
   val name = "ChannelWrapping"
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame = {
-    val geom = Wrapping.detectChannelGeometry(df, cable, channel)
-      .collect().head.getAs[String]("geometry_type")
-    if (geom == "B")
-      Wrapping.rebaseChannels(df, cable, channel, out = channel + "_rebased")
+    val ranges = IngestPipeline.withDesc(df.sparkSession, "strategy detect") {
+      Wrapping.collectChannelRanges(df, cable, channel)
+    }
+    if (ranges.geometryType == "B")
+      ranges.rebase(df, out = channel + "_rebased")
         .drop(channel).withColumnRenamed(channel + "_rebased", channel)
     else df
   }
+  override def rowLocal: Boolean = true
 }
 
 /** G6: dense per-line shot_index. Detection (`header_analysis.py:142-191`):
@@ -111,9 +123,11 @@ final case class ShotWrappingStrategy(lineField: String, shotField: String = "sh
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame = {
     val numGuns =
       if (df.columns.contains(gunField))
-        Geometry.gunShotCounts(df, lineField, gunField, shotField)
-          .groupBy(col(lineField)).agg(count(lit(1)).as("n_guns"))
-          .agg(max(col("n_guns"))).first().getLong(0).toInt
+        IngestPipeline.withDesc(df.sparkSession, "strategy detect") {
+          Geometry.gunShotCounts(df, lineField, gunField, shotField)
+            .groupBy(col(lineField)).agg(count(lit(1)).as("n_guns"))
+            .agg(max(col("n_guns"))).first().getLong(0).toInt
+        }
       else 1
     if (alwaysCalculate || numGuns <= 1)
       Wrapping.shotIndexDenseRank(df, lineField, shotField)
@@ -166,6 +180,14 @@ final case class CompositeStrategy(strategies: Seq[IndexStrategy]) extends Index
     strategies.foldLeft(df)((d, s) => s.transform(d, ctx))
   override def schemaEffect: Option[SchemaEffect] =
     strategies.flatMap(_.schemaEffect).headOption
+  override def rowLocal: Boolean = strategies.forall(_.rowLocal)
+  /** A chain whose stages before its last are row-local keeps the last
+    * stage's counter cells: those stages rewrite dim values row by row, so
+    * the cells read off their output are the cells the counter sees. */
+  override def counterCellDims(ctx: StrategyContext, available: Seq[String]): Option[Seq[String]] =
+    if (strategies.nonEmpty && strategies.init.forall(_.rowLocal))
+      strategies.last.counterCellDims(ctx, available)
+    else None
 }
 
 /** G9: overrides + template hints → strategy chain
@@ -208,11 +230,20 @@ object IndexStrategyRegistry {
       else if (overrides.hasDuplicates)
         Some(DuplicateHandlingStrategy(coordFields)) else None,
     ).flatten
-    chain match {
-      case Seq() => RegularGridStrategy
-      case Seq(one) => one
-      case many => CompositeStrategy(many)
-    }
+    compose(chain)
+  }
+
+  /** One strategy for an ordered chain of stages. */
+  def compose(chain: Seq[IndexStrategy]): IndexStrategy = chain match {
+    case Seq() => RegularGridStrategy
+    case Seq(one) => one
+    case many => CompositeStrategy(many)
+  }
+
+  /** The stages of `strategy`, in order. */
+  def stages(strategy: IndexStrategy): Seq[IndexStrategy] = strategy match {
+    case CompositeStrategy(ss) => ss
+    case one => Seq(one)
   }
 
   /** The schema effect is read off the same strategy that transforms headers,

@@ -1,6 +1,6 @@
 package graft.ingestion
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Coordinates, Dimensions}
@@ -19,21 +19,30 @@ import graft.storage.MdioDataset
   * 6. summary statistics (A1–A3, `segy/_workers.py:179-194` + merge)
   * 7. dimension tables (G1/C2) + store write with sidecar (S3/S5)
   *
-  * All stages are one logical DataFrame pipeline; the only driver-side values
-  * are metadata-sized (geometry decisions, QC scalars, the stats row).
+  * The source is read in two passes: a header pre-pass of column-pruned
+  * aggregates (channel-wrap detection, then the grid QC whose value sets
+  * are also the dim tables), and the store write, whose one range exchange
+  * is the only shuffle of the trace payload. The only driver-side values
+  * are metadata-sized (per-cable channel ranges, QC scalars and dim
+  * vectors, the stats row). A shot-wrap stage is the exception: its window
+  * shuffles the rows on its own key, and its QC and dim tables keep the
+  * distinct-count pass and the post-write store scan.
   */
 object IngestPipeline {
 
   final class GridTraceCountError(msg: String) extends RuntimeException(msg)
   final class GridSparsityError(msg: String) extends RuntimeException(msg)
 
+  /** @param sparsityWarning the J3 warning (`ingestion/grid_qc.py:19-69`)
+    *   when the grid sparsity exceeds the warn threshold, else None */
   final case class IngestResult(
       path: String,
       schema: ResolvedSchema,
       nTraces: Long,
       nCells: Long,
       sparsity: Double,
-      stats: SummaryStatistics)
+      stats: SummaryStatistics,
+      sparsityWarning: Option[String])
 
   /** Ingest `traces` under `template` (+`overrides`) into an MDIO store.
     *
@@ -71,64 +80,71 @@ object IngestPipeline {
     require(missing.isEmpty,
       s"header fields required by the schema are absent: ${missing.mkString(", ")}")
 
-    // 3: strategy transform (+ optional V240 raw-header packing).
-    // Pre-cluster on the PRE-EXISTING grid dims first: RangePartitioning
-    // over those dims satisfies the strategy windows' ClusteredDistribution,
-    // so the window shuffle IS the store-layout shuffle (one exchange, not
-    // two), and repartitionByRange's sampling pass reads the pruned source
-    // instead of re-running the window pipeline.
+    // 3: strategy transform (+ optional V240 raw-header packing), split in
+    // two. The leading row-local stages (component synthesis, channel wrap
+    // with its detection pass) run on the source before any exchange; their
+    // output `headers` is the frame the QC aggregate scans, column-pruned.
+    // One range exchange on the grid dims present in `headers` then lays
+    // the rows out for the store. It also satisfies a trailing counter
+    // window's ClusteredDistribution, so the counter adds no exchange and
+    // the payload is shuffled once; repartitionByRange's sampling pass reads
+    // the source, not a window pipeline.
     val strategy = IndexStrategyRegistry.createStrategy(overrides, template)
     val ctx = StrategyContext(template, ordinal)
     val withRaw =
       if (rawHeaderFields.isEmpty) traces
       else graft.sources.Sources.withRawHeaders(traces, rawHeaderFields)
+    val (local, rest) = IndexStrategyRegistry.stages(strategy).span(_.rowLocal)
+    val headers = IndexStrategyRegistry.compose(local).transform(withRaw, ctx)
     val preDims = resolved.dimensions.dropRight(1)
-      .filter(withRaw.columns.contains)                 // calculated dims don't exist yet
+      .filter(headers.columns.contains)               // calculated dims don't exist yet
     val preClustered =
-      if (preDims.isEmpty) withRaw
-      else withRaw.repartitionByRange(preDims.map(col): _*)
-    val transformed = strategy.transform(preClustered, ctx)
+      if (preDims.isEmpty) headers
+      else headers.repartitionByRange(preDims.map(col): _*)
+    val transformed = IndexStrategyRegistry.compose(rest).transform(preClustered, ctx)
 
     // 4: every calculated dim must now exist as a column
     SchemaResolver.verifyCalculatedDims(resolved, transformed.columns.toSeq)
 
     // 5: grid invariants (J2 + J3) and dim cardinalities in ONE aggregate
-    // pass — all are count/countDistinct, so a single scan answers the
-    // trace-count check, the sparsity QC and the sidecar dim sizes.
-    // When the strategy appends a uniqueness counter (G3/G4), the whole pass
-    // runs on the RAW header columns instead: (cellDims, counter) is unique
-    // by construction, the counter's cardinality equals the max per-cell
-    // count, and per-dim distincts are unchanged — a two-level aggregate on
-    // a pruned source scan, so the QC never re-runs the counter window
-    // (that window still runs exactly once, inside the write pass).
+    // pass over `headers`. Its cells are every grid dim when the whole chain
+    // is row-local; when the chain ends in a uniqueness counter (G3/G4),
+    // they are the counter's cells: (cellDims, counter) is unique by
+    // construction, the counter's cardinality equals the max per-cell count,
+    // and per-dim distincts are unchanged, so the QC never runs the counter
+    // window (that window runs once, inside the write pass). A chain with a
+    // shot-wrap stage keeps a countDistinct pass over `transformed`.
     val gridDims = resolved.dimensions.dropRight(1).filter(transformed.columns.contains)
-    val counterDims = gridDims.filterNot(withRaw.columns.contains)
-    val fastCells = strategy.counterCellDims(ctx, withRaw.columns.toSeq)
-      .filter(cells => counterDims.sizeIs == 1 &&
-        gridDims.toSet == cells.toSet + counterDims.head)
+    val counterDims = gridDims.filterNot(headers.columns.contains)
+    val fastCells =
+      if (rest.isEmpty) Some(gridDims).filter(_.nonEmpty)
+      else strategy.counterCellDims(ctx, headers.columns.toSeq)
+        .filter(cells => counterDims.sizeIs == 1 &&
+          gridDims.toSet == cells.toSet + counterDims.head)
     // On the fast path the per-dim VALUE SETS ride the same aggregate
     // (collect_set instead of countDistinct — a dim vector is metadata-
-    // sized), and the counter's label vector is 1..max by construction, so
-    // the post-write dim tables need NO store scan at all. Coordinates whose
-    // cell dims sit inside the counter cells ALSO ride this aggregate: the
-    // per-cell level carries min_by(coord, orderKey) + min(orderKey), the
-    // staged per-cell table then reduces to each coordinate's own dim subset
+    // sized), and a counter's label vector is 1..max by construction, so
+    // the dim tables need NO store scan at all. Coordinates whose cell dims
+    // sit inside the cells ALSO ride this aggregate: the per-cell level
+    // carries min_by(coord, orderKey) + min(orderKey), the staged per-cell
+    // table then reduces to each coordinate's own dim subset
     // (winner-of-winners by the carried min key = the global min_by), so the
     // coordinate tables need no post-write store scan either — at 100 TB
     // that scan is a full second read of the store.
-    val orderKeyCol = ordinal.headOption.filter(withRaw.columns.contains)
+    val orderKeyCol = ordinal.headOption.filter(headers.columns.contains)
     val (nTraces, nCells, cardinalities, dimValues, foldedCoords) = fastCells match {
       case Some(cells) =>
+        val counter = counterDims.headOption
         val foldable = resolved.coordinates.filter { c =>
-          val cd = c.dimensions.filter(withRaw.columns.contains)
-          orderKeyCol.nonEmpty && withRaw.columns.contains(c.name) &&
+          val cd = c.dimensions.filter(headers.columns.contains)
+          orderKeyCol.nonEmpty && headers.columns.contains(c.name) &&
             cd.nonEmpty && cd.toSet.subsetOf(cells.toSet)
         }
         val coordAggs =
           if (foldable.isEmpty) Nil
           else foldable.map(c => min_by(col(c.name), col(orderKeyCol.get)).as(c.name)) :+
             min(col(orderKeyCol.get)).as("__ok")
-        val perCell = withRaw.groupBy(cells.map(col): _*)
+        val perCell = headers.groupBy(cells.map(col): _*)
           .agg(count(lit(1)).as("_cnt"), coordAggs: _*)
         // staged only when coordinates ride along (the level-1 table then
         // feeds both the QC reduction and the coordinate tables)
@@ -145,23 +161,31 @@ object IngestPipeline {
         // distinct count and its table from the distributed write — extra
         // jobs ONLY in the pathological case; the common case keeps the
         // single two-level aggregate (no countDistinct Expand riding along:
-        // measured +0.9s on the sf0.1 ingest when it did).
+        // measured +0.9s on the sf0.1 ingest when it did). Without a
+        // counter the cell count is the number of groups whose dims are all
+        // non-null (countDistinct's rule).
         val maxVals = math.min(Dimensions.driverMaxValues(spark), Int.MaxValue - 2L).toInt
         val aggs = Seq(sum(col("_cnt")).as("n_rows"),
-            max(col("_cnt")).as("__max_cnt")) ++
+            max(col("_cnt")).as("__max_cnt"),
+            count(when(cells.map(d => col(d).isNotNull).reduce(_ && _), lit(1)))
+              .as("n_cells")) ++
           cells.map(d => slice(sort_array(collect_set(col(d))), 1, maxVals + 1)
             .as(s"__v_$d"))
-        val row = withDesc(spark, "QC reduce") {
-          perCellSrc.agg(aggs.head, aggs.drop(1): _*).collect().head
+        // the reduction is an observation of the per-cell pass, merged on
+        // the driver, so it needs no second exchange or result stage
+        val qc = Observation("ingest_qc")
+        val m = withDesc(spark, "QC reduce") {
+          perCellSrc.observe(qc, aggs.head, aggs.drop(1): _*)
+            .write.format("noop").mode("overwrite").save()
+          qc.get
         }
-        def g(name: String): Long =
-          if (row.isNullAt(row.fieldIndex(name))) 0L else row.getAs[Long](name)
+        def g(name: String): Long = Option(m(name)).fold(0L)(_.asInstanceOf[Long])
+        val counterVals: Option[(String, Seq[Any])] =
+          counter.filter(_ => g("__max_cnt") <= maxVals)
+            .map(_ -> (1L to g("__max_cnt")).map(v => v: Any))
         val vals: Map[String, Seq[Any]] =
-          cells.map(d => d -> row.getSeq[Any](row.fieldIndex(s"__v_$d")))
-            .filter { case (_, v) => v.sizeIs <= maxVals }.toMap ++
-            (if (g("__max_cnt") <= maxVals)
-               Map(counterDims.head -> (1L to g("__max_cnt")).map(v => v: Any))
-             else Map.empty)
+          cells.map(d => d -> m(s"__v_$d").asInstanceOf[Seq[Any]])
+            .filter { case (_, v) => v.sizeIs <= maxVals }.toMap ++ counterVals
         // over-the-gate dims (value set arrived truncated) still need exact
         // cardinalities for the sidecar + sparsity — ONE countDistinct
         // aggregate for all of them, not a distinct-count job per dim
@@ -176,9 +200,10 @@ object IngestPipeline {
             overGate.map(d => d -> r.getAs[Long](s"__nd_$d")).toMap
           }
         val cards = cells.map(d => d ->
-            (if (vals.contains(d)) vals(d).size.toLong else exactCards(d))).toMap +
-          (counterDims.head -> g("__max_cnt"))
-        (g("n_rows"), g("n_rows"), cards, Some(vals),
+            (if (vals.contains(d)) vals(d).size.toLong else exactCards(d))).toMap ++
+          counter.map(_ -> g("__max_cnt"))
+        (g("n_rows"), if (counter.nonEmpty) g("n_rows") else g("n_cells"), cards,
+          Some(vals),
           if (foldable.isEmpty) None
           else Some((perCellSrc, foldable.map(_.name).toSet)))
       case None =>
@@ -201,13 +226,16 @@ object IngestPipeline {
     val sparsity = cardinalities.values.map(_.toDouble).product / nTraces
     if (sparsity > sparsityError && !ignoreChecks)
       throw new GridSparsityError(f"grid sparsity $sparsity%.2f exceeds $sparsityError")
+    val sparsityWarning =
+      if (sparsity > sparsityWarn)
+        Some(f"grid sparsity $sparsity%.2f exceeds $sparsityWarn (warn threshold)")
+      else None
 
     // 6: summary statistics piggyback on the WRITE pass via observe() —
     // exactly the reference's per-block partial stats collected by the
     // ingest workers (`segy/_workers.py:179-194`): no extra scan. The
     // non-zero mask lives inside each aggregate; sums accumulate in DECIMAL
     // (exact, order-independent).
-    import org.apache.spark.sql.Observation
     import org.apache.spark.sql.types.{ArrayType, DecimalType}
     val x = col(valueCol)
     val valueIsArray =
@@ -287,50 +315,48 @@ object IngestPipeline {
       else None
     MdioDataset.writeSidecar(spark, path, schemaWith(Some(stats), verticalSize))
 
-    // C2/C1: dimension + coordinate tables derive from the STORE just
-    // written (column-pruned parquet reads), not from `transformed` — which
-    // would re-run the whole strategy window pipeline once per table. All
-    // dim vectors come from ONE aggregate scan; coordinates come from the
-    // staged QC per-cell table when they rode the fast-path aggregate
-    // (zero store scans) and otherwise share ONE groupBy scan per cell-dim
-    // set. The handful of tiny table writes are submitted concurrently —
-    // each is an independent one-task job, and serial submission turns
-    // per-job scheduling latency into wall time.
-    val stored = MdioDataset.open(spark, path).df
+    // C2/C1: on the fast path every dim table comes from the QC
+    // aggregate's driver vectors (a counter's from its 1..max range), and
+    // coordinates from the staged QC per-cell table when they rode along.
+    // The store just written is read only for what the aggregate could not
+    // carry: dims over the gate, coordinates outside the cells, and, on the
+    // countDistinct arm, every dim table (ONE aggregate scan) and coordinate
+    // (ONE groupBy scan per cell-dim set). The handful of tiny table writes
+    // are submitted concurrently — each is an independent one-task job, and
+    // serial submission turns per-job scheduling latency into wall time.
+    lazy val stored = MdioDataset.open(spark, path).df
+    val folded = foldedCoords.map(_._2).getOrElse(Set.empty[String])
+    val storeCoords = resolved.coordinates.map(_.name)
+      .filter(c => transformed.columns.contains(c) && !folded.contains(c))
     val maxDimVals = Dimensions.driverMaxValues(spark)
     val tailWrites: Seq[() => Unit] = (dimValues match {
       case Some(vals) => gridDims.map(d => () => withDesc(spark, s"dim table $d") {
         if (vals.contains(d))
-          writeDimVector(spark, stored.schema(d).dataType, vals(d), path, d)
+          writeDimVector(spark, transformed.schema(d).dataType, vals(d), path, d)
         else if (counterDims.contains(d))
           // counter labels are 1..max by construction — generate distributed
           // (one slice: the vector is gate-bounded, and default parallelism
           // would burn a job per empty slice coalesce)
           spark.range(1, cardinalities(d) + 1, 1, numPartitions = 1)
-            .select(col("id").cast(stored.schema(d).dataType).as("dim_value"))
+            .select(col("id").cast(transformed.schema(d).dataType).as("dim_value"))
             .write.mode("overwrite").parquet(s"$path/dims/$d")
         else writeDimDistributed(stored, d, path)
       })
       case None => Seq(() => withDesc(spark, "dim tables") {
         writeDimTables(spark, stored, gridDims, path, cardinalities, maxDimVals)
       })
-    }) ++ (foldedCoords match {
-      case Some((perCellSrc, names)) => Seq(
-        () => withDesc(spark, "coord tables (folded)") {
-          writeCoordinateTables(perCellSrc, resolved, orderKey = "__ok", path,
-            only = names)
-        },
-        () => withDesc(spark, "coord tables (store)") {
-          writeCoordinateTables(stored, resolved, orderKey = ordinal.head, path,
-            exclude = names)
-        })
-      case None => Seq(() => withDesc(spark, "coord tables") {
-        writeCoordinateTables(stored, resolved, orderKey = ordinal.head, path)
-      })
-    })
+    }) ++ foldedCoords.toSeq.map { case (perCellSrc, names) =>
+      () => withDesc(spark, "coord tables (folded)") {
+        writeCoordinateTables(perCellSrc, resolved, orderKey = "__ok", path,
+          only = names)
+      }
+    } ++ (if (storeCoords.isEmpty) Nil else Seq(() => withDesc(spark, "coord tables") {
+      writeCoordinateTables(stored, resolved, orderKey = ordinal.head, path,
+        exclude = folded)
+    }))
     awaitAll(tailWrites)
 
-    IngestResult(path, resolved, nTraces, nCells, sparsity, stats)
+    IngestResult(path, resolved, nTraces, nCells, sparsity, stats, sparsityWarning)
   }
 
   /** Run independent driver-side write closures concurrently (each submits
@@ -346,7 +372,7 @@ object IngestPipeline {
     * description is a thread-local Spark property, so the try/finally
     * restores the caller's label even inside [[awaitAll]] pool threads.
     */
-  private def withDesc[T](spark: SparkSession, s: String)(f: => T): T = {
+  private[ingestion] def withDesc[T](spark: SparkSession, s: String)(f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"ingest: $s")

@@ -210,6 +210,7 @@ object Cli {
     println(s"ingested ${r.nTraces} traces into $mdioPath " +
       s"(grid cells ${r.nCells}, format ${info.formatCode}, " +
       s"${info.nSamples} samples @ ${info.sampleInterval} us)")
+    r.sparsityWarning.foreach(w => println(s"warning: $w"))
   }
 
   /** Sidecar attribute holding the imported file's sample interval in µs

@@ -1,66 +1,80 @@
 package graft.ingestion
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.SparkSpec
-import graft.`export`.{SegyExport, SegyHeaders}
+import graft.`export`.SegyExport
 import graft.operators.Selection
-import graft.sources.SegyRead
 import graft.tools.Cli
 
-/** Job budgets for the selection and export entry points on a store
-  * written by `segy import` (the [[IngestPipeline]]). Job counts do not
-  * depend on data size, so a count that grows is a structural regression
-  * (a distributed pass per dim, a sequence job the writer never reads)
-  * that wall-clock noise cannot hide.
+/** Job budgets for the three entry points: `segy import` (the
+  * [[IngestPipeline]]), then selection and export on the store it wrote.
+  * Job counts do not depend on data size, so a count that grows is a
+  * structural regression (a distributed pass per dim, a sequence job the
+  * writer never reads, a post-write store scan) that wall-clock noise
+  * cannot hide.
   */
 class EntryPointJobBudgetSpec extends SparkSpec {
-  import spark.implicits._
 
   // ≈4 MB of incompressible samples: the export's sort keeps several
   // partitions after adaptive coalescing, so a sequence pass over them
   // costs a job
   private val (nIl, nXl, nSamples) = (32, 32, 1000)
 
-  /** `segy import` of a standard nIl × nXl IBM32 file. */
-  private lazy val store: String = {
-    val rows = for (il <- 1 to nIl; xl <- 1 to nXl)
-      yield {
-        val rnd = new scala.util.Random(il * 1000L + xl)
-        (il, 100 + xl, Array.fill(nSamples)(rnd.nextFloat()))
-      }
-    val records = SegyExport.serializeStandardTraces(
-      rows.toDF("il", "xl", "v").orderBy("il", "xl")
-        .withColumn("samples", SegyExport.ibmPayload(col("v"), nSamples)),
-      Seq(SegyRead.StandardFields.Inline -> "il",
-        SegyRead.StandardFields.Crossline -> "xl"), "samples")
-    val dir = Files.createTempDirectory("jobbudget").toString
-    SegyExport.writeSegy(records, s"$dir/in.sgy",
-      SegyHeaders.sanitizeTextHeader(Seq("C 1 JOB BUDGET")),
-      SegyExport.standardBinaryHeader(nSamples, 2000, formatCode = 1))
-    val path = s"$dir/in.mdio"
-    assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", path,
-      "--header-locations", "189,193",
-      "--header-names", "inline,crossline"), spark) == 0)
-    path
+  private def tmp(): String = Files.createTempDirectory("jobbudget").toString
+
+  /** `segy import` of a standard nIl × nXl IBM32 file, and what it ran. */
+  private lazy val (store: String, postStackImport: Footprint) = {
+    val dir = tmp()
+    ImportFixtures.writePostStack(spark, s"$dir/in.sgy", nIl, nXl, nSamples)
+    val fp = footprint {
+      assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", s"$dir/in.mdio") ++
+        ImportFixtures.PostStackArgs, spark) == 0)
+    }
+    (s"$dir/in.mdio", fp)
   }
 
-  /** (jobs, shuffle-map stages) that `f` submits. */
-  private def budget(f: => Unit): (Int, Int) = {
+  /** What `f` submitted: every job's description, the shuffle-write bytes
+    * of every shuffle-map stage, and the physical plan of every SQL
+    * execution. */
+  private case class Footprint(descriptions: Seq[String], shuffleWrites: Seq[Long],
+                               plans: Seq[String]) {
+    def jobs: Int = descriptions.size
+    def shuffles: Int = shuffleWrites.size
+  }
+
+  private def footprint(f: => Unit): Footprint = {
     val (started, ended) = (new AtomicInteger, new AtomicInteger)
-    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
+    val stageWrites = new ConcurrentHashMap[Int, Long]()
+    val plans = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
         started.incrementAndGet()
+        descriptions.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         ended.incrementAndGet()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskType == "ShuffleMapTask") shuffleStages.add(te.stageId)
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        stageWrites.put(sc.stageInfo.stageId,
+          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -71,31 +85,74 @@ class EntryPointJobBudgetSpec extends SparkSpec {
       while (ended.get() < started.get() && System.nanoTime() < deadline)
         Thread.sleep(50)
       Thread.sleep(300)
-      (started.get(), shuffleStages.size)
+      Footprint(descriptions.asScala.toSeq,
+        shuffleStages.asScala.toSeq.sorted.map(id => stageWrites.getOrDefault(id, 0L)),
+        plans.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** An import's structure: every job labelled by the pipeline, no plan
+    * scanning the store's data (the store does not exist before the write,
+    * so such a scan can only come after it), and exactly one shuffle as
+    * large as the payload — the store-layout exchange. */
+  private def assertOneWrite(fp: Footprint, store: String, payloadBytes: Long): Unit = {
+    val unlabelled = fp.descriptions.filterNot(_.startsWith("ingest:"))
+    assert(unlabelled.isEmpty, s"${unlabelled.size} of ${fp.jobs} import jobs " +
+      s"carry no ingest label: ${fp.descriptions.mkString(" | ")}")
+    val storeScans = fp.plans.filter(p => p.contains("Scan parquet") &&
+      p.contains(s"$store/data"))
+    assert(storeScans.isEmpty, s"${storeScans.size} plans scan $store/data " +
+      s"after the write:\n${storeScans.headOption.getOrElse("").take(600)}")
+    val payloadShuffles = fp.shuffleWrites.filter(_ > payloadBytes / 2)
+    assert(payloadShuffles.size == 1, s"shuffles carrying the payload " +
+      s"(bytes > ${payloadBytes / 2}): $payloadShuffles of ${fp.shuffleWrites}")
+  }
+
+  test("a post-stack segy import runs at most 8 jobs and writes its payload once") {
+    val fp = postStackImport
+    // the QC and dim tables as extra passes took 12
+    assert(fp.jobs <= 8, s"post-stack import submitted ${fp.jobs} jobs (budget 8): " +
+      fp.descriptions.mkString(" | "))
+    assertOneWrite(fp, store, nIl * nXl * nSamples * 4L)
+  }
+
+  test("a Type-B gathers segy import with channel wrap and duplicates runs " +
+    "at most 12 jobs and writes its payload once") {
+    val dir = tmp()
+    val gNSamples = 500
+    val n = ImportFixtures.writeGathers(spark, s"$dir/in.sgy", nSamples = gNSamples)
+    val path = s"$dir/in.mdio"
+    val fp = footprint {
+      assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", path) ++
+        ImportFixtures.GathersArgs, spark) == 0)
+    }
+    // detection, QC and dim tables as extra passes took 27
+    assert(fp.jobs <= 12, s"gathers import submitted ${fp.jobs} jobs (budget 12): " +
+      fp.descriptions.mkString(" | "))
+    assertOneWrite(fp, path, n * gNSamples * 4L)
   }
 
   test("a 2-D isel box plus its collect runs one job per dim and one for " +
     "the result, with no shuffle") {
     val handle = graft.Mdio.openMdio(spark, store)
     var rows = 0
-    val (jobs, shuffles) = budget {
+    val fp = footprint {
       rows = handle.isel("inline" -> Selection.ISlice(1, 11),
           "crossline" -> Selection.ISlice(2, 12))
         .select("inline", "crossline", "amplitude").collect().length
     }
     assert(rows == 100)
     // the parent's distributed resolution submitted 11 jobs here
-    assert(jobs <= 3, s"isel box submitted $jobs jobs (budget 3)")
-    assert(shuffles == 0, s"isel box ran $shuffles shuffle-map stages")
+    assert(fp.jobs <= 3, s"isel box submitted ${fp.jobs} jobs (budget 3)")
+    assert(fp.shuffles == 0, s"isel box ran ${fp.shuffles} shuffle-map stages")
   }
 
   test("a Cli segy export runs at most 6 jobs") {
     val (in, out) =
       (store, Files.createTempDirectory("jobbudget").toString + "/out.sgy")
-    val (jobs, _) = budget {
+    val jobs = footprint {
       assert(Cli.run(Seq("segy", "export", in, out), spark) == 0)
-    }
+    }.jobs
     assert(Files.size(java.nio.file.Paths.get(out)) ==
       3600L + nIl * nXl * SegyExport.standardRecordBytes(nSamples, 1))
     // the parent's export paid a sequence pass it never read: 7 jobs

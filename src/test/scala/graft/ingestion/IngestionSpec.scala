@@ -151,6 +151,19 @@ class IngestPipelineSpec extends SparkSpec {
     assert(r.sparsity == 12.0)
   }
 
+  test("sparsity over the warn threshold is reported in the result; at it, nothing") {
+    def ingest(cells: Seq[(Int, Int)]): IngestPipeline.IngestResult =
+      IngestPipeline.ingest(spark, cells.map { case (i, x) => (i, x, 1.0) }
+          .toDF("inline", "crossline", "amplitude"), template, GridOverrides(),
+        Files.createTempDirectory("ingest").toString, Seq("inline"), "amplitude")
+    // diagonals: n traces on an n×n grid → sparsity n
+    val at = ingest(Seq((1, 1), (2, 2)))
+    assert(at.sparsity == 2.0 && at.sparsityWarning.isEmpty)
+    val over = ingest(Seq((1, 1), (2, 2), (3, 3)))
+    assert(over.sparsity == 3.0)
+    assert(over.sparsityWarning.contains("grid sparsity 3.00 exceeds 2.0 (warn threshold)"))
+  }
+
   test("counter fast path folds coordinate tables into the QC aggregate " +
        "and matches the store-scan path") {
     import graft.schema.DatasetTemplate

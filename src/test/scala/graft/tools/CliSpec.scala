@@ -63,13 +63,18 @@ class CliSpec extends SparkSpec {
 
   // ------------------------------------------------------- end-to-end cycle
 
-  /** A 3×2-grid standard SEG-Y, 2 IBM32 samples per trace. */
-  private def writeFixture(sampleInterval: Int = 4000): String = {
-    val src = Seq(
+  /** A 3×2-grid standard SEG-Y, 2 IBM32 samples per trace; or one trace
+    * per (inline, crossline) pair of `cells` when given. */
+  private def writeFixture(sampleInterval: Int = 4000,
+                           cells: Seq[(Int, Int)] = Nil): String = {
+    val grid = Seq(
       (1, 10, Array(1.5f, 2.5f)), (1, 11, Array(3.0f, 4.0f)),
       (2, 10, Array(5.0f, 6.0f)), (2, 11, Array(7.5f, 8.5f)),
       (3, 10, Array(9.0f, 10.0f)), (3, 11, Array(11.5f, 12.5f)),
-    ).toDF("il", "xl", "v")
+    )
+    val src = (if (cells.isEmpty) grid
+               else cells.map { case (il, xl) => (il, xl, Array(il.toFloat, xl.toFloat)) })
+      .toDF("il", "xl", "v")
     val records = SegyExport.serializeStandardTraces(
       src.orderBy("il", "xl")
         .withColumn("samples", SegyExport.ibmPayload(col("v"), 2)),
@@ -115,6 +120,27 @@ class CliSpec extends SparkSpec {
       metadata = schema.metadata.copy(
         attributes = schema.metadata.attributes - Cli.SampleIntervalAttr)))
     assert(exported("without") == ((0, 2, Set((2, 0)))))
+  }
+
+  test("segy import warns once when the grid sparsity exceeds 2, and only then") {
+    def imported(cells: Seq[(Int, Int)]): Seq[String] = {
+      val segy = writeFixture(cells = cells)
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out) {
+        assert(Cli.run(Seq("segy", "import", segy, segy + ".mdio",
+          "--header-locations", "189,193", "--header-names", "inline,crossline"),
+          spark) == 0)
+      }
+      out.toString.linesIterator.toSeq
+    }
+    // diagonals: n traces on an n×n grid → sparsity n
+    val at = imported(Seq((1, 10), (2, 11)))
+    assert(at.exists(_.startsWith("ingested 2 traces")), at)
+    assert(!at.exists(_.startsWith("warning:")), at)
+    val over = imported(Seq((1, 10), (2, 11), (3, 12)))
+    assert(over.exists(_.startsWith("ingested 3 traces")), over)
+    assert(over.filter(_.startsWith("warning:")) ==
+      Seq("warning: grid sparsity 3.00 exceeds 2.0 (warn threshold)"), over)
   }
 
   test("segy import → info → export → copy drive the facade end to end") {
