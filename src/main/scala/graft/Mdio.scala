@@ -72,14 +72,43 @@ object Mdio {
       rawHeaderFields)
   }
 
-  /** The DIRECTORY entry point — a real survey is thousands of shot files
-    * under one prefix, ingested as ONE dataset. Members arrive through the
-    * segy DSv2 table (uniform-geometry validated, split planning per
-    * (file, trace-range), `source_file` carried), samples decode per the
-    * self-described format code, and the union feeds the same ingest
-    * pipeline a single file would. `fields` are standard rev-1 names (the
-    * DSv2 catalog); the per-file `trace_index` + `source_file` pair is the
-    * ordinal, so duplicate in-file indexes across members stay distinct.
+  /** The STANDARD-layout SEG-Y entry point, for one file or a directory
+    * of shot files ingested as ONE dataset. Traces arrive through the segy
+    * DSv2 scan: geometry self-described by the binary header, header-only
+    * passes column-pruned down to the byte layer (240 B read per trace),
+    * and samples decoded once, in the reader, by the one sample codec. The
+    * decoded `samples` column is renamed to `valueCol`, so the store keeps
+    * one copy of the trace payload. `fields` are entries of the scan's
+    * `fields` option: standard rev-1 names (the DSv2 catalog) or custom
+    * `name@<byte>:<type>` fields. The ordinal is `trace_index`, led by
+    * `source_file` for a directory, so duplicate in-file indexes across
+    * members stay distinct.
+    */
+  def segyStandardToMdio(spark: SparkSession, segyPath: String,
+                         fields: Seq[String],
+                         template: DatasetTemplate, overrides: GridOverrides,
+                         path: String, valueCol: String,
+                         sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
+                         ignoreChecks: Boolean = false,
+                         attributes: Map[String, String] = Map.empty)
+      : IngestPipeline.IngestResult = {
+    val traces = spark.read.format("segy")
+      .option("fields", fields.mkString(","))
+      .load(segyPath)
+    require(valueCol == "samples" || !traces.columns.contains(valueCol),
+      s"segy field '$valueCol' collides with the value column")
+    val ordinal =
+      if (traces.columns.contains("source_file")) Seq("source_file", "trace_index")
+      else Seq("trace_index")
+    IngestPipeline.ingest(spark, traces.withColumnRenamed("samples", valueCol),
+      template, overrides, path, ordinal, valueCol,
+      sparsityWarn, sparsityError, ignoreChecks, attributes = attributes)
+  }
+
+  /** [[segyStandardToMdio]] for a DIRECTORY of shot files: a real survey is
+    * thousands of files under one prefix. Members are uniform-geometry
+    * validated and split per (file, trace range), with `source_file`
+    * carried; `fields` are standard rev-1 names.
     */
   def segyDirToMdio(spark: SparkSession, segyDir: String,
                     fields: Seq[String],
@@ -89,16 +118,13 @@ object Mdio {
                     ignoreChecks: Boolean = false,
                     attributes: Map[String, String] = Map.empty)
       : IngestPipeline.IngestResult = {
-    val traces = spark.read.format("segy")
-      .option("fields", fields.mkString(","))
-      .load(segyDir)
-      .withColumnRenamed("samples", valueCol)
-    require(traces.columns.contains("source_file"),
-      s"$segyDir is not a directory of SEG-Y files (single-file loads " +
-        "carry no source_file; use segyFileToMdio)")
-    IngestPipeline.ingest(spark, traces, template, overrides, path,
-      ordinal = Seq("source_file", "trace_index"), valueCol = valueCol,
-      sparsityWarn, sparsityError, ignoreChecks, attributes = attributes)
+    val dir = new org.apache.hadoop.fs.Path(segyDir)
+    require(dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(dir).isDirectory,
+      s"$segyDir is not a directory of SEG-Y files; ingest one file with " +
+        "segyStandardToMdio (or segyFileToMdio for the raw layout)")
+    segyStandardToMdio(spark, segyDir, fields, template, overrides, path,
+      valueCol, sparsityWarn, sparsityError, ignoreChecks, attributes)
   }
 
   /** E1–E5: masked, globally ordered SEG-Y export of an open store. The

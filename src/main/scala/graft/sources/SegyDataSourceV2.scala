@@ -41,9 +41,10 @@ import SegyRead.{HeaderField, StandardFields}
   *    correctness dependence.
   *  - **limit pushdown** caps the planned range the same way.
   *
-  * Options: `fields` (comma-separated [[StandardFields]] names; default =
-  * the full catalog), `raw` (keep samples as binary), `tracesPerSplit`
-  * (default sizes splits to ~128 MB).
+  * Options: `fields` (comma-separated [[StandardFields]] names or custom
+  * `name@<byte>:<int16|int32|uint16|uint32>` fields; default = the full
+  * catalog), `raw` (keep samples as binary), `tracesPerSplit` (default
+  * sizes splits to ~128 MB).
   */
 class SegyDataSourceV2 extends TableProvider with DataSourceRegister {
 
@@ -79,14 +80,33 @@ private[graft] object SegyDataSourceV2 {
     else ArrayType(graft.functions.SampleCodec.elementType(formatCode),
       containsNull = false)
 
+  /** Column names the scan itself produces; no header field may take one. */
+  private val Reserved = Set("trace_index", "samples", "source_file")
+
+  /** The `fields` option: comma-separated entries, each a [[Catalog]] name
+    * or a custom `name@<byte>:<int16|int32|uint16|uint32>` field
+    * ([[HeaderField.parse]]). Fails at plan time, naming the field, on an
+    * unknown name or type, a location outside the 240-byte header, a
+    * duplicate name, or a name the scan reserves.
+    */
   def resolveFields(csvOpt: Option[String]): Seq[HeaderField] =
     csvOpt.filter(_.nonEmpty) match {
       case None => Catalog
       case Some(csv) =>
         val byName = Catalog.map(f => f.name -> f).toMap
-        csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(n =>
-          byName.getOrElse(n, throw new IllegalArgumentException(
-            s"unknown segy field '$n' (known: ${Catalog.map(_.name).mkString(", ")})")))
+        val fields = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
+          if (n.contains("@")) HeaderField.parse(n)
+          else byName.getOrElse(n, throw new IllegalArgumentException(
+            s"unknown segy field '$n' (known: ${Catalog.map(_.name).mkString(", ")}; " +
+              "or name@<byte>:<type>)"))
+        }
+        fields.find(f => Reserved(f.name)).foreach(f =>
+          throw new IllegalArgumentException(s"segy field '${f.name}' is a reserved " +
+            s"column name (${Reserved.toSeq.sorted.mkString(", ")})"))
+        fields.groupBy(_.name).collectFirst { case (n, fs) if fs.sizeIs > 1 => n }
+          .foreach(n => throw new IllegalArgumentException(
+            s"segy field '$n' is named more than once"))
+        fields
     }
 
   def table(options: CaseInsensitiveStringMap,

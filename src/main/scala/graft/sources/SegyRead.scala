@@ -236,6 +236,33 @@ object SegyRead {
     require(bytes == 2 || bytes == 4, s"$name: header ints are 2 or 4 bytes")
     require(byteOffset >= 1 && byteOffset + bytes - 1 <= 240,
       s"$name: bytes $byteOffset..${byteOffset + bytes - 1} outside the 240-byte header")
+
+    /** `name@<byte>:<type>`, the form [[HeaderField.parse]] reads. */
+    def spec: String =
+      s"$name@$byteOffset:${if (unsigned) "u" else ""}int${bytes * 8}"
+  }
+
+  object HeaderField {
+    /** A field of type `tpe` at 1-based byte `byteOffset`; the types are
+      * the reference's header alphabet of int sizes and signedness. */
+    def typed(name: String, byteOffset: Int, tpe: String): HeaderField = tpe match {
+      case "int32"  => HeaderField(name, byteOffset, 4)
+      case "int16"  => HeaderField(name, byteOffset, 2)
+      case "uint32" => HeaderField(name, byteOffset, 4, unsigned = true)
+      case "uint16" => HeaderField(name, byteOffset, 2, unsigned = true)
+      case other => throw new IllegalArgumentException(
+        s"$name: header type '$other' not supported (int16|int32|uint16|uint32)")
+    }
+
+    /** Parse `name@<byte>:<type>` (the inverse of [[HeaderField.spec]]). */
+    def parse(entry: String): HeaderField = entry.split("[@:]", -1) match {
+      case Array(name, loc, tpe) if name.nonEmpty =>
+        val byteOffset = loc.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"$name: byte location '$loc' is not an integer"))
+        typed(name, byteOffset, tpe)
+      case _ => throw new IllegalArgumentException(
+        s"segy field '$entry' is neither a standard name nor name@<byte>:<type>")
+    }
   }
 
   /** The standard fields real files are indexed by (byte positions are

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 import graft.Mdio
 import graft.ingestion.GridOverrides
@@ -82,16 +83,13 @@ object Cli {
         throw CliError(s"$flag: '$v' is not an integer") }
     }
 
-  /** Header type alphabet of the reference's specs: int sizes + signedness. */
+  /** Header type alphabet of the reference's specs: int sizes + signedness
+    * ([[SegyRead.HeaderField.typed]], shared with the segy scan's
+    * `name@<byte>:<type>` fields). */
   private[tools] def fieldFor(name: String, loc: Int, tpe: String)
-      : SegyRead.HeaderField = tpe match {
-    case "int32"  => SegyRead.HeaderField(name, loc, 4)
-    case "int16"  => SegyRead.HeaderField(name, loc, 2)
-    case "uint32" => SegyRead.HeaderField(name, loc, 4, unsigned = true)
-    case "uint16" => SegyRead.HeaderField(name, loc, 2, unsigned = true)
-    case other => throw CliError(
-      s"header type '$other' not supported (int32|int16|uint32|uint16)")
-  }
+      : SegyRead.HeaderField =
+    try SegyRead.HeaderField.typed(name, loc, tpe)
+    catch { case e: IllegalArgumentException => throw CliError(e.getMessage) }
 
   /** The reference's legacy CamelCase grid-override dict, parsed from
     * `Key=value` pairs (`segy/geometry.py:29-105`). */
@@ -166,10 +164,9 @@ object Cli {
     val srcPath = new org.apache.hadoop.fs.Path(segyPath)
     val srcIsDir = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(srcPath).isDirectory
-    val (r, info) = if (srcIsDir) {
-      // a directory of shot files ingests as ONE dataset through the segy
-      // DSv2 union ([[graft.Mdio.segyDirToMdio]]); member fields resolve
-      // by CATALOG name, so custom byte locations don't apply here
+    if (srcIsDir) {
+      // member fields resolve by CATALOG name, so custom byte locations
+      // don't apply to a directory of shot files
       val catalog = graft.sources.SegyDataSourceV2.Catalog.map(_.name).toSet
       val unknown = names.filterNot(catalog)
       if (unknown.nonEmpty || opts.contains("--header-types") ||
@@ -185,28 +182,25 @@ object Cli {
           s"directory import resolves fields by standard catalog name ($why); " +
             "custom --header-locations/--header-types apply to single files only")
       }
-      val (_, members) = graft.sources.SegyDataSourceV2
-        .resolveFiles(spark, segyPath)
-      val fi = SegyRead.standardInfo(spark, members.head)
-      (graft.Mdio.segyDirToMdio(spark, segyPath, names, tmpl,
-        overrides, mdioPath, valueCol = "amplitude", sparsityError = 1e9,
-        attributes = intervalAttribute(fi)), fi)
-    } else {
-      if (fields.isEmpty)
-        throw CliError("single-file import needs --header-locations")
-      val fi = SegyRead.standardInfo(spark, segyPath)
-      val traces = SegyRead.readStandardTraces(spark, segyPath, fields)
-        .withColumn("amplitude",
-          SegyRead.decodeSamples(col("samples"), fi.nSamples, fi.formatCode))
-      (graft.ingestion.IngestPipeline.ingest(spark, traces, tmpl,
-        overrides, mdioPath, ordinal = Seq("trace_index"),
-        valueCol = "amplitude", sparsityError = 1e9,
-        attributes = intervalAttribute(fi)), fi)
-    }
-    if (!lossless) {
-      val handle = Mdio.openMdio(spark, mdioPath)
-      Mdio.optimizeAccessPatterns(handle, names.take(1), "amplitude", tolerance)
-    }
+    } else if (fields.isEmpty)
+      throw CliError("single-file import needs --header-locations")
+    // both shapes read through the segy DSv2 scan; a failed import leaves
+    // no store behind
+    val (r, info) =
+      try {
+        val fi = SegyRead.standardInfo(spark,
+          if (srcIsDir) graft.sources.SegyDataSourceV2.resolveFiles(spark, segyPath)._2.head
+          else segyPath)
+        val r = Mdio.segyStandardToMdio(spark, segyPath,
+          if (srcIsDir) names else fields.map(_.spec), tmpl, overrides, mdioPath,
+          valueCol = "amplitude", sparsityError = 1e9,
+          attributes = intervalAttribute(fi))
+        if (!lossless) {
+          val handle = Mdio.openMdio(spark, mdioPath)
+          Mdio.optimizeAccessPatterns(handle, names.take(1), "amplitude", tolerance)
+        }
+        (r, fi)
+      } catch { case e: Exception => fs.delete(outPath, true); throw e }
     println(s"ingested ${r.nTraces} traces into $mdioPath " +
       s"(grid cells ${r.nCells}, format ${info.formatCode}, " +
       s"${info.nSamples} samples @ ${info.sampleInterval} us)")
@@ -312,12 +306,21 @@ object Cli {
     // reference semantics (`commands/copy.py:49-78`): grid + metadata always
     // copy; trace data only with --with-traces, raw headers only with
     // --with-headers
-    val exclude = handle.schema.variables.collect {
+    val declared = handle.schema.variables.collect {
       case v if v.dataType == Left(ScalarType.Bytes240) &&
         !opts.contains("--with-headers") => v.name
       case v if v.dataType != Left(ScalarType.Bytes240) &&
         !dims.contains(v.name) && !opts.contains("--with-traces") => v.name
     }
+    // stores imported before `segy import` kept only the decoded variable
+    // also hold the raw payload as an undeclared binary `samples` column:
+    // trace data as well
+    val legacyPayload = handle.df.schema.fields.toSeq.collect {
+      case f if f.name == "samples" && f.dataType == BinaryType &&
+        handle.schema.variable(f.name).isEmpty &&
+        !opts.contains("--with-traces") => f.name
+    }
+    val exclude = declared ++ legacyPayload
     Mdio.copyMdio(spark, src, dst, exclude)
     println(s"copied $src to $dst" +
       (if (exclude.nonEmpty) s" (excluded: ${exclude.mkString(", ")})" else ""))
@@ -512,8 +515,7 @@ object Cli {
         org.apache.spark.sql.types.DoubleType, _) => ()
       case t => throw CliError(
         s"--samples-col '$samplesCol' must be array<float|double>, " +
-          s"got ${t.simpleString} (the raw 'samples' payload column is " +
-          "binary; use the decoded trace variable)")
+          s"got ${t.simpleString} (use the decoded trace variable)")
     }
     val nSamples = opts.get("--n-samples").map(_.toInt).getOrElse {
       val head = df.select(org.apache.spark.sql.functions.size(
@@ -659,7 +661,9 @@ object Cli {
 
   // ------------------------------------------------------------------- main
 
-  /** Dispatch; returns a process exit code (testable without System.exit). */
+  /** Dispatch; returns a process exit code (testable without System.exit):
+    * 0 = done, 1 = the input was rejected (a malformed SEG-Y file, an
+    * invalid field or parameter), 2 = usage. */
   def run(args: Seq[String], spark: SparkSession): Int =
     try {
       args.toList match {
@@ -694,7 +698,7 @@ object Cli {
             "--n-samples", "--overwrite"))
           velocityVerb(spark, pos, opts); 0
         case other =>
-          System.err.println(
+          Console.err.println(
             s"""unknown command: ${other.mkString(" ")}
                |usage:
                |  segy import <segy-path> <mdio-path> --header-locations ... [options]
@@ -708,7 +712,8 @@ object Cli {
           2
       }
     } catch {
-      case CliError(msg) => System.err.println(s"error: $msg"); 2
+      case CliError(msg) => Console.err.println(s"error: $msg"); 2
+      case e: IllegalArgumentException => Console.err.println(s"error: ${e.getMessage}"); 1
     }
 
   def main(args: Array[String]): Unit = {

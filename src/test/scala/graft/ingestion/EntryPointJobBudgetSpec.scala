@@ -94,7 +94,9 @@ class EntryPointJobBudgetSpec extends SparkSpec {
   /** An import's structure: every job labelled by the pipeline, no plan
     * scanning the store's data (the store does not exist before the write,
     * so such a scan can only come after it), and exactly one shuffle as
-    * large as the payload — the store-layout exchange. */
+    * large as the payload — the store-layout exchange — carrying under
+    * 1.5× the decoded payload bytes (the payload crosses it once, not as
+    * raw bytes beside the decoded samples). */
   private def assertOneWrite(fp: Footprint, store: String, payloadBytes: Long): Unit = {
     val unlabelled = fp.descriptions.filterNot(_.startsWith("ingest:"))
     assert(unlabelled.isEmpty, s"${unlabelled.size} of ${fp.jobs} import jobs " +
@@ -106,7 +108,15 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     val payloadShuffles = fp.shuffleWrites.filter(_ > payloadBytes / 2)
     assert(payloadShuffles.size == 1, s"shuffles carrying the payload " +
       s"(bytes > ${payloadBytes / 2}): $payloadShuffles of ${fp.shuffleWrites}")
+    assert(payloadShuffles.head < payloadBytes * 3 / 2, s"the payload shuffle " +
+      s"wrote ${payloadShuffles.head} bytes for $payloadBytes decoded payload bytes")
   }
+
+  /** The column list of every segy scan in `plan` (its `cols [...]`
+    * description). */
+  private def segyScanCols(plan: String): Seq[Seq[String]] =
+    """segy \S+ traces \[\d+,\d+\) cols \[([^\]]*)\]""".r
+      .findAllMatchIn(plan).map(_.group(1).split(",").toSeq.filter(_.nonEmpty)).toSeq
 
   test("a post-stack segy import runs at most 8 jobs and writes its payload once") {
     val fp = postStackImport
@@ -130,6 +140,16 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     assert(fp.jobs <= 12, s"gathers import submitted ${fp.jobs} jobs (budget 12): " +
       fp.descriptions.mkString(" | "))
     assertOneWrite(fp, path, n * gNSamples * 4L)
+    // the header-only passes (channel-wrap detection, the QC per-cell
+    // aggregate) are pruned down to the reader: only the store write's
+    // scan reads the samples
+    val (writes, others) = fp.plans.partition(_.contains(s"$path/data"))
+    assert(writes.nonEmpty, "no plan writes the store")
+    val headerScans = others.flatMap(segyScanCols)
+    assert(headerScans.size >= 2, s"expected the detection and QC scans of the " +
+      s"SEG-Y file, got ${headerScans.size} in ${others.size} other plans")
+    headerScans.foreach(cols =>
+      assert(!cols.contains("samples"), s"a header-only pass scans samples: $cols"))
   }
 
   test("a 2-D isel box plus its collect runs one job per dim and one for " +

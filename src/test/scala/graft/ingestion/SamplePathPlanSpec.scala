@@ -5,20 +5,22 @@ import java.nio.file.Files
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.`export`.{SegyExport, SegyHeaders}
-import graft.functions.{SampleDecodeExpr, TraceStatsExpr}
+import graft.functions.TraceStatsExpr
 import graft.sources.SegyRead
 import graft.tools.Cli
 
 /** Plan-shape guard for the per-sample work of a single-file `segy import`
   * and of `validate`, beside [[IngestJobBudgetSpec]]: no plan either verb
   * runs may hold an interpreted higher-order lambda (`transform`,
-  * `filter`, `aggregate`) — the sample decode and the ingest statistics
-  * are one compiled pass per trace. A wall-clock number cannot catch a
+  * `filter`, `aggregate`) — the sample decode (in the segy scan's reader)
+  * and the ingest statistics are one compiled pass per trace. A wall-clock number cannot catch a
   * per-sample lambda creeping back in; the plan can.
   */
 class SamplePathPlanSpec extends SparkSpec {
@@ -81,11 +83,19 @@ class SamplePathPlanSpec extends SparkSpec {
     }
     val validated = plansOf(assert(Cli.run(Seq("validate", store), spark) == 0))
 
-    // the listener saw the plans that matter: the store write decodes with
-    // the whole-trace kernel and records stats with the one-pass kernel,
-    // and validate recomputes those stats with the same kernel
-    assert(imported.exists(p => has(p, { case _: SampleDecodeExpr => true }) &&
-      has(p, { case _: TraceStatsExpr => true })), "no import plan holds both kernels")
+    // the listener saw the plans that matter: the store write reads samples
+    // the segy scan already decoded with the whole-trace kernel and records
+    // stats with the one-pass kernel, and validate recomputes those stats
+    // with the same kernel
+    def decodingScan(p: LogicalPlan): Boolean = p.exists {
+      case r: DataSourceV2Relation => r.table.name.startsWith("segy ") &&
+        r.output.exists(a => a.name == "samples" &&
+          a.dataType == ArrayType(FloatType, containsNull = false))
+      case _ => false
+    }
+    assert(imported.exists(p => decodingScan(p) &&
+      has(p, { case _: TraceStatsExpr => true })),
+      "no import plan scans decoded array<float> samples and holds the stats kernel")
     assert(validated.exists(p => has(p, { case _: TraceStatsExpr => true })),
       "no validate plan holds the stats kernel")
 

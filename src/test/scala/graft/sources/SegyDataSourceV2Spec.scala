@@ -220,6 +220,65 @@ class SegyDataSourceV2Spec extends SparkSpec {
     assert(msgs(e).exists(m => m.contains("uniform geometry")))
   }
 
+  /** 4-trace format-1 file with custom header words: int16 at byte 1,
+    * uint16 at 3, int32 at 5, uint32 at 9 — negative values and values
+    * past the signed range of their width. */
+  private lazy val customFile: String = {
+    val df = (0 until 4).map { i =>
+      (-30000 + i, 40000 + i, -70000L - i, 3000000000L + i, 200 + i, Seq(i.toFloat))
+    }.toDF("s16", "u16", "s32", "u32", "inline", "v")
+    val records = SegyExport.serializeStandardTraces(
+      df.orderBy("inline").withColumn("samples", SegyExport.ibmPayload(col("v"), 1)),
+      Seq(SegyRead.HeaderField("s16", 1, 2) -> "s16",
+        SegyRead.HeaderField("u16", 3, 2, unsigned = true) -> "u16",
+        SegyRead.HeaderField("s32", 5, 4) -> "s32",
+        SegyRead.HeaderField("u32", 9, 4, unsigned = true) -> "u32",
+        Inline -> "inline"), "samples")
+    val out = Files.createTempDirectory("segydsv2custom").toString + "/c.sgy"
+    SegyExport.writeSegy(records, out, textLines,
+      SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 2000,
+        formatCode = 1))
+    out
+  }
+
+  test("name@byte:type fields equal the function-API reader's values, " +
+    "signed and unsigned, 2 and 4 bytes") {
+    // every word read as written and with the other signedness
+    val custom = Seq(("s16", 1, "int16"), ("s16_as_u", 1, "uint16"),
+      ("u16", 3, "uint16"), ("u16_as_s", 3, "int16"),
+      ("s32", 5, "int32"), ("s32_as_u", 5, "uint32"),
+      ("u32", 9, "uint32"), ("u32_as_s", 9, "int32"))
+      .map { case (n, b, t) => SegyRead.HeaderField.typed(n, b, t) }
+    val cols = ("trace_index" +: custom.map(_.name)).map(col)
+    val dsv2 = spark.read.format("segy")
+      .option("fields", custom.map(_.spec).mkString(",")).load(customFile)
+      .select(cols: _*).orderBy("trace_index").collect().toSeq
+    val fn = SegyRead.readStandardTraces(spark, customFile, custom)
+      .select(cols: _*).orderBy("trace_index").collect().toSeq
+    assert(dsv2 == fn)
+    assert(dsv2.head.toSeq == Seq(0L, -30000L, 35536L, 40000L, -25536L,
+      -70000L, 4294897296L, 3000000000L, -1294967296L))
+    assert(dsv2.last.toSeq == Seq(3L, -29997L, 35539L, 40003L, -25533L,
+      -70003L, 4294897293L, 3000000003L, -1294967293L))
+  }
+
+  test("bad custom fields fail at plan time with the field named") {
+    def rejected(fields: String, named: String*): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("segy").option("fields", fields).load(customFile)
+      }
+      named.foreach(n => assert(e.getMessage.contains(n),
+        s"'$n' not in: ${e.getMessage}"))
+    }
+    rejected("amp@1:float32", "amp", "float32")
+    rejected("late@239:int32", "late", "240-byte header")
+    rejected("early@0:int16", "early", "240-byte header")
+    rejected("s16@1:int16,s16@3:uint16", "s16", "more than once")
+    rejected("inline,inline", "inline", "more than once")
+    Seq("trace_index", "samples", "source_file").foreach(n =>
+      rejected(s"$n@1:int32", n, "reserved"))
+  }
+
   test("unknown field name fails with the catalog in the message") {
     val e = intercept[IllegalArgumentException] {
       spark.read.format("segy").option("fields", "bogus").load(fmt1File)

@@ -193,15 +193,81 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Seq("segy", "export", store, out,
       "--endian", "little"), spark) == 2)
 
-    // copy: metadata-only by default (traces excluded), full with the flag
+    // copy: metadata-only by default (no trace payload in any form), full
+    // with the flag
     val metaCopy = s"$dir/meta.mdio"
     assert(Cli.run(Seq("copy", store, metaCopy), spark) == 0)
     val meta = graft.Mdio.openMdio(spark, metaCopy)
     assert(!meta.df.columns.contains("amplitude"))
+    assert(!meta.df.columns.contains("samples"))
+    assert(meta.df.count() == 6)
     val fullCopy = s"$dir/full.mdio"
     assert(Cli.run(Seq("copy", store, fullCopy, "--with-traces"), spark) == 0)
     val full = graft.Mdio.openMdio(spark, fullCopy)
     assert(full.df.columns.contains("amplitude") && full.df.count() == 6)
+
+    // a store imported when the raw payload was kept beside `amplitude`
+    // (an undeclared binary `samples` column) stays exportable, and its
+    // metadata-only copy drops that payload too
+    val legacy = s"$dir/legacy.mdio"
+    graft.storage.MdioDataset.write(
+      handle.df.withColumn("samples", SegyExport.ibmPayload(col("amplitude"), 2)),
+      legacy, handle.schema)
+    val legacyOut = s"$dir/legacy.sgy"
+    assert(Cli.run(Seq("segy", "export", legacy, legacyOut), spark) == 0)
+    assert(Files.readAllBytes(java.nio.file.Paths.get(legacyOut)).toSeq ==
+      Files.readAllBytes(java.nio.file.Paths.get(out)).toSeq)
+    val legacyMeta = s"$dir/legacy-meta.mdio"
+    assert(Cli.run(Seq("copy", legacy, legacyMeta), spark) == 0)
+    val legacyCols = graft.Mdio.openMdio(spark, legacyMeta).df.columns
+    assert(!legacyCols.contains("amplitude") && !legacyCols.contains("samples"),
+      legacyCols.mkString(","))
+  }
+
+  test("segy import rejects malformed input with its cause and leaves no store") {
+    val good = Files.readAllBytes(java.nio.file.Paths.get(writeFixture()))
+    val dir = Files.createTempDirectory("climalformed").toString
+    /** `good` with the big-endian u16 at 1-based file byte `off1` set. */
+    def patched(off1: Int, v: Int): Array[Byte] = {
+      val b = good.clone()
+      b(off1 - 1) = (v >> 8).toByte
+      b(off1) = v.toByte
+      b
+    }
+    def rejected(name: String, bytes: Array[Byte], names: String,
+                 cause: String): Unit = {
+      val segy = s"$dir/$name.sgy"
+      Files.write(java.nio.file.Paths.get(segy), bytes)
+      val store = s"$dir/$name.mdio"
+      val err = new java.io.ByteArrayOutputStream()
+      val rc = Console.withErr(err) {
+        Cli.run(Seq("segy", "import", segy, store,
+          "--header-locations", "189,193", "--header-names", names), spark)
+      }
+      assert(rc != 0, s"$name: import exited 0")
+      assert(err.toString.contains(cause), s"$name: '$cause' not in: $err")
+      assert(!Files.exists(java.nio.file.Paths.get(store)), s"$name left $store")
+    }
+    rejected("size", good :+ 0.toByte, "inline,crossline",
+      "is not a multiple of the 248-byte standard record")
+    rejected("format4", patched(3225, 4), "inline,crossline", "format 4")
+    rejected("nosamples", patched(3221, 0), "inline,crossline",
+      "declares 0 samples per trace")
+    rejected("collision", good, "samples,crossline",
+      "segy field 'samples' is a reserved column name")
+
+    // a failure inside the store write (the stats kernel refuses a NaN
+    // sample) removes the partly written store too
+    val nan = s"$dir/nan.sgy"
+    Seq((1, 10, Seq(1.0f, Float.NaN))).toDF("inline", "crossline", "samples")
+      .write.format("segy").option("fields", "inline,crossline")
+      .option("formatCode", "5").mode("overwrite").save(nan)
+    val e = intercept[Exception](Cli.run(Seq("segy", "import", nan, s"$dir/nan.mdio",
+      "--header-locations", "189,193", "--header-names", "inline,crossline"), spark))
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    assert(msgs(e).exists(_.contains("non-finite sample")), msgs(e))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/nan.mdio")))
   }
 
   test("segy import over a DIRECTORY ingests all member shot files") {
@@ -396,7 +462,7 @@ class CliSpec extends SparkSpec {
       "--samples-col", "amplitude", "--mode", "bogus"), spark) == 2)
     assert(Cli.run(Seq("velocity", store, s"$dir/x.parquet",
       "--keys", "inline", "--offset", "crossline", "--candidates", "0",
-      "--samples-col", "samples"), spark) == 2) // raw BINARY payload column
+      "--samples-col", "samples"), spark) == 2) // the store has no such column
     assert(Cli.run(Seq("velocity", store, s"$dir/x.parquet",
       "--keys", "inline", "--offset", "crossline",
       "--candidates", "0,zoom", "--samples-col", "amplitude"), spark) == 2)
