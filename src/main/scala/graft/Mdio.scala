@@ -14,8 +14,11 @@ import graft.storage.{MdioDataset, MdioDatasetHandle}
   *  - `open_mdio`   → [[openMdio]]   (lazy handle + sidecar, `api/io.py:38-66`)
   *  - `to_mdio`     → [[toMdio]]     (w/w-/a/r+ modes, `api/io.py:69-107`);
   *                    the DataFrame surface is `df.write.format("mdio")`
-  *  - `segy_to_mdio`→ [[segyToMdio]] (ingest pipeline, `converters/segy.py:44-80`)
-  *  - `mdio_to_segy`→ [[mdioToSegy]] (masked export, `segy/mdio_to_segy.py`)
+  *  - `segy_to_mdio`→ [[segyStandardToMdio]] for a file or directory of
+  *                    files, [[segyToMdio]] for a trace frame (ingest
+  *                    pipeline, `converters/segy.py:44-80`)
+  *  - `mdio_to_segy`→ [[mdioToStandardSegy]] (masked export,
+  *                    `segy/mdio_to_segy.py`)
   *  - `optimize_access_patterns` → [[optimizeAccessPatterns]]
   *                    (`optimize/access_pattern.py:26-118`)
   *  - `GridOverrides` / `ResolvedSchema` → the same names in
@@ -48,35 +51,12 @@ object Mdio {
       ordinal, valueCol, rawHeaderFields = rawHeaderFields)
 
   /** The FILE-path entry point — the reference's `segy_to_mdio` takes a URL
-    * (`segy/file.py:152-186`): parse the byte stream with
-    * [[graft.sources.SegyRead.readTraces]] (driver touches 3600 bytes,
-    * trace ranges fan out per task) and ingest the decoded frame. Header
-    * words arrive as signed 32-bit longs; `decodeSamples` maps the raw
-    * payload binary to `valueCol` (e.g. `SegyRead.ibmSamples(_, n)` for
-    * IBM32 files, `SegyRead.ieeeSamples(_, n)` for rev-1+ format 5).
-    */
-  def segyFileToMdio(spark: SparkSession, segyFile: String,
-                     headerFields: Seq[String], sampleBytes: Int,
-                     template: DatasetTemplate, overrides: GridOverrides,
-                     path: String, ordinal: Seq[String], valueCol: String,
-                     decodeSamples: Column => Column,
-                     sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
-                     ignoreChecks: Boolean = false,
-                     rawHeaderFields: Seq[String] = Nil): IngestPipeline.IngestResult = {
-    import org.apache.spark.sql.functions.col
-    val traces = graft.sources.SegyRead
-      .readTraces(spark, segyFile, headerFields, sampleBytes)
-      .withColumn(valueCol, decodeSamples(col("samples")))
-    IngestPipeline.ingest(spark, traces, template, overrides, path,
-      ordinal, valueCol, sparsityWarn, sparsityError, ignoreChecks,
-      rawHeaderFields)
-  }
-
-  /** The STANDARD-layout SEG-Y entry point, for one file or a directory
-    * of shot files ingested as ONE dataset. Traces arrive through the segy
-    * DSv2 scan: geometry self-described by the binary header, header-only
-    * passes column-pruned down to the byte layer (240 B read per trace),
-    * and samples decoded once, in the reader, by the one sample codec. The
+    * (`segy/file.py:152-186`) — for one standard-layout SEG-Y file or a
+    * directory of shot files ingested as ONE dataset. Traces arrive
+    * through the segy DSv2 scan: geometry self-described by the binary
+    * header, header-only passes column-pruned down to the byte layer (240 B
+    * read per trace), and samples decoded once, in the reader, by the one
+    * sample codec. The
     * decoded `samples` column is renamed to `valueCol`, so the store keeps
     * one copy of the trace payload. `fields` are entries of the scan's
     * `fields` option: standard rev-1 names (the DSv2 catalog) or custom
@@ -122,34 +102,19 @@ object Mdio {
     require(dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getFileStatus(dir).isDirectory,
       s"$segyDir is not a directory of SEG-Y files; ingest one file with " +
-        "segyStandardToMdio (or segyFileToMdio for the raw layout)")
+        "segyStandardToMdio")
     segyStandardToMdio(spark, segyDir, fields, template, overrides, path,
       valueCol, sparsityWarn, sparsityError, ignoreChecks, attributes)
   }
 
-  /** E1–E5: masked, globally ordered SEG-Y export of an open store. The
-    * samples column must survive the header projection, so it rides the
-    * `headerFields` of the masked select and is then serialized as the
-    * trace payload. The writer takes its trace order from the sort's
-    * partitions ([[graft.export.SegyExport.maskedOrder]]).
-    */
-  def mdioToSegy(handle: MdioDatasetHandle, outFile: String, mask: Column,
-                 dims: Seq[String], headerFields: Seq[String],
-                 orderKeys: Seq[String], samplesCol: String,
-                 textHeader: Seq[String], binaryHeader: Array[Byte]): Unit = {
-    val ordered = graft.export.SegyExport.maskedOrder(
-      handle.df, mask, dims, (headerFields :+ samplesCol).distinct, orderKeys)
-    val records = graft.export.SegyExport.serializeTraces(
-      ordered, headerFields, samplesCol)
-    graft.export.SegyExport.writeSegy(records, outFile, textHeader, binaryHeader)
-  }
-
-  /** [[mdioToSegy]] in the STANDARD rev-1 layout — real 240-byte trace
-    * headers at spec offsets and a self-describing binary header, so the
-    * output opens in any SEG-Y tool (and in [[graft.sources.SegyRead
-    * .readStandardTraces]]). `samplesCol` must hold float samples of fixed
-    * length `nSamples`; they encode as format-1 IBM32 through the native
-    * kernel.
+  /** E1–E5: masked, globally ordered SEG-Y export of an open store in the
+    * standard rev-1 layout — real 240-byte trace headers at spec offsets
+    * and a self-describing binary header, so the output opens in any SEG-Y
+    * tool (and in `spark.read.format("segy")`). The writer takes its trace
+    * order from the sort's partitions
+    * ([[graft.export.SegyExport.maskedOrder]]). `samplesCol` must hold
+    * float samples of fixed length `nSamples`; they encode as format-1
+    * IBM32 through the native kernel.
     */
   def mdioToStandardSegy(handle: MdioDatasetHandle, outFile: String,
                          mask: Column,
@@ -168,10 +133,7 @@ object Mdio {
       fieldCols, "_pay")
     graft.export.SegyExport.writeSegy(records, outFile, textHeader,
       graft.export.SegyExport.standardBinaryHeader(nSamples, sampleInterval,
-        formatCode = 1),
-      // standard layout, fixed nSamples ⇒ constant record width
-      fixedRecordBytes =
-        Some(graft.export.SegyExport.standardRecordBytes(nSamples, 1)))
+        formatCode = 1))
   }
 
   /** O1: materialize `fast_<dim>` clustered (optionally quantized) copies

@@ -1247,33 +1247,34 @@ object SparkEntry {
         .toDF("n_traces", "sample_interval", "samples_per_trace",
           "data_sample_format", "rev_major", "rev_minor", "fixed_flag", "n_ext")
     }),
-    // REAL SEG-Y bytes end to end: a deterministic lineitem projection is
-    // exported as an actual byte-stream file (EBCDIC text header, 400B
-    // binary header, fixed-length big-endian records) and re-ingested with
-    // the byte-stream reader; the oracle recomputes the projection straight
-    // from parquet, so the row only hash-matches if writer→reader is an
-    // exact identity on every header field and payload word
+    // REAL SEG-Y bytes end to end through CUSTOM header fields: a
+    // deterministic lineitem projection is exported as a standard rev-1
+    // file with il/xl at non-catalog byte locations and pk as a format-2
+    // (int32) sample, then read back by the segy scan's `name@byte:type`
+    // fields; the oracle recomputes the projection straight from parquet,
+    // so the row only hash-matches if writer→reader is an exact identity
+    // on every header field and payload word
     "q_segy_roundtrip" -> ((s, d) => {
       import graft.`export`.{SegyExport, SegyHeaders}
-      import graft.sources.{SegyRead, Sources}
+      import graft.sources.SegyRead.HeaderField
+      val fields = Seq(HeaderField("il", 9, 4), HeaderField("xl", 13, 4))
       val src = lineitem(s, d).select(
         col("l_orderkey").cast("int").as("il"),
         col("l_linenumber").cast("int").as("xl"),
-        col("l_partkey").cast("int").as("pk"))
-      val withPay = src.withColumn("samples",
-        graft.functions.BeBytesPack(col("pk").cast("bigint"), 4, "pk",
-          checked = false))
-      val records = SegyExport.serializeTraces(
-        withPay.orderBy("il", "xl"), Seq("il", "xl"), "samples")
+        array(col("l_partkey").cast("int")).as("pk"))
+      val records = SegyExport.serializeStandardTraces(
+        src.orderBy("il", "xl")
+          .withColumn("samples", SegyExport.intPayload(col("pk"), 1, formatCode = 2)),
+        fields.map(f => f -> f.name), "samples")
       val f = graft.core.TempDirs.scratch("segy_rt") + "/rt.sgy"
       SegyExport.writeSegy(records, f,
         SegyHeaders.sanitizeTextHeader(Seq("C 1 GRAFT ROUNDTRIP")),
-        new Array[Byte](400),
-        // raw layout: 2 × 4-byte header words + 4-byte payload, constant
-        fixedRecordBytes = Some(2L * 4 + 4))
-      SegyRead.readTraces(s, f, Seq("il", "xl"), sampleBytes = 4)
+        SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 2000,
+          formatCode = 2))
+      s.read.format("segy").option("fields", fields.map(_.spec).mkString(","))
+        .load(f)
         .select(col("il"), col("xl"),
-          Sources.parseRawHeaderField(col("samples"), 0).as("pk"))
+          element_at(col("samples"), 1).cast("long").as("pk"))
     }),
     // the STANDARD rev-1 stack under the same identity: 240-byte headers
     // at spec offsets, self-describing binary-header geometry, and the
@@ -1296,12 +1297,10 @@ object SparkEntry {
       SegyExport.writeSegy(records, f,
         SegyHeaders.sanitizeTextHeader(Seq("C 1 GRAFT STANDARD ROUNDTRIP")),
         SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 2000,
-          formatCode = 1),
-        fixedRecordBytes = Some(SegyExport.standardRecordBytes(1, 1)))
-      SegyRead.readStandardTraces(s, f, Seq(Inline, Crossline))
+          formatCode = 1))
+      s.read.format("segy").option("fields", "inline,crossline").load(f)
         .select(col("inline").as("il"), col("crossline").as("xl"),
-          element_at(SegyRead.ibmSamples(col("samples"), 1), 1)
-            .cast("long").as("pk"))
+          element_at(col("samples"), 1).cast("long").as("pk"))
     }),
     // the DIRECTORY ingest composition: parity-split shot files (int32
     // samples — exact cents) written through the DSv2 sink, ingested as
@@ -1729,14 +1728,12 @@ object SparkEntry {
       SegyExport.writeSegy(records, f,
         SegyHeaders.sanitizeTextHeader(Seq("C 1 GRAFT FORMAT-3 ROUNDTRIP")),
         SegyExport.standardBinaryHeader(nSamples = 3, sampleInterval = 2000,
-          formatCode = 3),
-        fixedRecordBytes = Some(SegyExport.standardRecordBytes(3, 3)))
-      val dec = SegyRead.intSamples(col("samples"), 3, formatCode = 3)
-      SegyRead.readStandardTraces(s, f, Seq(Inline, Crossline))
+          formatCode = 3))
+      s.read.format("segy").option("fields", "inline,crossline").load(f)
         .select(col("inline").as("il"), col("crossline").as("xl"),
-          element_at(dec, 1).cast("long").as("s1"),
-          element_at(dec, 2).cast("long").as("s2"),
-          element_at(dec, 3).cast("long").as("s3"))
+          element_at(col("samples"), 1).cast("long").as("s1"),
+          element_at(col("samples"), 2).cast("long").as("s2"),
+          element_at(col("samples"), 3).cast("long").as("s3"))
     }),
     // format-6 (rev-2 IEEE float64) standard roundtrip: three doubles per
     // trace through the raw-bits encode (DoubleBits) and the native
@@ -1761,13 +1758,12 @@ object SparkEntry {
       SegyExport.writeSegy(records, f,
         SegyHeaders.sanitizeTextHeader(Seq("C 1 GRAFT FORMAT-6 ROUNDTRIP")),
         SegyExport.standardBinaryHeader(nSamples = 3, sampleInterval = 2000,
-          formatCode = 6),
-        fixedRecordBytes = Some(SegyExport.standardRecordBytes(3, 6)))
-      val dec = SegyRead.ieee64Samples(col("samples"), 3)
-      SegyRead.readStandardTraces(s, f, Seq(Inline, Crossline))
+          formatCode = 6))
+      s.read.format("segy").option("fields", "inline,crossline").load(f)
         .select(col("inline").as("il"), col("crossline").as("xl"),
-          element_at(dec, 1).as("s1"), element_at(dec, 2).as("s2"),
-          element_at(dec, 3).as("s3"))
+          element_at(col("samples"), 1).as("s1"),
+          element_at(col("samples"), 2).as("s2"),
+          element_at(col("samples"), 3).as("s3"))
     }),
     // the other two integer sample formats through the same write→read
     // identity: format 2 (int32, ±1e9 values exercise all four bytes) and
@@ -1789,8 +1785,7 @@ object SparkEntry {
         SegyExport.writeSegy(records, f,
           SegyHeaders.sanitizeTextHeader(Seq(s"C 1 GRAFT FORMAT-$fmt RT")),
           SegyExport.standardBinaryHeader(nSamples = 2, sampleInterval = 2000,
-            formatCode = fmt),
-          fixedRecordBytes = Some(SegyExport.standardRecordBytes(2, fmt)))
+            formatCode = fmt))
         f
       }
       // the two format exports are independent (disjoint scratch files) —
@@ -1807,14 +1802,12 @@ object SparkEntry {
         (col("l_orderkey") % 200 - 100).cast("int"))))
       val f2 = Await.result(f2F, Duration.Inf)
       val f8 = Await.result(f8F, Duration.Inf)
-      def decoded(f: String, fmt: Int) = {
-        val dec = SegyRead.intSamples(col("samples"), 2, formatCode = fmt)
-        SegyRead.readStandardTraces(s, f, Seq(Inline, Crossline))
+      def decoded(f: String, fmt: Int) =
+        s.read.format("segy").option("fields", "inline,crossline").load(f)
           .select(col("inline").as("il"), col("crossline").as("xl"),
             lit(fmt.toLong).as("fmt"),
-            element_at(dec, 1).cast("long").as("s1"),
-            element_at(dec, 2).cast("long").as("s2"))
-      }
+            element_at(col("samples"), 1).cast("long").as("s1"),
+            element_at(col("samples"), 2).cast("long").as("s2"))
       decoded(f2, 2).unionByName(decoded(f8, 8))
     }),
     // native codegen'd IBM hex-float decode over synthesized bit patterns
@@ -1850,8 +1843,10 @@ object SparkEntry {
     }),
     // the reference's ACTUAL segy_to_mdio entry point, oracle-gated end to
     // end (converters/segy.py:44-80 -> ingestion/segy/pipeline.py:117-195):
-    // lineitem is serialized as a real SEG-Y byte file (header words +
-    // one BE-int32 cents sample), then Mdio.segyFileToMdio runs file bytes
+    // lineitem is serialized as a standard rev-1 SEG-Y file (il/xl as
+    // custom header fields + one format-2 int32 cents sample, written in
+    // (il, xl, ok, ln) order so trace_index numbers duplicates the way that
+    // order does), then Mdio.segyStandardToMdio runs file bytes
     // -> split-fanned header scan -> sample decode -> index strategies ->
     // grid QC -> write-pass stats -> dim tables -> store; the row checks
     // the pipeline result, the REOPENED store, and the dim tables against
@@ -1864,31 +1859,28 @@ object SparkEntry {
       import graft.storage.MdioDataset
       val cents = (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
         .cast("long")
+      val fields = Seq(graft.sources.SegyRead.HeaderField("il", 9, 4),
+        graft.sources.SegyRead.HeaderField("xl", 13, 4))
       val src = lineitem(s, d).select(
         col("l_suppkey").cast("int").as("il"),
         col("l_partkey").cast("int").as("xl"),
         col("l_orderkey").cast("int").as("ok"),
         col("l_linenumber").cast("int").as("ln"),
-        cents.cast("int").as("cents"))
-      val withPay = src.withColumn("samples",
-        graft.functions.BeBytesPack(col("cents").cast("bigint"), 4, "cents",
-          checked = false))
-      val records = SegyExport.serializeTraces(
-        withPay.orderBy("il", "xl", "ok", "ln"), Seq("il", "xl", "ok", "ln"),
-        "samples")
+        array(cents.cast("int")).as("cents"))
+      val records = SegyExport.serializeStandardTraces(
+        src.orderBy("il", "xl", "ok", "ln")
+          .withColumn("samples", SegyExport.intPayload(col("cents"), 1, formatCode = 2)),
+        fields.map(f => f -> f.name), "samples")
       val f = graft.core.TempDirs.scratch("segy_file_ingest") + "/in.sgy"
       SegyExport.writeSegy(records, f,
         SegyHeaders.sanitizeTextHeader(Seq("C 1 GRAFT FILE INGEST")),
-        new Array[Byte](400),
-        // raw layout: 4 × 4-byte header words + 4-byte payload, constant
-        fixedRecordBytes = Some(4L * 4 + 4))
+        SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 2000,
+          formatCode = 2))
       val tmpl = DatasetTemplate("SegyFileGrid", "time",
         Seq("il", "xl", "time"), Seq(8, 8, 512))
       val path = graft.core.TempDirs.scratch("segy_file_ingest_store")
-      val r = Mdio.segyFileToMdio(s, f, Seq("il", "xl", "ok", "ln"),
-        sampleBytes = 4, tmpl, GridOverrides(hasDuplicates = true), path,
-        ordinal = Seq("ok", "ln"), valueCol = "cents",
-        decodeSamples = p => graft.functions.BeIntAt(p, lit(0), 4).cast("long"),
+      val r = Mdio.segyStandardToMdio(s, f, fields.map(_.spec), tmpl,
+        GridOverrides(hasDuplicates = true), path, valueCol = "cents",
         sparsityError = 1e9)
       val ds = MdioDataset.open(s, path)
       // all post-ingest checks in ONE action: store agg × two dim-table
@@ -1900,7 +1892,7 @@ object SparkEntry {
         max(col("trace")).cast("long").as("trace_max"),
         count(lit(1)).as("store_rows"),
         lit(r.stats.sum).as("sum_val"),
-        sum(col("cents")).cast("long").as("store_sum"))
+        sum(element_at(col("cents"), 1)).cast("long").as("store_sum"))
       // both dim tables in ONE scan (sibling dirs, same schema), tagged by
       // file path, grouped per dim, then pivoted into the single stats row;
       // the explicit schema (the store's own dim type) skips the

@@ -30,30 +30,11 @@ object SegyExport {
       .sortWithinPartitions(orderKeys.map(col): _*)
   }
 
-  /** E3: per-trace binary record — headers packed big-endian (4-byte ints in
-    * spec order) followed by the serialized sample payload. Pure column
-    * expressions over binary concat; a real SEG-Y writer swaps the payload
-    * encoding, the plumbing is identical.
-    */
-  def serializeTraces(df: DataFrame, headerFields: Seq[String],
-                      samplesCol: String): DataFrame = {
-    // fixed 4-byte big-endian two's complement: the native pack writes the
-    // low 32 bits directly (the documented mask semantics of this raw
-    // layout), no hex-string round trip
-    val headerBytes: Seq[Column] = headerFields.map(f =>
-      graft.functions.BeBytesPack(col(f).cast("bigint"), 4, f,
-        checked = false))
-    val payload = col(samplesCol).cast("binary")
-    df.withColumn("trace_record", concat((headerBytes :+ payload): _*))
-      .withColumn("record_len", octet_length(col("trace_record")).cast("long"))
-  }
-
-  /** E2/E3 for REAL interop: serialize traces with STANDARD 240-byte
-    * trace headers — each (field, column) pair packs a 2-/4-byte
-    * big-endian signed int at its public rev-1 spec offset, every other
-    * byte zero — followed by the sample payload (already encoded; see
-    * [[ibmPayload]] for format 1). The inverse of
-    * [[graft.sources.SegyRead.readStandardTraces]], pure column
+  /** E2/E3: serialize traces with STANDARD 240-byte trace headers — each
+    * (field, column) pair packs a 2-/4-byte big-endian signed int at its
+    * public rev-1 spec offset, every other byte zero — followed by the
+    * sample payload (already encoded; see [[ibmPayload]] for format 1).
+    * The inverse of the `segy` scan's `fields` decode, pure column
     * expressions throughout.
     */
   def serializeStandardTraces(df: DataFrame,
@@ -98,7 +79,7 @@ object SegyExport {
 
   /** Integer sample payload (SEG-Y formats 2=int32, 3=int16, 8=int8): each
     * sample packed big-endian at its width, overflow-checked — the encode
-    * inverse of [[graft.sources.SegyRead.intSamples]].
+    * inverse of [[graft.sources.SegyRead.decodeSamples]].
     */
   def intPayload(samples: Column, nSamples: Int, formatCode: Int): Column = {
     require(formatCode == 2 || formatCode == 3 || formatCode == 8,
@@ -119,8 +100,8 @@ object SegyExport {
 
   /** Format-5 sample payload (IEEE float32): each float's RAW bits (NaN
     * payloads survive) packed big-endian by the same one-loop kernel as
-    * [[ibmPayload]]. Encode inverse of
-    * [[graft.sources.SegyRead.ieeeSamples]].
+    * [[ibmPayload]]. Encode inverse of format-5
+    * [[graft.sources.SegyRead.decodeSamples]].
     */
   def ieee32Payload(samples: Column, nSamples: Int): Column =
     graft.functions.SampleCodec.encodeFloatsColumn(samples, ibm = false,
@@ -129,7 +110,7 @@ object SegyExport {
   /** Format-6 sample payload (SEG-Y rev-2 IEEE float64): each double's RAW
     * bits ([[graft.functions.DoubleBits]] — NaN payloads survive) packed as
     * an 8-byte big-endian word ([[graft.functions.BeBytesPack]]). Encode
-    * inverse of [[graft.sources.SegyRead.ieee64Samples]].
+    * inverse of format-6 [[graft.sources.SegyRead.decodeSamples]].
     */
   def ieee64Payload(samples: Column, nSamples: Int): Column =
     concat((1 to nSamples).map { i =>
@@ -158,10 +139,10 @@ object SegyExport {
     b.array()
   }
 
-  /** Per-trace record width when it is FIXED by construction — the standard
-    * rev-1 layout: 240 header bytes + nSamples fixed-width samples. Pass to
-    * [[writeSegy]] so the positioned write can derive partition offsets
-    * from row COUNTS instead of re-executing (or caching) the encode.
+  /** Per-trace record width of the standard rev-1 layout: 240 header
+    * bytes + nSamples fixed-width samples. [[writeSegy]] derives it from
+    * the binary header it writes, so the positioned write takes partition
+    * offsets from row COUNTS.
     */
   def standardRecordBytes(nSamples: Int, formatCode: Int): Long =
     240L + nSamples.toLong * graft.sources.SegyRead.bytesPerSample(formatCode)
@@ -171,7 +152,7 @@ object SegyExport {
     * its partitions align 1:1 with `rdd`'s, so per-partition row counts
     * taken there equal the final stage's counts WITHOUT executing the
     * final stage (sort + encode). None when the lineage has no such
-    * shuffle (callers fall back to the two-pass/cache shape).
+    * shuffle (the caller then counts the records RDD itself).
     */
   private def lastShuffleReader(rdd: org.apache.spark.rdd.RDD[_])
       : Option[org.apache.spark.rdd.RDD[_]] = {
@@ -198,22 +179,29 @@ object SegyExport {
     * collapsed to its final sequential `concat_files` step
     * (`segy/blocked_io.py:214-303`, `segy/creation.py:236-263`).
     *
-    * `fixedRecordBytes`: when the caller KNOWS every record is the same
-    * width (true of every standard-layout export — 240-byte header +
-    * nSamples fixed-width samples, [[standardRecordBytes]]), the offsets
-    * pass needs only per-partition ROW COUNTS, which are read straight off
-    * the sort's shuffle (below the sort+encode stage) — the expensive
-    * encode kernels and the sort itself run exactly ONCE, in the write
-    * job, with nothing cached, at any size. The write job's
-    * positioned-write invariant (`wrote == counted` per partition) still
-    * verifies the declared width against reality, so a wrong width fails
-    * loudly rather than corrupting the file.
+    * Every record is one standard rev-1 trace: [[standardRecordBytes]] of
+    * the samples per trace (binary-header bytes 21-22) and the format code
+    * (25-26), so an unsupported format code fails here, before any job.
+    * `fixedRecordBytes`, when given, must equal that width.
+    *
+    * Precondition on local files: nothing between the records' last
+    * shuffle and `records` may add or drop rows (no explode, no filter
+    * after the sort). The byte offsets are taken from the row counts at
+    * that shuffle, so such an operator makes the write fail with
+    * "wrote X, counted Y". [[maskedOrder]], the DSv2 sink and the
+    * queries' exports all end in a sort followed by projections only.
     */
   def writeSegy(records: DataFrame, outFile: String,
                 textHeader: Seq[String], binaryHeader: Array[Byte],
                 fixedRecordBytes: Option[Long] = None): Unit = {
     require(binaryHeader.length == 400, "binary header must be 400 bytes")
-    require(fixedRecordBytes.forall(_ > 0), "fixedRecordBytes must be positive")
+    val header = java.nio.ByteBuffer.wrap(binaryHeader)
+    val nSamples = header.getShort(20) & 0xffff
+    val recordBytes = standardRecordBytes(nSamples, header.getShort(24) & 0xffff)
+    require(nSamples > 0, "the binary header declares 0 samples per trace")
+    require(fixedRecordBytes.forall(_ == recordBytes),
+      s"fixedRecordBytes ${fixedRecordBytes.get} differs from the " +
+        s"$recordBytes-byte record the binary header declares")
     SegyHeaders.validateTextHeader(textHeader)
     val sess = records.sparkSession
     val conf = new org.apache.hadoop.conf.Configuration(
@@ -237,65 +225,20 @@ object SegyExport {
       // spending 3× the file size in serial driver I/O (~12 s of a 16 s
       // export at 1.5 GB); this shape is bounded by device bandwidth alone.
       //
-      // Offsets: three strategies.
-      //  1. Fixed record width + a findable last shuffle: per-partition row
-      //     counts read off the shuffle itself (no sort, no encode, no
-      //     cache) — sort+encode run exactly once, in the write job, with
-      //     nothing pushed through storage. Used at ANY size: the exact
-      //     output bytes are rows x width, so no optimizer estimate is
-      //     consulted. (An earlier revision gated this arm on the
-      //     optimizer's sizeInBytes estimate of the record table; that
-      //     estimate UNDERESTIMATES encoded records ~15x — 1.007 GB
-      //     estimated vs 14.9 GB actual at sf10, tools/ProbeWalk — so the
-      //     "cache below 2 GiB" arm silently swallowed multi-GB exports
-      //     and pushed the full payload through the block manager, the §8
-      //     anti-pattern. At fixture scale the two shapes measured as a
-      //     wash — bench/ab_segy_fixed_r20.json mins within ±10% — so
-      //     nothing is lost below the old gate either.)
-      //  2. Variable width below `graft.segy.cacheRecordsMaxBytes` (2 GiB
-      //     default, optimizer-estimated): persist the serialized records
-      //     so the encode runs once across the sizes + write jobs.
-      //  3. Variable width above the gate: recompute — the sort shuffle is
-      //     reused, the reduce side re-executes (caching a 100 TB export
-      //     would push the whole payload through storage).
-      var cached: Option[DataFrame] = None
-      try {
-      val cacheMax = BigInt(sess.conf.get("graft.segy.cacheRecordsMaxBytes",
-        (2L << 30).toString).toLong)
-      // graft.segy.fixedWidthOffsets=false forces the legacy cache/recompute
-      // shape — the same-session A/B switch (tools/AbSegyFixed)
-      val fixedEnabled = sess.conf.get(
-        "graft.segy.fixedWidthOffsets", "true").toBoolean
-      val fixedSized: Option[(org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-                              Array[Long])] =
-        fixedRecordBytes.filter(_ => fixedEnabled).flatMap { w =>
-          val r = recordsOnly.rdd
-          lastShuffleReader(r).map { sr =>
-            val counts = sess.sparkContext.runJob(
-              sr.asInstanceOf[org.apache.spark.rdd.RDD[Any]],
-              (it: Iterator[Any]) => {
-                var n = 0L
-                while (it.hasNext) { it.next(); n += 1 }
-                n
-              })
-            (r, counts.map(_ * w))
-          }
-        }
-      val (rdd, sizes) = fixedSized.getOrElse {
-        val underGate =
-          recordsOnly.queryExecution.optimizedPlan.stats.sizeInBytes <= cacheMax
-        if (underGate)
-          cached = Some(recordsOnly.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val r = cached.getOrElse(recordsOnly).rdd
-        val sz = r.mapPartitionsWithIndex { case (idx, it) =>
+      // Offsets are row counts × the record width. The counts come off the
+      // last shuffle when the lineage has one (no sort, no encode): the
+      // sort and encode then run exactly once, in the write job, with
+      // nothing cached, at any size. Without a shuffle, a row-count pass
+      // over the records themselves supplies them.
+      val rdd = recordsOnly.rdd
+      val counts = sess.sparkContext.runJob(
+        lastShuffleReader(rdd).getOrElse(rdd).asInstanceOf[org.apache.spark.rdd.RDD[Any]],
+        (it: Iterator[Any]) => {
           var n = 0L
-          it.foreach(row => n += row.getAs[Array[Byte]]("trace_record").length)
-          Iterator.single((idx, n))
-        }.collect().sortBy(_._1).map(_._2)
-        (r, sz)
-      }
-      val offsets = sizes.scanLeft(head.length.toLong)(_ + _)
+          while (it.hasNext) { it.next(); n += 1 }
+          n
+        })
+      val offsets = counts.scanLeft(head.length.toLong)(_ + _ * recordBytes)
       val localFile = java.nio.file.Paths.get(outPath.toUri.getPath)
       Option(localFile.getParent)
         .foreach(java.nio.file.Files.createDirectories(_))
@@ -306,6 +249,11 @@ object SegyExport {
       try init.write(java.nio.ByteBuffer.wrap(head)) finally init.close()
       val localPathStr = localFile.toString
       val offsetsB = sess.sparkContext.broadcast(offsets)
+      // every record is checked against the declared width, as in the
+      // object-store arm, and each partition's byte total against its
+      // count (wrote == counted): a record of any other width, or a count
+      // that no longer matches the rows, fails loudly instead of
+      // corrupting the file
       rdd.mapPartitionsWithIndex { case (idx, it) =>
         val ch = java.nio.channels.FileChannel.open(
           java.nio.file.Paths.get(localPathStr),
@@ -314,7 +262,12 @@ object SegyExport {
           ch.position(offsetsB.value(idx))
           val os = new java.io.BufferedOutputStream(
             java.nio.channels.Channels.newOutputStream(ch), 1 << 20)
-          it.foreach(r => os.write(r.getAs[Array[Byte]]("trace_record")))
+          it.foreach { r =>
+            val rec = r.getAs[Array[Byte]]("trace_record")
+            require(rec.length == recordBytes, s"partition $idx wrote a " +
+              s"${rec.length}B record, the binary header declares ${recordBytes}B")
+            os.write(rec)
+          }
           os.flush()
           require(ch.position() == offsetsB.value(idx + 1),
             s"partition $idx wrote ${ch.position() - offsetsB.value(idx)}B, " +
@@ -323,7 +276,6 @@ object SegyExport {
         Iterator.single(1)
       }.count()
       offsetsB.destroy()
-      } finally { cached.foreach(_.unpersist()): Unit }
     } else {
       // object stores / HDFS: no positioned writes — parallel part files,
       // then a streamed driver concat in partition order, exactly the
@@ -331,42 +283,48 @@ object SegyExport {
       // `concat_files` step (`segy/blocked_io.py:214-303`,
       // `segy/creation.py:236-263`). (A real S3 deployment would swap the
       // concat for a multipart-upload compose of the same parts.) One pass
-      // over the records — no sizes job, so no cache and no fixed-width
-      // shortcut apply here.
+      // over the records — no offsets, so no counts job; each record is
+      // checked against the declared width instead.
       val partsDir = outFile + ".parts"
-      val nParts = recordsOnly.rdd.mapPartitionsWithIndex { case (idx, it) =>
-        val fs = new org.apache.hadoop.fs.Path(partsDir)
-          .getFileSystem(confSer.value)
-        val part = new org.apache.hadoop.fs.Path(f"$partsDir/part-$idx%05d")
-        val os = fs.create(part, true)
-        try it.foreach(r => os.write(r.getAs[Array[Byte]]("trace_record")))
-        finally os.close()
-        Iterator.single(1)
-      }.count().toInt
-      // every partition writes its part, empty or not: a missing one is
-      // lost traces, never a part to skip. A failed concat leaves no
-      // truncated output behind.
       val fs = outPath.getFileSystem(conf)
       val parts = new org.apache.hadoop.fs.Path(partsDir)
+      // every partition writes its part, empty or not: a missing one is
+      // lost traces, never a part to skip. A failed part job or concat
+      // leaves neither parts nor truncated output behind.
       try {
-        val os = fs.create(outPath, true)
+        val nParts = recordsOnly.rdd.mapPartitionsWithIndex { case (idx, it) =>
+          val fs = new org.apache.hadoop.fs.Path(partsDir)
+            .getFileSystem(confSer.value)
+          val part = new org.apache.hadoop.fs.Path(f"$partsDir/part-$idx%05d")
+          val os = fs.create(part, true)
+          try it.foreach { r =>
+            val rec = r.getAs[Array[Byte]]("trace_record")
+            require(rec.length == recordBytes, s"partition $idx wrote a " +
+              s"${rec.length}B record, the binary header declares ${recordBytes}B")
+            os.write(rec)
+          } finally os.close()
+          Iterator.single(1)
+        }.count().toInt
         try {
-          os.write(head)
-          (0 until nParts).foreach { i =>
-            val part = new org.apache.hadoop.fs.Path(parts, f"part-$i%05d")
-            if (!fs.exists(part)) throw new MissingPartFileError(
-              s"SEG-Y export of $outFile: part file $part is missing " +
-                s"($nParts partitions wrote parts)")
-            val in = fs.open(part)
-            try {
-              val buf = new Array[Byte](1 << 20)
-              var n = in.read(buf)
-              while (n > 0) { os.write(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-          }
-        } finally os.close()
-      } catch {
-        case scala.util.control.NonFatal(e) => fs.delete(outPath, false); throw e
+          val os = fs.create(outPath, true)
+          try {
+            os.write(head)
+            (0 until nParts).foreach { i =>
+              val part = new org.apache.hadoop.fs.Path(parts, f"part-$i%05d")
+              if (!fs.exists(part)) throw new MissingPartFileError(
+                s"SEG-Y export of $outFile: part file $part is missing " +
+                  s"($nParts partitions wrote parts)")
+              val in = fs.open(part)
+              try {
+                val buf = new Array[Byte](1 << 20)
+                var n = in.read(buf)
+                while (n > 0) { os.write(buf, 0, n); n = in.read(buf) }
+              } finally in.close()
+            }
+          } finally os.close()
+        } catch {
+          case scala.util.control.NonFatal(e) => fs.delete(outPath, false); throw e
+        }
       } finally fs.delete(parts, true)
     }
   }

@@ -16,10 +16,10 @@ import org.apache.spark.util.SerializableConfiguration
 import SegyRead.{HeaderField, StandardFields}
 
 /** DataSourceV2 for STANDARD-layout (rev-1) SEG-Y files:
-  * `spark.read.format("segy").load(path)` — the idiomatic-Spark face of
-  * [[SegyRead.readStandardTraces]], mirroring how the reference opens a
-  * file before planning workers (`segy/file.py:152-186` reads the binary
-  * header for geometry; `ingestion/segy/reader.py` fans ranges out).
+  * `spark.read.format("segy").load(path)` — the engine's SEG-Y reader,
+  * mirroring how the reference opens a file before planning workers
+  * (`segy/file.py:152-186` reads the binary header for geometry;
+  * `ingestion/segy/reader.py` fans ranges out).
   *
   * The scan is **self-describing**: samples-per-trace, sample interval and
   * format code parse from the file's binary header, and the `samples`
@@ -293,11 +293,7 @@ private class SegyWriteBuilder(
             fields.map(f => f -> f.name), "_segy_payload")
           SegyExport.writeSegy(records, path,
             SegyHeaders.sanitizeTextHeader(Seq(textLine)),
-            SegyExport.standardBinaryHeader(nSamples, interval, fmt),
-            // standard layout ⇒ constant record width: the offsets pass
-            // reads row counts off the sort shuffle, encode runs once
-            fixedRecordBytes =
-              Some(SegyExport.standardRecordBytes(nSamples, fmt)))
+            SegyExport.standardBinaryHeader(nSamples, interval, fmt))
         }
     }
 }

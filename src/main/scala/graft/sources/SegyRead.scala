@@ -1,15 +1,14 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.export.SegyHeaders
 
 /** SEG-Y byte-stream ingest (S1/S2/S3 over a real file): the read half of
   * [[graft.export.SegyExport]] — 3200-byte EBCDIC/ASCII text header,
-  * 400-byte binary header, then fixed-length trace records (4-byte
-  * big-endian header fields followed by the sample payload).
+  * 400-byte binary header, then fixed-length trace records (the standard
+  * 240-byte trace header followed by the sample payload).
   *
   * Reference: `segy/file.py:152-186` (file info = headers + trace count
   * before any bulk work) and `segy/_workers.py:30-72` (`header_scan_worker`
@@ -59,111 +58,6 @@ object SegyRead {
     decoded.grouped(SegyHeaders.Cols).toSeq
   }
 
-  /** S1: read file metadata from the two fixed headers only — the driver
-    * touches 3600 bytes regardless of file size. Trace count is
-    * `(fileSize − 3600) / recordLen`; a remainder means the declared record
-    * geometry is wrong for this file and fails loudly rather than silently
-    * truncating.
-    */
-  def fileInfo(spark: SparkSession, path: String,
-               nHeaderFields: Int, sampleBytes: Int): SegyFileInfo = {
-    val recordLen = recordLength(nHeaderFields, sampleBytes)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val size = fs.getFileStatus(p).getLen
-    require(size >= DataOffset,
-      s"$path is ${size}B — smaller than the $DataOffset-byte SEG-Y headers")
-    require((size - DataOffset) % recordLen == 0,
-      s"$path data section ${size - DataOffset}B is not a multiple of the " +
-        s"$recordLen-byte record ($nHeaderFields header fields + ${sampleBytes}B samples)")
-    val head = new Array[Byte](DataOffset.toInt)
-    val in = fs.open(p)
-    try in.readFully(0L, head) finally in.close()
-    val text = decodeTextHeader(java.util.Arrays.copyOfRange(head, 0, TextHeaderBytes))
-    val bin = java.util.Arrays.copyOfRange(head, TextHeaderBytes, DataOffset.toInt)
-    val revOff = 300 // SEG-Y bytes 3501-3502 within the binary header
-    val rev = SegyHeaders.decodeRevision(
-      ((bin(revOff) & 0xff) << 8) | (bin(revOff + 1) & 0xff))
-    SegyFileInfo(size, (size - DataOffset) / recordLen, text, bin, rev)
-  }
-
-  private def recordLength(nHeaderFields: Int, sampleBytes: Int): Long = {
-    require(nHeaderFields > 0, s"need at least one header field, got $nHeaderFields")
-    require(sampleBytes >= 0, s"sampleBytes must be >= 0, got $sampleBytes")
-    nHeaderFields.toLong * 4L + sampleBytes
-  }
-
-  /** S2/S3: parse the trace records into a DataFrame of
-    * `(trace_index: long, <field>: long per header field, samples: binary)`.
-    * Header fields decode as signed 32-bit big-endian (the exact inverse of
-    * [[graft.export.SegyExport.serializeTraces]]'s packing); the payload
-    * stays raw bytes — decode lazily with [[ibmSamples]] (or a cast) so the
-    * scan itself never touches float conversion.
-    *
-    * Distribution: `tracesPerSplit` fixed-size ranges (default sized so a
-    * split reads ~128 MB) fan out as one task each; every task opens the
-    * file, seeks to `3600 + start·recordLen`, and decodes only its range.
-    */
-  def readTraces(spark: SparkSession, path: String, headerFields: Seq[String],
-                 sampleBytes: Int, tracesPerSplit: Int = 0): DataFrame = {
-    require(headerFields.nonEmpty, "headerFields must be non-empty")
-    require(headerFields.distinct.size == headerFields.size,
-      s"duplicate header fields in ${headerFields.mkString(",")}")
-    val info = fileInfo(spark, path, headerFields.size, sampleBytes)
-    val recordLen = recordLength(headerFields.size, sampleBytes)
-    val perSplit: Long =
-      if (tracesPerSplit > 0) tracesPerSplit.toLong
-      else math.max(1L, (128L << 20) / recordLen)
-    val nSplits = ((info.nTraces + perSplit - 1) / perSplit).toInt
-    val nFields = headerFields.size
-    val confSer = new org.apache.spark.util.SerializableConfiguration(
-      new org.apache.hadoop.conf.Configuration(
-        spark.sparkContext.hadoopConfiguration))
-
-    val schema = StructType(
-      StructField("trace_index", LongType, nullable = false) +:
-        headerFields.map(f => StructField(f, LongType, nullable = false)) :+
-        StructField("samples", BinaryType, nullable = false))
-
-    val rows = spark.sparkContext
-      .parallelize(0 until nSplits, math.max(1, nSplits))
-      .flatMap { split =>
-        val start = split.toLong * perSplit
-        val end = math.min(start + perSplit, info.nTraces)
-        val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(confSer.value)
-        val in = fs.open(new org.apache.hadoop.fs.Path(path))
-        val close = registerStreamClose(in)
-        in.seek(DataOffset + start * recordLen)
-        val buf = new Array[Byte](recordLen.toInt)
-        new Iterator[Row] {
-          private var i = start
-          def hasNext: Boolean = {
-            val more = i < end
-            if (!more) close()
-            more
-          }
-          def next(): Row = {
-            in.readFully(buf)
-            val vals = new Array[Any](1 + nFields + 1)
-            vals(0) = i
-            var f = 0
-            while (f < nFields) {
-              val o = f * 4
-              vals(1 + f) = (((buf(o) & 0xff) << 24) | ((buf(o + 1) & 0xff) << 16) |
-                ((buf(o + 2) & 0xff) << 8) | (buf(o + 3) & 0xff)).toLong
-              f += 1
-            }
-            vals(1 + nFields) = java.util.Arrays.copyOfRange(
-              buf, nFields * 4, recordLen.toInt)
-            i += 1
-            Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-          }
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
-
   /** Close-on-task-completion for a split's input stream: an iterator that
     * closes only on exhaustion leaks the handle when the consumer stops
     * early (`limit`/`take` don't drain, and an exception in `next()` skips
@@ -181,42 +75,12 @@ object SegyRead {
     close
   }
 
-  /** Decode an IBM32 sample payload (SEG-Y format 1) to `array<float>`:
-    * one [[graft.functions.SampleCodec]] loop per trace, each 4-byte word
-    * through [[graft.functions.IbmFloatDecode.decode]]. `nSamples` is
-    * fixed per file (SEG-Y records are fixed-length).
-    */
-  def ibmSamples(payload: Column, nSamples: Int): Column =
-    decodeSamples(payload, nSamples, 1)
-
-  /** Decode a big-endian IEEE float32 payload (SEG-Y sample format 5) to
-    * `array<float>`, raw-bit exact (NaN payloads and −0 included).
-    */
-  def ieeeSamples(payload: Column, nSamples: Int): Column =
-    decodeSamples(payload, nSamples, 5)
-
-  /** Decode a big-endian IEEE float64 payload (SEG-Y sample format 6,
-    * rev-2) to `array<double>`, raw-bit exact (NaN payloads included).
-    */
-  def ieee64Samples(payload: Column, nSamples: Int): Column =
-    decodeSamples(payload, nSamples, 6)
-
-  /** Decode an integer sample payload (SEG-Y formats 2=int32, 3=int16,
-    * 8=int8) to `array<int>` — signed big-endian words. Real field data
-    * very often ships format 3; the reference gets these from the `segy`
-    * package's transforms (`segy/file.py:152-186`).
-    */
-  def intSamples(payload: Column, nSamples: Int, formatCode: Int): Column = {
-    require(formatCode == 2 || formatCode == 3 || formatCode == 8,
-      s"intSamples decodes formats 2/3/8, got $formatCode (use ibmSamples/ieeeSamples for 1/5)")
-    decodeSamples(payload, nSamples, formatCode)
-  }
-
   /** Decode any supported sample format to its natural element type:
     * `array<float>` for 1 (IBM32) and 5 (IEEE32), `array<double>` for 6
     * (IEEE64), `array<int>` for 2/3/8 — one compiled loop per trace
     * ([[graft.functions.SampleDecodeExpr]]), the same codec the DSv2 scan
-    * decodes with. A payload shorter than `nSamples` samples fails loudly.
+    * decodes with. The codec validates `formatCode`; a payload shorter
+    * than `nSamples` samples fails loudly.
     */
   def decodeSamples(payload: Column, nSamples: Int, formatCode: Int): Column =
     graft.functions.SampleCodec.decodeColumn(payload, nSamples, formatCode)
@@ -327,6 +191,12 @@ object SegyRead {
   def parseStandardInfo(path: String, size: Long, head: Array[Byte]): StandardInfo = {
     require(head.length == DataOffset.toInt,
       s"$path: standard info needs the $DataOffset-byte fixed headers, got ${head.length}B")
+    // binary-header bytes 97-100: the rev-2 byte-order word reads 0x04030201
+    // when every multi-byte field is little-endian; rev-1 leaves the bytes
+    // unassigned, so only that exact pattern is refused
+    require(java.nio.ByteBuffer.wrap(head, TextHeaderBytes + 96, 4).getInt != 0x04030201,
+      s"$path declares little-endian byte order (binary-header bytes 97-100); " +
+        "little-endian SEG-Y is not supported")
     def beShort(off: Int): Int = // 1-based offset within the binary header
       ((head(TextHeaderBytes + off - 1) & 0xff) << 8) |
         (head(TextHeaderBytes + off) & 0xff)
@@ -435,10 +305,11 @@ object SegyRead {
 
   /** Parse a STANDARD-layout file: 240-byte trace headers decoded at the
     * requested fields' spec offsets, sample payload raw (decode with
-    * [[ibmSamples]]/[[ieeeSamples]] per the file's format code). Same
-    * split-per-trace-range distribution as [[readTraces]]; geometry comes
-    * from [[standardInfo]], so the only caller input is which header
-    * fields to surface.
+    * [[decodeSamples]] per the file's format code). Geometry comes from
+    * [[standardInfo]], so the only caller input is which header fields to
+    * surface. The engine reads through the `segy` DSv2 scan; this
+    * function API remains as the scan's differential reference and for
+    * the benchmark's traced layers.
     */
   def readStandardTraces(spark: SparkSession, path: String,
                          fields: Seq[HeaderField],

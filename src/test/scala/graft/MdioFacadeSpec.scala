@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class MdioFacadeSpec extends SparkSpec {
   import spark.implicits._
 
-  test("segyToMdio -> openMdio -> info -> optimize -> mdioToSegy -> copyMdio") {
+  test("segyToMdio -> openMdio -> info -> optimize -> mdioToStandardSegy -> copyMdio") {
     val rows = for (il <- 10 until 20; xl <- 100 until 110)
       yield (il, xl, il * 1000.0 + xl)
     val df = rows.toDF("inline", "crossline", "amplitude")
@@ -35,19 +35,20 @@ class MdioFacadeSpec extends SparkSpec {
 
     // masked export through the facade
     val out = Files.createTempDirectory("facade-out").toString + "/f.sgy"
-    val withPayload = handle.df.withColumn("samples", call_function("to_binary",
-      lpad(hex(col("amplitude").cast("int")), 8, "0"), lit("hex")))
-    Mdio.mdioToSegy(
-      handle.copy(df = withPayload), out,
+    val withSamples = handle.df.withColumn("samples",
+      array(col("amplitude").cast("float")))
+    Mdio.mdioToStandardSegy(
+      handle.copy(df = withSamples), out,
       mask = col("inline") < 15,
       dims = Seq("inline", "crossline"),
-      headerFields = Seq("inline", "crossline"),
+      fieldCols = Seq(
+        graft.sources.SegyRead.StandardFields.Inline -> "inline",
+        graft.sources.SegyRead.StandardFields.Crossline -> "crossline"),
       orderKeys = Seq("inline", "crossline"),
-      samplesCol = "samples",
-      textHeader = graft.`export`.SegyHeaders.sanitizeTextHeader(Seq("C 1 FACADE")),
-      binaryHeader = new Array[Byte](400))
+      samplesCol = "samples", nSamples = 1, sampleInterval = 2000,
+      textHeader = graft.`export`.SegyHeaders.sanitizeTextHeader(Seq("C 1 FACADE")))
     val bytes = Files.readAllBytes(Paths.get(out))
-    assert(bytes.length == 3600 + 50 * (4 + 4 + 4))
+    assert(bytes.length == 3600 + 50 * (240 + 4))
 
     // copy preserves row count and sidecar
     val copied = Files.createTempDirectory("facade-copy").toString + "/c"
@@ -65,8 +66,9 @@ class MdioFacadeSpec extends SparkSpec {
     graft.plans.AccessPatternCatalog.clear()
   }
 
-  test("segyFileToMdio ingests a real byte-stream file (the reference's " +
+  test("segyStandardToMdio ingests a real byte-stream file (the reference's " +
        "URL entry point)") {
+    import graft.sources.SegyRead.StandardFields.{Crossline, Inline}
     // write a little SEG-Y file through the sink: IEEE float32 amplitude
     // payloads assembled driver-side (the fixture is 20 traces)
     val rows = for (il <- 1 to 4; xl <- 1 to 5) yield (il, xl)
@@ -78,25 +80,25 @@ class MdioFacadeSpec extends SparkSpec {
     }.toDF("inline", "crossline", "samples")
     val f = Files.createTempDirectory("facade-read").toString + "/in.sgy"
     graft.`export`.SegyExport.writeSegy(
-      graft.`export`.SegyExport.serializeTraces(
-        traces.orderBy("inline", "crossline"), Seq("inline", "crossline"),
-        "samples"),
+      graft.`export`.SegyExport.serializeStandardTraces(
+        traces.orderBy("inline", "crossline"),
+        Seq(Inline -> "inline", Crossline -> "crossline"), "samples"),
       f, graft.`export`.SegyHeaders.sanitizeTextHeader(Seq("C 1 READ")),
-      new Array[Byte](400))
+      graft.`export`.SegyExport.standardBinaryHeader(nSamples = 1,
+        sampleInterval = 2000, formatCode = 5))
 
     val store = Files.createTempDirectory("facade-read-store").toString
-    val r = Mdio.segyFileToMdio(spark, f,
-      headerFields = Seq("inline", "crossline"), sampleBytes = 4,
+    val r = Mdio.segyStandardToMdio(spark, f,
+      fields = Seq("inline", "crossline"),
       TemplateRegistry.instance.get("PostStack3DTime"), GridOverrides(),
-      store, ordinal = Seq("inline", "crossline"), valueCol = "amplitude",
-      decodeSamples = b =>
-        element_at(graft.sources.SegyRead.ieeeSamples(b, 1), 1).cast("double"))
+      store, valueCol = "amplitude")
     assert(r.nTraces == 20)
     val got = Mdio.openMdio(spark, store).df
-      .select("inline", "crossline", "amplitude").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
+      .select(col("inline"), col("crossline"), element_at(col("amplitude"), 1))
+      .collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getFloat(2))).toSet
     assert(got == rows.map { case (il, xl) =>
-      (il.toLong, xl.toLong, (il * 100 + xl).toDouble) }.toSet)
+      (il.toLong, xl.toLong, (il * 100 + xl).toFloat) }.toSet)
   }
 
   test("segyDirToMdio ingests a DIRECTORY of shot files as one dataset") {
@@ -134,7 +136,7 @@ class MdioFacadeSpec extends SparkSpec {
         Files.createTempDirectory("facade-dir-x").toString,
         valueCol = "amplitude")
     }
-    assert(e.getMessage.contains("segyFileToMdio"))
+    assert(e.getMessage.contains("ingest one file with segyStandardToMdio"))
   }
 
   test("mdioToStandardSegy emits a spec-compliant file any reader opens") {
@@ -162,11 +164,10 @@ class MdioFacadeSpec extends SparkSpec {
 
     val info = SegyRead.standardInfo(spark, out)
     assert(info.nSamples == 2 && info.formatCode == 1 && info.base.nTraces == 8)
-    val got = SegyRead.readStandardTraces(spark, out, Seq(Inline, Crossline))
-      .withColumn("v", SegyRead.ibmSamples(col("samples"), 2))
-      .orderBy("trace_index").collect()
+    val got = spark.read.format("segy").option("fields", "inline,crossline")
+      .load(out).orderBy("trace_index").collect()
       .map(r => (r.getAs[Long]("inline"), r.getAs[Long]("crossline"),
-        r.getSeq[Float](r.fieldIndex("v"))))
+        r.getSeq[Float](r.fieldIndex("samples"))))
     assert(got.map(t => (t._1, t._2)).toSeq ==
       (for (il <- 1 to 2; xl <- 1 to 4) yield (il.toLong, xl.toLong)))
     got.foreach { case (il, xl, v) =>

@@ -26,8 +26,8 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Assert the code under test left no cached blocks behind. The session
     * is shared across concurrently-running suites, and some operators hold
-    * a TRANSIENT persist for the duration of one call (SEG-Y export's
-    * size-pass cache, index-build barriers) — a point-in-time
+    * a TRANSIENT persist for the duration of one call (index-build
+    * barriers) — a point-in-time
     * `getPersistentRDDs.isEmpty` can observe a neighbor suite mid-call.
     * Retrying briefly pins the assertion to LINGERING caches (a real leak
     * never clears, so the timeout still fails it).

@@ -77,8 +77,7 @@ class ExportOrderSpec extends SparkSpec {
         withSeq.withColumn("_pay", SegyExport.ibmPayload(col("samples"), nSamples)),
         fieldCols, "_pay"),
       seqOut, text,
-      SegyExport.standardBinaryHeader(nSamples, 2000, formatCode = 1),
-      fixedRecordBytes = Some(SegyExport.standardRecordBytes(nSamples, 1)))
+      SegyExport.standardBinaryHeader(nSamples, 2000, formatCode = 1))
 
     val bytes = Files.readAllBytes(Paths.get(out))
     assert(bytes.toSeq == Files.readAllBytes(Paths.get(seqOut)).toSeq)
@@ -100,10 +99,10 @@ class ExportOrderSpec extends SparkSpec {
     import spark.implicits._
     spark.sparkContext.hadoopConfiguration
       .set("fs.lossy.impl", classOf[LossyPartsFs].getName)
-    val records = SegyExport.serializeTraces(
+    val records = SegyExport.serializeStandardTraces(
       (1 to 30).map(i => (i, Array[Byte](i.toByte, 0, 0, 1))).toDF("k", "samples")
         .repartitionByRange(3, col("k")).sortWithinPartitions("k"),
-      Seq("k"), "samples")
+      Seq(SegyRead.StandardFields.Inline -> "k"), "samples")
     val bin = SegyExport.standardBinaryHeader(1, 0, formatCode = 1)
     val dir = Files.createTempDirectory("lossyparts").toString
 

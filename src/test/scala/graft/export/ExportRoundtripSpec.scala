@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import graft.ingestion.{GridOverrides, IngestPipeline}
 import graft.schema.TemplateRegistry
+import graft.sources.SegyRead.StandardFields.{Crossline, Inline}
 import graft.storage.MdioDataset
 import org.apache.spark.sql.functions._
 
@@ -37,26 +38,29 @@ class ExportRoundtripSpec extends SparkSpec {
     val kept = masked.count()
     assert(kept == 200)
 
-    // serialize with a 4-byte big-endian amplitude scaled to int
-    val records = SegyExport.serializeTraces(
+    // serialize with one format-2 sample: the amplitude as a 4-byte
+    // big-endian int
+    val records = SegyExport.serializeStandardTraces(
       ds.df.where(col("inline") % 2 === 0)
         .orderBy("inline", "crossline")
         .withColumn("samples", call_function("to_binary",
           lpad(hex(col("amplitude").cast("int")), 8, "0"), lit("hex"))),
-      headerFields = Seq("inline", "crossline"), samplesCol = "samples")
+      Seq(Inline -> "inline", Crossline -> "crossline"), "samples")
     val out = Files.createTempDirectory("rt").toString + "/export.sgy"
     SegyExport.writeSegy(records, out,
-      SegyHeaders.sanitizeTextHeader(Seq("C 1 ROUNDTRIP")), new Array[Byte](400))
+      SegyHeaders.sanitizeTextHeader(Seq("C 1 ROUNDTRIP")),
+      SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 2000,
+        formatCode = 2))
 
     val bytes = Files.readAllBytes(Paths.get(out))
-    val recordLen = 4 + 4 + 4 // two 4-byte headers + 4-byte sample payload
+    val recordLen = 240 + 4 // standard trace header + 4-byte sample payload
     assert(bytes.length == 3600 + 200 * recordLen)
     // first trace is the global minimum (inline 10, crossline 100); traces
     // appear in strictly increasing (inline, crossline) order
     def beInt(off: Int) = java.nio.ByteBuffer.wrap(bytes, off, 4).getInt
     val keys = (0 until 200).map { i =>
       val off = 3600 + i * recordLen
-      (beInt(off), beInt(off + 4))
+      (beInt(off + 188), beInt(off + 192))
     }
     assert(keys.head == ((10, 100)))
     assert(keys == keys.sorted)
@@ -65,11 +69,11 @@ class ExportRoundtripSpec extends SparkSpec {
     // full circle: re-import the SEG-Y bytes into a trace table and compare
     // against the masked original — the Teapot-style import→export→import
     // equality (`tests/integration/test_segy_roundtrip_teapot.py:151-310`)
-    def beIntAt(off: Int) = java.nio.ByteBuffer.wrap(bytes, off, 4).getInt
-    val reimported = (0 until 200).map { i =>
-      val off = 3600 + i * recordLen
-      (beIntAt(off), beIntAt(off + 4), beIntAt(off + 8).toDouble)
-    }.toSet
+    val reimported = spark.read.format("segy")
+      .option("fields", "inline,crossline").load(out)
+      .select(col("inline").cast("int"), col("crossline").cast("int"),
+        element_at(col("samples"), 1).cast("double"))
+      .as[(Int, Int, Double)].collect().toSet
     val original = ds.df.where(col("inline") % 2 === 0)
       .select(col("inline"), col("crossline"), col("amplitude").cast("int").cast("double"))
       .as[(Int, Int, Double)].collect().toSet

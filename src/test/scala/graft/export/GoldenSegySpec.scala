@@ -3,7 +3,7 @@ package graft.`export`
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import graft.sources.SegyRead.StandardFields.{Crossline, Inline}
 
 /** Golden byte parity for the SEG-Y sink, mirroring the reference's Teapot
   * golden-header assertions (`tests/integration/test_segy_roundtrip_teapot
@@ -19,17 +19,22 @@ class GoldenSegySpec extends SparkSpec {
     Seq("C 1 GRAFT GOLDEN FILE", "C 2 FIXED CONTENT") ++
       (3 to 40).map(i => f"C$i%3d"))
 
-  // binary header: zeros except the revision word at SEG-Y bytes 3501-3502
-  // (offset 300 within the 400-byte binary header): rev 1.0 → 0x0100
+  // binary header: zeros except one sample per trace (SEG-Y bytes
+  // 3221-3222), format 2 = int32 (3225-3226) and the revision word at SEG-Y
+  // bytes 3501-3502 (offset 300 within the 400-byte binary header): rev 1.0
+  // → 0x0100
   private val revisionOffset = 300
   private def binaryHeader: Array[Byte] = {
     val b = new Array[Byte](400)
+    b(21) = 1
+    b(25) = 2
     val rev = SegyHeaders.encodeRevision(1, 0)
     b(revisionOffset) = ((rev >> 8) & 0xff).toByte
     b(revisionOffset + 1) = (rev & 0xff).toByte
     b
   }
 
+  // (inline, crossline, one big-endian int32 sample)
   private val traces = Seq(
     (1, 10, Array[Byte](0, 0, 0, 1)),
     (1, 20, Array[Byte](0, 0, 0, 2)),
@@ -37,7 +42,8 @@ class GoldenSegySpec extends SparkSpec {
 
   private def writeGolden(): Array[Byte] = {
     val df = traces.toDF("il", "xl", "samples").orderBy("il", "xl")
-    val records = SegyExport.serializeTraces(df, Seq("il", "xl"), "samples")
+    val records = SegyExport.serializeStandardTraces(df,
+      Seq(Inline -> "il", Crossline -> "xl"), "samples")
     val out = Files.createTempDirectory("golden").toString + "/golden.sgy"
     SegyExport.writeSegy(records, out, textLines, binaryHeader)
     Files.readAllBytes(Paths.get(out))
@@ -71,13 +77,18 @@ class GoldenSegySpec extends SparkSpec {
   test("whole file equals the independently assembled golden byte array") {
     val got = writeGolden()
     // assemble expected bytes WITHOUT the Spark writer: EBCDIC text header,
-    // binary header, then 4-byte BE il, xl, payload per trace in (il, xl) order
+    // binary header, then per trace in (il, xl) order a 240-byte header
+    // holding only the 4-byte BE inline (bytes 189-192) and crossline
+    // (193-196), followed by the payload
     val ebcdic = java.nio.charset.Charset.forName("IBM037")
-    val expected = java.nio.ByteBuffer.allocate(3600 + 3 * 12)
+    val expected = java.nio.ByteBuffer.allocate(3600 + 3 * 244)
     expected.put(textLines.mkString.getBytes(ebcdic))
     expected.put(binaryHeader)
     traces.sortBy { case (il, xl, _) => (il, xl) }.foreach { case (il, xl, pay) =>
-      expected.putInt(il); expected.putInt(xl); expected.put(pay)
+      val start = expected.position()
+      expected.putInt(start + 188, il).putInt(start + 192, xl)
+      expected.position(start + 240)
+      expected.put(pay)
     }
     assert(got.toSeq == expected.array().toSeq)
   }

@@ -257,12 +257,16 @@ class SegyExportSpec extends SparkSpec {
     assert(out.sortBy(_._3) == List((1, 2, 0L), (2, 1, 1L), (3, 3, 2L)))
   }
 
-  test("serializeTraces packs 4-byte headers + payload") {
+  test("serializeStandardTraces packs headers at spec offsets + payload") {
+    import graft.sources.SegyRead.StandardFields.{Crossline, Inline}
     val df = Seq((7, 260, Array[Byte](1, 2, 3))).toDF("il", "xl", "samples")
-    val r = SegyExport.serializeTraces(df, Seq("il", "xl"), "samples").collect().head
-    assert(r.getAs[Long]("record_len") == 4 + 4 + 3)
+    val r = SegyExport.serializeStandardTraces(df,
+      Seq(Inline -> "il", Crossline -> "xl"), "samples").collect().head
+    assert(r.getAs[Long]("record_len") == 240 + 3)
     val rec = r.getAs[Array[Byte]]("trace_record")
-    assert(rec.take(4).toSeq == Seq[Byte](0, 0, 0, 7))
-    assert(rec.slice(4, 8).toSeq == Seq[Byte](0, 0, 1, 4)) // 260 = 0x104
+    assert(rec.slice(188, 192).toSeq == Seq[Byte](0, 0, 0, 7))
+    assert(rec.slice(192, 196).toSeq == Seq[Byte](0, 0, 1, 4)) // 260 = 0x104
+    assert((rec.take(188) ++ rec.slice(196, 240)).forall(_ == 0))
+    assert(rec.drop(240).toSeq == Seq[Byte](1, 2, 3))
   }
 }

@@ -50,7 +50,7 @@ class SegyDataSourceV2Spec extends SparkSpec {
       .select("trace_index", "inline", "crossline", "samples")
       .orderBy("trace_index").collect()
     val fn = SegyRead.readStandardTraces(spark, fmt1File, Seq(Inline, Crossline))
-      .withColumn("samples", SegyRead.ibmSamples(col("samples"), 4))
+      .withColumn("samples", SegyRead.decodeSamples(col("samples"), 4, 1))
       .select("trace_index", "inline", "crossline", "samples")
       .orderBy("trace_index").collect()
     assert(dsv2.toSeq == fn.toSeq)

@@ -20,35 +20,46 @@ class SegyReadSpec extends SparkSpec {
     Seq("C 1 GRAFT READBACK", "C 2 FIXED CONTENT") ++
       (3 to 40).map(i => f"C$i%3d"))
 
-  private def binaryHeader: Array[Byte] = {
-    val b = new Array[Byte](400)
-    val rev = SegyHeaders.encodeRevision(1, 0)
-    b(300) = ((rev >> 8) & 0xff).toByte
-    b(301) = (rev & 0xff).toByte
-    b
-  }
+  // samples per trace 2, format 2 (int32), revision 1.0
+  private def binaryHeader: Array[Byte] =
+    SegyExport.standardBinaryHeader(nSamples = 2, sampleInterval = 2000,
+      formatCode = 2)
 
-  // (il, xl, 8-byte payload = two 4-byte BE words)
+  // (il, xl, 8-byte payload = two int32 samples, big-endian)
   private val traces: Seq[(Int, Int, Array[Byte])] = Seq(
     (1, 10, Array[Byte](0, 0, 0, 1, 0, 0, 0, 2)),
     (1, 20, Array[Byte](0, 0, 0, 3, -1, -1, -1, -1)),
     (2, 10, Array[Byte](64, 16, 0, 0, 0, 0, 0, 5)),
     (-3, 7, Array[Byte](0, 1, 2, 3, 4, 5, 6, 7)))
 
+  private val record = 240 + 8
+
+  private def serialize(df: org.apache.spark.sql.DataFrame) = {
+    import SegyRead.StandardFields._
+    SegyExport.serializeStandardTraces(df,
+      Seq(Inline -> "il", Crossline -> "xl"), "samples")
+  }
+
   private def writeFile(): String = {
     val df = traces.toDF("il", "xl", "samples").orderBy("il", "xl")
-    val records = SegyExport.serializeTraces(df, Seq("il", "xl"), "samples")
     val out = Files.createTempDirectory("segyread").toString + "/in.sgy"
-    SegyExport.writeSegy(records, out, textLines, binaryHeader)
+    SegyExport.writeSegy(serialize(df), out, textLines, binaryHeader)
     out
   }
 
+  /** The segy scan of `f` with inline/crossline and the raw payload. */
+  private def scan(f: String, tracesPerSplit: Int = 0) =
+    spark.read.format("segy").option("fields", "inline,crossline")
+      .option("raw", "true").option("tracesPerSplit", tracesPerSplit.toString)
+      .load(f)
+
+  // `SegyFileInfo` is the file summary `standardInfo` returns as `base`
   test("fileInfo reads trace count, text header, and revision from the " +
        "3600 fixed bytes") {
     val f = writeFile()
-    val info = SegyRead.fileInfo(spark, f, nHeaderFields = 2, sampleBytes = 8)
+    val info = SegyRead.standardInfo(spark, f).base
     assert(info.nTraces == 4)
-    assert(info.fileSize == 3600 + 4 * (8 + 8))
+    assert(info.fileSize == 3600 + 4 * record)
     assert(info.textHeader == textLines)
     assert(info.revision == ((1, 0)))
     assert(info.binaryHeader.toSeq == binaryHeader.toSeq)
@@ -56,34 +67,32 @@ class SegyReadSpec extends SparkSpec {
 
   test("fileInfo rejects a file whose length is not header-aligned") {
     val f = writeFile()
+    Files.write(Paths.get(f), Array[Byte](0), java.nio.file.StandardOpenOption.APPEND)
     val e = intercept[IllegalArgumentException] {
-      SegyRead.fileInfo(spark, f, nHeaderFields = 2, sampleBytes = 7)
+      SegyRead.standardInfo(spark, f)
     }
     assert(e.getMessage.contains("not a multiple"))
   }
 
-  test("readTraces returns headers and samples bit-equal to what was " +
+  test("the segy scan returns headers and samples bit-equal to what was " +
        "exported, in file order") {
     val f = writeFile()
-    val got = SegyRead.readTraces(spark, f, Seq("il", "xl"), sampleBytes = 8)
-      .orderBy("trace_index").collect()
+    val got = scan(f).orderBy("trace_index").collect()
     val expected = traces.sortBy { case (il, xl, _) => (il, xl) }
     assert(got.length == expected.length)
     got.zip(expected).zipWithIndex.foreach {
       case ((row, (il, xl, pay)), i) =>
         assert(row.getAs[Long]("trace_index") == i.toLong)
-        assert(row.getAs[Long]("il") == il.toLong) // signed survives
-        assert(row.getAs[Long]("xl") == xl.toLong)
+        assert(row.getAs[Long]("inline") == il.toLong) // signed survives
+        assert(row.getAs[Long]("crossline") == xl.toLong)
         assert(row.getAs[Array[Byte]]("samples").toSeq == pay.toSeq)
     }
   }
 
   test("split boundaries do not change the result (tracesPerSplit = 1)") {
     val f = writeFile()
-    val whole = SegyRead.readTraces(spark, f, Seq("il", "xl"), 8)
-      .orderBy("trace_index").collect().map(_.toSeq)
-    val split = SegyRead.readTraces(spark, f, Seq("il", "xl"), 8,
-      tracesPerSplit = 1)
+    val whole = scan(f).orderBy("trace_index").collect().map(_.toSeq)
+    val split = scan(f, tracesPerSplit = 1)
       .orderBy("trace_index").collect().map(_.toSeq)
     assert(split.length == 4)
     assert(whole.zip(split).forall { case (a, b) =>
@@ -96,49 +105,45 @@ class SegyReadSpec extends SparkSpec {
 
   test("import -> export -> import: re-exported file is byte-identical") {
     val f = writeFile()
-    val info = SegyRead.fileInfo(spark, f, 2, 8)
-    val readBack = SegyRead.readTraces(spark, f, Seq("il", "xl"), 8)
-      .orderBy("trace_index")
-    val records = SegyExport.serializeTraces(
-      readBack.select(col("il").cast("int").as("il"),
-        col("xl").cast("int").as("xl"), col("samples")),
-      Seq("il", "xl"), "samples")
+    val info = SegyRead.standardInfo(spark, f).base
+    val readBack = scan(f).orderBy("trace_index")
     val out = Files.createTempDirectory("segyread").toString + "/out.sgy"
-    SegyExport.writeSegy(records, out, info.textHeader, info.binaryHeader)
+    SegyExport.writeSegy(
+      serialize(readBack.select(col("inline").as("il"),
+        col("crossline").as("xl"), col("samples"))),
+      out, info.textHeader, info.binaryHeader)
     assert(Files.readAllBytes(Paths.get(out)).toSeq ==
       Files.readAllBytes(Paths.get(f)).toSeq)
   }
 
-  test("ibmSamples decodes the payload with the native IBM32 kernel") {
+  /** A one-trace file of `payload` under a binary header of `formatCode`,
+    * decoded by [[SegyRead.decodeSamples]] from the scan's raw payload. */
+  private def decoded(payload: Array[Byte], nSamples: Int,
+                      formatCode: Int): Seq[Float] = {
+    val df = Seq((1, 1, payload)).toDF("il", "xl", "samples")
+    val out = Files.createTempDirectory("segyread").toString + "/one.sgy"
+    SegyExport.writeSegy(serialize(df), out,
+      SegyHeaders.sanitizeTextHeader(Seq("C 1")),
+      SegyExport.standardBinaryHeader(nSamples, 2000, formatCode))
+    scan(out).select(SegyRead.decodeSamples(col("samples"), nSamples,
+      formatCode).as("v")).collect().head.getSeq[Float](0)
+  }
+
+  test("decodeSamples decodes a format-1 payload with the native IBM32 kernel") {
     // payload = two IBM32 words synthesized from known bit patterns
     val bits = Seq(0x41100000, 0xC1100000) // +1.0 and -1.0 in IBM hex float
     val pay = java.nio.ByteBuffer.allocate(8)
     bits.foreach(pay.putInt)
-    val df = Seq((1, 1, pay.array())).toDF("il", "xl", "samples")
-    val records = SegyExport.serializeTraces(df, Seq("il", "xl"), "samples")
-    val out = Files.createTempDirectory("segyread").toString + "/ibm.sgy"
-    SegyExport.writeSegy(records, out,
-      SegyHeaders.sanitizeTextHeader(Seq("C 1")), new Array[Byte](400))
-    val decoded = SegyRead.readTraces(spark, out, Seq("il", "xl"), 8)
-      .select(SegyRead.ibmSamples(col("samples"), 2).as("v"))
-      .collect().head.getSeq[Float](0)
-    assert(decoded == bits.map(IbmFloatDecode.decode))
-    assert(decoded == Seq(1.0f, -1.0f))
+    val got = decoded(pay.array(), 2, formatCode = 1)
+    assert(got == bits.map(IbmFloatDecode.decode))
+    assert(got == Seq(1.0f, -1.0f))
   }
 
-  test("ieeeSamples decodes big-endian IEEE float32 payloads") {
+  test("decodeSamples decodes big-endian IEEE float32 (format 5) payloads") {
     val floats = Seq(1.5f, -2.25f, 0.0f, Float.MinPositiveValue)
     val pay = java.nio.ByteBuffer.allocate(16)
     floats.foreach(pay.putFloat)
-    val df = Seq((1, 1, pay.array())).toDF("il", "xl", "samples")
-    val records = SegyExport.serializeTraces(df, Seq("il", "xl"), "samples")
-    val out = Files.createTempDirectory("segyread").toString + "/ieee.sgy"
-    SegyExport.writeSegy(records, out,
-      SegyHeaders.sanitizeTextHeader(Seq("C 1")), new Array[Byte](400))
-    val decoded = SegyRead.readTraces(spark, out, Seq("il", "xl"), 16)
-      .select(SegyRead.ieeeSamples(col("samples"), 4).as("v"))
-      .collect().head.getSeq[Float](0)
-    assert(decoded == floats)
+    assert(decoded(pay.array(), 4, formatCode = 5) == floats)
   }
 
   test("standard rev-1 layout: 240-byte headers at spec offsets, " +
@@ -180,16 +185,14 @@ class SegyReadSpec extends SparkSpec {
     assert(info.base.nTraces == 2 && info.base.revision == ((1, 0)))
     assert(info.base.textHeader == textLines)
 
-    import SegyRead.StandardFields._
-    val got = SegyRead.readStandardTraces(spark, out,
-        Seq(Inline, Crossline, TraceIdCode, CoordScalar))
-      .withColumn("v", SegyRead.ibmSamples(col("samples"), info.nSamples))
+    val got = spark.read.format("segy")
+      .option("fields", "inline,crossline,trace_id_code,coord_scalar").load(out)
       .orderBy("trace_index").collect()
     assert(got.map(r => (r.getAs[Long]("inline"), r.getAs[Long]("crossline"),
       r.getAs[Long]("trace_id_code"), r.getAs[Long]("coord_scalar"))).toSeq ==
       Seq((500L, 900L, 1L, -100L), (501L, 901L, 3L, -100L)))
     got.foreach(r =>
-      assert(r.getSeq[Float](r.fieldIndex("v")) == Seq(1.0f, -1.0f, 100.0f)))
+      assert(r.getSeq[Float](r.fieldIndex("samples")) == Seq(1.0f, -1.0f, 100.0f)))
   }
 
   test("standard WRITE -> standard READ: spec-offset headers and IBM32 " +
@@ -217,9 +220,9 @@ class SegyReadSpec extends SparkSpec {
     val info = SegyRead.standardInfo(spark, out)
     assert(info.nSamples == 4 && info.formatCode == 1 &&
       info.sampleInterval == 2000 && info.base.nTraces == 2)
-    val got = SegyRead.readStandardTraces(spark, out,
-        Seq(Inline, Crossline, CoordScalar))
-      .withColumn("v", SegyRead.ibmSamples(col("samples"), 4))
+    val got = spark.read.format("segy")
+      .option("fields", "inline,crossline,coord_scalar").load(out)
+      .withColumn("v", col("samples"))
       .orderBy("trace_index").collect()
     got.zip(sampleSets).zipWithIndex.foreach { case ((r, vs), i) =>
       assert(r.getAs[Long]("inline") == 200L + i)
@@ -253,7 +256,6 @@ class SegyReadSpec extends SparkSpec {
 
   test("per-trace coordinate scalar composes with the standard reader " +
        "(negative divides, zero applies as 1)") {
-    import SegyRead.StandardFields._
     def t(cdpX: Int, scalar: Short): Array[Byte] = {
       val b = java.nio.ByteBuffer.allocate(240 + 4)
       b.putShort(70, scalar); b.putInt(180, cdpX)
@@ -267,7 +269,8 @@ class SegyReadSpec extends SparkSpec {
       os.write(new Array[Byte](3200)); os.write(bin.array())
       os.write(t(1234500, -100)); os.write(t(7, 10)); os.write(t(42, 0))
     } finally os.close()
-    val got = SegyRead.readStandardTraces(spark, out, Seq(CdpX, CoordScalar))
+    val got = spark.read.format("segy").option("fields", "cdp_x,coord_scalar")
+      .load(out)
       .withColumn("x", graft.operators.Coordinates.applyScalarCol(
         col("cdp_x"), col("coord_scalar")))
       .orderBy("trace_index").collect().map(_.getAs[Double]("x"))
@@ -292,20 +295,24 @@ class SegyReadSpec extends SparkSpec {
   }
 
   test("ASCII text headers auto-detect (a file not written by this engine)") {
-    // hand-assemble a file with an ASCII text header
+    // hand-assemble a file with an ASCII text header: one format-2 trace,
+    // inline 5 and crossline 6 at bytes 189/193, sample 7
     val ascii = textLines.mkString.getBytes(
       java.nio.charset.StandardCharsets.US_ASCII)
-    val rec = java.nio.ByteBuffer.allocate(12)
-    rec.putInt(5); rec.putInt(6); rec.putInt(7)
+    val rec = java.nio.ByteBuffer.allocate(244)
+    rec.putInt(188, 5); rec.putInt(192, 6); rec.putInt(240, 7)
     val out = Files.createTempDirectory("segyread").toString + "/ascii.sgy"
     val os = Files.newOutputStream(Paths.get(out))
-    try { os.write(ascii); os.write(new Array[Byte](400)); os.write(rec.array()) }
-    finally os.close()
-    val info = SegyRead.fileInfo(spark, out, 2, 4)
+    try {
+      os.write(ascii)
+      os.write(SegyExport.standardBinaryHeader(1, 2000, formatCode = 2))
+      os.write(rec.array())
+    } finally os.close()
+    val info = SegyRead.standardInfo(spark, out).base
     assert(info.textHeader == textLines)
     assert(info.nTraces == 1)
-    val row = SegyRead.readTraces(spark, out, Seq("il", "xl"), 4).collect().head
-    assert(row.getAs[Long]("il") == 5L && row.getAs[Long]("xl") == 6L)
+    val row = scan(out).collect().head
+    assert(row.getAs[Long]("inline") == 5L && row.getAs[Long]("crossline") == 6L)
     assert(row.getAs[Array[Byte]]("samples").toSeq ==
       Seq[Byte](0, 0, 0, 7))
   }
@@ -329,7 +336,7 @@ class SegyReadSpec extends SparkSpec {
           formatCode = fmt))
       val info = SegyRead.standardInfo(spark, out)
       assert(info.formatCode == fmt && info.nSamples == 4)
-      val got = SegyRead.readStandardTraces(spark, out, Seq(Inline, Crossline))
+      val got = scan(out)
         .withColumn("v", SegyRead.decodeSamples(col("samples"), 4, fmt))
         .collect().head
       assert(got.getAs[Long]("inline") == 7L)
@@ -351,8 +358,9 @@ class SegyReadSpec extends SparkSpec {
     SegyExport.writeSegy(records, out, textLines,
       SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 1000,
         formatCode = 2))
-    val got = SegyRead.readStandardTraces(spark, out,
-      Seq(Inline, NSamples, SampleInterval)).collect().head
+    val got = spark.read.format("segy")
+      .option("fields", "inline,n_samples,sample_interval").load(out)
+      .collect().head
     assert(got.getAs[Long]("n_samples") == 40000L)
     assert(got.getAs[Long]("sample_interval") == 50000L)
   }
@@ -385,29 +393,20 @@ class SegyReadSpec extends SparkSpec {
       }
     }
     assume(openHandles >= 0, "/proc/self/fd not available")
-    // limit(1) stops consuming after one row: the iterator never drains,
-    // so only the listener can release the handle
-    val one = SegyRead.readTraces(spark, f, Seq("il", "xl"), 8,
-      tracesPerSplit = 1).limit(1).collect()
+    // limit(1) stops consuming after one row of the 4-trace split: the
+    // reader never drains, so only the task-completion close can release
+    // the handle (the filter keeps the limit from being pushed into the
+    // planned range)
+    val one = spark.read.format("segy").option("fields", "inline").load(f)
+      .where(col("inline") =!= 12345).limit(1).collect()
     assert(one.length == 1)
     assert(openHandles == 0, "open handle leaked past task completion")
-    val std = writeStdFile()
-    val oneStd = SegyRead.readStandardTraces(spark, std,
+    // the standard reader releases its stream through its own
+    // task-completion close
+    val oneStd = SegyRead.readStandardTraces(spark, f,
       Seq(SegyRead.StandardFields.Inline), tracesPerSplit = 1)
       .limit(1).collect()
     assert(oneStd.length == 1)
-  }
-
-  private def writeStdFile(): String = {
-    import SegyRead.StandardFields._
-    val df = Seq((1, 2), (3, 4)).toDF("inline", "crossline")
-    val records = SegyExport.serializeStandardTraces(
-      df.withColumn("samples", lit(Array[Byte](0, 0))),
-      Seq(Inline -> "inline", Crossline -> "crossline"), "samples")
-    val out = Files.createTempDirectory("segylim").toString + "/s.sgy"
-    SegyExport.writeSegy(records, out, textLines,
-      SegyExport.standardBinaryHeader(nSamples = 1, sampleInterval = 1000,
-        formatCode = 3))
-    out
+    assert(openHandles == 0, "standard reader leaked a handle past task completion")
   }
 }

@@ -180,10 +180,8 @@ class CliSpec extends SparkSpec {
     // export back to SEG-Y and re-read: same grid, same samples
     val out = s"$dir/out.sgy"
     assert(Cli.run(Seq("segy", "export", store, out), spark) == 0)
-    val back = SegyRead.readStandardTraces(spark, out,
-      Seq(SegyRead.StandardFields.Inline, SegyRead.StandardFields.Crossline))
-      .select(col("inline"), col("crossline"),
-        SegyRead.ibmSamples(col("samples"), 2).as("v"))
+    val back = spark.read.format("segy").option("fields", "inline,crossline")
+      .load(out).select(col("inline"), col("crossline"), col("samples"))
       .as[(Long, Long, Seq[Float])].collect().toSet
     assert(back == Set(
       (1L, 10L, Seq(1.5f, 2.5f)), (1L, 11L, Seq(3.0f, 4.0f)),
@@ -227,11 +225,11 @@ class CliSpec extends SparkSpec {
   test("segy import rejects malformed input with its cause and leaves no store") {
     val good = Files.readAllBytes(java.nio.file.Paths.get(writeFixture()))
     val dir = Files.createTempDirectory("climalformed").toString
-    /** `good` with the big-endian u16 at 1-based file byte `off1` set. */
-    def patched(off1: Int, v: Int): Array[Byte] = {
+    /** `good` with the `width`-byte big-endian word at 1-based file byte
+      * `off1` set to `v`. */
+    def patched(off1: Int, v: Int, width: Int = 2): Array[Byte] = {
       val b = good.clone()
-      b(off1 - 1) = (v >> 8).toByte
-      b(off1) = v.toByte
+      (0 until width).foreach(i => b(off1 - 1 + i) = (v >> (8 * (width - 1 - i))).toByte)
       b
     }
     def rejected(name: String, bytes: Array[Byte], names: String,
@@ -251,6 +249,12 @@ class CliSpec extends SparkSpec {
     rejected("size", good :+ 0.toByte, "inline,crossline",
       "is not a multiple of the 248-byte standard record")
     rejected("format4", patched(3225, 4), "inline,crossline", "format 4")
+    rejected("format0", patched(3225, 0), "inline,crossline",
+      "unsupported SEG-Y sample format code 0")
+    // the rev-2 byte-order word (binary-header bytes 97-100) of a
+    // little-endian file
+    rejected("littleendian", patched(3297, 0x04030201, width = 4),
+      "inline,crossline", "little-endian SEG-Y is not supported")
     rejected("nosamples", patched(3221, 0), "inline,crossline",
       "declares 0 samples per trace")
     rejected("collision", good, "samples,crossline",
