@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failed query reports ok=false and counts its
   * elapsed time — failures can NOT masquerade as fast successes (each query
@@ -31,49 +29,8 @@ object Bench {
     df.queryExecution.toRdd.count()
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split small files down to ~128 KB so narrow compute-heavy chains
-      // parallelize even over MB-scale fixtures: the default 4 MB
-      // open-cost makes an 11 MB table ~3 splits, serializing per-row
-      // kernels on 2% of the machine (at real scale the files split
-      // naturally; this knob only matters for small inputs)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // ObjectHashAggregate falls back to SORT-based aggregation after
-      // 128 distinct keys per task — for the trace aggregates that means
-      // sorting the 8 KB sample rows themselves (q_trace_stack_long:
-      // 1000 cells, ~5 GB sorted+spilled per pass; measured 4–57 s run
-      // swings from this alone). The buffers are ~8–24 KB per group, so
-      // 4096 in-flight groups is ≤ ~100 MB per task — raise the
-      // threshold so the hash path holds
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      // The 178-query sweep compiles thousands of DISTINCT whole-stage
-      // codegen units; the default 100-entry generated-class cache
-      // (spark.sql.codegen.cache.maxEntries) thrashes, so late-sweep
-      // queries re-Janino-compile every stage on every run — measured
-      // in-sweep q_ann_recall at 14.1 s vs 5.1 s in a fresh JVM running
-      // only that query. 10k entries holds the whole suite (generated
-      // classes are KB-scale; a long-lived production driver serving many
-      // query shapes wants the same).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Guide §3.1/§9: allow shuffled-hash join where the per-partition
-      // build side fits instead of always sort-merging — A/B over the
-      // join-heavy queries (repeats=5, same box, same session):
-      // q_llm_prep_e2e 5.79→3.84, q_dedup_components_best 2.37→1.93,
-      // q_jaccard_blocked 2.11→1.87, none slower. Scale note: the skipped
-      // sort is pure win while a partition's build side fits in task
-      // memory; partitions are AQE-sized, and the salted/capped operators
-      // bound the hot keys, so the fit assumption is the same one the
-      // engine already documents for its aggregation buffers.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.cores
+    val spark = graft.core.GraftSession.build("graft-bench")
 
     // The long trace fixtures (q_moveout_*_long) key their by-cell
     // repartition on `l_suppkey % 512` — one state buffer per cell,

@@ -97,27 +97,6 @@ object SparkEntry {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Opt-in RocksDB state store for the stateful streaming queries:
-    * `graft.stream.stateStore=rocksdb` swaps the default HDFS-backed
-    * provider (whole state in driver/executor heap — the sf10 session
-    * sweep measured it as the dominant driver-heap term) for RocksDB's
-    * off-heap + spillable store. Output is provider-independent, so the
-    * shared oracle pins both paths. Default stays HDFS: at fixture scale
-    * the heap store is faster and the bench record must not silently
-    * change providers.
-    */
-  private def withStateStoreProvider[T](s: SparkSession)(body: => T): T =
-    s.conf.getOption("graft.stream.stateStore") match {
-      case Some("rocksdb") =>
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try body
-        finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
-      case _ => body
-    }
-
   /** Overlap independent EAGER side-effect steps (index builds, fixture
     * writes to disjoint scratch paths) from futures — guide §2.6: actions
     * are only sequential because driver code calls them sequentially, so
@@ -333,14 +312,12 @@ object SparkEntry {
       val ckpt = graft.core.TempDirs.scratch("stream_sess_ckpt")
       val fixed = eventsStream(s, stageEventsDir(s, d, "stream_sess"))
       withStatePartitions(s, 8) {
-        withStateStoreProvider(s) {
-          val q = graft.streaming.StreamingEvents.sessionWindowStream(fixed)
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        val q = graft.streaming.StreamingEvents.sessionWindowStream(fixed)
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .outputMode("append").trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
       }
       s.read.parquet(out)
     }),
@@ -359,34 +336,29 @@ object SparkEntry {
       val out = graft.core.TempDirs.scratch("stream_sessb_out")
       val ckpt = graft.core.TempDirs.scratch("stream_sessb_ckpt")
       val src = graft.core.TempDirs.scratch("stream_sessb_src")
-      // slice size is the replay's state-peak-vs-checkpoint-I/O knob:
-      // state holds |in-flight slice| + |watermark horizon|, while each
-      // micro-batch pays a fixed state-store open/commit round — the sf10
-      // sweep measured 100 slices costing 2.5× the one-batch wall. The
-      // output is slice-count-INDEPENDENT (time-ordered slices never
-      // produce a late event), so the oracle pins every setting.
-      val rowsPerSlice = s.conf.getOption("graft.stream.rowsPerSlice")
-        .map(_.toLong).getOrElse(100000L)
+      // slice size trades state peak against checkpoint I/O: state holds
+      // |in-flight slice| + |watermark horizon|, while each micro-batch
+      // pays a fixed state-store open/commit round — the sf10 sweep
+      // measured 100 slices costing 2.5× the one-batch wall
+      // (bench/sessions_knobs_sf10_r16.json). The output is
+      // slice-count-INDEPENDENT (time-ordered slices never produce a late
+      // event), so the oracle pins it at the fixed 100,000 rows per slice.
       graft.streaming.StreamReplay.stageTimeSliced(
         s.read.parquet(s"$d/events.parquet"), src,
-        rowsPerSlice = rowsPerSlice): Unit
+        rowsPerSlice = 100000L): Unit
       val fixed = eventsStream(s, src, Map("maxFilesPerTrigger" -> "1"))
-      // state-partition count is a per-batch constant-cost knob on the
+      // state-partition count is a per-batch constant cost on the
       // many-micro-batch replay: every batch commits EVERY state store
       // instance, so 100 batches × 8 stores = 800 commit rounds at ~100 k
       // rows/batch of actual work — a deployment sizes this to its batch
       // volume, not to a one-batch replay's
-      val stateParts = s.conf.getOption("graft.stream.statePartitions")
-        .map(_.toInt).getOrElse(8)
-      withStatePartitions(s, stateParts) {
-        withStateStoreProvider(s) {
-          val q = graft.streaming.StreamingEvents.sessionWindowStream(fixed)
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+      withStatePartitions(s, 8) {
+        val q = graft.streaming.StreamingEvents.sessionWindowStream(fixed)
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .outputMode("append").trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
       }
       s.read.parquet(out)
     }),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,34 +8,7 @@ object Verify {
     // optional extra args: restrict to named queries (local iteration only;
     // the driver always calls with exactly two args = full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split small files down to ~128 KB so narrow compute-heavy chains
-      // parallelize even over MB-scale fixtures: the default 4 MB
-      // open-cost makes an 11 MB table ~3 splits, serializing per-row
-      // kernels on 2% of the machine (at real scale the files split
-      // naturally; this knob only matters for small inputs)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // keep the trace aggregates on the hash path past 128 groups/task
-      // (the sort fallback sorts the 8 KB sample rows; see Bench.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      // mirror Bench: the 178-query surface compiles thousands of distinct
-      // codegen units — the default 100-entry class cache thrashes and
-      // Janino recompilation dominates the dump's driver time (measured in
-      // the r19 bench: q_ann_recall 14.1→5.5 s from this + the join pref)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // mirror Bench: hash-join when the per-partition build side fits —
-      // results are plan-invariant (the determinism audit pins that), so
-      // the oracle compare is unaffected; see Bench.scala for the full note
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

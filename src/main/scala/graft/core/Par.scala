@@ -15,6 +15,9 @@ package graft.core
   */
 object Par {
 
+  /** Most Spark jobs one [[map]] call keeps in flight. */
+  val MaxPool = 8
+
   def map[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     if (xs.sizeIs <= 1) return xs.map(f)
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -27,13 +30,12 @@ object Par {
     // caller's properties and die with the call; thread spin-up is
     // negligible beside the Spark actions they run.
     //
-    // Pool width is capped (graft.par.maxPool, default 8): 2-3 jobs in
-    // flight already fills a straggler tail, and an uncapped pool sized at
-    // xs.size would submit one concurrent Spark job per element if a future
-    // caller mapped over a large collection (current call sites pass <= 4).
-    // Excess elements queue on the fixed pool and run as slots free.
-    val width = math.min(xs.size,
-      sys.props.getOrElse("graft.par.maxPool", "8").toInt)
+    // Pool width is capped at MaxPool: 2-3 jobs in flight already fills a
+    // straggler tail, and an uncapped pool sized at xs.size would submit
+    // one concurrent Spark job per element if a future caller mapped over
+    // a large collection (current call sites pass <= 4). Excess elements
+    // queue on the fixed pool and run as slots free.
+    val width = math.min(xs.size, MaxPool)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try xs.map(x => Future(f(x))).map(Await.result(_, Duration.Inf))

@@ -96,10 +96,11 @@ object Scratch {
     * table spread to 32 tasks). The gate is per KERNEL WEIGHT, declared
     * by the caller: `heavy = true` marks tokenize/shingle/char-gram
     * consumers, whose per-row cost is orders above the vector kernels'
-    * (`graft.rebalance.minRowsHeavy`, default 512 — the round-17 A/B
-    * measured a 5,000-doc tokenize WANTING the spread the 4096 gate
-    * denied it: q_bm25 1.41→2.25 s), while the default gate
-    * (`graft.rebalance.minRows`, 4096) covers encode/signature/cosine
+    * (a fixed 512 rows: the round-17 A/B measured a 5,000-doc tokenize
+    * WANTING the spread the 4096 gate denied it, q_bm25 1.41→2.25 s —
+    * bench/ab_rebalance_r17.json and bench/ab_rebalance_heavy_r17.json;
+    * the `AbRebalance` tool that took them is deleted), while the default
+    * gate (`graft.rebalance.minRows`, 4096) covers encode/signature/cosine
     * kernels where the same A/B showed the spread is pure loss at
     * fixture sizes. A filter between scan and rebalance makes the footer
     * count an overestimate of the frame's rows — erring toward
@@ -129,8 +130,7 @@ object Scratch {
       val (midpointsByFile, rows) = footerStats(spark, files)
       val rowGroups = midpointsByFile.valuesIterator.map(_.length).sum
       val minRows =
-        if (heavy) spark.conf.get("graft.rebalance.minRowsHeavy",
-          DefaultRebalanceMinRowsHeavy.toString).toLong
+        if (heavy) DefaultRebalanceMinRowsHeavy
         else spark.conf.get("graft.rebalance.minRows",
           DefaultRebalanceMinRows.toString).toLong
       if (rows < minRows) df

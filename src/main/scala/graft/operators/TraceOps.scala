@@ -201,8 +201,8 @@ object TraceOps {
     * this operator family that means sorting the multi-KB sample rows
     * themselves (measured 6× on q_trace_stack_long at 1000 cells).
     * Gathers per task routinely exceed 128 on real surveys; raise the
-    * threshold (the harness sessions use 4096 ≈ ≤100 MB of buffers per
-    * task at 1000-sample traces) so the hash path holds. Results are
+    * threshold ([[graft.core.GraftSession]] sets 4096 ≈ ≤100 MB of
+    * buffers per task at 1000-sample traces) so the hash path holds. Results are
     * bit-identical either way — this is purely a cost cliff.
     */
   def stack(df: org.apache.spark.sql.DataFrame, keys: Seq[String],

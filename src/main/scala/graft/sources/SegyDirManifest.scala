@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * re-open. Two fixes compose here:
   *
   *  1. **Fan-out**: member header reads run as a small Spark job (one task
-  *     per bounded batch of members) above [[distributeThreshold]] members,
+  *     per bounded batch of members) above [[DistributeThreshold]] members,
   *     or on a bounded driver thread pool below it (a job's fixed overhead
   *     beats a handful of 3600-byte reads only past a few dozen files).
   *     Tasks call the pure [[SegyRead.parseStandardInfo]] — no driver
@@ -66,11 +66,11 @@ object SegyDirManifest {
       .map(_.toInt).getOrElse(20000)
 
   /** Member count at and above which the gather runs as a Spark job
-    * instead of a driver thread pool (`graft.segy.planning.distributeThreshold`).
+    * instead of a driver thread pool. Fixed: the former
+    * `graft.segy.planning.distributeThreshold` conf had no setter, and
+    * SegyDirPlanningSpec reaches both arms through the member count.
     */
-  def distributeThreshold(spark: SparkSession): Int =
-    spark.conf.getOption("graft.segy.planning.distributeThreshold")
-      .map(_.toInt).getOrElse(64)
+  val DistributeThreshold = 64
 
   /** Standard infos for a directory's members, name-sorted, from cache
     * when the listing signature is unchanged. `members` must already be
@@ -92,7 +92,7 @@ object SegyDirManifest {
       return cached.infos
     }
     val infos =
-      if (members.size >= distributeThreshold(spark)) gatherDistributed(spark, members)
+      if (members.size >= DistributeThreshold) gatherDistributed(spark, members)
       else gatherPooled(spark, members)
     val budget = cacheMemberBudget(spark)
     cache.synchronized {

@@ -717,19 +717,7 @@ object Cli {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // keep the trace aggregates (stack/moveout/panel, ~8-24 KB buffers
-      // per gather) on the hash path past 128 gathers per task — the
-      // sort fallback sorts the full sample rows (see Bench.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build("graft-cli")
     val rc = run(args.toSeq, spark)
     spark.stop()
     if (rc != 0) sys.exit(rc)

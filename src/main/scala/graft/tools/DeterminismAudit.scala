@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Physical-plan-invariance audit: every registered query, executed twice —
@@ -56,16 +56,7 @@ object DeterminismAudit {
       "usage: DeterminismAudit <sfDir> <outJson> [queryName…]")
     val (sfDir, outJson) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build("graft-determinism")
     val defaults = adversarial.keys.map(k => k -> spark.conf.get(k)).toMap
 
     def withConf[T](conf: Map[String, String])(body: => T): T = {

@@ -1,31 +1,18 @@
-// scratch explain-runner: sbt "runMain graft.tools.Explain <query> [sfDir]"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+/** Plan printer: `runMain graft.tools.Explain [query ...]` prints each
+  * registered query's formatted physical plan (default: all of them) on
+  * SPARK_GRAFT_SF_DIR (default sf0.01). The session is
+  * [[graft.core.GraftSession]]'s, so the plans are the ones the bench
+  * times; `SPARK_GRAFT_CONF` overlays a variant — e.g.
+  * `spark.sql.join.preferSortMergeJoin=true` captures the BEFORE plan of
+  * an A/B'd session conf.
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // mirror Bench's session (32 cores, same SQL confs) so the captured
-    // plans are the plans the bench actually times; SPARK_GRAFT_EXPLAIN_CONF
-    // ("k=v,k=v") overlays overrides — e.g. preferSortMergeJoin=true to
-    // capture a BEFORE plan for an A/B'd session conf.
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_CONF", "").split(",")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-    val spark = b.getOrCreate()
+    val spark = graft.core.GraftSession.build("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,39 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Job-level profiler for any registered query: runs it cold + warm with a
   * listener printing per-job wall times — the tool behind the "where do the
   * seconds go" analysis when tuning multi-job operators (ingest tail, CC
   * rounds, index builds).
   *
   * `runMain graft.tools.ProfileQuery [queryName ...]` (default q_ingest_e2e);
-  * SPARK_GRAFT_SF_DIR picks the scale factor.
+  * SPARK_GRAFT_SF_DIR picks the scale factor. The session is
+  * [[graft.core.GraftSession]]'s, so profiles explain bench numbers;
+  * `SPARK_GRAFT_CONF` overlays a variant for an in-order A/B of a conf.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.isEmpty) Seq("q_ingest_e2e") else args.toSeq
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // mirror Bench's session exactly, so profiles explain bench numbers
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_PROFILE_CONF ("k=v,k=v") overlays overrides, same as
-    // Explain's SPARK_GRAFT_EXPLAIN_CONF — for A/Bing a session conf with
-    // the profiler's in-order query list (Bench sorts its args).
-    sys.env.getOrElse("SPARK_GRAFT_PROFILE_CONF", "").split(",")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build("graft-profile")
     import org.apache.spark.scheduler._
     val jobTimes = scala.collection.mutable.ArrayBuffer[(Int, Long, String)]()
     val starts = scala.collection.mutable.Map[Int, (Long, String)]()

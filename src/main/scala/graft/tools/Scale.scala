@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
 
@@ -12,6 +11,8 @@ import scala.jdk.CollectionConverters._
   * collect.
   *
   * `runMain graft.tools.Scale [query ...]` (default: the SCALING.md set).
+  * The session is [[graft.core.GraftSession]]'s (the benchmarked engine);
+  * experiment confs ride in through `SPARK_GRAFT_CONF="k1=v1,k2=v2"`.
   * Output: one JSON line per query on stdout, and the full array at
   * SPARK_GRAFT_SCALE_OUT (default scale_out.json).
   */
@@ -76,35 +77,8 @@ object Scale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split small files down to ~128 KB so narrow compute-heavy chains
-      // parallelize even over MB-scale fixtures: the default 4 MB
-      // open-cost makes an 11 MB table ~3 splits, serializing per-row
-      // kernels on 2% of the machine (at real scale the files split
-      // naturally; this knob only matters for small inputs)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // keep the trace aggregates on the hash path past 128 groups/task
-      // (the sort fallback sorts the 8 KB sample rows; see Bench.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // experiment knobs (e.g. the bounded-session replay's
-    // graft.stream.rowsPerSlice / graft.stream.stateStore) ride in as
-    // runtime confs: SPARK_GRAFT_EXTRA_CONFS="k1=v1,k2=v2"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach { kvs =>
-      kvs.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
+    val cpus = graft.core.GraftSession.cores
+    val spark = graft.core.GraftSession.build("graft-scale")
 
     graft.core.Tables.all.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").foreach(_ => ())

@@ -3,21 +3,24 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt): the
+  * engine's own [[graft.core.GraftSession]] confs under a small-partition
+  * overlay. The overlay pins a 4-core local master and 4 shuffle
+  * partitions whatever the host, so plan, job and partition assertions do
+  * not depend on the machine, and keeps the suite's warehouse and Derby
+  * metastore under /tmp. [[graft.core.GraftSessionSpec]] asserts that no
+  * other key differs from the engine's set.
+  */
 object TestSpark {
+  val Overlay: Seq[(String, String)] = Seq(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" -> "/tmp/graft-warehouse")
+
   lazy val spark: SparkSession = {
+    // Derby reads its home from a JVM property, not a Spark conf
     System.setProperty("derby.system.home", "/tmp/graft-derby")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    graft.core.GraftSession.build("graft-test", Overlay)
   }
 }
 
