@@ -13,6 +13,14 @@ package graft
   */
 object Bench {
 
+  /** Untimed warm-up queries run before the sweep (see `main`). */
+  val WarmupQueries: Seq[String] =
+    Seq("q_stats", "q_simhash", "q_store_roundtrip", "q_keywords")
+
+  /** The default box-health controls timed before and after a full sweep. */
+  val DefaultControls: Seq[String] =
+    Seq("q_dedup_components_best", "q_stats", "q_bm25")
+
   /** Execute a query's FULL result and return its row count.
     *
     * `df.count()` — the action rounds 1–12 timed — lets Catalyst prune
@@ -28,6 +36,15 @@ object Bench {
   def fullCount(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
   def main(args: Array[String]): Unit = {
+    // every query name resolves before the session starts: an unknown one
+    // fails here by name instead of silently dropping out of the record
+    val selected =
+      if (args.isEmpty) SparkEntry.all else args.toSeq.distinct.map(SparkEntry.spec)
+    val warmups = WarmupQueries.map(SparkEntry.spec)
+    val controlSet = sys.env.get("SPARK_GRAFT_BENCH_CONTROLS")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(if (args.isEmpty) DefaultControls else Nil)
+      .map(SparkEntry.spec)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.GraftSession.cores
     val spark = graft.core.GraftSession.build("graft-bench")
@@ -56,9 +73,8 @@ object Bench {
     // first query look 2× its steady-state cost). Four untimed
     // representatives warm the aggregate, kernel-expression,
     // parquet-write and generate+window+fold paths.
-    Seq("q_stats", "q_simhash", "q_store_roundtrip", "q_keywords").foreach { q =>
-      SparkEntry.queries.get(q).foreach(fn =>
-        try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () })
+    warmups.foreach { q =>
+      try { q.run(spark, sfDir).count(); () } catch { case _: Throwable => () }
     }
 
     // Box-health controls: a bench total is only comparable across rounds
@@ -69,20 +85,16 @@ object Bench {
     // medians land in the record itself, so any future reader can
     // normalize a total against the controls' drift from their historical
     // ~1.5 s / ~0.4 s / ~2.3 s instead of trusting the round's prose.
-    // Empty SPARK_GRAFT_BENCH_CONTROLS disables (focused re-benches).
-    val controlSet = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONTROLS",
-      if (args.isEmpty) "q_dedup_components_best,q_stats,q_bm25" else "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    def controlPass(): Seq[(String, Double)] = controlSet.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        val secs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          try { fullCount(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 } // a broken control reads -1,
-                                              // never kills the record
-        }.sorted
-        name -> secs(1)
-      }
+    // Empty SPARK_GRAFT_BENCH_CONTROLS disables (focused re-benches);
+    // `controlSet` is resolved at the top of main.
+    def controlPass(): Seq[(String, Double)] = controlSet.map { q =>
+      val secs = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        try { fullCount(q.run(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+        catch { case _: Throwable => -1.0 } // a broken control reads -1,
+                                            // never kills the record
+      }.sorted
+      q.name -> secs(1)
     }
     val controlsPre = controlPass()
 
@@ -115,42 +127,26 @@ object Bench {
       } catch { case _: Throwable => -1L }
     case class R(sec: Double, ok: Boolean, rows: Long, spread: Double,
                  tStartMs: Long, load: Double, memMb: Long)
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.contains).toMap
-    val results: Seq[(String, R)] = selected.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        // scratch dirs are deleted only at JVM exit by default; a full
-        // sweep accumulates them unboundedly (the round-17 sf10 war
-        // story: four SEG-Y round-trips = 77 GB, starving the LSH
-        // family). Every run here fully consumes its frame (fullCount)
-        // and no query reads another query's scratch (paths are
-        // UUID-fresh per call), so releasing AFTER a query's repeats is
-        // safe — the release brackets the repeats, never splits them.
-        val scratchSnap = graft.core.TempDirs.snapshot()
-        val (tStartMs, load, memMb) =
-          (System.currentTimeMillis(), loadAvg1m(), memAvailMb())
-        val runs = (1 to repeats).map { _ =>
+    val results: Seq[(String, R)] = selected.sortBy(_.name).map { q =>
+      val name = q.name
+      val (tStartMs, load, memMb) =
+        (System.currentTimeMillis(), loadAvg1m(), memAvailMb())
+      // the release brackets a query's repeats, never splits them
+      val runs = graft.core.TempDirs.releasingScratch(spark, s"[bench] $name") {
+        (1 to repeats).map { _ =>
           val t0 = System.nanoTime()
-          try { val n = fullCount(fn(spark, sfDir)); ((System.nanoTime() - t0) / 1e9, true, n) }
+          try { val n = fullCount(q.run(spark, sfDir)); ((System.nanoTime() - t0) / 1e9, true, n) }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             ((System.nanoTime() - t0) / 1e9, false, -1L)
           }
         }
-        // enforced safety condition (not just commented): a still-active
-        // stream may hold reads against registered scratch — leave its
-        // paths for the exit hook rather than delete under it
-        if (spark.streams.active.isEmpty)
-          graft.core.TempDirs.releaseSince(scratchSnap): Unit
-        else
-          System.err.println(s"[bench] $name: streams still active — " +
-            "skipping scratch release for this query")
-        val secs = runs.map(_._1).sorted
-        val median = secs(secs.size / 2)
-        name -> R(median, runs.forall(_._2),
-          runs.find(_._2).map(_._3).getOrElse(-1L),
-          secs.last - secs.head, tStartMs, load, memMb)
+      }
+      val secs = runs.map(_._1).sorted
+      val median = secs(secs.size / 2)
+      name -> R(median, runs.forall(_._2),
+        runs.find(_._2).map(_._3).getOrElse(-1L),
+        secs.last - secs.head, tStartMs, load, memMb)
     }
     val qs = results.map { case (k, r) =>
       val spreadJson = if (repeats > 1) s""","spread":${r.spread}""" else ""

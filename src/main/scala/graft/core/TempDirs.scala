@@ -80,6 +80,39 @@ object TempDirs {
     n
   }
 
+  /** The per-query scratch bracket of a many-query sweep (Bench, Verify,
+    * Scale): run `body`, then release every scratch path registered while
+    * it ran, so the sweep's disk footprint stays one query's (the
+    * round-17 sf10 sweep filled 77 GB from four SEG-Y round trips). Safe
+    * only when `body` fully consumes its frames — counts or writes them —
+    * and no query reads another query's scratch (paths are UUID-fresh).
+    * A stream still running afterwards may hold reads against that
+    * scratch: it gets a bounded wait (so a continuous query cannot hang
+    * the sweep), then a stop, and if one is STILL active its paths stay
+    * until JVM exit. `label` prefixes stderr notes.
+    */
+  def releasingScratch[T](spark: org.apache.spark.sql.SparkSession,
+                          label: String)(body: => T): T = {
+    val snap = snapshot()
+    try body
+    finally {
+      spark.streams.active.foreach { q =>
+        if (!q.awaitTermination(60000L)) {
+          System.err.println(
+            s"$label: stream ${q.name} still running after 60 s — stopping it")
+          q.stop()
+        }
+      }
+      if (spark.streams.active.nonEmpty)
+        System.err.println(s"$label: ${spark.streams.active.length} streams " +
+          "still active — skipping scratch release")
+      else {
+        val n = releaseSince(snap)
+        if (n > 0) System.err.println(s"$label: released $n scratch dirs")
+      }
+    }
+  }
+
   /** Total on-disk bytes across still-registered scratch paths — the
     * footprint a sweep's per-query releases leave behind. Resolves each
     * path's scheme the same way [[deletePath]] does: non-local schemes go

@@ -19,17 +19,6 @@ object SegyExport {
   /** The object-store concat found a partition's part file missing. */
   final class MissingPartFileError(msg: String) extends RuntimeException(msg)
 
-  /** E1: export rechunk — repartition into ~`targetMb` range partitions on
-    * the export order keys (`segy/utilities.py:146-198` targets ~300 MB,
-    * fastest-varying axis first).
-    */
-  def rechunkForExport(df: DataFrame, orderKeys: Seq[String],
-                       totalBytes: Long, targetMb: Int = 300): DataFrame = {
-    val parts = math.max(1, (totalBytes / (targetMb * 1024L * 1024L)).toInt)
-    df.repartitionByRange(parts, orderKeys.map(col): _*)
-      .sortWithinPartitions(orderKeys.map(col): _*)
-  }
-
   /** E2/E3: serialize traces with STANDARD 240-byte trace headers — each
     * (field, column) pair packs a 2-/4-byte big-endian signed int at its
     * public rev-1 spec offset, every other byte zero — followed by the

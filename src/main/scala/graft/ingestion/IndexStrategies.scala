@@ -16,9 +16,6 @@ final case class GridOverrides(
     chunksize: Option[Int] = None,
     nonBinnedDims: Seq[String] = Nil) {
 
-  def anyEnabled: Boolean =
-    autoChannelWrap || autoShotWrap || calculateShotIndex || nonBinned || hasDuplicates
-
   // NonBinned requires chunksize + dims (geometry.py:69-91)
   if (nonBinned) {
     val missing = Seq(

@@ -471,15 +471,4 @@ object IngestPipeline {
     if (intervalMicros % 1000 == 0) labels.select(col(name).cast("long").as(name))
     else labels
   }
-
-  /** C1/C2 helper: populate one coordinate table per declared coordinate. */
-  def populateCoordinates(transformed: DataFrame, resolved: ResolvedSchema,
-                          orderKey: String, scalar: Int = 1): Map[String, DataFrame] =
-    resolved.coordinates
-      .filter(c => transformed.columns.contains(c.name))
-      .map { c =>
-        val cellDims = c.dimensions.filter(transformed.columns.contains)
-        c.name -> Coordinates.populateCoordinate(transformed, cellDims, c.name,
-          orderKey, scalar)
-      }.toMap
 }

@@ -277,25 +277,6 @@ object Dedup {
 
   // ------------------------------------------------------ n-gram jaccard
 
-  /** Exact token-shingle Jaccard for given (id_a, id_b) candidate pairs —
-    * the verification stage after LSH (joins shingle sets back by id).
-    * The shingle table is staged once; both pair-side joins re-read it.
-    */
-  def jaccardForPairs(docs: DataFrame, pairs: DataFrame,
-                      textCol: String = "text", idCol: String = "doc_id",
-                      n: Int = 3): DataFrame = {
-    val sh = Scratch.stage(
-      Scratch.rebalance(docs, heavy = true)
-        .select(col(idCol), shingles(col(textCol), n).as("sh")), "jaccard_sh")
-    val jac = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-      size(array_union(col("sh_a"), col("sh_b")))
-    pairs
-      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jac)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
   /** Blocked exact Jaccard: all qualifying pairs within a blocking key (e.g.
     * source), via an inverted-index equi-join — NOT per-pair array
     * intersection. Explode the distinct shingle-hash set, self-join on

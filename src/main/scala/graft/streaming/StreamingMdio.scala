@@ -68,15 +68,4 @@ object StreamingMdio {
       }
       .start()
   }
-
-  /** [[StreamingCorpus.withSketchesStream]] composed with the MDIO sink:
-    * arriving documents land in the store already carrying their sketch
-    * columns (fingerprint, minhash signature, simhash, quality, token
-    * budget) — the store stays directly deduplicable/searchable.
-    */
-  def appendPreparedToStore(stream: DataFrame, path: String,
-                            textCol: String = "text",
-                            checkpoint: Option[String] = None): StreamingQuery =
-    appendToStore(StreamingCorpus.withSketchesStream(stream, textCol), path,
-      checkpoint)
 }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.queries.QuerySpec
+
 /** Physical-plan-invariance audit: every registered query, executed twice —
   * once under the runner's default physical config and once under an
   * adversarial one (prime shuffle width, KB-scale file splits) — must
@@ -55,7 +57,9 @@ object DeterminismAudit {
     require(args.length >= 2,
       "usage: DeterminismAudit <sfDir> <outJson> [queryName…]")
     val (sfDir, outJson) = (args(0), args(1))
-    val only = args.drop(2).toSet
+    val specs =
+      if (args.length > 2) args.drop(2).toSeq.distinct.map(graft.SparkEntry.spec)
+      else graft.SparkEntry.all
     val spark = graft.core.GraftSession.build("graft-determinism")
     val defaults = adversarial.keys.map(k => k -> spark.conf.get(k)).toMap
 
@@ -65,9 +69,8 @@ object DeterminismAudit {
       finally defaults.foreach { case (k, v) => spark.conf.set(k, v) }
     }
 
-    val results = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
+    val results = specs.sortBy(_.name)
+      .map { case QuerySpec(name, fn, _) =>
         val a =
           try Right(fingerprint(fn(spark, sfDir)))
           catch { case e: Throwable => Left(s"default: ${e.getMessage}") }

@@ -10,13 +10,15 @@ package graft.tools
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
+    val specs =
+      if (args.nonEmpty) args.toSeq.map(graft.SparkEntry.spec)
+      else graft.SparkEntry.all.sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.core.GraftSession.build("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      try graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    specs.foreach { q =>
+      println(s"\n========== ${q.name} ==========")
+      try q.run(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
     }
     spark.stop()

@@ -13,7 +13,8 @@ package graft.tools
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = if (args.isEmpty) Seq("q_ingest_e2e") else args.toSeq
+    val specs = (if (args.isEmpty) Seq("q_ingest_e2e") else args.toSeq)
+      .map(graft.SparkEntry.spec)
     val spark = graft.core.GraftSession.build("graft-profile")
     import org.apache.spark.scheduler._
     val jobTimes = scala.collection.mutable.ArrayBuffer[(Int, Long, String)]()
@@ -33,16 +34,15 @@ object ProfileQuery {
     })
     // warm the footer/file caches
     spark.read.parquet(s"$sfDir/lineitem.parquet").foreach(_ => ())
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
+    specs.foreach { q =>
+      val name = q.name
       def run(tag: String): Unit = {
         val t0 = System.nanoTime()
         jobTimes.clear()
         // time the SAME action Bench times: the query's own optimized plan
         // to InternalRows — .count() here let Catalyst prune subtrees and
         // measured a different query (see Bench.fullCount scaladoc)
-        graft.Bench.fullCount(fn(spark, sfDir))
+        graft.Bench.fullCount(q.run(spark, sfDir))
         println(f"[$name/$tag] total ${(System.nanoTime() - t0) / 1e9}%.2f s, ${jobTimes.size} jobs")
         jobTimes.foreach { case (id, ns, site) =>
           println(f"  job $id%4d ${ns / 1e9}%6.2f s  $site") }

@@ -76,6 +76,9 @@ object Scale {
   }
 
   def main(args: Array[String]): Unit = {
+    val specs = (if (args.nonEmpty) args.toSeq else DefaultSet).map(graft.SparkEntry.spec)
+    val repeats = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPEATS", "1").toInt
+    require(repeats >= 1, s"SPARK_GRAFT_SCALE_REPEATS must be >= 1, got $repeats")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.GraftSession.cores
     val spark = graft.core.GraftSession.build("graft-scale")
@@ -85,7 +88,6 @@ object Scale {
       catch { case _: Throwable => () }
     }
 
-    val names = if (args.nonEmpty) args.toSeq else DefaultSet
     // state-store observability: the limiting metric for stream-forever
     // queries is STATE size, not wall time — capture each run's
     // stateOperators peaks (rows held, memory) alongside the timings
@@ -105,76 +107,47 @@ object Scale {
         }
       }
     })
-    val lines = names.map { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
+    val lines = specs.map { q =>
+      val name = q.name
       val (spillMem0, spillDisk0) = (spillMem.get(), spillDisk.get())
-      // scratch dirs are deleted only at JVM exit by default; a multi-query
-      // sweep at sf10 accumulates them unboundedly (four SEG-Y round-trip
-      // runs = 56 GB — the round-17 sweep filled the disk and starved the
-      // LSH family). Every run here fully consumes its frame (fullCount),
-      // so per-query release is safe.
-      val scratchSnap = graft.core.TempDirs.snapshot()
       def once(): (Double, Long) = {
         val t0 = System.nanoTime()
-        val n = graft.Bench.fullCount(fn(spark, sfDir))
+        val n = graft.Bench.fullCount(q.run(spark, sfDir))
         ((System.nanoTime() - t0) / 1e9, n)
       }
       resetPeaks()
       stateListener.drain()
-      val (cold, rows) =
-        try once() catch { case e: Throwable =>
-          System.err.println(s"[scale] $name FAILED: ${e.getMessage}")
-          (-1.0, -1L)
-        }
       // SPARK_GRAFT_SCALE_REPEATS > 1 → warm_s is the MEDIAN of N warm
       // runs and warm_spread_s their min–max width: the ±20% same-day
       // variance shifts one-decade exponents by ±0.2, so decision-grade
       // exponent sweeps need the repeat protocol (cold stays single-run
       // by nature — there is only one first execution)
-      val repeats = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPEATS", "1").toInt
-      require(repeats >= 1, s"SPARK_GRAFT_SCALE_REPEATS must be >= 1, got $repeats")
-      val warms = if (cold >= 0) (1 to repeats).map(_ => once()._1) else Seq(-1.0)
-      val warm = warms.sorted.apply(warms.size / 2)
-      val warmSpread = if (warms.size > 1) warms.max - warms.min else 0.0
-      val mb = peakHeapMb()
-      // listener events are async; let the final progress land before
-      // draining. All current queries use Trigger.AvailableNow and stop
-      // themselves — the BOUNDED wait (then stop) is so a future
-      // continuous query can never hang the whole sweep
-      spark.streams.active.foreach { q =>
-        if (!q.awaitTermination(60000L)) {
-          System.err.println(
-            s"[scale] stream ${q.name} still running after 60 s — stopping it")
-          q.stop()
+      val (cold, rows, warm, warmSpread, mb) =
+        graft.core.TempDirs.releasingScratch(spark, s"[scale] $name") {
+          val (cold, rows) =
+            try once() catch { case e: Throwable =>
+              System.err.println(s"[scale] $name FAILED: ${e.getMessage}")
+              (-1.0, -1L)
+            }
+          val warms = if (cold >= 0) (1 to repeats).map(_ => once()._1) else Seq(-1.0)
+          val warm = warms.sorted.apply(warms.size / 2)
+          val warmSpread = if (warms.size > 1) warms.max - warms.min else 0.0
+          (cold, rows, warm, warmSpread, peakHeapMb())
         }
-      }
+      // listener events are async; let the final progress land before
+      // draining
       Thread.sleep(200)
-      // releaseSince's safety condition ("frames since the snapshot are
-      // fully consumed") is ENFORCED, not assumed: a stream still active
-      // here (one the bounded stop above failed to kill) may hold reads
-      // against registered scratch, so its paths stay until JVM exit.
-      val released =
-        if (spark.streams.active.nonEmpty) {
-          System.err.println(s"[scale] $name: ${spark.streams.active.length} " +
-            "streams still active — skipping scratch release for this query")
-          0
-        } else graft.core.TempDirs.releaseSince(scratchSnap)
-      if (released > 0)
-        System.err.println(s"[scale] $name: released $released scratch dirs")
       val (stRows, stMem) = stateListener.drain()
-      val stateJson =
-        if (stRows > 0 || stMem > 0)
-          f""","state_rows_total":$stRows,"state_mem_mb":${stMem / 1e6}%.1f"""
-        else ""
       val spreadJson =
         if (repeats > 1) f""","warm_spread_s":$warmSpread%.3f,"warm_runs":$repeats""" else ""
-      // spill deltas cover EVERY run of this query (cold + warms)
+      // spill deltas cover EVERY run of this query (cold + warms); state
+      // and spill fields are written even when zero
       val (spMem, spDisk) =
         (spillMem.get() - spillMem0, spillDisk.get() - spillDisk0)
+      val stateJson =
+        f""","state_rows_total":$stRows,"state_mem_mb":${stMem / 1e6}%.1f"""
       val spillJson =
-        if (spMem > 0 || spDisk > 0)
-          f""","spill_mem_mb":${spMem / 1e6}%.1f,"spill_disk_mb":${spDisk / 1e6}%.1f"""
-        else ""
+        f""","spill_mem_mb":${spMem / 1e6}%.1f,"spill_disk_mb":${spDisk / 1e6}%.1f"""
       val line = f"""{"q":"$name","cold_s":$cold%.3f,"warm_s":$warm%.3f,"rows":$rows,"driver_peak_mb":$mb%.0f$spreadJson$stateJson$spillJson}"""
       println(line)
       line

@@ -1,8 +1,10 @@
 package graft
 
+import graft.queries.QuerySpec
+
 /** The correctness-gate contract: every registered query carries oracle
-  * SQL (a key in one map but not the other silently downgrades the
-  * driver's check to rows-only — this spec makes that drift a failure).
+  * SQL, every name is registered once, and every name a tool uses by
+  * default resolves.
   */
 class RegistrySpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -11,20 +13,31 @@ class RegistrySpec extends org.scalatest.funsuite.AnyFunSuite {
     val o = SparkEntry.oracleSql.keySet
     assert((o -- q).isEmpty, s"oracle entries without a query: ${o -- q}")
     assert((q -- o).isEmpty, s"queries without oracle SQL: ${q -- o}")
+    assert(q.size == 178 && o.size == 178)
+    assert(SparkEntry.all.size == 178)
   }
 
-  test("no duplicate registration: each name appears EXACTLY twice in the " +
-       "source (query + oracle) — a Map literal dedupes keys, so a " +
-       "re-registered name would silently SHADOW the original query") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val names = "(?m)^    \"(q_\\w+)\" ->".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val bad = names.groupBy(identity).filter(_._2.size != 2)
-    assert(bad.isEmpty,
-      s"names not registered exactly twice (query + oracle): ${bad.keys}")
-    assert(names.toSet == SparkEntry.queries.keySet)
+  test("the registry index refuses a repeated name, naming it") {
+    val a = SparkEntry.spec("q_stats")
+    val b = SparkEntry.spec("q_dims")
+    assert(QuerySpec.index(Seq(a, b)).keySet == Set("q_stats", "q_dims"))
+    val e = intercept[QuerySpec.DuplicateQueryError](
+      QuerySpec.index(Seq(a, b, a.copy(oracleSql = "SELECT 1"))))
+    assert(e.name == "q_stats")
+    assert(e.getMessage.contains("q_stats"))
+  }
+
+  test("spec fails loudly on an unknown name, naming it") {
+    val e = intercept[SparkEntry.UnknownQueryError](SparkEntry.spec("q_no_such"))
+    assert(e.name == "q_no_such")
+    assert(e.getMessage.contains("q_no_such"))
+  }
+
+  test("Bench's built-in warm-up and control names all resolve") {
+    (Bench.WarmupQueries ++ Bench.DefaultControls).foreach(n =>
+      assert(SparkEntry.spec(n).name == n))
+    graft.tools.Scale.DefaultSet.foreach(n =>
+      assert(SparkEntry.spec(n).name == n))
   }
 
   test("query names are well-formed and oracle SQL non-empty") {

@@ -91,3 +91,6 @@ no_oracle = [q for q in
              [p.split("/")[-1] for p in glob.glob(f"{out_dir}/q_*")]
              if q not in oracle]
 print(f"\n{len(oracle)} oracled, {fails} FAIL; rows-only (no oracle): {sorted(no_oracle)}")
+# a failed compare must not read as a pass to anything that checks only
+# the exit status
+sys.exit(1 if fails > 0 else 0)
