@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.ingestion.{GridOverrides, IngestPipeline}
+import graft.operators.GridIndex
 import graft.schema.{DatasetTemplate, MdioSchema}
 import graft.storage.{MdioDataset, MdioDatasetHandle}
 
@@ -68,7 +69,8 @@ object Mdio {
                          fields: Seq[String],
                          template: DatasetTemplate, overrides: GridOverrides,
                          path: String, valueCol: String,
-                         sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
+                         sparsityWarn: Double = GridIndex.SparsityWarn,
+                         sparsityError: Double = GridIndex.SparsityError,
                          ignoreChecks: Boolean = false,
                          attributes: Map[String, String] = Map.empty)
       : IngestPipeline.IngestResult = {
@@ -94,7 +96,8 @@ object Mdio {
                     fields: Seq[String],
                     template: DatasetTemplate, overrides: GridOverrides,
                     path: String, valueCol: String,
-                    sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
+                    sparsityWarn: Double = GridIndex.SparsityWarn,
+                    sparsityError: Double = GridIndex.SparsityError,
                     ignoreChecks: Boolean = false,
                     attributes: Map[String, String] = Map.empty)
       : IngestPipeline.IngestResult = {

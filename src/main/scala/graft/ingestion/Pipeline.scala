@@ -3,7 +3,7 @@ package graft.ingestion
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Coordinates, Dimensions}
+import graft.operators.{Coordinates, Dimensions, GridIndex}
 import graft.schema._
 import graft.storage.MdioDataset
 
@@ -25,13 +25,10 @@ import graft.storage.MdioDataset
   * is the only shuffle of the trace payload. The only driver-side values
   * are metadata-sized (per-cable channel ranges, QC scalars and dim
   * vectors, the stats row). A shot-wrap stage is the exception: its window
-  * shuffles the rows on its own key, and its QC and dim tables keep the
-  * distinct-count pass and the post-write store scan.
+  * shuffles the rows on its own key, so its grid QC aggregates the
+  * transformed rows instead of the header pre-pass.
   */
 object IngestPipeline {
-
-  final class GridTraceCountError(msg: String) extends RuntimeException(msg)
-  final class GridSparsityError(msg: String) extends RuntimeException(msg)
 
   /** @param sparsityWarning the J3 warning (`ingestion/grid_qc.py:19-69`)
     *   when the grid sparsity exceeds the warn threshold, else None */
@@ -60,7 +57,8 @@ object IngestPipeline {
   def ingest(spark: SparkSession, traces: DataFrame, template: DatasetTemplate,
              overrides: GridOverrides, path: String,
              ordinal: Seq[String], valueCol: String,
-             sparsityWarn: Double = 2.0, sparsityError: Double = 10.0,
+             sparsityWarn: Double = GridIndex.SparsityWarn,
+             sparsityError: Double = GridIndex.SparsityError,
              ignoreChecks: Boolean = false,
              rawHeaderFields: Seq[String] = Nil,
              attributes: Map[String, String] = Map.empty): IngestResult = {
@@ -106,130 +104,58 @@ object IngestPipeline {
     // 4: every calculated dim must now exist as a column
     SchemaResolver.verifyCalculatedDims(resolved, transformed.columns.toSeq)
 
-    // 5: grid invariants (J2 + J3) and dim cardinalities in ONE aggregate
-    // pass over `headers`. Its cells are every grid dim when the whole chain
-    // is row-local; when the chain ends in a uniqueness counter (G3/G4),
-    // they are the counter's cells: (cellDims, counter) is unique by
-    // construction, the counter's cardinality equals the max per-cell count,
-    // and per-dim distincts are unchanged, so the QC never runs the counter
-    // window (that window runs once, inside the write pass). A chain with a
-    // shot-wrap stage keeps a countDistinct pass over `transformed`.
+    // 5: grid invariants (J2 + J3), dim tables and coordinates in ONE
+    // per-cell aggregate pass (GridIndex.qcCells + qcAggs). Its cells are
+    // every grid dim of `headers` when the whole chain is row-local. When
+    // the chain ends in a uniqueness counter (G3/G4) they are the counter's
+    // cells over `headers`: (cellDims, counter) is unique by construction,
+    // the counter's cardinality equals the fullest cell, and per-dim
+    // distincts are unchanged, so the QC never runs the counter window
+    // (that window runs once, inside the write pass). Any other chain (a
+    // shot-wrap stage computes `shot_index` over a window) aggregates the
+    // transformed rows with every grid dim a cell and no counter.
     val gridDims = resolved.dimensions.dropRight(1).filter(transformed.columns.contains)
-    val counterDims = gridDims.filterNot(headers.columns.contains)
-    val fastCells =
-      if (rest.isEmpty) Some(gridDims).filter(_.nonEmpty)
-      else strategy.counterCellDims(ctx, headers.columns.toSeq)
-        .filter(cells => counterDims.sizeIs == 1 &&
-          gridDims.toSet == cells.toSet + counterDims.head)
-    // On the fast path the per-dim VALUE SETS ride the same aggregate
-    // (collect_set instead of countDistinct — a dim vector is metadata-
-    // sized), and a counter's label vector is 1..max by construction, so
-    // the dim tables need NO store scan at all. Coordinates whose cell dims
-    // sit inside the cells ALSO ride this aggregate: the per-cell level
-    // carries min_by(coord, orderKey) + min(orderKey), the staged per-cell
-    // table then reduces to each coordinate's own dim subset
-    // (winner-of-winners by the carried min key = the global min_by), so the
-    // coordinate tables need no post-write store scan either — at 100 TB
-    // that scan is a full second read of the store.
-    val orderKeyCol = ordinal.headOption.filter(headers.columns.contains)
-    val (nTraces, nCells, cardinalities, dimValues, foldedCoords) = fastCells match {
-      case Some(cells) =>
-        val counter = counterDims.headOption
-        val foldable = resolved.coordinates.filter { c =>
-          val cd = c.dimensions.filter(headers.columns.contains)
-          orderKeyCol.nonEmpty && headers.columns.contains(c.name) &&
-            cd.nonEmpty && cd.toSet.subsetOf(cells.toSet)
-        }
-        val coordAggs =
-          if (foldable.isEmpty) Nil
-          else foldable.map(c => min_by(col(c.name), col(orderKeyCol.get)).as(c.name)) :+
-            min(col(orderKeyCol.get)).as("__ok")
-        val perCell = headers.groupBy(cells.map(col): _*)
-          .agg(count(lit(1)).as("_cnt"), coordAggs: _*)
-        // staged only when coordinates ride along (the level-1 table then
-        // feeds both the QC reduction and the coordinate tables)
-        val perCellSrc =
-          if (foldable.isEmpty) perCell
-          else withDesc(spark, "QC per-cell stage") {
-            graft.core.Scratch.stage(perCell, "ingest_qc")
-          }
-        // Cardinality guard: the value sets are SLICED to maxVals+1 inside
-        // the aggregate (sorted, so the truncation is deterministic) — the
-        // driver row stays bounded no matter how pathological a dim is. A
-        // set arriving truncated marks its dim over the gate: that dim's
-        // exact cardinality (sidecar + sparsity need it) comes from its own
-        // distinct count and its table from the distributed write — extra
-        // jobs ONLY in the pathological case; the common case keeps the
-        // single two-level aggregate (no countDistinct Expand riding along:
-        // measured +0.9s on the sf0.1 ingest when it did). Without a
-        // counter the cell count is the number of groups whose dims are all
-        // non-null (countDistinct's rule).
-        val maxVals = math.min(Dimensions.driverMaxValues(spark), Int.MaxValue - 2L).toInt
-        val aggs = Seq(sum(col("_cnt")).as("n_rows"),
-            max(col("_cnt")).as("__max_cnt"),
-            count(when(cells.map(d => col(d).isNotNull).reduce(_ && _), lit(1)))
-              .as("n_cells")) ++
-          cells.map(d => slice(sort_array(collect_set(col(d))), 1, maxVals + 1)
-            .as(s"__v_$d"))
-        // the reduction is an observation of the per-cell pass, merged on
-        // the driver, so it needs no second exchange or result stage
-        val qc = Observation("ingest_qc")
-        val m = withDesc(spark, "QC reduce") {
-          perCellSrc.observe(qc, aggs.head, aggs.drop(1): _*)
-            .write.format("noop").mode("overwrite").save()
-          qc.get
-        }
-        def g(name: String): Long = Option(m(name)).fold(0L)(_.asInstanceOf[Long])
-        val counterVals: Option[(String, Seq[Any])] =
-          counter.filter(_ => g("__max_cnt") <= maxVals)
-            .map(_ -> (1L to g("__max_cnt")).map(v => v: Any))
-        val vals: Map[String, Seq[Any]] =
-          cells.map(d => d -> m(s"__v_$d").asInstanceOf[Seq[Any]])
-            .filter { case (_, v) => v.sizeIs <= maxVals }.toMap ++ counterVals
-        // over-the-gate dims (value set arrived truncated) still need exact
-        // cardinalities for the sidecar + sparsity — ONE countDistinct
-        // aggregate for all of them, not a distinct-count job per dim
-        val overGate = cells.filterNot(vals.contains)
-        val exactCards: Map[String, Long] =
-          if (overGate.isEmpty) Map.empty
-          else {
-            val cdAggs = overGate.map(d => countDistinct(col(d)).as(s"__nd_$d"))
-            val r = withDesc(spark, "over-gate distincts") {
-              perCellSrc.agg(cdAggs.head, cdAggs.drop(1): _*).collect().head
-            }
-            overGate.map(d => d -> r.getAs[Long](s"__nd_$d")).toMap
-          }
-        val cards = cells.map(d => d ->
-            (if (vals.contains(d)) vals(d).size.toLong else exactCards(d))).toMap ++
-          counter.map(_ -> g("__max_cnt"))
-        (g("n_rows"), if (counter.nonEmpty) g("n_rows") else g("n_cells"), cards,
-          Some(vals),
-          if (foldable.isEmpty) None
-          else Some((perCellSrc, foldable.map(_.name).toSet)))
-      case None =>
-        val dcols = gridDims.map(col)
-        val checkAggs =
-          Seq(count(lit(1)).as("n_rows"),
-              countDistinct(dcols.head, dcols.drop(1): _*).as("n_cells")) ++
-            gridDims.map(d => countDistinct(col(d)).as(s"__n_$d"))
-        val check = withDesc(spark, "grid QC") {
-          transformed.agg(checkAggs.head, checkAggs.drop(1): _*).collect().head
-        }
-        (check.getAs[Long]("n_rows"), check.getAs[Long]("n_cells"),
-          gridDims.map(d => d -> check.getAs[Long](s"__n_$d")).toMap,
-          None, None)
+    require(gridDims.nonEmpty, s"template ${template.name} has no grid dims")
+    val (qcSrc, cells, counter) =
+      (if (rest.isEmpty) Some((headers, gridDims, None))
+       else strategy.counterCellDims(ctx, headers.columns.toSeq).flatMap { cs =>
+         gridDims.filterNot(cs.contains) match {
+           case Seq(c) if !headers.columns.contains(c) && cs.forall(gridDims.contains) =>
+             Some((headers, cs, Some(c)))
+           case _ => None
+         }
+       }).getOrElse((transformed, gridDims, None))
+    // Coordinates whose cell dims sit inside the cells ride the same
+    // aggregate (min_by per cell + the min order key): the staged per-cell
+    // table then reduces to each coordinate's own dim subset, so their
+    // tables need no post-write store scan — at 100 TB a full second read.
+    val orderKeyCol = ordinal.headOption.filter(qcSrc.columns.contains)
+    val foldable = resolved.coordinates.filter { c =>
+      val cd = c.dimensions.filter(qcSrc.columns.contains)
+      orderKeyCol.nonEmpty && qcSrc.columns.contains(c.name) &&
+        cd.nonEmpty && cd.toSet.subsetOf(cells.toSet)
+    }.map(_.name)
+    val perCell = GridIndex.qcCells(qcSrc, cells, foldable, orderKeyCol)
+    // staged only when coordinates ride along (the per-cell table then
+    // feeds both the QC reduction and the coordinate tables)
+    val perCellSrc =
+      if (foldable.isEmpty) perCell
+      else withDesc(spark, "QC per-cell stage") {
+        graft.core.Scratch.stage(perCell, "ingest_qc")
+      }
+    // the reduction is an observation of the per-cell pass, merged on the
+    // driver, so it needs no second exchange or result stage; only a dim
+    // whose value set overflows the gate costs a distinct-count job
+    val maxVals = GridIndex.valueGate(spark)
+    val aggs = GridIndex.qcAggs(cells, maxVals)
+    val qcObs = Observation("ingest_qc")
+    val qc = withDesc(spark, "QC reduce") {
+      perCellSrc.observe(qcObs, aggs.head, aggs.drop(1): _*)
+        .write.format("noop").mode("overwrite").save()
+      GridIndex.gridQC(perCellSrc, qcObs.get, cells, counter, maxVals)
     }
-    if (nCells != nTraces && !ignoreChecks)
-      throw new GridTraceCountError(
-        s"grid holds $nCells cells for $nTraces traces — duplicate index tuples " +
-        "(use HasDuplicates/NonBinned overrides)")
-    val sparsity = cardinalities.values.map(_.toDouble).product / nTraces
-    if (sparsity > sparsityError && !ignoreChecks)
-      throw new GridSparsityError(f"grid sparsity $sparsity%.2f exceeds $sparsityError")
     val sparsityWarning =
-      if (sparsity > sparsityWarn)
-        Some(f"grid sparsity $sparsity%.2f exceeds $sparsityWarn (warn threshold)")
-      else None
+      GridIndex.checkGrid(qc, sparsityWarn, sparsityError, ignoreChecks)
 
     // 6: summary statistics piggyback on the WRITE pass via observe() —
     // exactly the reference's per-block partial stats collected by the
@@ -274,7 +200,7 @@ object IngestPipeline {
     // (sample) dimension's size arrives with the write-pass observation for
     // array-valued ingests, so the stats patch below adds it
     def dimSizes(verticalSize: Option[Long]): Seq[NamedDimension] =
-      gridDims.map(d => NamedDimension(d, cardinalities(d))) ++
+      gridDims.map(d => NamedDimension(d, qc.cardinalities(d))) ++
         verticalSize.map(NamedDimension(resolved.dimensions.last, _))
     def schemaWith(statsOpt: Option[SummaryStatistics],
                    verticalSize: Option[Long] = None): MdioSchema = MdioSchema(
@@ -315,48 +241,44 @@ object IngestPipeline {
       else None
     MdioDataset.writeSidecar(spark, path, schemaWith(Some(stats), verticalSize))
 
-    // C2/C1: on the fast path every dim table comes from the QC
-    // aggregate's driver vectors (a counter's from its 1..max range), and
-    // coordinates from the staged QC per-cell table when they rode along.
-    // The store just written is read only for what the aggregate could not
-    // carry: dims over the gate, coordinates outside the cells, and, on the
-    // countDistinct arm, every dim table (ONE aggregate scan) and coordinate
-    // (ONE groupBy scan per cell-dim set). The handful of tiny table writes
-    // are submitted concurrently — each is an independent one-task job, and
-    // serial submission turns per-job scheduling latency into wall time.
+    // C2/C1: every dim table comes from the QC aggregate's driver vectors
+    // (a counter's from its 1..max range), and folded coordinates from the
+    // staged per-cell table. The store just written is read only for what
+    // the aggregate could not carry: dims over the gate and coordinates
+    // outside the cells (ONE groupBy scan per cell-dim set). The handful of
+    // tiny table writes are submitted concurrently — each is an independent
+    // one-task job, and serial submission turns per-job scheduling latency
+    // into wall time.
     lazy val stored = MdioDataset.open(spark, path).df
-    val folded = foldedCoords.map(_._2).getOrElse(Set.empty[String])
     val storeCoords = resolved.coordinates.map(_.name)
-      .filter(c => transformed.columns.contains(c) && !folded.contains(c))
-    val maxDimVals = Dimensions.driverMaxValues(spark)
-    val tailWrites: Seq[() => Unit] = (dimValues match {
-      case Some(vals) => gridDims.map(d => () => withDesc(spark, s"dim table $d") {
-        if (vals.contains(d))
-          writeDimVector(spark, transformed.schema(d).dataType, vals(d), path, d)
-        else if (counterDims.contains(d))
+      .filter(c => transformed.columns.contains(c) && !foldable.contains(c))
+    val tailWrites: Seq[() => Unit] = gridDims.map(d => () => withDesc(spark, s"dim table $d") {
+      val dt = transformed.schema(d).dataType
+      qc.values.get(d) match {
+        case Some(vals) => writeDimVector(spark, dt, vals, path, d)
+        case None if counter.contains(d) =>
           // counter labels are 1..max by construction — generate distributed
-          // (one slice: the vector is gate-bounded, and default parallelism
-          // would burn a job per empty slice coalesce)
-          spark.range(1, cardinalities(d) + 1, 1, numPartitions = 1)
-            .select(col("id").cast(transformed.schema(d).dataType).as("dim_value"))
+          // (one slice: default parallelism would burn a job per empty
+          // slice coalesce)
+          spark.range(1, qc.cardinalities(d) + 1, 1, numPartitions = 1)
+            .select(col("id").cast(dt).as("dim_value"))
             .write.mode("overwrite").parquet(s"$path/dims/$d")
-        else writeDimDistributed(stored, d, path)
-      })
-      case None => Seq(() => withDesc(spark, "dim tables") {
-        writeDimTables(spark, stored, gridDims, path, cardinalities, maxDimVals)
-      })
-    }) ++ foldedCoords.toSeq.map { case (perCellSrc, names) =>
-      () => withDesc(spark, "coord tables (folded)") {
-        writeCoordinateTables(perCellSrc, resolved, orderKey = "__ok", path,
-          only = names)
+        case None =>
+          // over the gate: distributed distinct + range-sorted write, the
+          // vector never materializes in one place
+          Dimensions.computeDimension(stored, d)
+            .write.mode("overwrite").parquet(s"$path/dims/$d")
       }
-    } ++ (if (storeCoords.isEmpty) Nil else Seq(() => withDesc(spark, "coord tables") {
+    }) ++ (if (foldable.isEmpty) Nil else Seq(() => withDesc(spark, "coord tables (folded)") {
+      writeCoordinateTables(perCellSrc, resolved, orderKey = "__ok", path,
+        only = foldable.toSet)
+    })) ++ (if (storeCoords.isEmpty) Nil else Seq(() => withDesc(spark, "coord tables") {
       writeCoordinateTables(stored, resolved, orderKey = ordinal.head, path,
-        exclude = folded)
+        exclude = foldable.toSet)
     }))
     awaitAll(tailWrites)
 
-    IngestResult(path, resolved, nTraces, nCells, sparsity, stats, sparsityWarning)
+    IngestResult(path, resolved, qc.nRows, qc.nCells, qc.sparsity, stats, sparsityWarning)
   }
 
   /** Run independent driver-side write closures concurrently (each submits
@@ -379,40 +301,6 @@ object IngestPipeline {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** G1/C2 ingest tail: every DRIVER-SAFE dim vector from ONE column-pruned
-    * aggregate scan (collect_set per dim, map-side combined, shuffle
-    * O(cardinality)) — each table then sorts and writes its handful of rows
-    * locally instead of re-scanning the store once per dim. Dims whose
-    * cardinality (known from the invariant pass) exceeds the gate skip the
-    * driver entirely via [[writeDimDistributed]].
-    */
-  private[ingestion] def writeDimTables(spark: SparkSession, stored: DataFrame,
-                                        gridDims: Seq[String], path: String,
-                                        cardinalities: Map[String, Long] = Map.empty,
-                                        maxVals: Long = Long.MaxValue): Unit = {
-    if (gridDims.isEmpty) return
-    val (big, small) = gridDims.partition(d =>
-      cardinalities.getOrElse(d, 0L) > maxVals)
-    // each over-gate dim is an independent distinct+sort+write chain to
-    // its own dims/<d> path — overlap them (guide §2.6)
-    graft.core.Par.map(big)(d => writeDimDistributed(stored, d, path)): Unit
-    if (small.isEmpty) return
-    val aggs = small.map(d => collect_set(col(d)).as(d))
-    val row = stored.agg(aggs.head, aggs.drop(1): _*).collect().head
-    small.foreach { d =>
-      writeDimVector(spark, stored.schema(d).dataType,
-        row.getSeq[Any](row.fieldIndex(d)), path, d)
-    }
-  }
-
-  /** The over-the-gate dim table: distributed distinct + range-sorted write
-    * — the vector never materializes in one place. */
-  private[ingestion] def writeDimDistributed(stored: DataFrame, d: String,
-                                             path: String): Unit =
-    stored.select(col(d).as("dim_value")).distinct()
-      .orderBy(col("dim_value"))
-      .write.mode("overwrite").parquet(s"$path/dims/$d")
-
   /** Write one dim table (`dims/<d>`: sorted `dim_value`) from an in-driver
     * value vector. The sort happens DRIVER-SIDE (the vector is already
     * in-driver and gate-bounded): an `.orderBy` here plans a range exchange
@@ -430,15 +318,14 @@ object IngestPipeline {
       .write.mode("overwrite").parquet(s"$path/dims/$d")
 
   /** C1/C2 ingest tail: coordinates sharing a cell-dim set are reduced in
-    * ONE groupBy pass (multiple min_by aggregates); each coordinate table is
+    * ONE [[Coordinates.populateCoordinate]] pass; each coordinate table is
     * a pruned selection of that pass (staged once when shared). `only` /
-    * `exclude` split the work between the fast-path per-cell source (already
+    * `exclude` split the work between the per-cell QC table (already
     * reduced once, carrying its own `__ok` min-key column) and the store.
     */
   private[ingestion] def writeCoordinateTables(stored: DataFrame,
                                                resolved: ResolvedSchema,
                                                orderKey: String, path: String,
-                                               scalar: Int = 1,
                                                only: Set[String] = Set.empty,
                                                exclude: Set[String] = Set.empty): Unit = {
     val present = resolved.coordinates.filter(c =>
@@ -446,10 +333,8 @@ object IngestPipeline {
         (only.isEmpty || only.contains(c.name)) && !exclude.contains(c.name))
     present.groupBy(_.dimensions.filter(stored.columns.contains)).foreach {
       case (cellDims, cs) =>
-        val aggs = cs.map(c => Coordinates
-          .applyScalar(min_by(col(c.name), col(orderKey)), scalar).as(c.name))
-        val grouped = stored.groupBy(cellDims.map(col): _*)
-          .agg(aggs.head, aggs.drop(1): _*)
+        val grouped = Coordinates.populateCoordinate(stored, cellDims,
+          cs.map(_.name), orderKey)
         val staged =
           if (cs.sizeIs == 1) grouped
           else graft.core.Scratch.stage(grouped, "coords")

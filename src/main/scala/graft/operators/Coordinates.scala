@@ -37,12 +37,14 @@ object Coordinates {
       .when(scalar > 0, c * scalar.cast("double"))
       .otherwise(c.cast("double"))
 
-  /** C1: one coordinate value per cell = value on the first-ordered row. */
-  def populateCoordinate(df: DataFrame, cellDims: Seq[String], coordCol: String,
+  /** C1: one value per cell for each of `coordCols` = its value on the
+    * first-ordered row. Coordinates sharing a cell-dim set reduce in ONE
+    * groupBy pass (the ingest's coordinate tables, one `min_by` each). */
+  def populateCoordinate(df: DataFrame, cellDims: Seq[String], coordCols: Seq[String],
                          orderKey: String, scalar: Int = 1): DataFrame = {
-    val first = min_by(col(coordCol), col(orderKey))
-    df.groupBy(cellDims.map(col): _*)
-      .agg(applyScalar(first, scalar).as(coordCol))
+    val firsts = coordCols.map(c =>
+      applyScalar(min_by(col(c), col(orderKey)), scalar).as(c))
+    df.groupBy(cellDims.map(col): _*).agg(firsts.head, firsts.tail: _*)
   }
 
   /** C1 + consistency check: the reference reduces without verifying that

@@ -20,7 +20,9 @@ object Dimensions {
 
   /** Sorted distinct values of one dimension column (G1). Null rows are
     * dropped: reference headers are dense numpy arrays and can never hold a
-    * null, so a null can't be a grid coordinate.
+    * null, so a null can't be a grid coordinate. The ingest writes this as
+    * the table of a dim over [[driverMaxValues]]; below the gate the table
+    * is the grid QC's value set, which drops nulls too.
     */
   def computeDimension(df: DataFrame, dim: String): DataFrame =
     df.select(col(dim).as("dim_value"))

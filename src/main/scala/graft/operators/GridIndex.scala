@@ -12,25 +12,25 @@ import org.apache.spark.sql.functions._
   * broadcast equi-join of the trace table against each (tiny) sorted-distinct
   * dimension table carrying a 0-based ordinal.
   *
-  * J2 live-trace-count check (`ingestion/segy/pipeline.py:89-114`): the grid
-  * holds every trace iff the dim tuples are unique — `countDistinct(dims*) ==
-  * count(*)`.
-  *
-  * J3 grid density QC (`ingestion/grid_qc.py:19-69`, thresholds
-  * `core/config.py:41-50`): sparsity = ∏ dimSizes / numTraces; warn > 2,
-  * error > 10.
+  * J2 live-trace-count check (`ingestion/segy/pipeline.py:89-114`) and J3
+  * grid density QC (`ingestion/grid_qc.py:19-69`, thresholds
+  * `core/config.py:41-50`: sparsity = ∏ dimSizes / numTraces; warn > 2,
+  * error > 10) share ONE two-level aggregate: a per-cell `groupBy`
+  * ([[qcCells]]) reduced by [[qcAggs]]. The grid holds every trace iff the
+  * cells number the traces. The ingest pipeline observes that reduction on
+  * its per-cell pass, and its value sets are also the store's dim tables;
+  * [[liveTraceCheck]] and [[sparsityQC]] aggregate it.
   *
   * Scale: each dim-index table has cardinality ≪ rows (it is the reference's
   * in-memory coordinate vector); `row_number` over it is a single-partition
   * window over cardinality-sized data only, and the join back to the trace
   * table is an explicit `broadcast` — no shuffle of the big side. For the
   * pathological dim whose cardinality is NOT metadata-sized, callers pass
-  * the cardinality (known from the invariant pass, like the ingest tail's
-  * `writeDimTables`) and any dim over `graft.dims.driverMaxValues` numbers
-  * through the over-gate branch instead: distributed distinct →
-  * [[GlobalOrder.withGlobalSeq]] (two-pass zipWithIndex, no single-partition
-  * window) → plain equi-join (sort-merge; the index side is too big to
-  * broadcast by assumption).
+  * the cardinality (known from the grid QC) and any dim over
+  * `graft.dims.driverMaxValues` numbers through the over-gate branch
+  * instead: distributed distinct → [[GlobalOrder.withGlobalSeq]] (two-pass
+  * zipWithIndex, no single-partition window) → plain equi-join (sort-merge;
+  * the index side is too big to broadcast by assumption).
   */
 object GridIndex {
 
@@ -62,18 +62,14 @@ object GridIndex {
     * `row_number` window. The measured estimate carries HLL error (~2%), so
     * it routes through the distributed branch from 80% of the gate — the
     * distributed branch is merely slower for small dims, never wrong,
-    * making under-estimation the only dangerous direction. Set
-    * `graft.dims.precheck=false` to restore the scan-free lazy plan when
-    * the caller is certain every dim is metadata-sized.
+    * making under-estimation the only dangerous direction.
     */
   def withDimIndices(df: DataFrame, dims: Seq[String],
                      cardinalities: Map[String, Long] = Map.empty): DataFrame = {
     val gate = Dimensions.driverMaxValues(df.sparkSession)
-    val precheck = df.sparkSession.conf
-      .getOption("graft.dims.precheck").forall(_.toBoolean)
     val unknown = dims.filterNot(cardinalities.contains)
     val measured: Map[String, Long] =
-      if (!precheck || unknown.isEmpty) Map.empty
+      if (unknown.isEmpty) Map.empty
       else {
         val aggs = unknown.map(d => approx_count_distinct(col(d)).as(d))
         val row = df.agg(aggs.head, aggs.tail: _*).head()
@@ -111,26 +107,134 @@ object GridIndex {
       .drop(dims.map(d => s"__sz_$d"): _*)
   }
 
-  /** J2: one-row invariant check — grid holds every trace iff dim tuples unique. */
-  def liveTraceCheck(df: DataFrame, dims: Seq[String]): DataFrame = {
-    val dcols = dims.map(col)
-    df.agg(
-      count(lit(1)).as("n_rows"),
-      countDistinct(dcols.head, dcols.tail: _*).as("n_cells"),
-    ).withColumn("all_unique", col("n_rows") === col("n_cells"))
+  /** J3 thresholds (`core/config.py:41-50`): a grid with more than 2× as
+    * many cells as traces warns, more than 10× fails. */
+  val SparsityWarn = 2.0
+  val SparsityError = 10.0
+
+  final class GridTraceCountError(msg: String) extends RuntimeException(msg)
+  final class GridSparsityError(msg: String) extends RuntimeException(msg)
+
+  /** The J2/J3 facts of a grid: traces, occupied cells, each dim's exact
+    * cardinality and, for a dim within the gate, its sorted value vector
+    * (the dim table). */
+  final case class GridQC(nRows: Long, nCells: Long, cardinalities: Map[String, Long],
+                          values: Map[String, Seq[Any]]) {
+    /** J2: the grid holds every trace iff no two traces share a cell. */
+    def allUnique: Boolean = nCells == nRows
+    def gridSize: BigInt = cardinalities.values.map(BigInt(_)).product
+    /** J3: ∏ dim sizes / traces. */
+    def sparsity: Double = gridSize.toDouble / nRows
   }
 
-  /** J3: sparsity ratio with warn/error thresholds (2× / 10× defaults). */
+  /** The J2/J3 per-cell level: one row per `cells` tuple with its trace
+    * count `_cnt`. Each of `coords` rides along as its value on the row
+    * with the least `orderKey` (C1's first-by-order rule) plus that key as
+    * `__ok`, so coordinate tables over a subset of the cells reduce from
+    * this table ([[Coordinates.populateCoordinate]] by `__ok`, the
+    * winner of winners) instead of from the store. */
+  def qcCells(df: DataFrame, cells: Seq[String], coords: Seq[String] = Nil,
+              orderKey: Option[String] = None): DataFrame = {
+    val coordAggs = orderKey.filter(_ => coords.nonEmpty).toSeq.flatMap(k =>
+      coords.map(c => min_by(col(c), col(k)).as(c)) :+ min(col(k)).as("__ok"))
+    df.groupBy(cells.map(col): _*).agg(count(lit(1)).as("_cnt"), coordAggs: _*)
+  }
+
+  /** The value-set gate of [[qcAggs]]: `graft.dims.driverMaxValues`, kept
+    * clear of the array-size limit. */
+  def valueGate(spark: org.apache.spark.sql.SparkSession): Int =
+    math.min(Dimensions.driverMaxValues(spark), Int.MaxValue - 2L).toInt
+
+  /** The J2/J3 reduction of [[qcCells]], one definition for ingest (which
+    * observes it on its per-cell pass) and the J2/J3 operators (which
+    * aggregate it): traces `n_rows`, the fullest cell `__max_cnt`, cells
+    * whose dims are all non-null `n_cells` (countDistinct's rule), and per
+    * dim its sorted non-null value set `__v_<d>`, sliced at `maxVals + 1`
+    * so the row stays bounded; a set that arrives that long marks its dim
+    * over the gate. No countDistinct rides along: its Expand cost +0.9 s
+    * on the sf0.1 ingest when it did.
+    */
+  def qcAggs(cells: Seq[String], maxVals: Int): Seq[Column] =
+    Seq(coalesce(sum(col("_cnt")), lit(0L)).as("n_rows"),
+        coalesce(max(col("_cnt")), lit(0L)).as("__max_cnt"),
+        count(when(cells.map(d => col(d).isNotNull).reduce(_ && _), lit(1)))
+          .as("n_cells")) ++
+      cells.map(d => slice(sort_array(collect_set(col(d))), 1, maxVals + 1)
+        .as(s"__v_$d"))
+
+  /** Resolve the [[qcAggs]] values `m` of the per-cell table `cellsDf` into
+    * the grid's facts. A dim whose value set arrived over the gate gets its
+    * exact cardinality from ONE countDistinct aggregate over `cellsDf` for
+    * all such dims (a job only in that pathological case). `counter` is a
+    * uniqueness counter (G3/G4) outside the cells: its labels are 1..the
+    * fullest cell by construction, and every trace has its own cell.
+    */
+  def gridQC(cellsDf: DataFrame, m: Map[String, Any], cells: Seq[String],
+             counter: Option[String], maxVals: Int): GridQC = {
+    def g(name: String): Long = Option(m(name)).fold(0L)(_.asInstanceOf[Long])
+    val maxCnt = g("__max_cnt")
+    val vals: Map[String, Seq[Any]] =
+      cells.map(d => d -> m(s"__v_$d").asInstanceOf[collection.Seq[Any]].toSeq)
+        .filter { case (_, v) => v.sizeIs <= maxVals }.toMap ++
+        counter.filter(_ => maxCnt <= maxVals).map(_ -> (1L to maxCnt))
+    val overGate = cells.filterNot(vals.contains)
+    val exact: Map[String, Long] =
+      if (overGate.isEmpty) Map.empty
+      else {
+        val aggs = overGate.map(d => countDistinct(col(d)).as(d))
+        val r = cellsDf.agg(aggs.head, aggs.tail: _*).collect().head
+        overGate.map(d => d -> r.getAs[Long](d)).toMap
+      }
+    val cards = cells.map(d => d -> vals.get(d).fold(exact(d))(_.size.toLong)).toMap ++
+      counter.map(_ -> maxCnt)
+    GridQC(g("n_rows"), if (counter.nonEmpty) g("n_rows") else g("n_cells"), cards, vals)
+  }
+
+  /** [[gridQC]] of `df` with every dim a cell: the J2/J3 operators' entry. */
+  def gridQC(df: DataFrame, dims: Seq[String]): GridQC = {
+    val cellsDf = qcCells(df, dims)
+    val maxVals = valueGate(df.sparkSession)
+    val aggs = qcAggs(dims, maxVals)
+    val row = cellsDf.agg(aggs.head, aggs.tail: _*).collect().head
+    gridQC(cellsDf, row.getValuesMap[Any](row.schema.fieldNames.toSeq), dims, None, maxVals)
+  }
+
+  /** The J2/J3 verdict: throws [[GridTraceCountError]] when traces share
+    * cells and [[GridSparsityError]] when sparsity exceeds `error` (both
+    * unless `ignoreChecks`); returns the warning when it exceeds `warn`. */
+  def checkGrid(qc: GridQC, warn: Double = SparsityWarn, error: Double = SparsityError,
+                ignoreChecks: Boolean = false): Option[String] = {
+    if (!qc.allUnique && !ignoreChecks)
+      throw new GridTraceCountError(
+        s"grid holds ${qc.nCells} cells for ${qc.nRows} traces — duplicate index " +
+        "tuples (use HasDuplicates/NonBinned overrides)")
+    if (qc.sparsity > error && !ignoreChecks)
+      throw new GridSparsityError(f"grid sparsity ${qc.sparsity}%.2f exceeds $error")
+    if (qc.sparsity > warn)
+      Some(f"grid sparsity ${qc.sparsity}%.2f exceeds $warn (warn threshold)")
+    else None
+  }
+
+  /** J2 as a one-row frame: `n_rows`, `n_cells`, `all_unique`. Lazy — the
+    * value sets of [[qcAggs]] are pruned, so no dim visits the driver. */
+  def liveTraceCheck(df: DataFrame, dims: Seq[String]): DataFrame = {
+    val aggs = qcAggs(dims, valueGate(df.sparkSession))
+    qcCells(df, dims).agg(aggs.head, aggs.tail: _*)
+      .select(col("n_rows"), col("n_cells"),
+        (col("n_rows") === col("n_cells")).as("all_unique"))
+  }
+
+  /** J3 as a one-row frame from [[gridQC]]: `n_rows`, `<d>_n` per dim,
+    * `grid_size`, `sparsity` and the `warn`/`error` flags (null on an
+    * empty input). */
   def sparsityQC(df: DataFrame, dims: Seq[String],
-                 warnRatio: Double = 2.0, errorRatio: Double = 10.0): DataFrame = {
-    val aggs: Seq[Column] =
-      count(lit(1)).as("n_rows") +: dims.map(d => countDistinct(col(d)).as(s"${d}_n"))
-    val gridSize = dims.map(d => col(s"${d}_n")).reduce(_ * _)
-    df.agg(aggs.head, aggs.tail: _*)
-      .withColumn("grid_size", gridSize.cast("long"))
-      .withColumn("sparsity", when(col("n_rows") > 0,
-        col("grid_size").cast("double") / col("n_rows")))
-      .withColumn("warn", col("sparsity") > warnRatio)
-      .withColumn("error", col("sparsity") > errorRatio)
+                 warnRatio: Double = SparsityWarn,
+                 errorRatio: Double = SparsityError): DataFrame = {
+    val qc = gridQC(df, dims)
+    val sparsity = if (qc.nRows > 0) lit(qc.sparsity) else lit(null).cast("double")
+    df.sparkSession.range(1).select((lit(qc.nRows).as("n_rows") +:
+      dims.map(d => lit(qc.cardinalities(d)).as(s"${d}_n"))) ++
+      Seq(lit(qc.gridSize.toLong).as("grid_size"), sparsity.as("sparsity"),
+        (sparsity > warnRatio).as("warn"), (sparsity > errorRatio).as("error")): _*)
   }
 }

@@ -27,23 +27,14 @@ object Stats {
   private def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     graft.core.Par.map(xs)(f)
 
-  /** A1–A3 in one pass over the non-zero mask of `valueCol`. */
+  /** A1–A3 in one pass over the non-zero mask of `valueCol`: the statsV1
+    * aggregates ingest records and `validate` recomputes
+    * ([[ingestStatsAggs]]), plus the derived mean / variance / std.
+    */
   def summaryStats(df: DataFrame, valueCol: String): DataFrame = {
-    val x = col(valueCol)
-    val xd = x.cast(DecimalType(18, 2))
-    // DECIMAL → STRING → DOUBLE, not DECIMAL → DOUBLE: once the exact sum
-    // exceeds 2^53 the decimal→double conversion is engine-dependent (DuckDB
-    // is off by 1 ulp from the JVM's correctly-rounded BigDecimal path), but
-    // string→double parsing is correctly rounded everywhere — bit-identical
-    // at any scale factor.
-    df.where(x.isNotNull && x =!= 0.0)
-      .agg(
-        count(x).as("n"),
-        min(x).as("min_val"),
-        max(x).as("max_val"),
-        sum(xd).cast("string").cast("double").as("sum_val"),
-        sum(xd * xd).cast("string").cast("double").as("sumsq_val"),
-      )
+    val (n, lo, hi, s, sq, _) = ingestStatsAggs(col(valueCol), isArray = false)
+    df.agg(n.as("n"), lo.as("min_val"), hi.as("max_val"), s.as("sum_val"),
+        sq.as("sumsq_val"))
       // NULL derived stats on an empty/all-masked input — ANSI mode throws
       // on the division otherwise (the n > 0 branch is unchanged)
       .withColumn("mean_val", when(col("n") > 0, col("sum_val") / col("n")))

@@ -516,8 +516,8 @@ object SegyIoQueries {
         |  (SELECT CAST(max(l_partkey) AS BIGINT) FROM c) AS xl_max""".stripMargin),
     // the ingest-tail dim tables through the OVER-THE-GATE branch: the
     // cardinality gate drops to 1 so every dim skips the driver collect_set
-    // and writes via the distributed distinct (writeDimDistributed) or the
-    // distributed counter range — the scale path gets its own oracle row
+    // and writes via the distributed distinct (Dimensions.computeDimension)
+    // or the distributed counter range — the scale path gets its own oracle row
     QuerySpec("q_dims_distributed", (s, d) => {
       import graft.ingestion._
       import graft.schema.DatasetTemplate

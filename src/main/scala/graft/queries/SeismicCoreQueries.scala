@@ -184,7 +184,7 @@ object SeismicCoreQueries {
     // --- C1/P8: coordinate population -----------------------------------
     QuerySpec("q_coord", (s, d) =>
       Coordinates.populateCoordinate(customer(s, d), Seq("c_nationkey"),
-        "c_acctbal", "c_custkey", scalar = -100),
+        Seq("c_acctbal"), "c_custkey", scalar = -100),
       """SELECT c_nationkey, min_by(c_acctbal, c_custkey) / 100.0 AS c_acctbal
         |FROM customer GROUP BY c_nationkey""".stripMargin),
     // --- P4-P6: masking + bbox ------------------------------------------

@@ -1,14 +1,13 @@
 package graft.tools
 
 import java.lang.management.ManagementFactory
-import scala.jdk.CollectionConverters._
 
 /** Scaling-measurement main behind SCALING.md: times registered queries
-  * cold + warm on SPARK_GRAFT_SF_DIR and records the driver-JVM heap
-  * high-water per query (peak-usage across heap pools, reset before each
-  * run). Two runs of this — one per fixture scale — give per-query scaling
-  * exponents; a driver heap that grows with data size flags a hidden
-  * collect.
+  * cold + warm on SPARK_GRAFT_SF_DIR and records the driver-JVM heap the
+  * query leaves retained (used heap after a post-query `System.gc()`). Two
+  * runs of this — one per fixture scale — give per-query scaling
+  * exponents; a retained driver heap that grows with data size flags a
+  * hidden collect.
   *
   * `runMain graft.tools.Scale [query ...]` (default: the SCALING.md set).
   * The session is [[graft.core.GraftSession]]'s (the benchmarked engine);
@@ -65,14 +64,12 @@ object Scale {
     "q_moveout_panel_long",
   )
 
-  private def peakHeapMb(): Double = {
-    ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      .map(_.getPeakUsage.getUsed).sum / 1e6
-  }
-  private def resetPeaks(): Unit = {
+  /** Driver heap still in use after a full collection: what the query
+    * left reachable (collected results, broadcasts, caches), not the
+    * garbage it churned through on the way. */
+  private def retainedHeapMb(): Double = {
     System.gc()
-    ManagementFactory.getMemoryPoolMXBeans.asScala.foreach(_.resetPeakUsage())
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
   }
 
   def main(args: Array[String]): Unit = {
@@ -115,7 +112,6 @@ object Scale {
         val n = graft.Bench.fullCount(q.run(spark, sfDir))
         ((System.nanoTime() - t0) / 1e9, n)
       }
-      resetPeaks()
       stateListener.drain()
       // SPARK_GRAFT_SCALE_REPEATS > 1 → warm_s is the MEDIAN of N warm
       // runs and warm_spread_s their min–max width: the ±20% same-day
@@ -132,7 +128,7 @@ object Scale {
           val warms = if (cold >= 0) (1 to repeats).map(_ => once()._1) else Seq(-1.0)
           val warm = warms.sorted.apply(warms.size / 2)
           val warmSpread = if (warms.size > 1) warms.max - warms.min else 0.0
-          (cold, rows, warm, warmSpread, peakHeapMb())
+          (cold, rows, warm, warmSpread, retainedHeapMb())
         }
       // listener events are async; let the final progress land before
       // draining
@@ -148,7 +144,7 @@ object Scale {
         f""","state_rows_total":$stRows,"state_mem_mb":${stMem / 1e6}%.1f"""
       val spillJson =
         f""","spill_mem_mb":${spMem / 1e6}%.1f,"spill_disk_mb":${spDisk / 1e6}%.1f"""
-      val line = f"""{"q":"$name","cold_s":$cold%.3f,"warm_s":$warm%.3f,"rows":$rows,"driver_peak_mb":$mb%.0f$spreadJson$stateJson$spillJson}"""
+      val line = f"""{"q":"$name","cold_s":$cold%.3f,"warm_s":$warm%.3f,"rows":$rows,"driver_retained_mb":$mb%.0f$spreadJson$stateJson$spillJson}"""
       println(line)
       line
     }

@@ -124,7 +124,7 @@ class IngestPipelineSpec extends SparkSpec {
 
   test("duplicate tuples without override → GridTraceCountError; with HasDuplicates → trace dim") {
     val path = Files.createTempDirectory("ingest").toString
-    intercept[IngestPipeline.GridTraceCountError] {
+    intercept[graft.operators.GridIndex.GridTraceCountError] {
       IngestPipeline.ingest(spark, grid(dup = true), template, GridOverrides(),
         path, Seq("inline", "crossline"), "amplitude")
     }
@@ -142,7 +142,7 @@ class IngestPipelineSpec extends SparkSpec {
     // diagonal: 12×12 grid holds only 12 traces → sparsity 12 > 10
     val sparse = (1 to 12).map(i => (i, i, i * 1.0)).toDF("inline", "crossline", "amplitude")
     val path = Files.createTempDirectory("ingest").toString
-    intercept[IngestPipeline.GridSparsityError] {
+    intercept[graft.operators.GridIndex.GridSparsityError] {
       IngestPipeline.ingest(spark, sparse, template, GridOverrides(), path,
         Seq("inline"), "amplitude")
     }
@@ -233,6 +233,40 @@ class IngestPipelineSpec extends SparkSpec {
       assert(x == y, s"dim $d differs between driver and distributed paths")
       assert(x == x.sorted && x.nonEmpty)
     }
+  }
+
+  test("a null grid value never enters dims/<d>, whichever side of the gate") {
+    import graft.operators.Selection.{IPoint, ISlice}
+    // ignoreChecks admits the null-inline trace; it has no grid cell
+    val traces = (Seq[(Option[Int], Int)]((None, 1)) ++
+      (for (il <- 1 to 3; xl <- 1 to 2) yield (Some(il), xl)))
+      .map { case (il, xl) => (il, xl, xl * 1.0) }
+      .toDF("inline", "crossline", "amplitude")
+    def ingestTo(tag: String): String = {
+      val p = Files.createTempDirectory(tag).toString
+      IngestPipeline.ingest(spark, traces, template, GridOverrides(), p,
+        Seq("crossline"), "amplitude", ignoreChecks = true)
+      p
+    }
+    val viaDriver = ingestTo("nulldim_a")
+    // gate 1: both dims are over it, so their tables take the distributed
+    // writer and isel the distributed resolver
+    spark.conf.set("graft.dims.driverMaxValues", "1")
+    try {
+      val viaDist = ingestTo("nulldim_b")
+      def table(p: String) = spark.read.parquet(s"$p/dims/inline")
+        .as[Option[Int]].collect().toSeq
+      assert(table(viaDriver) == Seq(Some(1), Some(2), Some(3)))
+      assert(table(viaDist) == table(viaDriver))
+      assert(MdioDataset.open(spark, viaDist).schema.dimensions.head.size == 3)
+      def isel(p: String) = Seq(IPoint(0), IPoint(-1), ISlice(1, 3)).map(i =>
+        MdioDataset.open(spark, p).isel("inline" -> i)
+          .select("inline", "crossline").as[(Int, Int)].collect().toSet)
+      val atGate1 = isel(viaDist)
+      spark.conf.unset("graft.dims.driverMaxValues")
+      assert(isel(viaDriver) == atGate1)
+      assert(atGate1.head == Set((1, 1), (1, 2)))
+    } finally spark.conf.unset("graft.dims.driverMaxValues")
   }
 
   test("missing required header fields are rejected up front") {

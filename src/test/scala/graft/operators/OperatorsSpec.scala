@@ -197,15 +197,8 @@ class GridIndexSpec extends SparkSpec {
       val got = q.where($"il" <= 3).select("il", "il_idx")
         .as[(Int, Long)].collect().toSet
       assert(got == Set((1, 0L), (2, 1L), (3, 2L)))
-      // ... and disabling the pre-check restores the scan-free broadcast plan
-      spark.conf.set("graft.dims.precheck", "false")
-      val lazyQ = GridIndex.withDimIndices(src, Seq("il"))
-      assert(lazyQ.queryExecution.executedPlan.toString.contains("Window"))
-    } finally {
-      spark.conf.unset("graft.dims.precheck")
-      prev.fold(spark.conf.unset("graft.dims.driverMaxValues"))(v =>
-        spark.conf.set("graft.dims.driverMaxValues", v))
-    }
+    } finally prev.fold(spark.conf.unset("graft.dims.driverMaxValues"))(v =>
+      spark.conf.set("graft.dims.driverMaxValues", v))
   }
 
   test("liveTraceCheck detects duplicate dim tuples") {
@@ -215,6 +208,9 @@ class GridIndexSpec extends SparkSpec {
       .collect().head.getAs[Boolean]("all_unique"))
     assert(!GridIndex.liveTraceCheck(dup, Seq("a", "b"))
       .collect().head.getAs[Boolean]("all_unique"))
+    // the QC aggregate's per-dim value sets are pruned from the J2 view
+    assert(!GridIndex.liveTraceCheck(dup, Seq("a", "b"))
+      .queryExecution.optimizedPlan.toString.contains("collect_set"))
   }
 
   test("sparsityQC flags sparse grids at 2x/10x thresholds") {
@@ -431,7 +427,7 @@ class CoordinatesSpec extends SparkSpec {
 
   test("populateCoordinate takes first-by-order value per cell, scalar applied") {
     val df = Seq((1, 10, 500.0), (1, 20, 700.0), (2, 5, 300.0)).toDF("cell", "ord", "c")
-    val got = Coordinates.populateCoordinate(df, Seq("cell"), "c", "ord", scalar = -100)
+    val got = Coordinates.populateCoordinate(df, Seq("cell"), Seq("c"), "ord", scalar = -100)
       .as[(Int, Double)].collect().toSet
     assert(got == Set((1, 5.0), (2, 3.0))) // first by ord, then /100
   }

@@ -57,26 +57,3 @@ final class TestGroupState[S] extends org.apache.spark.sql.streaming.GroupState[
   override def getCurrentWatermarkMs(): Long = 0L
   override def getCurrentProcessingTimeMs(): Long = 0L
 }
-
-class StreamingIngestSpec extends graft.SparkSpec {
-
-  test("foreachBatch ingest appends micro-batches into the clustered store") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("sing").toString
-    val input = MemoryStream[(Int, Int, Double)]
-    val stream = input.toDF().toDF("inline", "crossline", "amplitude")
-    input.addData((1, 1, 1.0), (1, 2, 2.0))
-    val q1 = graft.streaming.StreamingIngest.appendToStore(
-      stream, path, Seq("inline", "crossline"))
-    q1.awaitTermination()
-    input.addData((2, 1, 3.0))
-    val q2 = graft.streaming.StreamingIngest.appendToStore(
-      stream, path, Seq("inline", "crossline"))
-    q2.awaitTermination()
-    val stored = spark.read.parquet(s"$path/data")
-    assert(stored.count() == 3)
-    assert(stored.select("amplitude").as[Double].collect().toSet == Set(1.0, 2.0, 3.0))
-  }
-}

@@ -6,14 +6,20 @@ Exponent: b in t = a * sf^b, fit from the two points —
 b = log(t_hi/t_lo) / log(sf_hi/sf_lo). Linear scaling gives b=1.0; an
 embarrassingly-parallel fixed-overhead query gives b<1; anything much
 above 1 on warm runs is a scale flag. Driver-heap growth factor is
-reported separately: a driver whose heap grows with data size hides a
-collect.
+reported separately: a driver whose retained heap grows with data size
+hides a collect. It reads `driver_retained_mb` (heap in use after a
+post-query GC); records from before that field carry only
+`driver_peak_mb` (summed pool peaks, garbage included) and fall back to it.
 
 Usage: python3 tools/scaling_report.py <lo.json> <hi.json> <ratio>
 """
 import json
 import math
 import sys
+
+
+def driver_mb(q):
+    return q.get("driver_retained_mb", q.get("driver_peak_mb"))
 
 
 def main():
@@ -30,7 +36,7 @@ def main():
             continue
         b_cold = math.log(h["cold_s"] / l["cold_s"]) / math.log(ratio)
         b_warm = math.log(h["warm_s"] / l["warm_s"]) / math.log(ratio)
-        heap = h["driver_peak_mb"] / max(l["driver_peak_mb"], 1)
+        heap = driver_mb(h) / max(driver_mb(l), 1)
         rows.append((name, l, h, b_cold, b_warm, heap))
     print("| query | sf0.1 cold/warm (s) | sf1 cold/warm (s) | exp cold | exp warm | driver-heap × |")
     print("|---|---|---|---|---|---|")
