@@ -437,47 +437,7 @@ object OracleSqlGen {
        |FROM j""".stripMargin
   }
 
-  // ------------------------------------------------------------------ ANN
-
-  private def planeLit(plane: Array[Double]): String =
-    plane.map(s => if (s > 0) "1.0" else "-1.0").mkString("[", ", ", "]::DOUBLE[]")
-
-  /** Left-fold dot of a DOUBLE[] column `v` with a ±1 plane literal. */
-  private def projSql(v: String, plane: Array[Double], dim: Int): String =
-    s"list_reduce(list_transform(range(1, ${dim + 1}), i -> $v[i] * (${planeLit(plane)})[i]), (a, b) -> a + b)"
-
-  /** Hyperplane bucket of table `t` (mirrors CrossHashExprs.planeSig). */
-  def planeSigSql(v: String, t: Int, bits: Int, tables: Int, dim: Int): String = {
-    val planes = CrossHash.planeSigns(tables, bits, dim)(t)
-    (0 until bits).map { p =>
-      s"CASE WHEN ${projSql(v, planes(p), dim)} > 0 THEN ${1L << p}::BIGINT ELSE 0::BIGINT END"
-    }.mkString("(", " + ", ")")
-  }
-
-  /** CTE block computing (vec_id, v, tbl, bucket) for all LSH tables; the
-    * caller prefixes table names with `p` to avoid collisions. */
-  private def lshCtes(p: String, bits: Int, tables: Int, dim: Int,
-                      nQueries: Int, k: Int): String = {
-    val sigSelects = (0 until tables).map { t =>
-      s"SELECT vec_id, v, $t AS tbl, ${planeSigSql("v", t, bits, tables, dim)} AS bucket FROM e"
-    }.mkString("\n  UNION ALL ")
-    s"""${p}sigs AS (
-       |  $sigSelects),
-       |${p}q AS (SELECT tbl, bucket, vec_id AS query_id FROM ${p}sigs WHERE vec_id < $nQueries),
-       |${p}cand AS (SELECT DISTINCT s.vec_id AS neighbor_id, q.query_id
-       |  FROM ${p}sigs s JOIN ${p}q q
-       |    ON s.tbl = q.tbl AND s.bucket = q.bucket AND s.vec_id != q.query_id),
-       |${p}rer AS (SELECT c.query_id, c.neighbor_id,
-       |    list_cosine_similarity(qe.v, ne.v) AS sim
-       |  FROM ${p}cand c
-       |  JOIN e qe ON qe.vec_id = c.query_id
-       |  JOIN e ne ON ne.vec_id = c.neighbor_id),
-       |${p}top AS (SELECT query_id, neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM ${p}rer QUALIFY rank <= $k)""".stripMargin
-  }
-
-  private val eCte = "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
+  // ------------------------------------------------- Z-order keys and BM25
 
   /** The bit-interleaved Z-order key, unrolled exactly like
     * [[graft.operators.AccessPatterns.zorderKey]]: bit i of dim j at key
@@ -490,147 +450,6 @@ object OracleSqlGen {
       (c, j) <- cols.zipWithIndex
     } yield s"(((CAST($c AS BIGINT) >> $i) & 1) << ${i * cols.size + j})")
       .mkString(" | ")
-
-  /** Multi-table hyperplane LSH top-k (mirrors Similarity.lshTopK). */
-  def annLshSql(bits: Int, tables: Int, dim: Int, nQueries: Int, k: Int): String =
-    s"""WITH $eCte,
-       |${lshCtes("l_", bits, tables, dim, nQueries, k)}
-       |SELECT query_id, neighbor_id, rank FROM l_top""".stripMargin
-
-  /** Squared-L2 between two DOUBLE[] expressions, UNROLLED per dimension:
-    * `(a[1]-b[1])² + … + (a[dim]-b[dim])²`. Left-associative SQL `+`
-    * folds in exactly the order `list_reduce`'s (x, y) -> x + y did, so
-    * the doubles are bit-identical — but the unrolled form skips the
-    * per-pair list materialization DuckDB's lambda pipeline allocates,
-    * measured 5.6× faster on the |corpus| × nCells assignment (the term
-    * that, with the old row_number window, exhausted temp disk at sf10).
-    */
-  private def d2Sql(a: String, b: String, dim: Int): String =
-    (1 to dim).map(i => s"($a[$i] - $b[$i]) * ($a[$i] - $b[$i])")
-      .mkString(" + ")
-
-  /** Corpus-derived seed CTEs (mirrors Ivf.derivedNCells + Ivf.seedTable):
-    * nCells = max(minCells, ceil(N / targetCellSize)); seeds = the nCells
-    * ids with smallest md5-60("seed:" || id), cell-numbered in (hash, id)
-    * order. */
-  private def seedCtes(p: String, targetCellSize: Int = 64,
-                       minCells: Int = 16,
-                       fixedNCells: Option[Int] = None): String =
-    s"""${p}nc AS (${fixedNCells match {
-         case Some(n) => s"SELECT CAST($n AS BIGINT) AS n"
-         case None => s"""SELECT greatest($minCells,
-       |    CAST(ceil(count(*) / $targetCellSize.0) AS BIGINT)) AS n FROM e"""
-       }}),
-       |${p}seeds AS (SELECT seed_id, CAST(rn - 1 AS BIGINT) AS cell FROM (
-       |    SELECT vec_id AS seed_id,
-       |      row_number() OVER (ORDER BY ${h60("'seed:' || vec_id")}, vec_id) AS rn
-       |    FROM e)
-       |  WHERE rn <= (SELECT n FROM ${p}nc)),
-       |${p}cent AS (SELECT cell, e.v AS c
-       |  FROM ${p}seeds JOIN e ON e.vec_id = ${p}seeds.seed_id)""".stripMargin
-
-  /** Assignment + probe CTEs of the seeded-medoid IVF (the cell-pruning
-    * half, shared by the exact-rerank search and the IVF+PQ composition).
-    *
-    * Assignment is a `min(struct(d2, cell))` AGGREGATE (ties → lowest
-    * cell, the same struct-min the engine's two-level path folds), not a
-    * row_number window: the window form sorts the full |corpus| × nCells
-    * cross product (625 M rows at sf10 — it exhausted the box's temp disk
-    * at ~100 GB in the r17 sf10 spot), while the streaming hash aggregate
-    * holds one best-so-far struct per corpus row. The probe CTE keeps the
-    * window — its input is nQueries × nCells, parameter-sized. */
-  private def ivfCoreCtes(p: String, nProbe: Int, dim: Int, nQueries: Int,
-                          fixedNCells: Option[Int] = None): String =
-    s"""${seedCtes(p, fixedNCells = fixedNCells)},
-       |${p}asg AS (SELECT vec_id, b.c AS cell FROM (
-       |    SELECT e.vec_id,
-       |      min({'d': ${d2Sql("e.v", "cent.c", dim)}, 'c': cent.cell}) AS b
-       |    FROM e, ${p}cent cent GROUP BY e.vec_id)),
-       |${p}probes AS (SELECT query_id, cell FROM (
-       |    SELECT q.vec_id AS query_id, cent.cell,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${d2Sql("q.v", "cent.c", dim)}, cent.cell) AS rn
-       |    FROM e q, ${p}cent cent WHERE q.vec_id < $nQueries) WHERE rn <= $nProbe)""".stripMargin
-
-  /** CTE block for the seeded-medoid IVF search (mirrors Ivf.ivfTopK). */
-  private def ivfCtes(p: String, nProbe: Int, dim: Int,
-                      nQueries: Int, k: Int,
-                      fixedNCells: Option[Int] = None,
-                      neFilter: Option[String] = None): String = {
-    // filtered search: the metadata predicate (over alias `nm` on the raw
-    // embeddings table) restricts the corpus arm only — post-probe filter,
-    // exactly where Ivf.ivfTopKFromIndex applies its corpusFilter
-    val fJoin = neFilter.fold("")(_ =>
-      "\n  JOIN embeddings nm ON nm.vec_id = ne.vec_id")
-    val fCond = neFilter.fold("")(f => s" AND ($f)")
-    s"""${ivfCoreCtes(p, nProbe, dim, nQueries, fixedNCells)},
-       |${p}rer AS (SELECT pr.query_id, ne.vec_id AS neighbor_id,
-       |    list_cosine_similarity(qe.v, ne.v) AS sim
-       |  FROM ${p}probes pr
-       |  JOIN ${p}asg a ON a.cell = pr.cell
-       |  JOIN e ne ON ne.vec_id = a.vec_id$fJoin
-       |  JOIN e qe ON qe.vec_id = pr.query_id
-       |  WHERE ne.vec_id != pr.query_id$fCond),
-       |${p}top AS (SELECT query_id, neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM ${p}rer QUALIFY rank <= $k)""".stripMargin
-  }
-
-  /** Seeded-medoid IVF top-k (mirrors Ivf.ivfTopK defaults). `fixedNCells`
-    * pins the quantizer size (the two-level-gate variant q_ann_ivf_2l runs
-    * an explicit nCells above a lowered kernel gate with exhaustive coarse
-    * probes, which makes the two-level engine paths EQUAL this flat-argmin
-    * SQL — the assignment and probe joins get their own oracle row). */
-  def annIvfSql(nProbe: Int, dim: Int, nQueries: Int, k: Int,
-                fixedNCells: Option[Int] = None): String =
-    s"""WITH $eCte,
-       |${ivfCtes("i_", nProbe, dim, nQueries, k, fixedNCells)}
-       |SELECT query_id, neighbor_id, rank FROM i_top""".stripMargin
-
-  /** FILTERED IVF top-k (mirrors Ivf.ivfTopKFromIndex with corpusFilter):
-    * same probes, same ranking, the corpus arm restricted by a metadata
-    * predicate over alias `nm` on the raw embeddings table.
-    */
-  def annIvfFilteredSql(nProbe: Int, dim: Int, nQueries: Int, k: Int,
-                        neFilter: String): String =
-    s"""WITH $eCte,
-       |${ivfCtes("i_", nProbe, dim, nQueries, k, neFilter = Some(neFilter))}
-       |SELECT query_id, neighbor_id, rank FROM i_top""".stripMargin
-
-  /** CTE block for deterministic seeded product quantization (mirrors
-    * Pq.codebooks + Pq.encode): sub-centroid c of codebook j is the j-th
-    * dim-slice of the c-th PQ seed (bottom-ksub by md5-60("pq:" || id),
-    * (hash, id) order); code j of a vector is the argmin sub-distance with
-    * ties to the lowest code. Slice distances fold left-to-right exactly
-    * like [[graft.functions.PqEncodeExpr]]'s loop.
-    */
-  private def pqCtes(m: Int, ksub: Int, dim: Int): String = {
-    val dsub = dim / m
-    // unrolled like d2Sql (same left-assoc fold order, no per-pair list
-    // materialization); `j` is the codebook COLUMN, so each term indexes
-    // the j-th dim slice
-    def d2s(a: String, b: String) =
-      (1 to dsub).map(i =>
-        s"($a[j * $dsub + $i] - $b[j * $dsub + $i]) * " +
-          s"($a[j * $dsub + $i] - $b[j * $dsub + $i])")
-        .mkString(" + ")
-    s"""pq_seeds AS (SELECT seed_id, CAST(rn - 1 AS BIGINT) AS c FROM (
-       |    SELECT vec_id AS seed_id,
-       |      row_number() OVER (ORDER BY ${h60("'pq:' || vec_id")}, vec_id) AS rn
-       |    FROM e)
-       |  WHERE rn <= $ksub),
-       |pq_cb AS (SELECT c, e.v FROM pq_seeds JOIN e ON e.vec_id = pq_seeds.seed_id),
-       |pq_js AS (SELECT unnest(range(0, $m)) AS j),
-       |pq_sub AS (SELECT e.vec_id, pq_js.j, pq_cb.c,
-       |    ${d2s("e.v", "pq_cb.v")} AS d2
-       |  FROM e, pq_js, pq_cb),
-       |pq_best AS (SELECT vec_id, j, b.c AS c FROM (
-       |    SELECT vec_id, j, min({'d': d2, 'c': c}) AS b
-       |    FROM pq_sub GROUP BY vec_id, j)),
-       |pq_lutd2 AS (SELECT q.vec_id AS query_id, pq_js.j, pq_cb.c,
-       |    ${d2s("q.v", "pq_cb.v")} AS d2
-       |  FROM e q, pq_js, pq_cb)""".stripMargin
-  }
 
   /** BM25 top-k (mirrors Retrieval.bm25TopK): rational idf
     * `(N − df + ½)/(df + ½) + 1`, saturation `tf·(k1+1)/(tf + k1·(1−b+
@@ -683,285 +502,6 @@ object OracleSqlGen {
        |      ORDER BY score DESC, doc_id) AS BIGINT) AS rank
        |  FROM sc)
        |WHERE rank <= $k""".stripMargin
-  }
-
-  /** CTE block for SQ8 scalar quantization (mirrors Sq.bounds + Sq.encode):
-    * exact per-dim corpus min/max, then per-dim codes
-    * `clamp(floor((x − lo) / (hi − lo) · 255), 0, 255)` (0 on a constant
-    * dimension) — the same rational arithmetic as
-    * [[graft.functions.SqEncodeExpr]], so codes match bit-for-bit.
-    */
-  private def sqCtes(dim: Int): String =
-    s"""sq_x AS (SELECT vec_id, pos, v[pos] AS x FROM (
-       |    SELECT vec_id, unnest(range(1, ${dim + 1})) AS pos, v FROM e)),
-       |sq_b AS (SELECT pos, min(x) AS lo, max(x) AS hi FROM sq_x GROUP BY pos),
-       |sq_c AS (SELECT vec_id, pos,
-       |    CASE WHEN hi - lo > 0
-       |      THEN greatest(0, least(255,
-       |        CAST(floor((x - lo) / (hi - lo) * 255) AS BIGINT)))
-       |      ELSE 0 END AS c
-       |  FROM sq_x JOIN sq_b USING (pos))""".stripMargin
-
-  /** SQ code table (mirrors q_sq_codes = Sq.encode over corpus bounds),
-    * exploded to scalar (vec_id, j, code) rows — the comparator cannot
-    * canonical-sort array cells. pos is 1-based here, j is 0-based.
-    */
-  def sqCodesSql(dim: Int): String =
-    s"""WITH $eCte,
-       |${sqCtes(dim)}
-       |SELECT vec_id, pos - 1 AS j, c AS code FROM sq_c""".stripMargin
-
-  /** Full SQ ADC ranking (mirrors Sq.adcTopK with nRerank = 0): per
-    * (query, corpus row, dim), the squared gap between the query value and
-    * the decoded code `lo + c/255·(hi−lo)`, summed in dimension order —
-    * the same left fold as [[graft.functions.SqAdcExpr]].
-    */
-  def sqAdcSql(dim: Int, nQueries: Int, k: Int): String =
-    s"""WITH $eCte,
-       |${sqCtes(dim)},
-       |sq_q AS (SELECT vec_id AS query_id, pos, x AS qx FROM sq_x
-       |  WHERE vec_id < $nQueries),
-       |sq_g AS (SELECT q.query_id, c.vec_id, c.pos,
-       |    q.qx - (b.lo + c.c / 255.0 * (b.hi - b.lo)) AS d
-       |  FROM sq_c c
-       |  JOIN sq_b b USING (pos)
-       |  JOIN sq_q q USING (pos)
-       |  WHERE c.vec_id != q.query_id),
-       |sq_dist AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d * d ORDER BY pos), (x, y) -> x + y) AS dist
-       |  FROM sq_g GROUP BY 1, 2)
-       |SELECT query_id, vec_id AS neighbor_id, rank FROM (
-       |  SELECT query_id, vec_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY dist, vec_id) AS BIGINT) AS rank
-       |  FROM sq_dist)
-       |WHERE rank <= $k""".stripMargin
-
-  /** PQ code table (mirrors q_pq_codes = Pq.encode over seeded codebooks),
-    * exploded to scalar (vec_id, j, code) rows — same comparator-shape rule
-    * as [[sqCodesSql]].
-    */
-  def pqCodesSql(m: Int, ksub: Int, dim: Int): String =
-    s"""WITH $eCte,
-       |${pqCtes(m, ksub, dim)}
-       |SELECT vec_id, j, c AS code FROM pq_best""".stripMargin
-
-  /** Full ADC ranking (mirrors Pq.adcTopK with nRerank = 0): per corpus row,
-    * the m per-subspace LUT entries at its codes sum in subspace order —
-    * `list(d2 ORDER BY j)` + an ordered fold, matching
-    * [[graft.functions.PqAdcExpr]] bit-for-bit.
-    */
-  def pqAdcSql(m: Int, ksub: Int, dim: Int, nQueries: Int, k: Int): String =
-    s"""WITH $eCte,
-       |${pqCtes(m, ksub, dim)},
-       |pq_terms AS (SELECT l.query_id, b.vec_id, l.j, l.d2
-       |  FROM pq_best b
-       |  JOIN pq_lutd2 l ON l.j = b.j AND l.c = b.c
-       |  WHERE l.query_id < $nQueries AND b.vec_id != l.query_id),
-       |pq_adc AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d2 ORDER BY j), (x, y) -> x + y) AS dist
-       |  FROM pq_terms GROUP BY 1, 2)
-       |SELECT query_id, vec_id AS neighbor_id, rank FROM (
-       |  SELECT query_id, vec_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY dist, vec_id) AS BIGINT) AS rank
-       |  FROM pq_adc)
-       |WHERE rank <= $k""".stripMargin
-
-  /** IVF + PQ composed search (mirrors Pq.ivfPqTopKFromIndexes with
-    * nRerank = 0): IVF probes prune to the probed cells' candidates, ADC
-    * ranks only those — the candidate set is i_probes ⋈ i_asg and the
-    * per-candidate distance is the same subspace-ordered LUT fold as
-    * [[pqAdcSql]], so the probed ranking replays bit-for-bit.
-    */
-  def ivfPqAdcSql(nProbe: Int, m: Int, ksub: Int, dim: Int,
-                  nQueries: Int, k: Int): String =
-    s"""WITH $eCte,
-       |${ivfCoreCtes("i_", nProbe, dim, nQueries)},
-       |${pqCtes(m, ksub, dim)},
-       |cand AS (SELECT pr.query_id, a.vec_id
-       |  FROM i_probes pr JOIN i_asg a ON a.cell = pr.cell
-       |  WHERE a.vec_id != pr.query_id),
-       |pq_terms AS (SELECT c.query_id, c.vec_id, l.j, l.d2
-       |  FROM cand c
-       |  JOIN pq_best b ON b.vec_id = c.vec_id
-       |  JOIN pq_lutd2 l ON l.query_id = c.query_id AND l.j = b.j AND l.c = b.c),
-       |pq_adc AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d2 ORDER BY j), (x, y) -> x + y) AS dist
-       |  FROM pq_terms GROUP BY 1, 2)
-       |SELECT query_id, vec_id AS neighbor_id, rank FROM (
-       |  SELECT query_id, vec_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY dist, vec_id) AS BIGINT) AS rank
-       |  FROM pq_adc)
-       |WHERE rank <= $k""".stripMargin
-
-  /** IVFADC + exact re-rank (mirrors Pq.ivfPqTopKFromIndexes with
-    * nRerank > 0): the probed ADC ranking supplies max(k, nRerank)
-    * candidates per query, which an exact cosine pass re-orders — the
-    * standard production two-stage ANN (compressed scan wide, exact scan
-    * narrow). Ties break (sim DESC, id) like every exact arm.
-    */
-  def ivfPqRerankSql(nProbe: Int, m: Int, ksub: Int, dim: Int,
-                     nQueries: Int, k: Int, nRerank: Int): String =
-    s"""WITH $eCte,
-       |${ivfCoreCtes("i_", nProbe, dim, nQueries)},
-       |${pqCtes(m, ksub, dim)},
-       |cand AS (SELECT pr.query_id, a.vec_id
-       |  FROM i_probes pr JOIN i_asg a ON a.cell = pr.cell
-       |  WHERE a.vec_id != pr.query_id),
-       |pq_terms AS (SELECT c.query_id, c.vec_id, l.j, l.d2
-       |  FROM cand c
-       |  JOIN pq_best b ON b.vec_id = c.vec_id
-       |  JOIN pq_lutd2 l ON l.query_id = c.query_id AND l.j = b.j AND l.c = b.c),
-       |pq_adc AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d2 ORDER BY j), (x, y) -> x + y) AS dist
-       |  FROM pq_terms GROUP BY 1, 2),
-       |adc_top AS (SELECT query_id, vec_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY dist, vec_id) AS BIGINT) AS arank
-       |  FROM pq_adc QUALIFY arank <= ${math.max(k, nRerank)}),
-       |rr AS (SELECT t.query_id, t.vec_id,
-       |    list_cosine_similarity(q.v, c.v) AS sim
-       |  FROM adc_top t
-       |  JOIN e q ON q.vec_id = t.query_id
-       |  JOIN e c ON c.vec_id = t.vec_id)
-       |SELECT query_id, vec_id AS neighbor_id, rank FROM (
-       |  SELECT query_id, vec_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim DESC, vec_id) AS BIGINT) AS rank
-       |  FROM rr)
-       |WHERE rank <= $k""".stripMargin
-
-  /** Residual IVFADC (mirrors Pq.buildResidualIndex +
-    * ivfPqResidualTopKFromIndexes): PQ trained on and encoding
-    * `x − centroid(cell(x))` (exact double subtraction — medoid centroids
-    * are corpus vectors), seeds salted 'pqr:', and one LUT per
-    * (query, probed cell) over the query's residual against that cell.
-    */
-  def ivfPqResidualSql(nProbe: Int, m: Int, ksub: Int, dim: Int,
-                       nQueries: Int, k: Int): String = {
-    val dsub = dim / m
-    // unrolled like d2Sql (same left-assoc fold order, no per-pair list
-    // materialization); `j` is the codebook COLUMN, so each term indexes
-    // the j-th dim slice
-    def d2s(a: String, b: String) =
-      (1 to dsub).map(i =>
-        s"($a[j * $dsub + $i] - $b[j * $dsub + $i]) * " +
-          s"($a[j * $dsub + $i] - $b[j * $dsub + $i])")
-        .mkString(" + ")
-    s"""WITH $eCte,
-       |${ivfCoreCtes("i_", nProbe, dim, nQueries)},
-       |er AS (SELECT a.vec_id, a.cell,
-       |    list_transform(range(1, ${dim + 1}), i -> e.v[i] - ct.c[i]) AS v
-       |  FROM i_asg a JOIN e ON e.vec_id = a.vec_id
-       |  JOIN i_cent ct ON ct.cell = a.cell),
-       |pqr_seeds AS (SELECT seed_id, CAST(rn - 1 AS BIGINT) AS c FROM (
-       |    SELECT vec_id AS seed_id,
-       |      row_number() OVER (ORDER BY ${h60("'pqr:' || vec_id")}, vec_id) AS rn
-       |    FROM e)
-       |  WHERE rn <= $ksub),
-       |pqr_cb AS (SELECT pqr_seeds.c, er.v FROM pqr_seeds
-       |  JOIN er ON er.vec_id = pqr_seeds.seed_id),
-       |pqr_js AS (SELECT unnest(range(0, $m)) AS j),
-       |pqr_sub AS (SELECT er.vec_id, pqr_js.j, pqr_cb.c,
-       |    ${d2s("er.v", "pqr_cb.v")} AS d2
-       |  FROM er, pqr_js, pqr_cb),
-       |pqr_best AS (SELECT vec_id, j, b.c AS c FROM (
-       |    SELECT vec_id, j, min({'d': d2, 'c': c}) AS b
-       |    FROM pqr_sub GROUP BY vec_id, j)),
-       |qr AS (SELECT pr.query_id, pr.cell,
-       |    list_transform(range(1, ${dim + 1}), i -> q.v[i] - ct.c[i]) AS v
-       |  FROM i_probes pr JOIN e q ON q.vec_id = pr.query_id
-       |  JOIN i_cent ct ON ct.cell = pr.cell),
-       |pqr_lut AS (SELECT qr.query_id, qr.cell, pqr_js.j, pqr_cb.c,
-       |    ${d2s("qr.v", "pqr_cb.v")} AS d2
-       |  FROM qr, pqr_js, pqr_cb),
-       |cand AS (SELECT pr.query_id, a.vec_id, a.cell
-       |  FROM i_probes pr JOIN i_asg a ON a.cell = pr.cell
-       |  WHERE a.vec_id != pr.query_id),
-       |terms AS (SELECT cd.query_id, cd.vec_id, l.j, l.d2
-       |  FROM cand cd
-       |  JOIN pqr_best b ON b.vec_id = cd.vec_id
-       |  JOIN pqr_lut l ON l.query_id = cd.query_id AND l.cell = cd.cell
-       |    AND l.j = b.j AND l.c = b.c),
-       |adc AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d2 ORDER BY j), (x, y) -> x + y) AS dist
-       |  FROM terms GROUP BY 1, 2)
-       |SELECT query_id, vec_id AS neighbor_id, rank FROM (
-       |  SELECT query_id, vec_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY dist, vec_id) AS BIGINT) AS rank
-       |  FROM adc)
-       |WHERE rank <= $k""".stripMargin
-  }
-
-  /** Exact brute-force top-k CTE (mirrors Similarity.bruteForceTopK). */
-  private def exactCte(p: String, nQueries: Int, k: Int): String =
-    s"""${p}s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    list_cosine_similarity(q.v, c.v) AS sim
-       |  FROM e q, e c WHERE q.vec_id < $nQueries AND c.vec_id != q.vec_id),
-       |${p}top AS (SELECT query_id, neighbor_id,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM ${p}s QUALIFY rank <= $k)""".stripMargin
-
-  /** Recall of the LSH and IVF paths vs exact top-k (mirrors q_ann_recall). */
-  def annRecallSql(bits: Int, tables: Int, nProbe: Int, dim: Int,
-                   nQueries: Int, k: Int, m: Int, ksub: Int): String = {
-    def top(src: String, name: String): String =
-      s"""$name AS (SELECT query_id, vec_id AS neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY dist, vec_id) AS BIGINT) AS rank
-         |  FROM $src QUALIFY rank <= $k)""".stripMargin
-    def arm(topCte: String, method: String): String =
-      s"""SELECT CAST(count(*) AS DOUBLE) / ${nQueries * k}.0 AS recall, '$method' AS method
-         |  FROM $topCte JOIN x_top USING (query_id, neighbor_id)""".stripMargin
-    s"""WITH $eCte,
-       |${exactCte("x_", nQueries, k)},
-       |${lshCtes("l_", bits, tables, dim, nQueries, k)},
-       |${ivfCtes("i_", nProbe, dim, nQueries, k)},
-       |${pqCtes(m, ksub, dim)},
-       |pq_terms AS (SELECT l.query_id, b.vec_id, l.j, l.d2
-       |  FROM pq_best b
-       |  JOIN pq_lutd2 l ON l.j = b.j AND l.c = b.c
-       |  WHERE l.query_id < $nQueries AND b.vec_id != l.query_id),
-       |pq_adc AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d2 ORDER BY j), (x, y) -> x + y) AS dist
-       |  FROM pq_terms GROUP BY 1, 2),
-       |${top("pq_adc", "pq_top")},
-       |${sqCtes(dim)},
-       |sq_q AS (SELECT vec_id AS query_id, pos, x AS qx FROM sq_x
-       |  WHERE vec_id < $nQueries),
-       |sq_g AS (SELECT q.query_id, c.vec_id, c.pos,
-       |    q.qx - (b.lo + c.c / 255.0 * (b.hi - b.lo)) AS d
-       |  FROM sq_c c JOIN sq_b b USING (pos) JOIN sq_q q USING (pos)
-       |  WHERE c.vec_id != q.query_id),
-       |sq_dist AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d * d ORDER BY pos), (x, y) -> x + y) AS dist
-       |  FROM sq_g GROUP BY 1, 2),
-       |${top("sq_dist", "sq_top")},
-       |ipq_cand AS (SELECT pr.query_id, a.vec_id
-       |  FROM i_probes pr JOIN i_asg a ON a.cell = pr.cell
-       |  WHERE a.vec_id != pr.query_id),
-       |ipq_terms AS (SELECT c.query_id, c.vec_id, l.j, l.d2
-       |  FROM ipq_cand c
-       |  JOIN pq_best b ON b.vec_id = c.vec_id
-       |  JOIN pq_lutd2 l ON l.query_id = c.query_id AND l.j = b.j AND l.c = b.c),
-       |ipq_adc AS (SELECT query_id, vec_id,
-       |    list_reduce(list(d2 ORDER BY j), (x, y) -> x + y) AS dist
-       |  FROM ipq_terms GROUP BY 1, 2),
-       |${top("ipq_adc", "ipq_top")}
-       |SELECT CAST(count(*) AS DOUBLE) / ${nQueries * k}.0 AS recall, 'lsh' AS method
-       |  FROM l_top JOIN x_top USING (query_id, neighbor_id)
-       |UNION ALL
-       |SELECT CAST(count(*) AS DOUBLE) / ${nQueries * k}.0 AS recall, 'ivf' AS method
-       |  FROM i_top JOIN x_top USING (query_id, neighbor_id)
-       |UNION ALL
-       |${arm("pq_top", "pq")}
-       |UNION ALL
-       |${arm("sq_top", "sq")}
-       |UNION ALL
-       |${arm("ipq_top", "ivfpq")}""".stripMargin
   }
 
   /** The FULL iterated BPE trainer loop (mirrors
@@ -1031,25 +571,6 @@ object OracleSqlGen {
        |  FROM (SELECT token, cf,
        |      list_filter(string_split(s, chr(1)), x -> x != '') AS syms
        |    FROM v$nMerges))""".stripMargin
-
-  /** SemDeDup survivors: corpus-derived-medoid cells, within-cell
-    * exact-cosine pairs above the threshold, greedy drop of the higher id
-    * (mirrors Dedup.semanticDedup). */
-  def semanticDedupSql(dim: Int, minCosine: Double): String = {
-    s"""WITH $eCte,
-       |${seedCtes("")},
-       |asg AS (SELECT vec_id, b.c AS cell FROM (
-       |    SELECT e.vec_id,
-       |      min({'d': ${d2Sql("e.v", "cent.c", dim)}, 'c': cent.cell}) AS b
-       |    FROM e, cent GROUP BY e.vec_id)),
-       |dups AS (SELECT DISTINCT b.vec_id AS dup
-       |  FROM e a JOIN asg aa ON aa.vec_id = a.vec_id
-       |  JOIN asg ab ON ab.cell = aa.cell
-       |  JOIN e b ON b.vec_id = ab.vec_id
-       |  WHERE a.vec_id < b.vec_id
-       |    AND list_cosine_similarity(a.v, b.v) >= $minCosine)
-       |SELECT vec_id FROM e WHERE vec_id NOT IN (SELECT dup FROM dups)""".stripMargin
-  }
 
   /** Exploded md5-60-derived stub features (mirrors Multimodal.fakeDecodeFeatures). */
   def multimodalFeaturesSql(dim: Int = 16): String =

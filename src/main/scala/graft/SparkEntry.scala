@@ -54,7 +54,6 @@ object SparkEntry {
     StreamingQueries.all,
     SketchQueries.all,
     LlmCorpusQueries.all,
-    AnnQueries.all,
   ).flatten
 
   private lazy val byName: Map[String, QuerySpec] = QuerySpec.index(all)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Staging-then-swap rewrite of a live parquet table — the shared shape
   * behind every "fold micro-batch accumulation back into the built
   * layout" maintenance pass ([[graft.llm.Retrieval.compactIndex]],
-  * [[graft.llm.Ivf.compactIndex]], [[graft.storage.MdioDataset]]'s
+  * [[graft.llm.DedupIndex.compactIndex]], [[graft.storage.MdioDataset]]'s
   * chunk compaction): a long-appending stream leaves a few small files
   * per batch, and thousands of tiny files erode scan planning (every
   * file opens) and kill row-group skipping (no key locality across
@@ -100,8 +100,8 @@ object Compaction {
       .write.mode("overwrite").parquet(staging.toString)
     // carry hidden metadata children across the swap: Spark data readers
     // ignore _/.-prefixed paths, but a streaming checkpoint may live
-    // INSIDE the table dir (StreamingAnn.appendSignatures' default) and
-    // deleting it would reset the stream's offsets and dedup state.
+    // INSIDE the table dir and deleting it would reset the stream's
+    // offsets and dedup state.
     // _SUCCESS stays behind — the staged write produced its own.
     fs.listStatus(live)
       .filter { st =>

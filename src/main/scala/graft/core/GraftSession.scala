@@ -49,13 +49,14 @@ object GraftSession {
     // alone). The buffers are ~8–24 KB per group, so 4096 in-flight groups
     // is ≤ ~100 MB per task — raise the threshold so the hash path holds
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096",
-    // The 178-query sweep compiles thousands of DISTINCT whole-stage
-    // codegen units; the default 100-entry generated-class cache thrashes,
-    // so late-sweep queries re-Janino-compile every stage on every run —
-    // measured in-sweep q_ann_recall at 14.1 s vs 5.1 s in a fresh JVM
-    // running only that query. 10k entries holds the whole suite
-    // (generated classes are KB-scale; a long-lived production driver
-    // serving many query shapes wants the same).
+    // The query sweep compiles thousands of DISTINCT whole-stage codegen
+    // units; the default 100-entry generated-class cache thrashes, so
+    // late-sweep queries re-Janino-compile every stage on every run —
+    // focused repeats=3 A/B: q_bin_header 4.1→2.5 s, q_store_compact
+    // 3.4→2.9 s, q_segy_fmt28_roundtrip 4.7→4.3 s (OPTIMIZATION_r19.md,
+    // Finding 1). 10k entries holds the whole suite (generated classes
+    // are KB-scale; a long-lived production driver serving many query
+    // shapes wants the same).
     "spark.sql.codegen.cache.maxEntries" -> "10000",
     // allow shuffled-hash join where the per-partition build side fits
     // instead of always sort-merging — A/B over the join-heavy queries

@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * plan ([[graft.llm.TextAnalysis.bpeApplyMerges]]) grows one string-replace
   * node per merge, which is fine for demo tables but makes a 32k-merge plan
   * absurd; this kernel is a single plan node whose size is independent of
-  * the merge count, like [[PqEncodeExpr]] carries its codebooks.
+  * the merge count: the merge table rides the expression as a
+  * driver-held object.
   *
   * Semantics are EXACTLY [[graft.llm.TextAnalysis.trainBpeMerges]]'s fold,
   * applied per merge in rank order: split the token into code points, then

@@ -134,7 +134,7 @@ object CrossHash {
     // fail loudly instead
     require(planes.isEmpty || planes(0).length == v.length,
       s"hyperplane dim ${planes(0).length} != embedding dim ${v.length} — " +
-        "pass the embedding dimension explicitly (lshTopK/lshSignatures dim)")
+        "pass the embedding dimension explicitly (the hyperplane_sigs dim)")
     var sig = 0L
     var p = 0
     while (p < planes.length) {

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Native Catalyst kernels for the dense-vector math in the ANN/dedup
-  * operators (cosine, dot, unit-normalize, IVF cell assignment/probing).
+/** Native Catalyst kernels for the dense-vector math in the similarity
+  * and dedup operators (cosine, dot, unit-normalize, squared L2).
   *
   * The interpreted `zip_with` + `aggregate` folds these replace are the same
   * 20× constant-factor trap the minhash pipeline hit in round 2 — and the
@@ -17,11 +17,6 @@ import org.apache.spark.sql.types._
   * loop once per row inside whole-stage codegen and accumulates in double
   * with the SAME left-to-right association as the `list_reduce` the DuckDB
   * oracle evaluates, so results stay bit-identical.
-  *
-  * The IVF kernels take the centroid matrix as a plain JVM object riding the
-  * expression (`ctx.addReferenceObj`) — centroids are metadata-sized
-  * (nCells × dim doubles) by design, the expression-level analog of a
-  * broadcast join against the centroid table.
   */
 object VecExprs {
 
@@ -31,43 +26,8 @@ object VecExprs {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def unitVec(v: Column): Column =
-    ColumnBridge.column(UnitVecExpr(ColumnBridge.expression(v)))
-
   def l2Sq(a: Column, b: Column): Column =
     ColumnBridge.column(L2SqExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  // The matrix/bounds parameters convert to immutable Seqs at this boundary:
-  // an Array CASE-CLASS FIELD compares by reference identity, which defeats
-  // Catalyst canonicalization/subexpression elimination (the FirFilterExpr
-  // lesson); each kernel converts back to primitive arrays once, lazily.
-  private def wrapRows(m: Array[Array[Double]]): IndexedSeq[IndexedSeq[Double]] =
-    m.iterator.map(r => scala.collection.immutable.ArraySeq.unsafeWrapArray(r): IndexedSeq[Double]).toIndexedSeq
-
-  def ivfCell(v: Column, centroids: Array[Array[Double]]): Column =
-    ColumnBridge.column(IvfCellExpr(ColumnBridge.expression(v), wrapRows(centroids)))
-
-  def ivfProbes(v: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
-    ColumnBridge.column(IvfProbeExpr(ColumnBridge.expression(v), wrapRows(centroids), nProbe))
-
-  def pqEncode(v: Column, books: Array[Array[Array[Double]]]): Column =
-    ColumnBridge.column(PqEncodeExpr(ColumnBridge.expression(v),
-      books.iterator.map(wrapRows).toIndexedSeq))
-
-  def pqAdc(codes: Column, lut: Column, ksub: Int): Column =
-    ColumnBridge.column(PqAdcExpr(ColumnBridge.expression(codes),
-      ColumnBridge.expression(lut), ksub))
-
-  def sqEncode(v: Column, lo: Array[Double], hi: Array[Double]): Column =
-    ColumnBridge.column(SqEncodeExpr(ColumnBridge.expression(v),
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(lo),
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(hi)))
-
-  def sqAdc(codes: Column, qv: Column, lo: Array[Double], hi: Array[Double]): Column =
-    ColumnBridge.column(SqAdcExpr(ColumnBridge.expression(codes),
-      ColumnBridge.expression(qv),
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(lo),
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(hi)))
 
   /** Element accessor that tolerates float or double arrays. */
   private[functions] def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
@@ -205,10 +165,8 @@ final case class UnitVecExpr(child: Expression)
     copy(child = c)
 }
 
-/** Squared L2 distance with left-to-right double accumulation — the SAME
-  * loop as [[IvfCellExpr]]'s per-centroid distance, so the join-based
-  * two-level IVF assignment ([[graft.llm.Ivf]]) is bit-identical to the
-  * driver-matrix kernel path wherever both search the same candidate set.
+/** Squared L2 distance with left-to-right double accumulation, the same
+  * association as the oracle's `list_reduce`.
   */
 final case class L2SqExpr(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
@@ -239,325 +197,5 @@ final case class L2SqExpr(left: Expression, right: Expression)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): L2SqExpr =
-    copy(left = l, right = r)
-}
-
-/** Nearest-centroid assignment: argmin over squared L2 distance, ties to the
-  * lowest cell (the oracle's `row_number() OVER (ORDER BY d2, cell)` = 1).
-  * Distances accumulate left-to-right like the oracle's `list_reduce`.
-  * The centroid matrix rides the expression as a driver-held JVM object —
-  * this path is therefore gated to `nCells <= graft.ivf.kernelMaxCells`
-  * ([[graft.llm.Ivf]]); larger quantizers take the join-based two-level
-  * assignment instead.
-  */
-final case class IvfCellExpr(child: Expression,
-                             centroids: IndexedSeq[IndexedSeq[Double]])
-    extends UnaryExpression with Serializable {
-  require(centroids.nonEmpty, "IVF needs at least one centroid")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ivf_cell"
-
-  @transient private lazy val fin = VecExprs.isFloatArray(child)
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.iterator.map(_.toArray).toArray
-
-  private def dist2(a: ArrayData, c: Array[Double]): Double = {
-    val n = a.numElements()
-    require(n == c.length,
-      s"$prettyName: vector dim $n != centroid dim ${c.length}")
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = VecExprs.elem(a, i, fin) - c(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  def kernel(a: ArrayData): Long = {
-    var best = 0
-    var bestD = dist2(a, cents(0))
-    var c = 1
-    while (c < cents.length) {
-      val d = dist2(a, cents(c))
-      if (d < bestD) { bestD = d; best = c } // strict: ties keep lower cell
-      c += 1
-    }
-    best.toLong
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    kernel(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfcellself", this, classOf[IvfCellExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.kernel($a);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): IvfCellExpr =
-    copy(child = c)
-}
-
-/** The `nProbe` nearest cells ordered by (distance, cell) — the probe list
-  * the IVF search explodes and equi-joins against the cell table.
-  */
-final case class IvfProbeExpr(child: Expression,
-                              centroids: IndexedSeq[IndexedSeq[Double]],
-                              nProbe: Int)
-    extends UnaryExpression with Serializable {
-  require(centroids.nonEmpty && nProbe > 0, "IVF probe needs centroids and nProbe > 0")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ivf_probes"
-
-  @transient private lazy val fin = VecExprs.isFloatArray(child)
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.iterator.map(_.toArray).toArray
-
-  def kernel(a: ArrayData): ArrayData = {
-    val k = math.min(nProbe, cents.length)
-    val heapD = Array.fill(k)(Double.PositiveInfinity)
-    val heapC = new Array[Int](k)
-    var c = 0
-    while (c < cents.length) {
-      val cent = cents(c)
-      val n = a.numElements()
-      require(n == cent.length,
-        s"$prettyName: vector dim $n != centroid dim ${cent.length}")
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = VecExprs.elem(a, i, fin) - cent(i)
-        acc += d * d
-        i += 1
-      }
-      // ascending insertion by (d, cell); cells iterate ascending, so a tie
-      // with the current occupant keeps the earlier (lower) cell
-      if (acc < heapD(k - 1)) {
-        var j = k - 1
-        while (j > 0 && acc < heapD(j - 1)) {
-          heapD(j) = heapD(j - 1); heapC(j) = heapC(j - 1); j -= 1
-        }
-        heapD(j) = acc; heapC(j) = c
-      }
-      c += 1
-    }
-    new GenericArrayData(heapC.map(_.toLong))
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    kernel(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfprobeself", this, classOf[IvfProbeExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.kernel($a);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): IvfProbeExpr =
-    copy(child = c)
-}
-
-/** Product-quantization encode: the m-element code array, code j = argmin
-  * over `books(j)` of squared L2 between the j-th dim-slice of the vector
-  * and the sub-centroid (ties → lowest code, matching [[IvfCellExpr]]).
-  * One pass over the vector per codebook row, no slice allocation; per-slice
-  * distances accumulate left-to-right like the oracle's `list_reduce`.
-  * The codebooks ride the expression as a driver-held object — they are
-  * m × ksub × (dim/m) doubles = dim × ksub, parameter-sized by construction
-  * (NOT corpus-derived), so no size gate is needed.
-  */
-final case class PqEncodeExpr(child: Expression,
-                              books: IndexedSeq[IndexedSeq[IndexedSeq[Double]]])
-    extends UnaryExpression with Serializable {
-  require(books.nonEmpty && books.forall(_.nonEmpty),
-    "PQ encode needs at least one codebook with at least one centroid")
-  private val m = books.length
-  private val dsub = books(0)(0).length
-  require(books.forall(_.forall(_.length == dsub)),
-    "PQ codebooks must share one sub-dimension")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-
-  @transient private lazy val fin = VecExprs.isFloatArray(child)
-  @transient private lazy val bks: Array[Array[Array[Double]]] =
-    books.iterator.map(_.iterator.map(_.toArray).toArray).toArray
-
-  def kernel(a: ArrayData): ArrayData = {
-    require(a.numElements() == m * dsub,
-      s"$prettyName: vector dim ${a.numElements()} != m*dsub = ${m * dsub}")
-    val out = new Array[Long](m)
-    var j = 0
-    while (j < m) {
-      val cb = bks(j)
-      val base = j * dsub
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < cb.length) {
-        val cent = cb(c)
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val d = VecExprs.elem(a, base + i, fin) - cent(i)
-          acc += d * d
-          i += 1
-        }
-        if (acc < bestD) { bestD = acc; best = c } // strict: ties keep lower code
-        c += 1
-      }
-      out(j) = best.toLong
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    kernel(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqencself", this, classOf[PqEncodeExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.kernel($a);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): PqEncodeExpr =
-    copy(child = c)
-}
-
-/** Asymmetric-distance computation for PQ search: Σ_j lut[j·ksub + codes[j]]
-  * summed in subspace order (bit-identical to the oracle's ordered
-  * `list_reduce`). `codes` is a corpus row's code array; `lut` is one
-  * query's flattened [m × ksub] table of exact sub-distances — the ADC scan
-  * reads m doubles per corpus row instead of dim floats, which is the whole
-  * point of PQ at 100 TB.
-  */
-final case class PqAdcExpr(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression with Serializable {
-  require(ksub > 0, "PQ ADC needs ksub > 0")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc"
-
-  def kernel(codes: ArrayData, lut: ArrayData): Double = {
-    val m = codes.numElements()
-    require(lut.numElements() == m * ksub,
-      s"$prettyName: lut size ${lut.numElements()} != m*ksub = ${m * ksub}")
-    var acc = 0.0
-    var j = 0
-    while (j < m) {
-      val c = codes.getLong(j).toInt
-      require(c >= 0 && c < ksub, s"$prettyName: code $c out of [0, $ksub)")
-      acc += lut.getDouble(j * ksub + c)
-      j += 1
-    }
-    acc
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqadcself", this, classOf[PqAdcExpr].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.kernel($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcExpr =
-    copy(left = l, right = r)
-}
-
-/** Scalar (SQ8) quantization encode: per dimension i,
-  * `code_i = clamp(floor((x_i − lo_i) / (hi_i − lo_i) · 255), 0, 255)`
-  * (0 when the dimension is constant, `hi_i == lo_i`). `lo`/`hi` are the
-  * corpus per-dim bounds — parameter-sized (2 × dim doubles) and ride the
-  * expression like [[PqEncodeExpr]]'s codebooks, so encode is a narrow
-  * codegen'd map with no join or shuffle. Codes are longs here for oracle
-  * parity (a dedicated layout stores dim BYTES — the 4× cut vs float32
-  * that keeps a 10⁹-vector scan in page cache); the arithmetic is the
-  * plain rational form the DuckDB oracle replays bit-for-bit.
-  */
-final case class SqEncodeExpr(child: Expression, lo: IndexedSeq[Double],
-                              hi: IndexedSeq[Double])
-    extends UnaryExpression with Serializable {
-  require(lo.nonEmpty && lo.length == hi.length,
-    "SQ encode needs matching non-empty per-dim bounds")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sq_encode"
-
-  @transient private lazy val fin = VecExprs.isFloatArray(child)
-  @transient private lazy val loA: Array[Double] = lo.toArray
-  @transient private lazy val hiA: Array[Double] = hi.toArray
-
-  def kernel(a: ArrayData): ArrayData = {
-    val dim = loA.length
-    require(a.numElements() == dim,
-      s"$prettyName: vector dim ${a.numElements()} != bounds dim $dim")
-    val out = new Array[Long](dim)
-    var i = 0
-    while (i < dim) {
-      val span = hiA(i) - loA(i)
-      out(i) = if (span > 0) {
-        val c = math.floor((VecExprs.elem(a, i, fin) - loA(i)) / span * 255.0).toLong
-        math.max(0L, math.min(255L, c))
-      } else 0L
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    kernel(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sqencself", this, classOf[SqEncodeExpr].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.kernel($a);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): SqEncodeExpr =
-    copy(child = c)
-}
-
-/** SQ8 asymmetric distance: `Σ_i (q_i − decode(code_i))²` with
-  * `decode(c) = lo_i + c / 255 · (hi_i − lo_i)`, accumulated in dimension
-  * order — the same left-to-right association as the oracle's ordered
-  * `list_reduce`, so distances hash-match. One fused loop per corpus row
-  * inside codegen; the scan reads dim codes, never the float vector.
-  */
-final case class SqAdcExpr(left: Expression, right: Expression,
-                           lo: IndexedSeq[Double], hi: IndexedSeq[Double])
-    extends BinaryExpression with Serializable {
-  require(lo.nonEmpty && lo.length == hi.length,
-    "SQ ADC needs matching non-empty per-dim bounds")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sq_adc"
-
-  @transient private lazy val fq = VecExprs.isFloatArray(right)
-  @transient private lazy val loA: Array[Double] = lo.toArray
-  @transient private lazy val hiA: Array[Double] = hi.toArray
-
-  def kernel(codes: ArrayData, q: ArrayData): Double = {
-    val dim = loA.length
-    require(codes.numElements() == dim,
-      s"$prettyName: code dim ${codes.numElements()} != bounds dim $dim")
-    require(q.numElements() == dim,
-      s"$prettyName: query dim ${q.numElements()} != bounds dim $dim")
-    var acc = 0.0
-    var i = 0
-    while (i < dim) {
-      val dec = loA(i) + codes.getLong(i).toDouble / 255.0 * (hiA(i) - loA(i))
-      val d = VecExprs.elem(q, i, fq) - dec
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sqadcself", this, classOf[SqAdcExpr].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.kernel($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SqAdcExpr =
     copy(left = l, right = r)
 }

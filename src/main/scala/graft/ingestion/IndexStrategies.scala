@@ -119,14 +119,14 @@ final case class ShotWrappingStrategy(lineField: String, shotField: String = "sh
   val name = "ShotWrapping"
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame = {
     val numGuns =
-      if (df.columns.contains(gunField))
+      if (!alwaysCalculate && df.columns.contains(gunField))
         IngestPipeline.withDesc(df.sparkSession, "strategy detect") {
           Geometry.gunShotCounts(df, lineField, gunField, shotField)
             .groupBy(col(lineField)).agg(count(lit(1)).as("n_guns"))
             .agg(max(col("n_guns"))).first().getLong(0).toInt
         }
       else 1
-    if (alwaysCalculate || numGuns <= 1)
+    if (numGuns <= 1)
       Wrapping.shotIndexDenseRank(df, lineField, shotField)
     else
       Wrapping.shotIndexFloorDiv(df, lineField, shotField, numGuns)

@@ -202,16 +202,20 @@ object IngestPipeline {
     def dimSizes(verticalSize: Option[Long]): Seq[NamedDimension] =
       gridDims.map(d => NamedDimension(d, qc.cardinalities(d))) ++
         verticalSize.map(NamedDimension(resolved.dimensions.last, _))
+    // an array value spans the vertical dim too; a scalar one the grid only
+    val valueDims = if (valueIsArray) resolved.dimensions else gridDims
+    val valueChunks = resolved.dimensions.zip(resolved.chunkShape)
+      .collect { case (d, c) if valueDims.contains(d) => c }
     def schemaWith(statsOpt: Option[SummaryStatistics],
                    verticalSize: Option[Long] = None): MdioSchema = MdioSchema(
       variables = Seq(Variable(
         name = valueCol,
-        dimensions = resolved.dimensions,
+        dimensions = valueDims,
         dataType = Left(ScalarType.Float64),
         compressor = Some(Blosc()),
         coordinates = resolved.coordinates.map(_.name),
         metadata = Some(VariableMetadata(
-          chunkGrid = Some(RegularChunkGrid(resolved.chunkShape)),
+          chunkGrid = Some(RegularChunkGrid(valueChunks)),
           statsV1 = statsOpt)))) ++
         (if (rawHeaderFields.isEmpty) Nil
          else Seq(Variable("raw_headers", resolved.dimensions.dropRight(1),

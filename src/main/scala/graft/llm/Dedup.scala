@@ -347,38 +347,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Embedding-cosine near-dup: pairs whose embeddings exceed a cosine
-    * threshold, blocked by a partition key (cluster label, source, LSH
-    * bucket…) so the pairing is an equi-join — never an all-pairs cross.
-    * The exact-threshold complement to the hash-based modes above: duplicate
-    * *meaning*, not duplicate tokens.
-    */
-  def embeddingNearDups(embeddings: DataFrame,
-                        blockCol: String = "label",
-                        idCol: String = "vec_id", vecCol: String = "embedding",
-                        minCosine: Double = 0.9): DataFrame = {
-    // Normalize each vector ONCE and stage the unit vectors (both join
-    // sides re-read the staged file) so every candidate pair costs a
-    // single dot product instead of dot + two norms — cosine(a,b) ≡ dot(â,b̂)
-    // up to ~1e-15 float reordering, negligible against any sane threshold
-    // margin (callers output the pair SET, not the similarity value).
-    // Zero vectors normalize to zeros (never above any threshold) rather
-    // than tripping the ANSI 0/0 division. Native kernels
-    // ([[graft.functions.VecExprs]]) — no interpreted HOF folds in the
-    // pair join's hot path.
-    val unit = Scratch.stage(
-      Scratch.rebalance(embeddings)
-        .select(col(blockCol).as("blk"), col(idCol).as("id"),
-          graft.functions.VecExprs.unitVec(col(vecCol)).as("u")),
-      "unit_vecs")
-    val dotAB = graft.functions.VecExprs.dot(col("ua"), col("ub"))
-    unit.select(col("blk"), col("id").as("id_a"), col("u").as("ua"))
-      .join(unit.select(col("blk"), col("id").as("id_b"), col("u").as("ub")), Seq("blk"))
-      .where(col("id_a") < col("id_b"))
-      .where(dotAB >= minCosine)
-      .select(col("id_a"), col("id_b"))
-  }
-
   /** Boilerplate report: the `topK` shingles by document frequency — the
     * corpus-level n-gram scan that CALIBRATES [[blockedJaccard]]'s
     * doc-frequency cap (and exposes templated text to strip before
@@ -527,41 +495,6 @@ object Dedup {
       .select(col("id").cast(idType).as("id"),
         col("component").cast(idType).as("component"))
       .withColumn("is_survivor", col("id") === col("component"))
-  }
-
-  /** SemDeDup-style semantic dedup: coarse-quantize the embedding space
-    * (same cells as the IVF index — at scale, read the PERSISTED index
-    * instead of rebuilding), compare only within-cell pairs by exact cosine,
-    * and greedily drop the higher id of every pair above the threshold.
-    * Returns the surviving ids. Cells make the pairing an equi-join — the
-    * all-pairs cross never exists; the greedy (non-transitive) keep rule is
-    * the standard SemDeDup simplification.
-    */
-  def semanticDedup(embeddings: DataFrame, minCosine: Double = 0.9,
-                    nCells: Int = 0,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    indexPath: Option[String] = None): DataFrame = {
-    val path = indexPath.getOrElse(
-      graft.core.TempDirs.scratch("semdedup"))
-    Ivf.buildIndexSeeded(embeddings, path, nCells, idCol, vecCol)
-    val cells = embeddings.sparkSession.read.parquet(s"$path/cells")
-    // normalize once behind a staging barrier: every within-cell pair then
-    // costs ONE dot product instead of dot + two norms (cosine ≡ dot of
-    // unit vectors up to ~1e-15 reordering — irrelevant to the pair SET at
-    // any sane threshold margin; same design as embeddingNearDups). Native
-    // kernels keep the pair join's hot path out of interpreted HOF folds.
-    val unit = Scratch.stage(
-      embeddings.join(cells, idCol)
-        .select(col("cell"), col(idCol).as("id"),
-          graft.functions.VecExprs.unitVec(col(vecCol)).as("u")),
-      "semdedup_unit")
-    val dotAB = graft.functions.VecExprs.dot(col("ua"), col("ub"))
-    val dups = unit.select(col("cell"), col("id").as("id_a"), col("u").as("ua"))
-      .join(unit.select(col("cell"), col("id").as("id_b"), col("u").as("ub")), Seq("cell"))
-      .where(col("id_a") < col("id_b"))
-      .where(dotAB >= minCosine)
-      .select(col("id_b").as(idCol)).distinct()
-    embeddings.select(col(idCol)).join(dups, Seq(idCol), "left_anti")
   }
 
   /** Train/test decontamination: for every evaluation document, the

@@ -7,8 +7,8 @@ import graft.core.{Compaction, Scratch}
 import graft.functions.CrossHashExprs
 
 /** Persisted MinHash-LSH signature index — index maintenance for the
-  * DEDUP tier, symmetric with the BM25 ([[Retrieval]]) and ANN
-  * ([[Ivf]]/[[Pq]]/[[Sq]]) lifecycles: build once, append deltas, compact,
+  * DEDUP tier, symmetric with the BM25 ([[Retrieval]]) lifecycle: build
+  * once, append deltas, compact,
   * query — so a growing corpus never re-shingles old documents to dedup
   * new ones. At 100 TB this is the difference between an O(delta)
   * ingest step and an O(corpus) one.

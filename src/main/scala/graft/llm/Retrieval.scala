@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Scratch
 
 /** Sparse (lexical) retrieval over the corpus — the BM25 companion to the
-  * dense-vector search in [[Similarity]]/[[Ivf]]/[[Pq]]. Training-data
+  * dense-vector search in [[Similarity]]. Training-data
   * pipelines use it for targeted corpus queries (find the docs about X),
   * eval-set mining, and as the lexical arm of hybrid retrieval.
   *
@@ -98,10 +98,9 @@ object Retrieval {
 
   /** Incremental maintenance: tokenize `newDocs` and append their posting
     * and stats rows — document frequencies and avgdl derive at query time
-    * from the accumulated tables, so (unlike the fixed-quantizer ANN
-    * appends) the ranking stays EXACT after any number of appends. Same
-    * id-uniqueness contract as [[Ivf.appendToIndex]]: appending the same
-    * doc twice double-counts it (dedup upstream).
+    * from the accumulated tables, so the ranking stays EXACT after any
+    * number of appends. Appending the same doc twice double-counts it
+    * (dedup upstream).
     */
   def appendToIndex(newDocs: DataFrame, indexPath: String,
                     textCol: String = "text", idCol: String = "doc_id"): Unit =
@@ -375,8 +374,7 @@ object Retrieval {
     * well without any score normalization across arms (BM25 scores and
     * cosine distances are not commensurable; ranks are). `rankings` maps a
     * source tag to that arm's (query_id, idCol, rank) frame — e.g. the
-    * lexical [[bm25TopK]] and the dense [[Similarity.bruteForceTopK]] /
-    * [[Ivf.ivfTopK]].
+    * lexical [[bm25TopK]] and the dense [[Similarity.bruteForceTopK]].
     *
     * Determinism: contributions are exact IEEE divisions folded in
     * (source-tag, rank) order; fused ties break on doc id. Scale shape:

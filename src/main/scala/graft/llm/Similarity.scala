@@ -4,26 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Scratch
-import graft.functions.CrossHashExprs
-
-/** Similarity search over an embedding column (`Array[Float]`).
-  *
-  * Two paths, as a training-data pipeline needs both:
-  *  - `bruteForceTopK`: exact cosine top-k of a *small* query set against the
-  *    corpus — the query side is broadcast, the corpus is scanned once, and
-  *    the per-query top-k is a window over per-query partitions (parallel
-  *    across queries, never a global sort);
-  *  - `lshTopK`: random-hyperplane LSH — corpus and queries hash to signature
-  *    buckets; only same-bucket pairs are compared. The bucket join is the
-  *    scale path: candidate count is corpus/2^bits per table, independent of
-  *    corpus², so a 1000-executor cluster shuffles buckets, not all pairs.
-  *
-  * The hyperplanes are a fixed ±1 sign matrix ([[graft.functions.CrossHash
-  * .planeSigns]]) — deterministic, engine-agnostic (the DuckDB oracle inlines
-  * the same matrix), and computed by a native kernel expression rather than
-  * an interpreted higher-order fold. Dot products for the exact rerank use
-  * `zip_with` + `aggregate` in double precision — codegen'd, no UDFs.
+/** Exact similarity search over an embedding column (`Array[Float]`):
+  * `bruteForceTopK` ranks the corpus against a *small* query set — the
+  * query side is broadcast, the corpus is scanned once, and the per-query
+  * top-k is a window over per-query partitions (parallel across queries,
+  * never a global sort).
   */
 object Similarity {
 
@@ -61,144 +46,5 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
-  }
-
-  /** The multi-table signature table (tbl, bucket, id, vec) — materialize
-    * once per corpus; at ingest this is a stored column per table.
-    *
-    * ONE scan: `hyperplane_sigs` computes every table's bucket in a single
-    * kernel call and `posexplode` emits the (tbl, bucket) rows. The
-    * previous tables-way self-union read the corpus `tables` times per
-    * action — tables× the I/O at 100 TB — and, fed a foreachBatch
-    * micro-batch ([[graft.streaming.StreamingAnn.appendSignatures]]),
-    * planted `tables` copies of the upstream stateful-dedup operator in
-    * one action (concurrent same-version state-store access).
-    */
-  def lshSignatures(embeddings: DataFrame, bits: Int, tables: Int, dim: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    graft.core.Scratch.rebalance(embeddings).select(col(idCol), col(vecCol),
-      posexplode(CrossHashExprs.planeSigs(col(vecCol), tables, bits, dim))
-        .as(Seq("tbl", "bucket")))
-
-  /** Approximate top-k from a MATERIALIZED signature table (see
-    * [[lshSignatures]]): union the candidate sets from the signature
-    * tables, dedup, exact-rerank candidates.
-    *
-    * The query signatures are collected once (parameter-sized:
-    * nQueries × tables rows) and their distinct buckets pushed as
-    * `bucket IN (...)` into the corpus-side scan — on a
-    * [[compactSignatures]]-clustered table the IN filter skips whole row
-    * groups, the same round-14 shape as the IVF/PQ cell pruning. The
-    * broadcast (tbl, bucket) join still does the exact candidate
-    * selection; the IN is a superset prefilter (a bucket value may recur
-    * across tables), so results are identical by construction.
-    */
-  def lshTopKFromSignatures(sigs: DataFrame, queryIds: Seq[Long], k: Int,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    require(queryIds.nonEmpty && queryIds.size <= 65536,
-      s"LSH search broadcasts the query signatures — got ${queryIds.size} queries")
-    val qFrame = sigs.where(col(idCol).isInCollection(queryIds))
-      .select(col("tbl"), col("bucket"), col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val qRows = qFrame.collect()
-    val queries = sigs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qFrame.schema)
-    val probedBuckets = qRows.map(_.getAs[Long]("bucket")).distinct.sorted.toSeq
-    val corpus = Ivf.prunedScan(sigs, "bucket", probedBuckets)
-      .select(col("tbl"), col("bucket"),
-        col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-    val cands = corpus.join(broadcast(queries), Seq("tbl", "bucket"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("qvec"), col("cvec"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cands.withColumn("sim", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
-  }
-
-  /** Vector-FREE signature table (tbl, bucket, id) — the 100-TB layout:
-    * the fat [[lshSignatures]] table carries the embedding on every row,
-    * i.e. `tables`× the corpus's dominant column, purely so the search
-    * can skip a join. At scale that multiplication IS the index cost
-    * (8 tables over a 100 TB embedding corpus = 800 TB of signatures);
-    * the lean table is three narrow longs/ints per row and the search
-    * ([[lshTopKFromLeanSignatures]]) joins vectors back for only the
-    * candidate set. Same hyperplanes, same buckets — the two layouts
-    * select identical candidates by construction (spec + oracle pinned).
-    */
-  def lshSignaturesLean(embeddings: DataFrame, bits: Int, tables: Int, dim: Int,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame =
-    graft.core.Scratch.rebalance(embeddings).select(col(idCol),
-      posexplode(CrossHashExprs.planeSigs(col(vecCol), tables, bits, dim))
-        .as(Seq("tbl", "bucket")))
-
-  /** Approximate top-k from a LEAN signature table: same candidate
-    * selection as [[lshTopKFromSignatures]] (collected query signatures
-    * broadcast onto the bucket-pruned corpus scan), but the exact-rerank
-    * vectors come from ONE id-join against the embeddings table for the
-    * candidate set only — the corpus's dominant column is read once,
-    * never stored `tables`× inside the index. Query vectors ride a
-    * parameter-sized broadcast.
-    */
-  def lshTopKFromLeanSignatures(sigs: DataFrame, embeddings: DataFrame,
-                                queryIds: Seq[Long], k: Int,
-                                idCol: String = "vec_id",
-                                vecCol: String = "embedding"): DataFrame = {
-    require(queryIds.nonEmpty && queryIds.size <= 65536,
-      s"LSH search broadcasts the query signatures — got ${queryIds.size} queries")
-    val qFrame = sigs.where(col(idCol).isInCollection(queryIds))
-      .select(col("tbl"), col("bucket"), col(idCol).as("query_id"))
-    val qRows = qFrame.collect()
-    val qSigs = sigs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qFrame.schema)
-    val probedBuckets = qRows.map(_.getAs[Long]("bucket")).distinct.sorted.toSeq
-    val qVecFrame = embeddings.where(col(idCol).isInCollection(queryIds))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val qVecs = qVecFrame.collect()
-    val queries = sigs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qVecs: _*), qVecFrame.schema)
-    val cands = Ivf.prunedScan(sigs, "bucket", probedBuckets)
-      .join(broadcast(qSigs), Seq("tbl", "bucket"))
-      .where(col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol))
-      .dropDuplicates("query_id", idCol)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col(idCol))
-    cands
-      .join(embeddings.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("sim", cosine(col("qvec"), col(vecCol)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("rank"))
-  }
-
-  /** Fold append accumulation in a persisted signature table
-    * ([[graft.streaming.StreamingAnn.appendSignatures]]) back into a
-    * (tbl, bucket)-clustered layout, so the search-time `bucket IN (...)`
-    * skips whole row groups again and the file count of a
-    * forever-appending stream stays bounded — the signature-table mirror
-    * of [[Ivf.compactIndex]]. Run with writers quiesced. Returns
-    * (parquet files before, after).
-    */
-  def compactSignatures(spark: org.apache.spark.sql.SparkSession,
-                        sigPath: String): (Int, Int) =
-    graft.core.Compaction.recluster(spark, sigPath,
-      Seq("tbl", "bucket"), "graft.ann.sigsPartitionBytes")
-
-  /** Convenience end-to-end: stage the signatures to Parquet once (queries
-    * and corpus both read the staged file; nothing stays cached), then
-    * query them.
-    */
-  def lshTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
-              bits: Int = 8, tables: Int = 4, dim: Int = 64,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sigs = Scratch.stage(
-      lshSignatures(embeddings, bits, tables, dim, idCol, vecCol), "lsh_sig")
-    lshTopKFromSignatures(sigs, queryIds, k, idCol, vecCol)
   }
 }

@@ -482,8 +482,8 @@ object TextAnalysis {
     * don't stack 10³ plan nodes. The driver never holds the vocabulary —
     * only the current top pair.
     *
-    * Not SQL-expressible as one query (iterative) — spec-gated like the
-    * KMeans IVF path. Emits the ordered merge table (merge_rank, lhs, rhs,
+    * Not SQL-expressible as one query (iterative) — spec-gated, not
+    * oracle-gated. Emits the ordered merge table (merge_rank, lhs, rhs,
     * merged, pair_count); a tokenizer applies these ranks at encode time.
     */
   def trainBpeMerges(df: DataFrame, nMerges: Int,
@@ -526,14 +526,30 @@ object TextAnalysis {
       else {
         val (a, b) = (top(0).getAs[String]("lhs"), top(0).getAs[String]("rhs"))
         out += ((rank, a, b, a + b, top(0).getAs[Long]("pair_count")))
-        vocab = vocab
+        val next = vocab
           .select(col("cf"), merged(col("symbols"), a, b).as("symbols"))
           .localCheckpoint(true)
+        releaseCheckpoint(vocab)
+        vocab = next
         rank += 1
       }
     }
+    releaseCheckpoint(vocab)
     out.toSeq.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
   }
+
+  /** Drop the persisted blocks behind a `localCheckpoint`ed frame. An
+    * eager local checkpoint stays persisted until released, so a training
+    * loop that checkpoints every round would otherwise keep every round's
+    * vocabulary cached; the next round is already materialized (eager)
+    * with its lineage cut, so it no longer needs them.
+    */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false): Unit
+      case _ => ()
+    }
 
   /** Per-doc distinctive keywords: top-`k` tokens by tf/df — the rational
     * tf-idf surrogate (monotone in tf and in 1/df). The score is a single

@@ -331,31 +331,5 @@ object StreamingQueries {
       DedupIndex.pairsFromIndex(s, idx)
     },
       OracleSqlGen.nearDupLshSql()),
-    // streaming ANN maintenance under the oracle: plane-LSH hyperplanes
-    // are a pure function of (table, bits, dim), so signatures built on
-    // the even-id half + stream-appended odd half are IDENTICAL to a
-    // batch build over the union — the search equals the q_ann_lsh oracle
-    // with zero recall decay (contrast: fixed-quantizer IVF appends)
-    QuerySpec("q_stream_ann_lsh", (s, d) => {
-      val sigDir = graft.core.TempDirs.scratch("stream_lsh_sig")
-      val ckpt = graft.core.TempDirs.scratch("stream_lsh_ckpt")
-      val srcDir = graft.core.TempDirs.scratch("stream_lsh_src")
-      val e = embeddings(s, d)
-      // signature build and stream-source staging are independent — overlap
-      inParallel(
-        () => Similarity.lshSignatures(e.where(col("vec_id") % 2 === 0),
-          bits = 4, tables = 8, dim = 64).write.parquet(sigDir),
-        () => e.where(col("vec_id") % 2 === 1).write.parquet(srcDir))
-      runStream(s) {
-        graft.streaming.StreamingAnn.appendSignatures(
-          tableStream(s, srcDir), sigDir, bits = 4, tables = 8, dim = 64,
-          checkpoint = Some(ckpt))
-      }
-      Similarity.lshTopKFromSignatures(s.read.parquet(sigDir),
-        (0L until 10L), k = 10)
-    },
-      // identical table after appends ⇒ identical search ⇒ same oracle
-      OracleSqlGen.annLshSql(bits = 4, tables = 8,
-        dim = 64, nQueries = 10, k = 10)),
   )
 }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
   * batch (job died after the parquet append committed but before the
   * checkpoint offset committed → restart re-delivers the same batchId)
   * is SKIPPED instead of re-appended. Without this, a replayed append
-  * double-counts documents/vectors in every accumulated index
-  * ([[StreamingRetrieval]] postings, [[StreamingAnn]] cells/codes/
-  * signatures, [[StreamingCorpus]] dedup signatures) — the upstream
+  * double-counts documents in every accumulated index
+  * ([[StreamingRetrieval]] postings, [[StreamingCorpus]] dedup
+  * signatures) — the upstream
   * `dropDuplicates(dedupKey)` state only dedups rows WITHIN the stream,
   * not a whole replayed micro-batch against its earlier self.
   *
@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   * Spark data reader (hidden-path filter), and
   * [[graft.core.Compaction.rewriteInPlace]] carries `_`-prefixed
   * children across its staged swap, so markers survive compaction even
-  * when they live inside the rewritten table dir (the
-  * [[StreamingAnn.appendSignatures]] layout).
+  * when they live inside the rewritten table dir.
   *
   * The residual window is honest and small: the marker commits in its
   * own filesystem call AFTER the append's job commit, so a crash in the

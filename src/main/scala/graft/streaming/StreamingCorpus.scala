@@ -38,8 +38,8 @@ object StreamingCorpus {
     * in one atomic write; `compactEveryBatches` folds the accumulated
     * append files back into the bucket-clustered layout inside the
     * serialized foreachBatch (writers quiesced by construction) — the
-    * dedup mirror of [[StreamingRetrieval.appendPostings]] and
-    * [[StreamingAnn.appendSignatures]]. The corpus never re-shingles:
+    * dedup mirror of [[StreamingRetrieval.appendPostings]]. The corpus
+    * never re-shingles:
     * a forever-running ingest pays O(batch) per batch, and the index is
     * queryable between batches ([[graft.llm.DedupIndex.pairsFromIndex]] /
     * `queryIndex`).

@@ -9,8 +9,7 @@ import graft.llm.Retrieval
   * posting rows (plus their atomic stats marker) to the persisted inverted
   * index between triggers
   * ([[Retrieval.appendToIndex]]), so lexical searches see new documents
-  * within one trigger interval — and, unlike the fixed-quantizer ANN
-  * appends in [[StreamingAnn]], the BM25 ranking stays EXACT after any
+  * within one trigger interval — and the BM25 ranking stays EXACT after any
   * number of appends (dfs and avgdl derive at query time from the
   * accumulated tables; no out-of-band rebuild is ever needed for
   * correctness).

@@ -20,12 +20,10 @@ import graft.sources.SegyRead
   *     [--header-types int32,int32] [--chunk-size 64,64,64]
   *     [--lossless true] [--compression-tolerance 0.01]
   *     [--grid-overrides AutoChannelWrap=true,...] [--overwrite]
-  * graft.tools.Cli segy export <mdio-file> <segy-path>
-  *     [--access-pattern 012] [--endian big]
+  * graft.tools.Cli segy export <mdio-file> <segy-path> [--endian big]
   * graft.tools.Cli copy <source> <target>
   *     [--with-traces] [--with-headers] [--overwrite]
   * graft.tools.Cli info <mdio-path> [--output-format pretty|json]
-  *     [--access-pattern 012]
   * }}}
   *
   * Documented divergences from the reference flags:
@@ -51,7 +49,7 @@ object Cli {
     "-names" -> "--header-names", "-chunks" -> "--chunk-size",
     "-lossless" -> "--lossless", "-tolerance" -> "--compression-tolerance",
     "-overwrite" -> "--overwrite", "-grid-overrides" -> "--grid-overrides",
-    "-access" -> "--access-pattern", "-endian" -> "--endian",
+    "-endian" -> "--endian",
     "-format" -> "--output-format", "-traces" -> "--with-traces",
     "-headers" -> "--with-headers")
 
@@ -229,9 +227,6 @@ object Cli {
       case s if s.length == 2 => s
       case _ => throw CliError("segy export needs <mdio-file> <segy-path>")
     }
-    val access = opts.getOrElse("--access-pattern", "012")
-    if (!access.forall(_.isDigit))
-      throw CliError(s"--access-pattern must be digits, got '$access'")
     opts.get("--endian").foreach {
       case "big" => ()
       case "little" => throw CliError(
@@ -548,12 +543,11 @@ object Cli {
 
   // ---------------------------------------------------------- index verbs
 
-  /** `index compact <index-path> [--kind bm25|ivf|pq|sq] [--id-col ...]` —
-    * fold append accumulation in a persisted retrieval/ANN index back into
+  /** `index compact <index-path> [--kind bm25|dedup]` —
+    * fold append accumulation in a persisted retrieval/dedup index back into
     * its built layout (run with writers quiesced; the streaming tiers do
     * this automatically via `compactEveryBatches`). Kind auto-detects from
-    * the on-disk layout: postings→bm25, cells→ivf, codes+books→pq,
-    * codes+bounds→sq.
+    * the on-disk layout: postings→bm25, sigs→dedup.
     */
   private def indexCompactVerb(spark: SparkSession, pos: Seq[String],
                                opts: Map[String, String]): Unit = {
@@ -567,25 +561,15 @@ object Cli {
     }
     val kind = opts.get("--kind").getOrElse {
       if (has("postings")) "bm25"
-      else if (has("cells")) "ivf"
-      else if (has("codes") && has("books")) "pq"
-      else if (has("codes") && has("bounds")) "sq"
       else if (has("sigs")) "dedup"
       else throw CliError(
-        s"cannot detect index kind at $path (pass --kind bm25|ivf|pq|sq|dedup)")
+        s"cannot detect index kind at $path (pass --kind bm25|dedup)")
     }
-    val idCol = opts.getOrElse("--id-col", "vec_id")
     val (before, after) = kind match {
       case "bm25"  => graft.llm.Retrieval.compactIndex(spark, path)
-      case "ivf"   => graft.llm.Ivf.compactIndex(spark, path)
-      case "pq"    => graft.llm.Pq.compactIndex(spark, path, idCol)
-      case "sq"    => graft.llm.Sq.compactIndex(spark, path, idCol)
       case "dedup" => graft.llm.DedupIndex.compactIndex(spark, path)
-      // a signature table is a bare parquet dir — no layout marker to
-      // auto-detect, so this kind is explicit-only
-      case "sigs" => graft.llm.Similarity.compactSignatures(spark, path)
       case other  => throw CliError(
-        s"--kind must be bm25|ivf|pq|sq|dedup|sigs, got '$other'")
+        s"--kind must be bm25|dedup, got '$other'")
     }
     println(s"compacted $kind index at $path: $before -> $after files")
   }
@@ -673,14 +657,14 @@ object Cli {
             "--compression-tolerance", "--grid-overrides", "--overwrite"))
           segyImport(spark, pos, opts); 0
         case "segy" :: "export" :: rest =>
-          val (pos, opts) = parse(rest, Set("--access-pattern", "--endian"))
+          val (pos, opts) = parse(rest, Set("--endian"))
           segyExport(spark, pos, opts); 0
         case "copy" :: rest =>
           val (pos, opts) = parse(rest,
             Set("--with-traces", "--with-headers", "--overwrite"))
           copyVerb(spark, pos, opts); 0
         case "info" :: rest =>
-          val (pos, opts) = parse(rest, Set("--output-format", "--access-pattern"))
+          val (pos, opts) = parse(rest, Set("--output-format"))
           infoVerb(spark, pos, opts); 0
         case "validate" :: rest =>
           val (pos, _) = parse(rest, Set.empty)
@@ -690,7 +674,7 @@ object Cli {
             "--mode", "--ngram", "--edits", "--overwrite"))
           prepVerb(spark, verb, pos, opts); 0
         case "index" :: "compact" :: rest =>
-          val (pos, opts) = parse(rest, Set("--kind", "--id-col"))
+          val (pos, opts) = parse(rest, Set("--kind"))
           indexCompactVerb(spark, pos, opts); 0
         case "velocity" :: rest =>
           val (pos, opts) = parse(rest, Set("--keys", "--offset",
@@ -702,12 +686,12 @@ object Cli {
             s"""unknown command: ${other.mkString(" ")}
                |usage:
                |  segy import <segy-path> <mdio-path> --header-locations ... [options]
-               |  segy export <mdio-file> <segy-path> [--access-pattern 012] [--endian big]
+               |  segy export <mdio-file> <segy-path> [--endian big]
                |  copy <source> <target> [--with-traces] [--with-headers] [--overwrite]
                |  info <mdio-path> [--output-format pretty|json]
                |  validate <mdio-path>                 # store fsck: sidecar vs data, exact
                |  prep quality|dedup|pipeline <in.parquet> <out.parquet> [options]
-               |  index compact <index-path> [--kind bm25|ivf|pq|sq|dedup|sigs] [--id-col vec_id]
+               |  index compact <index-path> [--kind bm25|dedup]
                |  velocity <mdio-path> <out.parquet> --keys k1,k2 --offset <col> --candidates c1,c2 [--mode scan|semblance|panel] [--window N]""".stripMargin)
           2
       }

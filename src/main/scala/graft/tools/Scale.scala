@@ -18,7 +18,8 @@ import java.lang.management.ManagementFactory
 object Scale {
   /** The measured set: the most expensive query per family, biased toward
     * anything whose cost could plausibly hide a super-linear term (pair
-    * generation, global sorts, index builds, multi-job ingest chains).
+    * generation, joins under skew, global sorts, index builds, multi-job
+    * ingest chains).
     */
   val DefaultSet: Seq[String] = Seq(
     "q_segy_std_roundtrip", // SEG-Y export+ingest round trip (file I/O)
@@ -33,13 +34,13 @@ object Scale {
     "q_neardup_lsh",        // MinHash+LSH banded pairs
     "q_jaccard_blocked",    // inverted-index Jaccard pairs
     "q_winnow_pairs",       // winnowing partial overlap
-    "q_semantic_dedup",     // IVF-cell blocked SemDeDup
     "q_bm25",               // BM25 scoring (corpus scan + postings)
     "q_gram_lm",            // n-gram LM aggregate
     "q_bpe_train1",         // BPE pair-count round
     "q_vocab",              // vocabulary aggregate
-    "q_ann_ivf",            // IVF ANN (build + probe)
-    "q_ann_recall",         // five-arm recall QC
+    "q_hll_grouped",        // per-group HLL registers (groups x registers)
+    "q_range_join",         // interval join (band predicate)
+    "q_salted_join_skew",   // salted join under a 30% hot key
     "q_sessionize",         // per-user session windows
     "q_events_hourly",      // windowed event aggregate
     "q_quantize",           // quantized fast-copy materialization

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.BoundReference
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Expressions carrying plan-time parameter blobs must compare STRUCTURALLY:
@@ -15,16 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CanonicalizationSpec extends AnyFunSuite {
 
-  private val vecF = BoundReference(0, ArrayType(FloatType), nullable = false)
   private val vecD = BoundReference(0, ArrayType(DoubleType), nullable = false)
-  private val codes = BoundReference(1, ArrayType(LongType), nullable = false)
   private val str = BoundReference(0, StringType, nullable = false)
   private val lng = BoundReference(0, LongType, nullable = false)
-
-  private def mat() = Array(Array(1.0, 2.0), Array(3.0, 4.0))
-  private def books() = Array(Array(Array(1.0), Array(2.0)), Array(Array(3.0), Array(4.0)))
-  private def lo() = Array(0.0, -1.0)
-  private def hi() = Array(1.0, 2.0)
 
   private def assertStructural(a: org.apache.spark.sql.catalyst.expressions.Expression,
                                b: org.apache.spark.sql.catalyst.expressions.Expression): Unit = {
@@ -35,18 +28,6 @@ class CanonicalizationSpec extends AnyFunSuite {
 
   private def expr(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.graft.ColumnBridge.expression(c)
-
-  test("IVF / PQ / SQ kernels with equal matrices are structurally equal") {
-    val colF = org.apache.spark.sql.graft.ColumnBridge.column(vecF)
-    val colC = org.apache.spark.sql.graft.ColumnBridge.column(codes)
-    assertStructural(expr(VecExprs.ivfCell(colF, mat())), expr(VecExprs.ivfCell(colF, mat())))
-    assertStructural(expr(VecExprs.ivfProbes(colF, mat(), 2)), expr(VecExprs.ivfProbes(colF, mat(), 2)))
-    assertStructural(expr(VecExprs.pqEncode(colF, books())), expr(VecExprs.pqEncode(colF, books())))
-    assertStructural(expr(VecExprs.sqEncode(colF, lo(), hi())), expr(VecExprs.sqEncode(colF, lo(), hi())))
-    assertStructural(expr(VecExprs.sqAdc(colC, colF, lo(), hi())), expr(VecExprs.sqAdc(colC, colF, lo(), hi())))
-    assert(expr(VecExprs.ivfCell(colF, mat())) !=
-      expr(VecExprs.ivfCell(colF, Array(Array(1.0, 2.0), Array(3.0, 5.0)))))
-  }
 
   test("BPE encode with equal merge tables is structurally equal") {
     val colS = org.apache.spark.sql.graft.ColumnBridge.column(str)

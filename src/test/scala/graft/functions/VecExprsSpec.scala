@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
 /** The dense-vector kernels: value parity with the column formulas they
@@ -40,14 +39,5 @@ class VecExprsSpec extends SparkSpec {
       assert(msgs(ex).exists(_.contains("dimensions differ")),
         s"expected a dimension error, got $ex")
     }
-  }
-
-  test("ivf kernels reject a vector whose dim differs from the centroids") {
-    val cents = Array(Array(0.0, 0.0, 0.0))
-    val bad = Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val ex = intercept[Exception] {
-      bad.select(VecExprs.ivfCell(col("embedding"), cents)).collect()
-    }
-    assert(ex.isInstanceOf[SparkException] || ex.isInstanceOf[IllegalArgumentException])
   }
 }

@@ -122,6 +122,18 @@ class IngestPipelineSpec extends SparkSpec {
     assert(ds.schema.variables.head.metadata.get.statsV1.get.count == 16)
   }
 
+  test("a scalar-valued ingest passes validate: its variable spans the grid dims only") {
+    val path = Files.createTempDirectory("ingest-scalar").toString
+    IngestPipeline.ingest(spark, grid(dup = false), template,
+      GridOverrides(), path, ordinal = Seq("inline", "crossline"),
+      valueCol = "amplitude")
+    val v = MdioDataset.open(spark, path).schema.variable("amplitude").get
+    assert(v.dimensions == Seq("inline", "crossline"))
+    assert(v.metadata.flatMap(_.chunkGrid).map(_.asInstanceOf[
+      graft.schema.RegularChunkGrid].chunkShape.length).contains(2))
+    assert(graft.tools.Cli.run(Seq("validate", path), spark) == 0)
+  }
+
   test("duplicate tuples without override → GridTraceCountError; with HasDuplicates → trace dim") {
     val path = Files.createTempDirectory("ingest").toString
     intercept[graft.operators.GridIndex.GridTraceCountError] {

@@ -1,7 +1,12 @@
 package graft.ingestion
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -27,6 +32,31 @@ class ShotWrapIngestSpec extends SparkSpec {
     val path = Files.createTempDirectory("shotwrap").toString
     (IngestPipeline.ingest(spark, traces, TemplateRegistry.instance.get(template),
       overrides, path, ordinal = Seq("ord"), valueCol = "amplitude"), path)
+  }
+
+  /** `f`'s result and the description of every job it submitted. */
+  private def withJobs[T](f: => T): (T, Seq[String]) = {
+    val (started, ended) = (new AtomicInteger, new AtomicInteger)
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        started.incrementAndGet()
+        descriptions.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      // listener events arrive asynchronously: wait for every started
+      // job's end, then a short drain
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (ended.get() < started.get() && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      Thread.sleep(300)
+      (r, descriptions.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def dimSizes(path: String): Map[String, Long] =
@@ -81,8 +111,13 @@ class ShotWrapIngestSpec extends SparkSpec {
     }
     val traces = rows.toDF("receiver", "shot_line", "gun", "shot_point", "ord",
       "group_coord_x", "source_coord_x", "amplitude")
-    val (r, path) = ingest(traces, "ObnReceiverGathers3D",
-      GridOverrides(calculateShotIndex = true))
+    val ((r, path), jobs) = withJobs(ingest(traces, "ObnReceiverGathers3D",
+      GridOverrides(calculateShotIndex = true)))
+    // CalculateShotIndex always dense-ranks, so it runs no gun detection:
+    // QC 6, store write 4, dim tables 5, coordinate tables 6
+    assert(!jobs.contains("ingest: strategy detect"), jobs.mkString("\n"))
+    assert(jobs.size <= 21, s"OBN ingest submitted ${jobs.size} jobs (budget 21):\n" +
+      jobs.mkString("\n"))
 
     assert(r.nTraces == 24 && r.nCells == 24 && r.sparsity == 1.0)
     assert(dimSizes(path) == Map("component" -> 1L, "receiver" -> 3L,

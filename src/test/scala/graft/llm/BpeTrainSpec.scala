@@ -24,6 +24,8 @@ class BpeTrainSpec extends SparkSpec {
     assert(merges(1) == (("es", "t", 9L)))
     assert(merges(2) == (("l", "o", 7L)))
     assert(merges(3) == (("lo", "w", 7L)))
+    // every round's local checkpoint is released once training returns
+    assertNoLingeringCache()
   }
 
   test("merging is left-to-right non-overlapping") {

@@ -75,40 +75,4 @@ class IndexLifecycleFuzzSpec extends SparkSpec {
       assert(got == want, s"seed $seed (batches $nBatches) diverged")
     }
   }
-
-  test("ivf: random build/append/compact sequences rank like the one-shot " +
-      "index on 6 seeded corpora") {
-    val dim = 8
-    def vec(seed: Int, i: Int): Seq[Float] =
-      (0 until dim).map(d => (((i * 131 + d * 57 + seed * 17) % 251) / 251.0f))
-    (0 until 6).foreach { seed =>
-      val rnd = new scala.util.Random(1000 + seed)
-      val emb = (0 until 48).map(i => (i.toLong, vec(seed, i)))
-        .toDF("vec_id", "embedding")
-      val nBatches = 2 + rnd.nextInt(4)
-      val batchOf = (0 until 48).map(i => if (i < 24) 0 else rnd.nextInt(nBatches))
-      def shard(b: Int) = {
-        val ids = batchOf.zipWithIndex.collect { case (`b`, i) => i.toLong }
-        emb.where($"vec_id".isInCollection(if (ids.isEmpty) Seq(-1L) else ids))
-      }
-      // the quantizer trains on batch 0 for BOTH arms, so append-vs-batch
-      // differences can only come from the cells-table lifecycle
-      val incPath = graft.core.TempDirs.scratch(s"ivf_lifecycle_inc_$seed")
-      Ivf.buildIndexSeeded(shard(0), incPath, nCells = 8)
-      (1 until nBatches).foreach { b =>
-        Ivf.appendToIndex(shard(b), incPath)
-        if (rnd.nextBoolean()) Ivf.compactIndex(spark, incPath): Unit
-      }
-      val onePath = graft.core.TempDirs.scratch(s"ivf_lifecycle_one_$seed")
-      Ivf.buildIndexSeeded(shard(0), onePath, nCells = 8)
-      Ivf.appendToIndex(emb.where(!$"vec_id".isInCollection(
-        batchOf.zipWithIndex.collect { case (0, i) => i.toLong })), onePath)
-      val q = Seq(0L, 7L, 13L)
-      val got = Ivf.ivfTopKFromIndex(emb, incPath, q, k = 5, nProbe = 2)
-        .collect().map(_.toSeq).toSet
-      val want = Ivf.ivfTopKFromIndex(emb, onePath, q, k = 5, nProbe = 2)
-        .collect().map(_.toSeq).toSet
-      assert(got == want, s"seed $seed (batches $nBatches) diverged")
-    }
-  }
 }

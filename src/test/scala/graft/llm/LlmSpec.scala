@@ -407,74 +407,6 @@ class SimilaritySpec extends SparkSpec {
       .select("neighbor_id", "rank").as[(Long, Long)].collect().toSet
     assert(got == Set((2L, 1L), (3L, 2L)))
   }
-
-  test("lshTopK finds the identical vector (recall on exact match)") {
-    val vecs = (0L until 50L).map { i =>
-      (i, Array.tabulate(16)(d => math.sin(i * 17.0 + d).toFloat))
-    } :+ (99L, Array.tabulate(16)(d => math.sin(0 * 17 + d).toFloat)) // clone of 0
-    val df = vecs.toDF("vec_id", "embedding")
-    val got = Similarity.lshTopK(df, Seq(0L), k = 5, bits = 4, tables = 4, dim = 16)
-      .select("neighbor_id", "rank").as[(Long, Long)].collect().toMap
-    // the identical clone must share every bucket → always a candidate, rank 1
-    assert(got.get(99L).contains(1L))
-  }
-
-  test("lean signature layout: vector-free rows, search identical to the " +
-      "fat path, candidate vectors joined once") {
-    val vecs = (0L until 60L).map { i =>
-      (i, Array.tabulate(16)(d => math.sin(i * 17.0 + d).toFloat))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val lean = Similarity.lshSignaturesLean(df, bits = 4, tables = 4, dim = 16)
-    assert(lean.columns.toSet == Set("vec_id", "tbl", "bucket"),
-      "lean rows must not carry the embedding")
-    val sigDir = graft.core.TempDirs.scratch("lsh_lean_spec")
-    lean.write.parquet(sigDir)
-    val queries = Seq(0L, 13L, 27L)
-    val got = Similarity.lshTopKFromLeanSignatures(
-      spark.read.parquet(sigDir), df, queries, k = 5)
-    val fat = Similarity.lshTopK(df, queries, k = 5,
-      bits = 4, tables = 4, dim = 16)
-    assert(got.collect().map(_.toSeq).toSet ==
-      fat.collect().map(_.toSeq).toSet,
-      "lean and fat layouts must rank identically")
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("In(bucket"),
-      s"lean corpus scan must push bucket IN (...):\n$plan")
-  }
-
-  test("streamed lean signatures with per-batch compaction equal the " +
-      "batch lean build") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val vecs = (0L until 40L).map { i =>
-      (i, (0 until 16).map(d => math.sin(i * 17.0 + d).toFloat))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val sigPath = graft.core.TempDirs.scratch("lsh_lean_stream")
-    Similarity.lshSignaturesLean(df.where($"vec_id" < 20),
-      bits = 4, tables = 4, dim = 16).write.parquet(sigPath)
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingAnn.appendSignatures(
-      input.toDF().toDF("vec_id", "embedding"), sigPath,
-      bits = 4, tables = 4, dim = 16,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
-      compactEveryBatches = Some(2), lean = true)
-    try {
-      vecs.drop(20).foreach { r =>
-        input.addData(r)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val sigs = spark.read.parquet(sigPath)
-    assert(sigs.count() == 160L) // 40 vectors x 4 tables
-    assert(sigs.columns.toSet == Set("vec_id", "tbl", "bucket"))
-    val streamed = Similarity.lshTopKFromLeanSignatures(sigs, df, Seq(0L, 25L), k = 5)
-    val batch = Similarity.lshTopK(df, Seq(0L, 25L), k = 5,
-      bits = 4, tables = 4, dim = 16)
-    assert(streamed.collect().map(_.toSeq).toSet ==
-      batch.collect().map(_.toSeq).toSet)
-  }
 }
 
 class MultimodalSpec extends SparkSpec {

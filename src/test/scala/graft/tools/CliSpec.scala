@@ -299,6 +299,23 @@ class CliSpec extends SparkSpec {
       "--header-names", "inline,crossline"), spark) == 2)
   }
 
+  test("segy export and info refuse --access-pattern and -access as unknown " +
+       "options") {
+    val segy = writeFixture()
+    val dir = Files.createTempDirectory("cliaccess").toString
+    val store = s"$dir/cli.mdio"
+    assert(Cli.run(Seq("segy", "import", segy, store,
+      "--header-locations", "189,193",
+      "--header-names", "inline,crossline"), spark) == 0)
+    val out = s"$dir/out.sgy"
+    assert(Cli.run(Seq("segy", "export", store, out,
+      "--access-pattern", "012"), spark) == 2)
+    assert(Cli.run(Seq("segy", "export", store, out, "-access", "012"), spark) == 2)
+    assert(Cli.run(Seq("info", store, "--access-pattern", "012"), spark) == 2)
+    assert(Cli.run(Seq("info", store, "-access", "012"), spark) == 2)
+    assert(!Files.exists(java.nio.file.Paths.get(out)))
+  }
+
   test("prep verbs drive the corpus pipeline over parquet tables") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cliprep").toString

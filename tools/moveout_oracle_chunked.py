@@ -4,7 +4,7 @@ factors (the r18 sf1 blocker: the replay unnests traces x 16 candidates x
 1000 positions ~ 6e9 rows at sf1, which DuckDB materializes through the
 unnest+groupby pipeline far beyond the box).
 
-Same justification shape as tools/ann_oracle_chunked.py: every CTE after
+Chunking is exact: every CTE after
 `t` keys on `cell` (the group-bys and the final row_number PARTITION BY
 cell), so the replay of a cell subset is independent of every other cell
 and the union over a partition of the 512 cells is bit-identical to the

@@ -4,11 +4,6 @@ compare harness, record one JSONL row per query, resume for free.
 
 Routing (the r18/r19 sweep playbook, see the memory notes in
 bench/correctness_sf*_full_*.json):
-  * i_asg ANN family (q_ann_ivf/_2l/_filtered, q_ann_ivfpq/_rerank/_res,
-    q_ann_recall) -> tools/ann_oracle_chunked.py (DuckDB 1.0 materializes
-    the grouped aggregate's cross-product input regardless of
-    memory_limit; chunking the corpus arm is exact by per-vector
-    independence)
   * q_moveout_*_long -> tools/moveout_oracle_chunked.py (the unnest is
     traces x 16 candidates x 1000 positions; per-cell independence makes
     cell-range chunking exact)
@@ -30,9 +25,6 @@ import subprocess
 import sys
 import time
 
-ANN_CHUNKED = {"q_ann_ivf", "q_ann_ivf_2l", "q_ann_ivf_filtered",
-               "q_ann_ivfpq", "q_ann_ivfpq_rerank", "q_ann_ivfpq_res",
-               "q_ann_recall", "q_semantic_dedup"}
 MOVEOUT_CHUNKED = {"q_moveout_scan_long", "q_moveout_semblance_long",
                    "q_moveout_panel_long"}
 TOOLS = os.path.dirname(os.path.abspath(__file__))
@@ -67,12 +59,7 @@ for name in names:
     if name in done:
         print(f"skip {name} (already ok)", flush=True)
         continue
-    if name in ANN_CHUNKED:
-        cmd = [sys.executable, f"{TOOLS}/ann_oracle_chunked.py",
-               dump_dir, sf_dir, os.environ.get("GRAFT_ANN_CHUNK", "10000"),
-               name]
-        harness = "ann_chunked"
-    elif name in MOVEOUT_CHUNKED:
+    if name in MOVEOUT_CHUNKED:
         cmd = [sys.executable, f"{TOOLS}/moveout_oracle_chunked.py",
                dump_dir, sf_dir, name,
                os.environ.get("GRAFT_MOVEOUT_CELLS", "8")]
