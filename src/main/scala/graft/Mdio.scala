@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.core.JobDesc
 import graft.ingestion.{GridOverrides, IngestPipeline}
 import graft.operators.GridIndex
 import graft.schema.{DatasetTemplate, MdioSchema}
@@ -113,11 +114,19 @@ object Mdio {
   /** E1–E5: masked, globally ordered SEG-Y export of an open store in the
     * standard rev-1 layout — real 240-byte trace headers at spec offsets
     * and a self-describing binary header, so the output opens in any SEG-Y
-    * tool (and in `spark.read.format("segy")`). The writer takes its trace
-    * order from the sort's partitions
-    * ([[graft.export.SegyExport.maskedOrder]]). `samplesCol` must hold
+    * tool (and in `spark.read.format("segy")`). `samplesCol` must hold
     * float samples of fixed length `nSamples`; they encode as format-1
-    * IBM32 through the native kernel.
+    * IBM32 through the native kernel. `columns` are staged on the store's
+    * rows before the mask (row-local expressions, as `withColumn`).
+    *
+    * The trace order comes from one of [[graft.export.SegyExport]]'s two
+    * arms. When `handle` is the scan `openMdio` returned and the store's
+    * part files already hold the masked traces in `orderKeys` order, the
+    * store-order arm writes them as they lie: a key job and the write
+    * ([[graft.export.SegyExport.storeOrdered]]). Otherwise the sort arm
+    * range-sorts them ([[graft.export.SegyExport.maskedOrder]]). Every job
+    * is labelled `export: <arm>`; the arm is returned, "store order" or
+    * "sort: <reason>".
     */
   def mdioToStandardSegy(handle: MdioDatasetHandle, outFile: String,
                          mask: Column,
@@ -125,18 +134,29 @@ object Mdio {
                          fieldCols: Seq[(graft.sources.SegyRead.HeaderField, String)],
                          orderKeys: Seq[String], samplesCol: String,
                          nSamples: Int, sampleInterval: Int,
-                         textHeader: Seq[String]): Unit = {
+                         textHeader: Seq[String],
+                         columns: Seq[(String, Column)] = Nil): String = {
     import org.apache.spark.sql.functions.col
-    val headerCols = fieldCols.map(_._2)
-    val ordered = graft.export.SegyExport.maskedOrder(
-      handle.df, mask, dims, (headerCols :+ samplesCol).distinct, orderKeys)
-    val records = graft.export.SegyExport.serializeStandardTraces(
-      ordered.withColumn("_pay",
-        graft.export.SegyExport.ibmPayload(col(samplesCol), nSamples)),
-      fieldCols, "_pay")
-    graft.export.SegyExport.writeSegy(records, outFile, textHeader,
-      graft.export.SegyExport.standardBinaryHeader(nSamples, sampleInterval,
-        formatCode = 1))
+    import graft.export.SegyExport
+    val spark = handle.df.sparkSession
+    val headerFields = (fieldCols.map(_._2) :+ samplesCol).distinct
+    val binaryHeader = SegyExport.standardBinaryHeader(nSamples, sampleInterval,
+      formatCode = 1)
+    def write(ordered: DataFrame, counts: Option[Seq[Long]]): Unit =
+      SegyExport.writeSegy(
+        SegyExport.serializeStandardTraces(ordered.withColumn("_pay",
+          SegyExport.ibmPayload(col(samplesCol), nSamples)), fieldCols, "_pay"),
+        outFile, textHeader, binaryHeader, knownCounts = counts)
+    SegyExport.storeOrdered(handle, columns, mask, dims, headerFields,
+        orderKeys) match {
+      case Right((frame, counts)) =>
+        JobDesc.withDesc(spark, "export: store order: write")(write(frame, Some(counts)))
+        "store order"
+      case Left(reason) =>
+        JobDesc.withDesc(spark, s"export: sort: $reason")(write(SegyExport.maskedOrder(
+          SegyExport.stage(handle.df, columns), mask, dims, headerFields, orderKeys), None))
+        s"sort: $reason"
+    }
   }
 
   /** O1: materialize `fast_<dim>` clustered (optionally quantized) copies

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * chunk compaction): a long-appending stream leaves a few small files
   * per batch, and thousands of tiny files erode scan planning (every
   * file opens) and kill row-group skipping (no key locality across
-  * files). The rewrite recluster-sorts the table so min/max column
+  * files). The caller's rewrite re-sorts the table so min/max column
   * stats make pushed `key IN (...)` filters skip whole row groups again.
   *
   * NOT concurrent-safe: the staged write fully commits before the
@@ -63,25 +63,6 @@ object Compaction {
       math.max(sessionParts, estParts)
     }
   }
-
-  /** The standard compaction rewrite: recluster the table at `tablePath`
-    * by `keys` (range-partitioned at [[sizedWidth]] width, sorted within
-    * partitions on keys-then-rest for deterministic files), so pushed
-    * `key IN (...)` filters skip whole row groups via parquet min/max
-    * stats. Row-preserving — pure layout.
-    */
-  def recluster(spark: SparkSession, tablePath: String, keys: Seq[String],
-                confKey: String): (Int, Int) =
-    rewriteInPlace(spark, tablePath) { df =>
-      val missing = keys.filterNot(df.columns.contains)
-      require(missing.isEmpty,
-        s"recluster keys ${missing.mkString(", ")} absent from " +
-          s"$tablePath (columns ${df.columns.mkString(", ")})")
-      val sortCols = keys ++ df.columns.filterNot(keys.contains)
-      df.repartitionByRange(sizedWidth(spark, df, confKey),
-          keys.map(df.col): _*)
-        .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-    }
 
   /** Rewrite the live parquet table at `tablePath` through `rewrite`
     * (recluster, sort, fold marker rows — anything row-preserving the

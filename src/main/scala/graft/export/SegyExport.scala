@@ -1,18 +1,39 @@
 package graft.export
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Literal, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.operators.{GlobalOrder, Masking, Projection}
+import graft.storage.MdioDatasetHandle
 
 /** The export driver (E1/E3/E5) — the Spark shape of
   * `converters/mdio.py:32-158`:
-  * open → rechunk (E1) → header-project (P2) → mask (P4/P5) → bbox (P6) →
-  * serialize (E3) → ordered commit (E4).
+  * open → header-project (P2) → mask (P4/P5) → bbox (P6) → serialize (E3)
+  * → ordered write (E4).
   *
-  * E4's hierarchical part-file tree merge collapses into a range-partitioned
-  * global sort + task-ordered committer: Spark's committer renames part
-  * files in task order, so a sorted write IS the ordered concat.
+  * The trace order comes from one of two arms:
+  *  - **store order** ([[storeOrdered]]): the store's part files, scanned
+  *    one by one and unioned in file order, so partition order is file
+  *    order. One key-only job proves the masked keys ascend within and
+  *    across those partitions and returns each partition's row count,
+  *    which are the write's byte offsets. No sort, no shuffle: two jobs.
+  *    This is the reference's shape, which writes trace blocks straight
+  *    from the grid-ordered store (`segy/blocked_io.py:214-303`), and the
+  *    layout `segy import` leaves (disjoint, ordered part files, each
+  *    sorted).
+  *  - **sort** ([[maskedOrder]]): a range-partitioned global sort, whose
+  *    partitions are the order. It runs when the frame is not a plain scan
+  *    of an unpartitioned store, or when the key job finds the part files
+  *    out of order (appends, hand-written files).
+  * Either way [[writeSegy]] writes the partitions in index order.
   */
 object SegyExport {
 
@@ -173,16 +194,24 @@ object SegyExport {
     * (25-26), so an unsupported format code fails here, before any job.
     * `fixedRecordBytes`, when given, must equal that width.
     *
-    * Precondition on local files: nothing between the records' last
-    * shuffle and `records` may add or drop rows (no explode, no filter
-    * after the sort). The byte offsets are taken from the row counts at
-    * that shuffle, so such an operator makes the write fail with
-    * "wrote X, counted Y". [[maskedOrder]], the DSv2 sink and the
-    * queries' exports all end in a sort followed by projections only.
+    * Where the per-partition row counts (the byte offsets on local files)
+    * come from:
+    *  - `knownCounts`, when the caller already has them ([[storeOrdered]]'s
+    *    key job): no counts job runs. There must be one count per
+    *    partition of `records`.
+    *  - otherwise the records' last shuffle, when the lineage has one:
+    *    nothing between that shuffle and `records` may add or drop rows
+    *    (no explode, no filter after the sort). [[maskedOrder]], the DSv2
+    *    sink and the queries' exports all end in a sort followed by
+    *    projections only.
+    *  - otherwise a row-count pass over the records themselves.
+    * A count that does not match the rows a partition writes fails the
+    * write with "wrote X, counted Y", in both arms.
     */
   def writeSegy(records: DataFrame, outFile: String,
                 textHeader: Seq[String], binaryHeader: Array[Byte],
-                fixedRecordBytes: Option[Long] = None): Unit = {
+                fixedRecordBytes: Option[Long] = None,
+                knownCounts: Option[Seq[Long]] = None): Unit = {
     require(binaryHeader.length == 400, "binary header must be 400 bytes")
     val header = java.nio.ByteBuffer.wrap(binaryHeader)
     val nSamples = header.getShort(20) & 0xffff
@@ -192,6 +221,7 @@ object SegyExport {
       s"fixedRecordBytes ${fixedRecordBytes.get} differs from the " +
         s"$recordBytes-byte record the binary header declares")
     SegyHeaders.validateTextHeader(textHeader)
+    val known = knownCounts.map(_.toArray)
     val sess = records.sparkSession
     val conf = new org.apache.hadoop.conf.Configuration(
       sess.sparkContext.hadoopConfiguration)
@@ -201,7 +231,10 @@ object SegyExport {
       try java.nio.charset.Charset.forName("IBM037")     // EBCDIC, like the reference
       catch { case _: Exception => java.nio.charset.StandardCharsets.US_ASCII }
     val head = textHeader.mkString.getBytes(charset) ++ binaryHeader
-    val recordsOnly = records.select("trace_record")
+    val rdd = records.select("trace_record").rdd
+    known.foreach(c => require(c.length == rdd.getNumPartitions,
+      s"knownCounts holds ${c.length} partition counts, the records have " +
+        s"${rdd.getNumPartitions} partitions"))
 
     val isPosix = outPath.getFileSystem(conf)
       .isInstanceOf[org.apache.hadoop.fs.LocalFileSystem]
@@ -214,19 +247,18 @@ object SegyExport {
       // spending 3× the file size in serial driver I/O (~12 s of a 16 s
       // export at 1.5 GB); this shape is bounded by device bandwidth alone.
       //
-      // Offsets are row counts × the record width. The counts come off the
-      // last shuffle when the lineage has one (no sort, no encode): the
-      // sort and encode then run exactly once, in the write job, with
-      // nothing cached, at any size. Without a shuffle, a row-count pass
-      // over the records themselves supplies them.
-      val rdd = recordsOnly.rdd
-      val counts = sess.sparkContext.runJob(
+      // Offsets are row counts × the record width. Without known counts
+      // they come off the last shuffle when the lineage has one (no sort,
+      // no encode): the sort and encode then run exactly once, in the
+      // write job, with nothing cached, at any size. Without a shuffle, a
+      // row-count pass over the records themselves supplies them.
+      val counts = known.getOrElse(sess.sparkContext.runJob(
         lastShuffleReader(rdd).getOrElse(rdd).asInstanceOf[org.apache.spark.rdd.RDD[Any]],
         (it: Iterator[Any]) => {
           var n = 0L
           while (it.hasNext) { it.next(); n += 1 }
           n
-        })
+        }))
       val offsets = counts.scanLeft(head.length.toLong)(_ + _ * recordBytes)
       val localFile = java.nio.file.Paths.get(outPath.toUri.getPath)
       Option(localFile.getParent)
@@ -273,7 +305,8 @@ object SegyExport {
       // `segy/creation.py:236-263`). (A real S3 deployment would swap the
       // concat for a multipart-upload compose of the same parts.) One pass
       // over the records — no offsets, so no counts job; each record is
-      // checked against the declared width instead.
+      // checked against the declared width instead, and each partition's
+      // rows against `knownCounts` when given.
       val partsDir = outFile + ".parts"
       val fs = outPath.getFileSystem(conf)
       val parts = new org.apache.hadoop.fs.Path(partsDir)
@@ -281,17 +314,21 @@ object SegyExport {
       // lost traces, never a part to skip. A failed part job or concat
       // leaves neither parts nor truncated output behind.
       try {
-        val nParts = recordsOnly.rdd.mapPartitionsWithIndex { case (idx, it) =>
+        val nParts = rdd.mapPartitionsWithIndex { case (idx, it) =>
           val fs = new org.apache.hadoop.fs.Path(partsDir)
             .getFileSystem(confSer.value)
           val part = new org.apache.hadoop.fs.Path(f"$partsDir/part-$idx%05d")
           val os = fs.create(part, true)
+          var n = 0L
           try it.foreach { r =>
             val rec = r.getAs[Array[Byte]]("trace_record")
             require(rec.length == recordBytes, s"partition $idx wrote a " +
               s"${rec.length}B record, the binary header declares ${recordBytes}B")
             os.write(rec)
+            n += 1
           } finally os.close()
+          known.foreach(c => require(n == c(idx), s"partition $idx wrote " +
+            s"${n * recordBytes}B, counted ${c(idx) * recordBytes}B"))
           Iterator.single(1)
         }.count().toInt
         try {
@@ -318,19 +355,128 @@ object SegyExport {
     }
   }
 
-  /** E5: the masked-export pipeline — mask, header projection, then a
-    * range-partitioned global sort on `orderKeys`. The sort's partitions
-    * ARE the global order, which is all [[writeSegy]] needs: it takes its
-    * write order and byte offsets from them, so no sequence column is paid
-    * for.
+  /** The export's columns: the order keys, then the other header fields. */
+  private def exportColumns(headerFields: Seq[String], orderKeys: Seq[String]) =
+    (orderKeys ++ headerFields.filterNot(orderKeys.contains)).distinct
+
+  /** E5, sort arm: the masked-export pipeline — mask, header projection,
+    * then a range-partitioned global sort on `orderKeys`. The sort's
+    * partitions ARE the global order, which is all [[writeSegy]] needs: it
+    * takes its write order and byte offsets from them, so no sequence
+    * column is paid for.
     */
   def maskedOrder(df: DataFrame, mask: Column, dims: Seq[String],
                   headerFields: Seq[String], orderKeys: Seq[String]): DataFrame = {
     val selected = Masking.maskedSelect(df, mask, dims,
       (headerFields ++ orderKeys).distinct)
-    Projection.projectToSpec(selected,
-      (orderKeys ++ headerFields.filterNot(orderKeys.contains)).distinct)
+    Projection.projectToSpec(selected, exportColumns(headerFields, orderKeys))
       .orderBy(orderKeys.map(col): _*)
+  }
+
+  /** `df` with `columns` added in order, as chained `withColumn`s. */
+  def stage(df: DataFrame, columns: Seq[(String, Column)]): DataFrame =
+    columns.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+
+  /** What the key job learns of one partition: its row count, its first
+    * and last order key, whether its keys ascend, and each dim's min and
+    * max (Catalyst internal values; null when the partition is empty). */
+  private final case class PartKeys(rows: Long, first: InternalRow,
+                                    last: InternalRow, sorted: Boolean,
+                                    lo: Array[Any], hi: Array[Any])
+
+  /** E4/E5, store-order arm: the frame [[maskedOrder]] would sort, and its
+    * per-partition row counts, when the store's part files already hold it
+    * in `orderKeys` order. Left(the reason to sort) otherwise.
+    *
+    * `handle.df` must be the plain Parquet scan [[graft.Mdio.openMdio]]
+    * returns, of a store without directory partitions. The frame is then
+    * one scan per part file, unioned in file-name order, so its partition
+    * order follows file order. `columns` are staged on it (row-local
+    * expressions only, as `withColumn`), then `mask` applies. Rows with a
+    * null dim are dropped, as the sort arm's bounding-box trim drops them.
+    *
+    * One key-only job, labelled `export: store order: keys`, reads the
+    * order keys and dims of that column-pruned plan. The order holds when
+    * every partition's keys ascend and each partition's last key is ≤ the
+    * next non-empty partition's first key, under `orderBy`'s contract:
+    * Catalyst's ascending, nulls-first ordering of the key types. The order
+    * is proved from the data at every export, so appended or hand-written
+    * stores stay correct. The same job's per-dim min/max become the P6
+    * bounding-box trims, pushed into the payload scan.
+    */
+  def storeOrdered(handle: MdioDatasetHandle, columns: Seq[(String, Column)],
+                   mask: Column, dims: Seq[String], headerFields: Seq[String],
+                   orderKeys: Seq[String]): Either[String, (DataFrame, Seq[Long])] = {
+    val spark = handle.df.sparkSession
+    val files: Either[String, Seq[String]] = handle.df.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        if (fs.partitionSchema.nonEmpty) Left("partitioned store")
+        else if (fs.location.inputFiles.isEmpty) Left("no part files")
+        // inputFiles are URI strings (a space reads %20); a path string
+        // re-reads the same file
+        else Right(fs.location.inputFiles.toSeq.map(f =>
+          new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString).sorted)
+      case _ => Left("not a store scan")
+    }
+    files.flatMap { paths =>
+      val schema = handle.df.schema
+      val staged = stage(paths.map(spark.read.schema(schema).parquet(_)).reduce(_ union _),
+        columns)
+      val frame = staged.where(dims.map(col(_).isNotNull).foldLeft(mask)(_ && _))
+      val keyCols = (orderKeys ++ dims.filterNot(orderKeys.contains)).distinct
+      val keys = frame.select(keyCols.map(col): _*)
+      val types = keys.schema.fields.map(_.dataType)
+      val order = orderKeys.indices.map(i =>
+        SortOrder(BoundReference(i, types(i), nullable = true), Ascending))
+      val dimAt = dims.map(keyCols.indexOf).toArray
+      val parts = graft.core.JobDesc.withDesc(spark, "export: store order: keys") {
+        spark.sparkContext.runJob(keys.queryExecution.toRdd, (it: Iterator[InternalRow]) => {
+          val ord = new LazilyGeneratedOrdering(order)
+          val dimOrd = dimAt.map(j => PhysicalDataType.ordering(types(j)))
+          // two projections take turns, so the previous row stays valid
+          // without a copy per row
+          val proj = Array.fill(2)(UnsafeProjection.create(types))
+          val (lo, hi) = (new Array[Any](dimAt.length), new Array[Any](dimAt.length))
+          var (rows, sorted) = (0L, true)
+          var (first, prev) = (null: InternalRow, null: InternalRow)
+          while (it.hasNext) {
+            val row = proj((rows & 1).toInt)(it.next())
+            if (prev == null) first = row.copy()
+            else if (sorted && ord.compare(prev, row) > 0) sorted = false
+            var k = 0
+            while (k < dimAt.length) {
+              val v = row.get(dimAt(k), types(dimAt(k)))
+              if (lo(k) == null || dimOrd(k).lt(v, lo(k))) lo(k) = InternalRow.copyValue(v)
+              if (hi(k) == null || dimOrd(k).gt(v, hi(k))) hi(k) = InternalRow.copyValue(v)
+              k += 1
+            }
+            prev = row
+            rows += 1
+          }
+          PartKeys(rows, first, if (prev == null) null else prev.copy(), sorted, lo, hi)
+        })
+      }
+      val ord = new LazilyGeneratedOrdering(order)
+      val live = parts.toSeq.filter(_.rows > 0)
+      val inOrder = parts.forall(_.sorted) && live.sliding(2).forall {
+        case Seq(a, b) => ord.compare(a.last, b.first) <= 0
+        case _ => true
+      }
+      if (!inOrder) Left("part files out of key order")
+      else {
+        val trims = if (live.isEmpty) Nil else dims.indices.map { k =>
+          val dt = types(dimAt(k))
+          val dimOrd = PhysicalDataType.ordering(dt)
+          def bound(v: Any) = ColumnBridge.column(Literal(v, dt))
+          col(dims(k)).between(
+            bound(live.map(_.lo(k)).reduce((a, b) => dimOrd.min(a, b))),
+            bound(live.map(_.hi(k)).reduce((a, b) => dimOrd.max(a, b))))
+        }
+        Right((Projection.projectToSpec(trims.foldLeft(frame)((d, t) => d.where(t)),
+          exportColumns(headerFields, orderKeys)), parts.map(_.rows).toSeq))
+      }
+    }
   }
 
   /** [[maskedOrder]] plus a contiguous 0-based `seq` column

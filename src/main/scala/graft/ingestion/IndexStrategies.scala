@@ -97,7 +97,7 @@ final case class ChannelWrappingStrategy(cable: String = "cable",
                                          channel: String = "channel") extends IndexStrategy {
   val name = "ChannelWrapping"
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame = {
-    val ranges = IngestPipeline.withDesc(df.sparkSession, "strategy detect") {
+    val ranges = graft.core.JobDesc.withDesc(df.sparkSession, "ingest: strategy detect") {
       Wrapping.collectChannelRanges(df, cable, channel)
     }
     if (ranges.geometryType == "B")
@@ -120,7 +120,7 @@ final case class ShotWrappingStrategy(lineField: String, shotField: String = "sh
   def transform(df: DataFrame, ctx: StrategyContext): DataFrame = {
     val numGuns =
       if (!alwaysCalculate && df.columns.contains(gunField))
-        IngestPipeline.withDesc(df.sparkSession, "strategy detect") {
+        graft.core.JobDesc.withDesc(df.sparkSession, "ingest: strategy detect") {
           Geometry.gunShotCounts(df, lineField, gunField, shotField)
             .groupBy(col(lineField)).agg(count(lit(1)).as("n_guns"))
             .agg(max(col("n_guns"))).first().getLong(0).toInt

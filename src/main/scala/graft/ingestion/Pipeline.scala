@@ -3,6 +3,7 @@ package graft.ingestion
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.JobDesc.withDesc
 import graft.operators.{Coordinates, Dimensions, GridIndex}
 import graft.schema._
 import graft.storage.MdioDataset
@@ -140,7 +141,7 @@ object IngestPipeline {
     // feeds both the QC reduction and the coordinate tables)
     val perCellSrc =
       if (foldable.isEmpty) perCell
-      else withDesc(spark, "QC per-cell stage") {
+      else withDesc(spark, "ingest: QC per-cell stage") {
         graft.core.Scratch.stage(perCell, "ingest_qc")
       }
     // the reduction is an observation of the per-cell pass, merged on the
@@ -149,7 +150,7 @@ object IngestPipeline {
     val maxVals = GridIndex.valueGate(spark)
     val aggs = GridIndex.qcAggs(cells, maxVals)
     val qcObs = Observation("ingest_qc")
-    val qc = withDesc(spark, "QC reduce") {
+    val qc = withDesc(spark, "ingest: QC reduce") {
       perCellSrc.observe(qcObs, aggs.head, aggs.drop(1): _*)
         .write.format("noop").mode("overwrite").save()
       GridIndex.gridQC(perCellSrc, qcObs.get, cells, counter, maxVals)
@@ -228,7 +229,7 @@ object IngestPipeline {
 
     // the write IS the stats scan — observation resolves once it completes
     // (clustering already applied above, so no sortDims here)
-    withDesc(spark, "store write") {
+    withDesc(spark, "ingest: store write") {
       MdioDataset.write(observed, path, schemaWith(None))
     }
     val m = obs.get
@@ -256,7 +257,7 @@ object IngestPipeline {
     lazy val stored = MdioDataset.open(spark, path).df
     val storeCoords = resolved.coordinates.map(_.name)
       .filter(c => transformed.columns.contains(c) && !foldable.contains(c))
-    val tailWrites: Seq[() => Unit] = gridDims.map(d => () => withDesc(spark, s"dim table $d") {
+    val tailWrites: Seq[() => Unit] = gridDims.map(d => () => withDesc(spark, s"ingest: dim table $d") {
       val dt = transformed.schema(d).dataType
       qc.values.get(d) match {
         case Some(vals) => writeDimVector(spark, dt, vals, path, d)
@@ -273,10 +274,10 @@ object IngestPipeline {
           Dimensions.computeDimension(stored, d)
             .write.mode("overwrite").parquet(s"$path/dims/$d")
       }
-    }) ++ (if (foldable.isEmpty) Nil else Seq(() => withDesc(spark, "coord tables (folded)") {
+    }) ++ (if (foldable.isEmpty) Nil else Seq(() => withDesc(spark, "ingest: coord tables (folded)") {
       writeCoordinateTables(perCellSrc, resolved, orderKey = "__ok", path,
         only = foldable.toSet)
-    })) ++ (if (storeCoords.isEmpty) Nil else Seq(() => withDesc(spark, "coord tables") {
+    })) ++ (if (storeCoords.isEmpty) Nil else Seq(() => withDesc(spark, "ingest: coord tables") {
       writeCoordinateTables(stored, resolved, orderKey = ordinal.head, path,
         exclude = foldable.toSet)
     }))
@@ -292,17 +293,6 @@ object IngestPipeline {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     Await.result(Future.sequence(work.map(w => Future(w()))), Duration.Inf)
-  }
-
-  /** Label the jobs an ingest stage submits (ProfileQuery prints these) —
-    * description is a thread-local Spark property, so the try/finally
-    * restores the caller's label even inside [[awaitAll]] pool threads.
-    */
-  private[ingestion] def withDesc[T](spark: SparkSession, s: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"ingest: $s")
-    try f finally sc.setJobDescription(prev)
   }
 
   /** Write one dim table (`dims/<d>`: sorted `dim_value`) from an in-driver

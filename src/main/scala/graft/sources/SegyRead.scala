@@ -187,10 +187,17 @@ object SegyRead {
     * [[standardInfo]], callable from EXECUTOR tasks (directory planning
     * fans one header read per member file out as a Spark job, so the
     * parse must not touch driver state). `path` is for error text only.
+    *
+    * `head` is what [[readHead]] returns: the fixed headers, then the
+    * first 240-byte trace header when the file holds one. A non-zero
+    * samples-per-trace in that trace header (bytes 115-116) must equal the
+    * binary header's: a wrong binary-header count whose record width still
+    * divides the data section would otherwise misread every trace.
     */
   def parseStandardInfo(path: String, size: Long, head: Array[Byte]): StandardInfo = {
-    require(head.length == DataOffset.toInt,
-      s"$path: standard info needs the $DataOffset-byte fixed headers, got ${head.length}B")
+    require(head.length == DataOffset.toInt || head.length == DataOffset.toInt + 240,
+      s"$path: standard info needs the $DataOffset-byte fixed headers (and " +
+        s"the first trace header), got ${head.length}B")
     // binary-header bytes 97-100: the rev-2 byte-order word reads 0x04030201
     // when every multi-byte field is little-endian; rev-1 leaves the bytes
     // unassigned, so only that exact pattern is refused
@@ -217,6 +224,16 @@ object SegyRead {
     require(size >= dataOffset,
       s"$path is ${size}B — smaller than its declared headers " +
         s"(3600 + $nExt x 3200 extended)")
+    require(head.length > DataOffset || size < dataOffset + 240,
+      s"$path: the first trace header was not read")
+    if (head.length > DataOffset) {
+      val traceNs = ((head(DataOffset.toInt + 114) & 0xff) << 8) |
+        (head(DataOffset.toInt + 115) & 0xff)
+      require(traceNs == 0 || traceNs == ns,
+        s"$path: the first trace header declares $traceNs samples per trace " +
+          s"(trace-header bytes 115-116), the binary header $ns (bytes " +
+          "3221-3222)")
+    }
     require((size - dataOffset) % recordLen == 0,
       s"$path data section ${size - dataOffset}B is not a multiple of the " +
         s"$recordLen-byte standard record (ns=$ns, format=$fmt, " +
@@ -231,8 +248,10 @@ object SegyRead {
   }
 
   /** Read the fixed 3600-byte header block of `path` with `conf`'s file
-    * system — the one I/O [[parseStandardInfo]] needs; shared by the
-    * driver wrapper and the distributed planning tasks.
+    * system, then the first 240-byte trace header after any extended text
+    * headers when the file holds one — the one I/O [[parseStandardInfo]]
+    * needs; shared by the driver wrapper and the distributed planning
+    * tasks.
     */
   def readHead(conf: org.apache.hadoop.conf.Configuration,
                path: String, size: Long): Array[Byte] = {
@@ -242,8 +261,19 @@ object SegyRead {
     val fs = p.getFileSystem(conf)
     val head = new Array[Byte](DataOffset.toInt)
     val in = fs.open(p)
-    try in.readFully(0L, head) finally in.close()
-    head
+    try {
+      in.readFully(0L, head)
+      // bytes 3505-3506: the extended text header count (signed; a
+      // negative count is refused by the parse)
+      val nExt = (((head(TextHeaderBytes + 304) & 0xff) << 8) |
+        (head(TextHeaderBytes + 305) & 0xff)).toShort
+      val first = DataOffset + 3200L * nExt
+      if (nExt >= 0 && first + 240 <= size) {
+        val trace = new Array[Byte](240)
+        in.readFully(first, trace)
+        head ++ trace
+      } else head
+    } finally in.close()
   }
 
   /** The rev-1 binary-header FIELD CATALOG: (name, 1-based byte offset

@@ -271,16 +271,15 @@ object Cli {
             .isInstanceOf[org.apache.spark.sql.types.ArrayType])
         col(dataVar.name).cast("array<float>")
       else array(col(dataVar.name).cast("float"))
-    val staged = handle.df.withColumn("__samples", samples)
-      .withColumn("__n_samples", lit(nSamples))
-      .withColumn("__sample_interval", lit(interval))
-    Mdio.mdioToStandardSegy(
-      handle.copy(df = staged), segyPath, mask = lit(true), dims = dims,
+    val arm = Mdio.mdioToStandardSegy(
+      handle, segyPath, mask = lit(true), dims = dims,
       fieldCols = fieldCols, orderKeys = dims, samplesCol = "__samples",
       nSamples = nSamples, sampleInterval = interval,
       textHeader = graft.`export`.SegyHeaders.sanitizeTextHeader(
-        Seq(s"C 1 EXPORTED FROM ${dataVar.name.toUpperCase}")))
-    println(s"exported $mdioFile to $segyPath ($nSamples samples/trace)")
+        Seq(s"C 1 EXPORTED FROM ${dataVar.name.toUpperCase}")),
+      columns = Seq("__samples" -> samples, "__n_samples" -> lit(nSamples),
+        "__sample_interval" -> lit(interval)))
+    println(s"exported $mdioFile to $segyPath ($nSamples samples/trace, $arm)")
   }
 
   private def copyVerb(spark: SparkSession, pos: Seq[String],

@@ -29,9 +29,10 @@ class LossyPartsFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 }
 
-/** The export writes the order of its sort's partitions; no sequence
-  * column is needed for it. The object-store concat fails loudly on a
-  * missing part.
+/** The export writes the order of its sort's partitions, or of the
+  * store's part files when they are already in order; no sequence column
+  * is needed for either. The object-store concat fails loudly on a missing
+  * part.
   */
 class ExportOrderSpec extends SparkSpec {
 
@@ -39,25 +40,34 @@ class ExportOrderSpec extends SparkSpec {
   private val fieldCols = Seq(SegyRead.StandardFields.Inline -> "inline",
     SegyRead.StandardFields.Crossline -> "crossline")
   private val text = SegyHeaders.sanitizeTextHeader(Seq("C 1 EXPORT ORDER"))
+  private val mask = col("inline") % 3 =!= 0
+  private val dims = Seq("inline", "crossline")
 
-  test("seq-free export is in global dim order across >= 4 range partitions " +
-    "and byte-identical to the seq-based output") {
-    // a session whose sort keeps every range partition (no AQE coalescing)
+  // a session whose sorts keep every range partition (no AQE coalescing),
+  // so the store holds 4 part files and the export's sort 4 partitions
+  private lazy val s = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s
+  }
+  private lazy val rows = for (il <- 10 until 30; xl <- 100 until 140 by 2)
+    yield (il, xl, Seq.tabulate(nSamples)(k => (il * 1000 + xl + k).toFloat))
+  // a space in the store path: part-file paths must survive URI quoting
+  private lazy val store = {
     import s.implicits._
-    val rows = for (il <- 10 until 30; xl <- 100 until 140 by 2)
-      yield (il, xl, Seq.tabulate(nSamples)(k => (il * 1000 + xl + k).toFloat))
-    val store = Files.createTempDirectory("exportorder").toString
+    val store = Files.createTempDirectory("export order").toString
     IngestPipeline.ingest(s, rows.toDF("inline", "crossline", "amplitude"),
       TemplateRegistry.instance.get("PostStack3DTime"), GridOverrides(),
       store, ordinal = Seq("inline", "crossline"), valueCol = "amplitude")
+    store
+  }
+
+  test("seq-free export is in global dim order across >= 4 range partitions " +
+    "and byte-identical to the seq-based output") {
     // scatter the rows so only the export's own sort can order them
     val opened = MdioDataset.open(s, store)
     val handle = opened.copy(df = opened.df.repartition(5)
       .withColumn("samples", col("amplitude").cast("array<float>")))
-    val mask = col("inline") % 3 =!= 0
-    val dims = Seq("inline", "crossline")
     val headerCols = Seq("inline", "crossline", "samples")
 
     val ordered = SegyExport.maskedOrder(handle.df, mask, dims, headerCols, dims)
@@ -65,9 +75,9 @@ class ExportOrderSpec extends SparkSpec {
 
     val dir = Files.createTempDirectory("exportorder").toString
     val out = s"$dir/order.sgy"
-    graft.Mdio.mdioToStandardSegy(handle, out, mask, dims, fieldCols,
+    assert(graft.Mdio.mdioToStandardSegy(handle, out, mask, dims, fieldCols,
       orderKeys = dims, samplesCol = "samples", nSamples = nSamples,
-      sampleInterval = 2000, textHeader = text)
+      sampleInterval = 2000, textHeader = text) == "sort: not a store scan")
 
     // the seq-based shape: maskedExport's globally sequenced frame
     val seqOut = s"$dir/seq.sgy"
@@ -92,6 +102,27 @@ class ExportOrderSpec extends SparkSpec {
     }
     assert(keys == keys.sorted && keys.distinct.length == n)
     assert(keys.forall(_._1 % 3 != 0))
+  }
+
+  test("the store-order arm writes the sort arm's bytes from a 4-file store") {
+    val parts = new java.io.File(s"$store/data").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(parts >= 4, s"the store holds $parts part files")
+    val opened = MdioDataset.open(s, store)
+    val dir = Files.createTempDirectory("exportorder").toString
+    def export(handle: graft.storage.MdioDatasetHandle, out: String): String =
+      graft.Mdio.mdioToStandardSegy(handle, out, mask, dims, fieldCols,
+        orderKeys = dims, samplesCol = "samples", nSamples = nSamples,
+        sampleInterval = 2000, textHeader = text,
+        columns = Seq("samples" -> col("amplitude").cast("array<float>")))
+    assert(export(opened, s"$dir/store.sgy") == "store order")
+    // a filter over the scan is no longer the store's own scan
+    assert(export(opened.copy(df = opened.df.where(lit(true))), s"$dir/sort.sgy") ==
+      "sort: not a store scan")
+    val bytes = Files.readAllBytes(Paths.get(s"$dir/store.sgy")).toSeq
+    assert(bytes == Files.readAllBytes(Paths.get(s"$dir/sort.sgy")).toSeq)
+    val kept = rows.count { case (il, _, _) => il % 3 != 0 }
+    assert(bytes.length == 3600 + kept * SegyExport.standardRecordBytes(nSamples, 1))
   }
 
   test("object-store concat equals the positioned write, and a missing part " +

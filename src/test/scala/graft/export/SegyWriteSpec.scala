@@ -1,15 +1,9 @@
 package graft.`export`
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 import graft.sources.SegyRead.StandardFields.{Crossline, Inline}
@@ -32,38 +26,6 @@ class SegyWriteSpec extends SparkSpec {
     (i & 0xff).toByte, ((i >> 8) & 0xff).toByte)))
 
   private def bytesOf(f: String): Seq[Byte] = Files.readAllBytes(Paths.get(f)).toSeq
-
-  /** Run `f` under its own job group; return the number of jobs it ran and
-    * the names of the persisted RDDs any stage of those jobs held. */
-  private def jobsAndCaches(f: => Unit): (Int, Seq[String]) = {
-    val group = s"segywrite-${System.nanoTime()}"
-    val (started, ended) = (new AtomicInteger, new AtomicInteger)
-    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val cached = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          ours.add(js.jobId)
-          started.incrementAndGet()
-          js.stageInfos.flatMap(_.rddInfos)
-            .filter(_.storageLevel != StorageLevel.NONE)
-            .foreach(r => cached.add(r.name))
-        }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (ours.contains(je.jobId)) ended.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "segy write spec")
-      try f finally spark.sparkContext.clearJobGroup()
-      // listener events arrive asynchronously
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (ended.get() < started.get() && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      Thread.sleep(300)
-      (started.get(), cached.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("writeSegy emits header + ordered trace records") {
     val df = Seq(
@@ -116,29 +78,29 @@ class SegyWriteSpec extends SparkSpec {
   test("a fixed-width export persists nothing, with or without a shuffle") {
     val text = SegyHeaders.sanitizeTextHeader(Seq("C 1 NO CACHE"))
     val dir = Files.createTempDirectory("segynocache").toString
-    val (jobs, cached) = jobsAndCaches {
+    val record = recordJobs {
       SegyExport.writeSegy(
         serialize(rows.toDF("il", "xl", "samples").orderBy("il", "xl")),
         s"$dir/sorted.sgy", text, binaryHeader)
       SegyExport.writeSegy(
         serialize(spark.sparkContext.parallelize(rows, 3).toDF("il", "xl", "samples")),
         s"$dir/plain.sgy", text, binaryHeader)
-    }
-    assert(jobs > 0)
-    assert(cached.isEmpty, s"export jobs held persisted RDDs: $cached")
+    }._2
+    assert(record.jobs > 0)
+    assert(record.cached.isEmpty, s"export jobs held persisted RDDs: ${record.cached}")
     assertNoLingeringCache()
   }
 
   test("a 400-byte all-zero binary header is rejected before any job runs") {
     val out = Files.createTempDirectory("segyzero").toString + "/zero.sgy"
-    val (jobs, _) = jobsAndCaches {
+    val jobs = recordJobs {
       val e = intercept[IllegalArgumentException] {
         SegyExport.writeSegy(serialize(rows.toDF("il", "xl", "samples")), out,
           SegyHeaders.sanitizeTextHeader(Seq("C 1 ZERO")), new Array[Byte](400))
       }
       assert(e.getMessage.contains("unsupported SEG-Y sample format code 0"),
         e.getMessage)
-    }
+    }._2.jobs
     assert(jobs == 0)
     assert(!Files.exists(Paths.get(out)))
   }
@@ -182,5 +144,52 @@ class SegyWriteSpec extends SparkSpec {
     assert(parts.getMessage.contains("wrote a 244B record"), parts.getMessage)
     assert(!Files.exists(Paths.get(s"$dir/keep/wide.sgy")))
     assert(!Files.exists(Paths.get(s"$dir/keep/wide.sgy.parts")))
+  }
+
+  test("with knownCounts no counts job runs, and every writer check still fires") {
+    val text = SegyHeaders.sanitizeTextHeader(Seq("C 1 KNOWN COUNTS"))
+    val dir = Files.createTempDirectory("segyknown").toString
+    // already in order across 3 partitions, with no exchange below it
+    val plain = serialize(spark.sparkContext
+      .parallelize(rows.sortBy(r => (r._1, r._2)), 3).toDF("il", "xl", "samples"))
+    val counts = plain.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
+    SegyExport.writeSegy(plain, s"$dir/counted.sgy", text, binaryHeader)
+    val jobs = recordJobs {
+      SegyExport.writeSegy(plain, s"$dir/known.sgy", text, binaryHeader,
+        knownCounts = Some(counts))
+    }._2.jobs
+    assert(jobs == 1, s"a write with known counts ran $jobs jobs")
+    assert(bytesOf(s"$dir/known.sgy") == bytesOf(s"$dir/counted.sgy"))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    def fails(out: String, records: DataFrame, known: Seq[Long]): String =
+      messages(intercept[Exception](SegyExport.writeSegy(records, out, text,
+        binaryHeader, knownCounts = Some(known))))
+    // a count for each partition, or none at all
+    assert(fails(s"$dir/short.sgy", plain, counts.tail)
+      .contains("knownCounts holds 2 partition counts, the records have 3"))
+    // a count that is not the partition's rows: "wrote X, counted Y", on
+    // local files and on the object-store arm
+    val off = counts.updated(1, counts(1) + 1)
+    assert(fails(s"$dir/off.sgy", plain, off).contains(
+      s"partition 1 wrote ${counts(1) * record}B, counted ${off(1) * record}B"))
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lossy.impl", classOf[LossyPartsFs].getName)
+    assert(fails(s"lossy://$dir/keep/off.sgy", plain, off).contains(
+      s"partition 1 wrote ${counts(1) * record}B, counted ${off(1) * record}B"))
+    assert(!Files.exists(Paths.get(s"$dir/keep/off.sgy")))
+    // a record of another width than the binary header declares
+    val mixed = serialize(Seq((1, 1, Array[Byte](1)), (2, 2, Array[Byte](1, 2, 3)))
+      .toDF("il", "xl", "samples").coalesce(1))
+    assert(fails(s"$dir/mixed.sgy", mixed, Seq(2L)).contains("wrote a 241B record"))
+    assert(fails(s"lossy://$dir/keep/mixed.sgy", mixed, Seq(2L))
+      .contains("wrote a 241B record"))
+    // a lost part file
+    val lost = intercept[SegyExport.MissingPartFileError] {
+      SegyExport.writeSegy(plain, s"lossy://$dir/drop/known.sgy", text, binaryHeader,
+        knownCounts = Some(counts))
+    }
+    assert(lost.getMessage.contains("part-00001"))
+    assert(!Files.exists(Paths.get(s"$dir/drop/known.sgy")))
   }
 }

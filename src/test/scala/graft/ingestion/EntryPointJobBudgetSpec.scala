@@ -1,19 +1,13 @@
 package graft.ingestion
 
-import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.col
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
-  SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-
-import graft.SparkSpec
+import graft.{JobRecord, SparkSpec}
 import graft.`export`.SegyExport
 import graft.operators.Selection
+import graft.storage.MdioDataset
 import graft.tools.Cli
 
 /** Job budgets for the three entry points: `segy import` (the
@@ -33,62 +27,14 @@ class EntryPointJobBudgetSpec extends SparkSpec {
   private def tmp(): String = Files.createTempDirectory("jobbudget").toString
 
   /** `segy import` of a standard nIl × nXl IBM32 file, and what it ran. */
-  private lazy val (store: String, postStackImport: Footprint) = {
+  private lazy val (store: String, postStackImport: JobRecord) = {
     val dir = tmp()
     ImportFixtures.writePostStack(spark, s"$dir/in.sgy", nIl, nXl, nSamples)
-    val fp = footprint {
+    val fp = recordJobs {
       assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", s"$dir/in.mdio") ++
         ImportFixtures.PostStackArgs, spark) == 0)
-    }
+    }._2
     (s"$dir/in.mdio", fp)
-  }
-
-  /** What `f` submitted: every job's description, the shuffle-write bytes
-    * of every shuffle-map stage, and the physical plan of every SQL
-    * execution. */
-  private case class Footprint(descriptions: Seq[String], shuffleWrites: Seq[Long],
-                               plans: Seq[String]) {
-    def jobs: Int = descriptions.size
-    def shuffles: Int = shuffleWrites.size
-  }
-
-  private def footprint(f: => Unit): Footprint = {
-    val (started, ended) = (new AtomicInteger, new AtomicInteger)
-    val descriptions = new ConcurrentLinkedQueue[String]()
-    val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
-    val stageWrites = new ConcurrentHashMap[Int, Long]()
-    val plans = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        started.incrementAndGet()
-        descriptions.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        ended.incrementAndGet()
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskType == "ShuffleMapTask") shuffleStages.add(te.stageId)
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        stageWrites.put(sc.stageInfo.stageId,
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      // listener events are delivered asynchronously: wait until every
-      // started job's end has arrived, then a short drain for stragglers
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (ended.get() < started.get() && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      Thread.sleep(300)
-      Footprint(descriptions.asScala.toSeq,
-        shuffleStages.asScala.toSeq.sorted.map(id => stageWrites.getOrDefault(id, 0L)),
-        plans.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** An import's structure: every job labelled by the pipeline, no plan
@@ -97,7 +43,7 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     * large as the payload — the store-layout exchange — carrying under
     * 1.5× the decoded payload bytes (the payload crosses it once, not as
     * raw bytes beside the decoded samples). */
-  private def assertOneWrite(fp: Footprint, store: String, payloadBytes: Long): Unit = {
+  private def assertOneWrite(fp: JobRecord, store: String, payloadBytes: Long): Unit = {
     val unlabelled = fp.descriptions.filterNot(_.startsWith("ingest:"))
     assert(unlabelled.isEmpty, s"${unlabelled.size} of ${fp.jobs} import jobs " +
       s"carry no ingest label: ${fp.descriptions.mkString(" | ")}")
@@ -132,10 +78,10 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     val gNSamples = 500
     val n = ImportFixtures.writeGathers(spark, s"$dir/in.sgy", nSamples = gNSamples)
     val path = s"$dir/in.mdio"
-    val fp = footprint {
+    val fp = recordJobs {
       assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", path) ++
         ImportFixtures.GathersArgs, spark) == 0)
-    }
+    }._2
     // detection, QC and dim tables as extra passes took 27
     assert(fp.jobs <= 12, s"gathers import submitted ${fp.jobs} jobs (budget 12): " +
       fp.descriptions.mkString(" | "))
@@ -155,9 +101,8 @@ class EntryPointJobBudgetSpec extends SparkSpec {
   test("a 2-D isel box plus its collect runs one job per dim and one for " +
     "the result, with no shuffle") {
     val handle = graft.Mdio.openMdio(spark, store)
-    var rows = 0
-    val fp = footprint {
-      rows = handle.isel("inline" -> Selection.ISlice(1, 11),
+    val (rows, fp) = recordJobs {
+      handle.isel("inline" -> Selection.ISlice(1, 11),
           "crossline" -> Selection.ISlice(2, 12))
         .select("inline", "crossline", "amplitude").collect().length
     }
@@ -167,15 +112,49 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     assert(fp.shuffles == 0, s"isel box ran ${fp.shuffles} shuffle-map stages")
   }
 
-  test("a Cli segy export runs at most 6 jobs") {
-    val (in, out) =
-      (store, Files.createTempDirectory("jobbudget").toString + "/out.sgy")
-    val jobs = footprint {
-      assert(Cli.run(Seq("segy", "export", in, out), spark) == 0)
-    }.jobs
-    assert(Files.size(java.nio.file.Paths.get(out)) ==
+  /** `segy export` of `mdio` to a fresh file: the file, what the export
+    * submitted, and its summary line. */
+  private def cliExport(mdio: String): (String, JobRecord, String) = {
+    val out = Files.createTempDirectory("jobbudget").toString + "/out.sgy"
+    val stdout = new java.io.ByteArrayOutputStream()
+    val record = recordJobs {
+      Console.withOut(stdout) {
+        assert(Cli.run(Seq("segy", "export", mdio, out), spark) == 0)
+      }
+    }._2
+    (out, record, stdout.toString)
+  }
+
+  private def bytesOf(f: String): Seq[Byte] = Files.readAllBytes(Paths.get(f)).toSeq
+
+  test("a Cli segy export runs 2 jobs in store order") {
+    val (out, record, summary) = cliExport(store)
+    assert(Files.size(Paths.get(out)) ==
       3600L + nIl * nXl * SegyExport.standardRecordBytes(nSamples, 1))
-    // the parent's export paid a sequence pass it never read: 7 jobs
-    assert(jobs <= 6, s"segy export submitted $jobs jobs (budget 6)")
+    // the sort arm ran 6: a bounding box (2), range sampling, the payload
+    // shuffle, a counts job over it and the write
+    assert(record.jobs <= 2, s"segy export submitted ${record.jobs} jobs (budget 2): " +
+      record.descriptions.mkString(" | "))
+    assert(record.shuffles == 0, s"segy export ran ${record.shuffles} shuffle-map stages")
+    assert(record.descriptions == Seq("export: store order: keys",
+      "export: store order: write"), record.descriptions.mkString(" | "))
+    assert(summary.contains("store order"), summary)
+  }
+
+  test("a store whose part files interleave keys exports through the sort arm") {
+    // the imported rows again, as two appends of interleaved inlines
+    val handle = graft.Mdio.openMdio(spark, store)
+    val appended = Files.createTempDirectory("jobbudget").toString + "/appended.mdio"
+    MdioDataset.write(handle.df.where(col("inline") % 2 === 0), appended,
+      handle.schema, sortDims = Seq("inline", "crossline"))
+    MdioDataset.write(handle.df.where(col("inline") % 2 =!= 0), appended,
+      handle.schema, MdioDataset.WriteMode.A)
+    val (out, record, summary) = cliExport(appended)
+    val unlabelled = record.descriptions.filterNot(_.startsWith("export: "))
+    assert(unlabelled.isEmpty, record.descriptions.mkString(" | "))
+    assert(record.descriptions.contains("export: sort: part files out of key order"),
+      record.descriptions.mkString(" | "))
+    assert(summary.contains("sort: part files out of key order"), summary)
+    assert(bytesOf(out) == bytesOf(cliExport(store)._1))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ingestion
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Plan-shape budget for the end-to-end SEG-Y ingest composition
   * (`q_segy_file_ingest`): the round-10 audit found 29 driver-sequential
@@ -17,24 +16,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 class IngestJobBudgetSpec extends SparkSpec {
 
   test("q_segy_file_ingest submits a bounded, data-size-independent job count") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = recordJobs {
       graft.SparkEntry.queries("q_segy_file_ingest")(spark, "/root/testdata/sf0.001")
         .count()
-      // listener events are async — the count() has returned, so every job
-      // has STARTED; a short drain covers bus delivery
-      Thread.sleep(500)
-      val jobs = counter.get()
-      // 17 + 4 jobs of headroom for AQE stage-count jitter across Spark
-      // versions; 29 (the unfused shape) must fail
-      assert(jobs <= 21, s"ingest composition submitted $jobs jobs (budget 21) " +
-        "— a per-table scan or driver-sequential aggregate crept back in")
-      assert(jobs >= 5, s"listener saw only $jobs jobs — harness broken?")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }._2.jobs
+    // 17 + 4 jobs of headroom for AQE stage-count jitter across Spark
+    // versions; 29 (the unfused shape) must fail
+    assert(jobs <= 21, s"ingest composition submitted $jobs jobs (budget 21) " +
+      "— a per-table scan or driver-sequential aggregate crept back in")
+    assert(jobs >= 5, s"listener saw only $jobs jobs — harness broken?")
   }
 }

@@ -114,4 +114,33 @@ class IngestStoreSpec extends SparkSpec {
       "inline" -> ("bigint", (1L to 32L)),
       "crossline" -> ("bigint", (101L to 132L))))
   }
+
+  /** Export `store` through both arms of `Mdio.mdioToStandardSegy`: the
+    * store's own scan (store order) and the same scan under a filter (the
+    * sort arm). Both files must hold the same bytes. */
+  private def assertArmsAgree(store: String, nSamples: Int): Unit = {
+    val handle = graft.Mdio.openMdio(spark, store)
+    val dims = handle.schema.dimensions.map(_.name).filter(handle.df.columns.contains)
+    val fieldCols = dims.zipWithIndex.map { case (d, i) =>
+      graft.sources.SegyRead.HeaderField(d, 1 + 4 * i, 4) -> d }
+    val dir = Files.createTempDirectory("ingeststore").toString
+    def export(h: graft.storage.MdioDatasetHandle, out: String): String =
+      graft.Mdio.mdioToStandardSegy(h, out, lit(true), dims, fieldCols,
+        orderKeys = dims, samplesCol = "samples", nSamples = nSamples,
+        sampleInterval = 1000,
+        textHeader = graft.`export`.SegyHeaders.sanitizeTextHeader(Seq("C 1 ARMS")),
+        columns = Seq("samples" -> col("amplitude")))
+    assert(export(handle, s"$dir/store.sgy") == "store order")
+    assert(export(handle.copy(df = handle.df.where(lit(true))), s"$dir/sort.sgy") ==
+      "sort: not a store scan")
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(s"$dir/store.sgy")).toSeq
+    assert(bytes.length > 3600)
+    assert(bytes == Files.readAllBytes(java.nio.file.Paths.get(s"$dir/sort.sgy")).toSeq)
+  }
+
+  test("gathers and post-stack stores export the same bytes in store order " +
+    "as through the sort") {
+    assertArmsAgree(gathers, nSamples = 500)
+    assertArmsAgree(postStack, nSamples = 1000)
+  }
 }

@@ -1,12 +1,7 @@
 package graft.ingestion
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -32,31 +27,6 @@ class ShotWrapIngestSpec extends SparkSpec {
     val path = Files.createTempDirectory("shotwrap").toString
     (IngestPipeline.ingest(spark, traces, TemplateRegistry.instance.get(template),
       overrides, path, ordinal = Seq("ord"), valueCol = "amplitude"), path)
-  }
-
-  /** `f`'s result and the description of every job it submitted. */
-  private def withJobs[T](f: => T): (T, Seq[String]) = {
-    val (started, ended) = (new AtomicInteger, new AtomicInteger)
-    val descriptions = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        started.incrementAndGet()
-        descriptions.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = ended.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      // listener events arrive asynchronously: wait for every started
-      // job's end, then a short drain
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (ended.get() < started.get() && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      Thread.sleep(300)
-      (r, descriptions.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def dimSizes(path: String): Map[String, Long] =
@@ -111,8 +81,9 @@ class ShotWrapIngestSpec extends SparkSpec {
     }
     val traces = rows.toDF("receiver", "shot_line", "gun", "shot_point", "ord",
       "group_coord_x", "source_coord_x", "amplitude")
-    val ((r, path), jobs) = withJobs(ingest(traces, "ObnReceiverGathers3D",
+    val ((r, path), record) = recordJobs(ingest(traces, "ObnReceiverGathers3D",
       GridOverrides(calculateShotIndex = true)))
+    val jobs = record.descriptions
     // CalculateShotIndex always dense-ranks, so it runs no gun detection:
     // QC 6, store write 4, dim tables 5, coordinate tables 6
     assert(!jobs.contains("ingest: strategy detect"), jobs.mkString("\n"))

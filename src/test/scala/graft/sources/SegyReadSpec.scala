@@ -348,8 +348,11 @@ class SegyReadSpec extends SparkSpec {
        "32767 does not read negative") {
     import SegyRead.StandardFields._
     // 40000 fits the unsigned 2-byte range; the write-side overflow check
-    // accepts it and the read side must not sign-wrap it to -25536
-    val df = Seq((1, 2, 40000, 50000)).toDF("inline", "crossline", "ns", "si")
+    // accepts it and the read side must not sign-wrap it to -25536. The
+    // first trace declares the binary header's 1 sample, which the reader
+    // checks; the second carries the wide values.
+    val df = Seq((1, 2, 1, 1000), (3, 4, 40000, 50000))
+      .toDF("inline", "crossline", "ns", "si")
     val records = SegyExport.serializeStandardTraces(
       df.withColumn("samples", lit(Array[Byte](0, 0, 0, 0))),
       Seq(Inline -> "inline", Crossline -> "crossline",
@@ -360,7 +363,7 @@ class SegyReadSpec extends SparkSpec {
         formatCode = 2))
     val got = spark.read.format("segy")
       .option("fields", "inline,n_samples,sample_interval").load(out)
-      .collect().head
+      .where(col("inline") === 3).collect().head
     assert(got.getAs[Long]("n_samples") == 40000L)
     assert(got.getAs[Long]("sample_interval") == 50000L)
   }

@@ -227,8 +227,9 @@ class CliSpec extends SparkSpec {
     val dir = Files.createTempDirectory("climalformed").toString
     /** `good` with the `width`-byte big-endian word at 1-based file byte
       * `off1` set to `v`. */
-    def patched(off1: Int, v: Int, width: Int = 2): Array[Byte] = {
-      val b = good.clone()
+    def patched(off1: Int, v: Int, width: Int = 2,
+                from: Array[Byte] = good): Array[Byte] = {
+      val b = from.clone()
       (0 until width).foreach(i => b(off1 - 1 + i) = (v >> (8 * (width - 1 - i))).toByte)
       b
     }
@@ -259,6 +260,24 @@ class CliSpec extends SparkSpec {
       "declares 0 samples per trace")
     rejected("collision", good, "samples,crossline",
       "segy field 'samples' is a reserved column name")
+    // a binary-header sample count whose record width still divides the
+    // data section (6 records of 2 IBM32 samples are 3 of 64), while every
+    // trace header (bytes 115-116) carries the true 2
+    val carries2 = (0 until 6).foldLeft(good)((b, t) =>
+      patched(3600 + 248 * t + 115, 2, from = b))
+    rejected("nsamples", patched(3221, 64, from = carries2), "inline,crossline",
+      "the first trace header declares 2 samples per trace")
+    rejected("truncated", good.dropRight(10), "inline,crossline",
+      "is not a multiple of the 248-byte standard record")
+    // the segy scan refuses both files the same way
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    Seq("nsamples" -> "the first trace header declares 2 samples per trace",
+      "truncated" -> "is not a multiple of the 248-byte standard record").foreach {
+      case (name, cause) =>
+        val e = intercept[Exception](spark.read.format("segy").load(s"$dir/$name.sgy").count())
+        assert(msgs(e).exists(_.contains(cause)), s"$name: ${msgs(e)}")
+    }
 
     // a failure inside the store write (the stats kernel refuses a NaN
     // sample) removes the partly written store too
@@ -268,8 +287,6 @@ class CliSpec extends SparkSpec {
       .option("formatCode", "5").mode("overwrite").save(nan)
     val e = intercept[Exception](Cli.run(Seq("segy", "import", nan, s"$dir/nan.mdio",
       "--header-locations", "189,193", "--header-names", "inline,crossline"), spark))
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("non-finite sample")), msgs(e))
     assert(!Files.exists(java.nio.file.Paths.get(s"$dir/nan.mdio")))
   }

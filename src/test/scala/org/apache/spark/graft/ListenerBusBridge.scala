@@ -1,0 +1,9 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+
+/** Bridge to the spark-package-private listener bus, so a spec can wait
+  * until every event posted so far has reached its listeners. */
+object ListenerBusBridge {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
