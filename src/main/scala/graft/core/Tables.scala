@@ -47,17 +47,4 @@ object Tables {
   }
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
-
-  /** Register every fixture table as a temp view (for spark.sql paths).
-    * A missing file skips that one view instead of failing them all. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    all.foreach { n =>
-      try {
-        val df = if (n == "events") events(spark, sfDir) else load(spark, sfDir, n)
-        df.createOrReplaceTempView(n)
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[tables] skipping view $n: ${e.getMessage}")
-      }
-    }
 }

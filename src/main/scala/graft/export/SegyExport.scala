@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
   Literal, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, FileOrderedScan}
 
 import graft.operators.{GlobalOrder, Masking, Projection}
 import graft.storage.MdioDatasetHandle
@@ -20,11 +21,13 @@ import graft.storage.MdioDatasetHandle
   * → ordered write (E4).
   *
   * The trace order comes from one of two arms:
-  *  - **store order** ([[storeOrdered]]): the store's part files, scanned
-  *    one by one and unioned in file order, so partition order is file
-  *    order. One key-only job proves the masked keys ascend within and
-  *    across those partitions and returns each partition's row count,
-  *    which are the write's byte offsets. No sort, no shuffle: two jobs.
+  *  - **store order** ([[storeOrdered]]): the store's part files read
+  *    through one file-ordered Parquet scan
+  *    ([[org.apache.spark.sql.graft.FileOrderedScan]]), one partition per
+  *    file in path order, so partition order is file order. One key-only
+  *    job proves the masked keys ascend within and across those partitions
+  *    and returns each partition's row count, which are the write's byte
+  *    offsets. No sort, no shuffle: two jobs.
   *    This is the reference's shape, which writes trace blocks straight
   *    from the grid-ordered store (`segy/blocked_io.py:214-303`), and the
   *    layout `segy import` leaves (disjoint, ordered part files, each
@@ -390,8 +393,11 @@ object SegyExport {
     *
     * `handle.df` must be the plain Parquet scan [[graft.Mdio.openMdio]]
     * returns, of a store without directory partitions. The frame is then
-    * one scan per part file, unioned in file-name order, so its partition
-    * order follows file order. `columns` are staged on it (row-local
+    * one [[org.apache.spark.sql.graft.FileOrderedScan]] over the handle's
+    * own file index: one partition per part file in path order (a file
+    * above `spark.sql.files.maxPartitionBytes` in contiguous slices), so
+    * its partition order follows file order, and the key plan and the
+    * write plan each plan one scan. `columns` are staged on it (row-local
     * expressions only, as `withColumn`), then `mask` applies. Rows with a
     * null dim are dropped, as the sort arm's bounding-box trim drops them.
     *
@@ -408,22 +414,18 @@ object SegyExport {
                    mask: Column, dims: Seq[String], headerFields: Seq[String],
                    orderKeys: Seq[String]): Either[String, (DataFrame, Seq[Long])] = {
     val spark = handle.df.sparkSession
-    val files: Either[String, Seq[String]] = handle.df.queryExecution.analyzed match {
+    val scan: Either[String, DataFrame] = handle.df.queryExecution.analyzed match {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
-          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            fs.location.isInstanceOf[PartitioningAwareFileIndex] =>
         if (fs.partitionSchema.nonEmpty) Left("partitioned store")
         else if (fs.location.inputFiles.isEmpty) Left("no part files")
-        // inputFiles are URI strings (a space reads %20); a path string
-        // re-reads the same file
-        else Right(fs.location.inputFiles.toSeq.map(f =>
-          new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString).sorted)
+        else Right(FileOrderedScan.read(fs))
       case _ => Left("not a store scan")
     }
-    files.flatMap { paths =>
-      val schema = handle.df.schema
-      val staged = stage(paths.map(spark.read.schema(schema).parquet(_)).reduce(_ union _),
-        columns)
-      val frame = staged.where(dims.map(col(_).isNotNull).foldLeft(mask)(_ && _))
+    scan.flatMap { files =>
+      val frame = stage(files, columns)
+        .where(dims.map(col(_).isNotNull).foldLeft(mask)(_ && _))
       val keyCols = (orderKeys ++ dims.filterNot(orderKeys.contains)).distinct
       val keys = frame.select(keyCols.map(col): _*)
       val types = keys.schema.fields.map(_.dataType)

@@ -26,9 +26,6 @@ object VecExprs {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def l2Sq(a: Column, b: Column): Column =
-    ColumnBridge.column(L2SqExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   /** Element accessor that tolerates float or double arrays. */
   private[functions] def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)

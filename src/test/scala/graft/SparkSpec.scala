@@ -33,11 +33,14 @@ object TestSpark {
 }
 
 /** What a block of code submitted to the session: every job's
-  * description, the shuffle-write bytes of every shuffle-map stage that
-  * ran tasks, the physical plan of every SQL execution, and the names of
-  * the persisted RDDs its jobs' stages held. */
-final case class JobRecord(descriptions: Seq[String], shuffleWrites: Seq[Long],
-                           plans: Seq[String], cached: Seq[String]) {
+  * description, task count (summed over the job's stages) and number of
+  * file-scan RDDs (one per scan node of the plans it runs), the
+  * shuffle-write bytes of every shuffle-map stage that ran tasks, the
+  * physical plan of every SQL execution, and the names of the persisted
+  * RDDs its jobs' stages held. */
+final case class JobRecord(descriptions: Seq[String], tasks: Seq[Int], scans: Seq[Int],
+                           shuffleWrites: Seq[Long], plans: Seq[String],
+                           cached: Seq[String]) {
   def jobs: Int = descriptions.size
   def shuffles: Int = shuffleWrites.size
 }
@@ -49,18 +52,19 @@ abstract class SparkSpec extends AnyFunSuite {
     * events arrive asynchronously; the record is read after the listener
     * bus has delivered every event posted before `f` returned. */
   def recordJobs[T](f: => T): (T, JobRecord) = {
-    val descriptions = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, Int, Int)]()
     val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
     val stageWrites = new ConcurrentHashMap[Int, Long]()
     val plans = new ConcurrentLinkedQueue[String]()
     val cached = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        descriptions.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        js.stageInfos.flatMap(_.rddInfos)
-          .filter(_.storageLevel != StorageLevel.NONE)
-          .foreach(r => cached.add(r.name))
+        val rdds = js.stageInfos.flatMap(_.rddInfos).distinctBy(_.id)
+        jobs.add((Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          js.stageInfos.map(_.numTasks).sum,
+          rdds.count(r => r.name == "FileScanRDD" || r.name == "DataSourceRDD")))
+        rdds.filter(_.storageLevel != StorageLevel.NONE).foreach(r => cached.add(r.name))
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskType == "ShuffleMapTask") shuffleStages.add(te.stageId)
@@ -76,7 +80,8 @@ abstract class SparkSpec extends AnyFunSuite {
     try {
       val r = f
       org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
-      (r, JobRecord(descriptions.asScala.toSeq,
+      val js = jobs.asScala.toSeq
+      (r, JobRecord(js.map(_._1), js.map(_._2), js.map(_._3),
         shuffleStages.asScala.toSeq.sorted.map(id => stageWrites.getOrDefault(id, 0L)),
         plans.asScala.toSeq, cached.asScala.toSeq))
     } finally spark.sparkContext.removeSparkListener(listener)

@@ -42,12 +42,4 @@ class TablesSpec extends SparkSpec {
     val secs = ev.orderBy("event_id").select(col("ts").cast("long")).as[Long].collect()
     assert(secs.sameElements(Array(1704067230L, 1704075000L)))
   }
-
-  test("registerViews exposes the normalized events view") {
-    val dir = java.nio.file.Files.createTempDirectory("tables_view").toString
-    writeAndLoad(dir, writeNtz = true)
-    Tables.registerViews(spark, dir)
-    val dt = spark.table("events").schema("ts").dataType
-    assert(dt == TimestampType)
-  }
 }

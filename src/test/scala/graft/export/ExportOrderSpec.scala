@@ -4,7 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FileOrderedScan
 
 import graft.SparkSpec
 import graft.ingestion.{GridOverrides, IngestPipeline}
@@ -123,6 +128,61 @@ class ExportOrderSpec extends SparkSpec {
     assert(bytes == Files.readAllBytes(Paths.get(s"$dir/sort.sgy")).toSeq)
     val kept = rows.count { case (il, _, _) => il % 3 != 0 }
     assert(bytes.length == 3600 + kept * SegyExport.standardRecordBytes(nSamples, 1))
+  }
+
+  test("a split part file exports in store order, byte-equal to the sort arm") {
+    // one part file of many small row groups
+    val one = spark.newSession()
+    one.conf.set("spark.sql.shuffle.partitions", "1")
+    one.conf.set("parquet.block.size", "16384")
+    val wide = 48
+    val store = Files.createTempDirectory("export split").toString
+    import one.implicits._
+    IngestPipeline.ingest(one, (for (il <- 0 until 40; xl <- 0 until 40) yield
+        (il, xl, Seq.tabulate(wide)(k => (il * 7919 + xl * 104729 + k * 31) % 65536 / 7f)))
+        .toDF("inline", "crossline", "amplitude"),
+      TemplateRegistry.instance.get("PostStack3DTime"), GridOverrides(),
+      store, ordinal = Seq("inline", "crossline"), valueCol = "amplitude")
+    val Array(file) = new java.io.File(s"$store/data").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file.toURI),
+        spark.sparkContext.hadoopConfiguration))
+    val groups = try reader.getRowGroups.size finally reader.close()
+    assert(groups >= 6, s"the part file holds $groups row groups")
+    one.conf.set("spark.sql.files.maxPartitionBytes", (file.length / 4).toString)
+    val opened = MdioDataset.open(one, store)
+    val dir = Files.createTempDirectory("exportsplit").toString
+    def export(handle: graft.storage.MdioDatasetHandle, out: String): String =
+      graft.Mdio.mdioToStandardSegy(handle, out, mask, dims, fieldCols,
+        orderKeys = dims, samplesCol = "samples", nSamples = wide,
+        sampleInterval = 2000, textHeader = text,
+        columns = Seq("samples" -> col("amplitude").cast("array<float>")))
+    val (arm, record) = recordJobs(export(opened, s"$dir/store.sgy"))
+    assert(arm == "store order")
+    assert(record.tasks.head >= 3, s"the key job ran ${record.tasks.head} tasks")
+    assert(export(opened.copy(df = opened.df.where(lit(true))), s"$dir/sort.sgy") ==
+      "sort: not a store scan")
+    val bytes = Files.readAllBytes(Paths.get(s"$dir/store.sgy")).toSeq
+    assert(bytes == Files.readAllBytes(Paths.get(s"$dir/sort.sgy")).toSeq)
+    assert(bytes.length == 3600 + (0 until 40).count(_ % 3 != 0) * 40 *
+      SegyExport.standardRecordBytes(wide, 1))
+  }
+
+  test("a file-ordered scan never equals a plain Parquet scan of its files") {
+    val fs = MdioDataset.open(s, store).df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
+    }.get
+    def scan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan
+      .collectFirst { case b: BatchScanExec => b.scan }.get
+    val ordered = scan(FileOrderedScan.read(fs)) match { case o: FileOrderedScan => o }
+    assert(ordered == scan(FileOrderedScan.read(fs)))
+    val plain = ParquetScanBuilder(s, fs.location.asInstanceOf[PartitioningAwareFileIndex],
+      fs.dataSchema, fs.dataSchema, ordered.options).build()
+    assert(plain.readSchema == ordered.readSchema && plain.getClass != ordered.getClass)
+    // ParquetScan's own equals ignores the class, so plan lookups rest on
+    // this side's equals and on the class-keyed hash
+    assert(ordered != plain && ordered.hashCode != plain.hashCode)
   }
 
   test("object-store concat equals the positioned write, and a missing part " +

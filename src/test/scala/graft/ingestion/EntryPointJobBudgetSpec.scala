@@ -141,6 +141,19 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     assert(summary.contains("store order"), summary)
   }
 
+  test("store-order export: one scan, one task per part file") {
+    val files = new java.io.File(s"$store/data").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files >= 4, s"the store holds $files part files")
+    val (_, record, _) = cliExport(store)
+    // a union of per-file scans planned one scan per file, and the test
+    // session's 128 KB open cost split each file into mostly empty tasks
+    assert(record.scans == Seq(1, 1), s"scan nodes per job: ${record.scans} " +
+      s"(${record.descriptions.mkString(" | ")})")
+    assert(record.tasks == Seq(files, files), s"tasks per job: ${record.tasks} " +
+      s"for $files part files")
+  }
+
   test("a store whose part files interleave keys exports through the sort arm") {
     // the imported rows again, as two appends of interleaved inlines
     val handle = graft.Mdio.openMdio(spark, store)
