@@ -64,10 +64,7 @@ object Bench {
 
     // Warm the file-system/footer caches once so per-query times measure the
     // query, not first-touch metadata I/O.
-    graft.core.Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").foreach(_ => ())
-      catch { case _: Throwable => () }
-    }
+    graft.core.Tables.warm(spark, sfDir)
     // ... and JIT/codegen: the alphabetically-first timed queries would
     // otherwise absorb the whole JVM warmup (~2s measured — it made the
     // first query look 2× its steady-state cost). Four untimed

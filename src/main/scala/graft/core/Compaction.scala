@@ -6,11 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Staging-then-swap rewrite of a live parquet table — the shared shape
   * behind every "fold micro-batch accumulation back into the built
   * layout" maintenance pass ([[graft.llm.Retrieval.compactIndex]],
-  * [[graft.llm.DedupIndex.compactIndex]], [[graft.storage.MdioDataset]]'s
-  * chunk compaction): a long-appending stream leaves a few small files
-  * per batch, and thousands of tiny files erode scan planning (every
-  * file opens) and kill row-group skipping (no key locality across
-  * files). The caller's rewrite re-sorts the table so min/max column
+  * [[graft.llm.DedupIndex.compactIndex]], [[graft.storage.MdioDataset.compact]]):
+  * a long-appending stream leaves a few small files per batch, and
+  * thousands of tiny files erode scan planning (every file opens) and
+  * kill row-group skipping (no key locality across files). The caller's rewrite re-sorts the table so min/max column
   * stats make pushed `key IN (...)` filters skip whole row groups again.
   *
   * NOT concurrent-safe: the staged write fully commits before the
@@ -33,18 +32,15 @@ object Compaction {
     n
   }
 
-  /** Shuffle width for a table-volume-sized frame: targets `confKey`
-    * bytes per partition (default 64 MB) instead of the session's fixed
-    * `spark.sql.shuffle.partitions` — a fixed 32-partition shuffle made
-    * the sf10 BM25 postings sort spill (SCALING.md round-14); at 100 TB
-    * it would be a wall. `sized` must scan real files (a scratch stage
-    * or the live table) so the optimizer stats are file sizes, not
+  /** Shuffle width for a table-volume-sized frame (the BM25 postings, the
+    * dedup signatures): targets 64 MB per partition instead of the
+    * session's fixed `spark.sql.shuffle.partitions` — a fixed 32-partition
+    * shuffle made the sf10 BM25 postings sort spill (SCALING.md round-14);
+    * at 100 TB it would be a wall. `sized` must scan real files (a scratch
+    * stage or the live table) so the optimizer stats are file sizes, not
     * guesses.
     */
-  def sizedWidth(session: SparkSession, sized: DataFrame,
-                 confKey: String): Int = {
-    val perPartL = session.conf.get(confKey, (64L << 20).toString).toLong
-    require(perPartL > 0, s"$confKey must be positive, got $perPartL")
+  def sizedWidth(session: SparkSession, sized: DataFrame): Int = {
     val sessionParts = session.conf.get("spark.sql.shuffle.partitions").toInt
     val size = sized.queryExecution.optimizedPlan.stats.sizeInBytes
     // UNKNOWN stats read as Long.MaxValue-scale (Catalyst's
@@ -58,8 +54,8 @@ object Compaction {
     else {
       // clamp BEFORE narrowing: a bare .toInt on a BigInt quotient wraps
       // to an arbitrary partition count. 1 << 20 partitions ≈ 64 TB at
-      // the default 64 MB target — past that, fail the math safe.
-      val estParts = (size / BigInt(perPartL)).min(BigInt(1 << 20)).toInt + 1
+      // the 64 MB target — past that, fail the math safe.
+      val estParts = (size / BigInt(64L << 20)).min(BigInt(1 << 20)).toInt + 1
       math.max(sessionParts, estParts)
     }
   }
@@ -67,18 +63,23 @@ object Compaction {
   /** Rewrite the live parquet table at `tablePath` through `rewrite`
     * (recluster, sort, fold marker rows — anything row-preserving the
     * caller wants), staging to a sibling dot-dir and swapping only after
-    * the staged write fully commits. Returns (parquet files before,
-    * after).
+    * the staged write fully commits. A store's layout rides in through
+    * `partitionCols` (the staged write's directory partitions) and
+    * `schemaDdl` (the read schema, so partition values keep their
+    * recorded types instead of inferred ones). Returns (parquet files
+    * before, after).
     */
-  def rewriteInPlace(spark: SparkSession, tablePath: String)
+  def rewriteInPlace(spark: SparkSession, tablePath: String,
+                     partitionCols: Seq[String] = Nil, schemaDdl: Option[String] = None)
                     (rewrite: DataFrame => DataFrame): (Int, Int) = {
     val live = new Path(tablePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nBefore = parquetFileCount(spark, tablePath)
     val staging = new Path(live.getParent, s".${live.getName}_compacting")
     fs.delete(staging, true): Unit
-    rewrite(spark.read.parquet(tablePath))
-      .write.mode("overwrite").parquet(staging.toString)
+    val read = schemaDdl.fold(spark.read)(spark.read.schema(_)).parquet(tablePath)
+    rewrite(read).write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(staging.toString)
     // carry hidden metadata children across the swap: Spark data readers
     // ignore _/.-prefixed paths, but a streaming checkpoint may live
     // INSIDE the table dir and deleting it would reset the stream's

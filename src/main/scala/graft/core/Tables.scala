@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -14,6 +16,17 @@ object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Read every fixture table once, so timed queries do not pay
+    * first-touch file-system and footer I/O. A missing or unreadable table
+    * fails with its path. */
+  def warm(spark: SparkSession, sfDir: String): Unit = all.foreach { t =>
+    val path = s"$sfDir/$t.parquet"
+    try spark.read.parquet(path).foreach(_ => ())
+    catch { case NonFatal(e) =>
+      throw new IllegalArgumentException(s"fixture table $path is unreadable: ${e.getMessage}", e)
+    }
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

@@ -127,7 +127,7 @@ object DedupIndex {
       val meta = idx.where(col(idName).isNull).distinct()
       idx.where(col(idName).isNotNull)
         .repartition(
-          Compaction.sizedWidth(spark, idx, "graft.dedup.sigsPartitionBytes"),
+          Compaction.sizedWidth(spark, idx),
           coalesce(col("band"), lit(-1)),
           coalesce(col("band_hash"), pmod(xxhash64(col(idName)), lit(1000000L))))
         .sortWithinPartitions("band", "band_hash")
@@ -240,8 +240,7 @@ object DedupIndex {
     // overestimate toward MORE, smaller files; compactIndex re-sizes by
     // the real on-disk table. The old staged path's exact sizing is not
     // worth a full extra write+read of the signatures.
-    val width = Compaction.sizedWidth(session, docs,
-      "graft.dedup.sigsPartitionBytes")
+    val width = Compaction.sizedWidth(session, docs)
     exploded.unionByName(metaRow)
       // bucket-keyed distribution + bucket-sorted files (the BM25
       // postings pattern): each partition's file carries contiguous

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` payloads
-  * with typed metadata, plus the decode/feature/frame-sample stages a
+  * with typed metadata, plus the decode and feature stages a
   * training pipeline runs over them.
   *
   * REAL decodes (no external dependency needed): PPM P6 (`decodePpmJvm`,
@@ -71,32 +71,6 @@ object Multimodal {
         }
       }
       .toDF("doc_id", "features", "batch_size")
-  }
-
-  /** Resize stage (image-analog): deterministically downsample the payload
-    * to `targetBytes` by stride sampling — the plumbing a real bilinear/
-    * audio-resample kernel plugs into (same batched mapPartitions shape as
-    * [[decodeBatched]]).
-    */
-  def resizeBatched(df: DataFrame, targetBytes: Int, batchSize: Int = 64): DataFrame = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val sess = df.sparkSession
-    import sess.implicits._
-    df.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val resized =
-              if (bytes.isEmpty) Array.empty[Byte]
-              else Array.tabulate(math.min(targetBytes, bytes.length)) { i =>
-                bytes((i.toLong * bytes.length / math.min(targetBytes, bytes.length)).toInt)
-              }
-            (id, resized, resized.length)
-          }
-        }
-      }
-      .toDF("doc_id", "resized", "n_bytes_out")
   }
 
   /** STUB decoder (JVM side): the same md5-60-derived features as
@@ -409,17 +383,5 @@ object Multimodal {
       }
       .toDF("doc_id", "ok", "n_channels", "sample_rate", "bits", "n_frames",
         "mean_amp", "ms_amp", "peak")
-  }
-
-  /** Frame sampling for a chunked (video-like) payload: take every `stride`-th
-    * fixed-size chunk. Binary slicing via substr — no UDF, no decode.
-    */
-  def sampleFrames(df: DataFrame, chunkBytes: Int, stride: Int): DataFrame = {
-    val nChunks = ceil(octet_length(col("payload")).cast("double") / chunkBytes).cast("int")
-    val idxs = filter(sequence(lit(0), greatest(nChunks - 1, lit(0))),
-      i => i % stride === 0)
-    df.withColumn("frames",
-      transform(idxs, i => col("payload").substr((i * chunkBytes + 1).cast("int"), lit(chunkBytes))))
-      .withColumn("n_frames", size(col("frames")).cast("long"))
   }
 }

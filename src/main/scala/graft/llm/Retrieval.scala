@@ -215,7 +215,7 @@ object Retrieval {
     // the pre-cache optimized plan on `agg`'s own QueryExecution, so only a
     // re-derived frame sees the materialized InMemoryRelation's real stats
     // (for the staged build path this is the identity — same parquet scan)
-    val nParts = postingsWidth(agg.sparkSession,
+    val nParts = graft.core.Compaction.sizedWidth(agg.sparkSession,
       agg.select(agg.columns.map(col).toSeq: _*))
     val postings = agg.where(col("term").isNotNull)
       // term-keyed distribution + term-sorted files: each term's postings
@@ -248,19 +248,6 @@ object Retrieval {
       java.util.Collections.singletonList(row), schema)
   }
 
-  /** Term-shuffle width for a postings-volume-sized frame: targets
-    * ~64 MB of postings per partition (`graft.retrieval
-    * .postingsPartitionBytes`) instead of the session default — a fixed
-    * 32-partition shuffle made the sf10 postings sort spill (SCALING.md
-    * round-14: wall exponent 1.41 with state exactly linear); at 100 TB
-    * it would be a wall. `sized` must scan real files (a scratch stage or
-    * the live index) so the optimizer stats are file sizes, not guesses.
-    */
-  private def postingsWidth(session: org.apache.spark.sql.SparkSession,
-                            sized: DataFrame): Int =
-    graft.core.Compaction.sizedWidth(session, sized,
-      "graft.retrieval.postingsPartitionBytes")
-
   /** Fold micro-batch accumulation back into the built shape: a long
     * appending stream leaves one stats marker row and a few small posting
     * files per batch; thousands of tiny files erode the query-time
@@ -281,7 +268,7 @@ object Retrieval {
         s"not a bm25 postings table (columns ${idx.columns.mkString(", ")})")
       val idName = others.head
       val postings = idx.where(col("term").isNotNull)
-        .repartition(postingsWidth(spark, idx), col("term"))
+        .repartition(graft.core.Compaction.sizedWidth(spark, idx), col("term"))
         .sortWithinPartitions("term")
         .select(col(idName), col("dl"), col("term"), col("tf"))
       // marker fold to the driver (null-count-pruned scan of the few

@@ -174,10 +174,11 @@ object MdioDataset {
     * sortDims) at ~`targetBytesPerFile` files: row-identical, recorded DDL
     * unchanged, row-group pruning restored.
     *
-    * The rewrite lands in a staging dir and swaps in via delete + rename, so
-    * it is safe to run between stream triggers (the sink only writes during
-    * a trigger; a reader that opened mid-swap retries). Returns the parquet
-    * file counts (before, after).
+    * The rewrite is [[graft.core.Compaction.rewriteInPlace]]'s: it lands in
+    * a staging dir and swaps in via delete + rename, so it is safe to run
+    * between stream triggers (the sink only writes during a trigger; a
+    * reader that opened mid-swap retries). Returns the parquet file counts
+    * (before, after).
     */
   def compact(spark: SparkSession, path: String,
               targetBytesPerFile: Long = 128L * 1024 * 1024): (Int, Int) = {
@@ -185,35 +186,15 @@ object MdioDataset {
       throw new IllegalArgumentException(s"no MDIO sidecar at ${sidecarPath(path)}"))
     val layout = schema.layout.getOrElse(throw new LayoutMismatchError(
       s"compact requires a store with a recorded layout at $path"))
-    val data = new Path(dataPath(path))
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetCount(p: Path): (Int, Long) = {
-      val it = fs.listFiles(p, true)
-      var n = 0; var bytes = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) { n += 1; bytes += f.getLen }
-      }
-      (n, bytes)
-    }
-    val (nBefore, totalBytes) = parquetCount(data)
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytesPerFile).toInt)
-    val df = open(spark, path).df
-    val cluster = layout.sortDims.map(col)
-    val out =
+    graft.core.Compaction.rewriteInPlace(spark, dataPath(path), layout.partitionCols,
+        layout.sparkSchemaDdl) { df =>
+      // a file scan's size statistic is its data files' total bytes
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
+      val cluster = layout.sortDims.map(col)
       if (cluster.isEmpty) df.repartition(nOut)
       else df.repartitionByRange(nOut, cluster: _*).sortWithinPartitions(cluster: _*)
-    val staging = new Path(s"$path/.data_compacting")
-    fs.delete(staging, true)
-    val base = out.write.mode(SaveMode.Overwrite)
-    val writer =
-      if (layout.partitionCols.isEmpty) base
-      else base.partitionBy(layout.partitionCols: _*)
-    writer.parquet(staging.toString)
-    fs.delete(data, true)
-    if (!fs.rename(staging, data))
-      throw new IllegalStateException(s"compact: swap $staging -> $data failed")
-    (nBefore, parquetCount(data)._1)
+    }
   }
 
   /** S7: MDIO→MDIO copy, with optional column pruning (headers/traces);

@@ -2,6 +2,11 @@ package graft.tools
 
 import java.lang.management.ManagementFactory
 
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+
+import graft.core.{JobRecord, JobRecorder}
+
 /** Scaling-measurement main behind SCALING.md: times registered queries
   * cold + warm on SPARK_GRAFT_SF_DIR and records the driver-JVM heap the
   * query leaves retained (used heap after a post-query `System.gc()`). Two
@@ -13,7 +18,13 @@ import java.lang.management.ManagementFactory
   * The session is [[graft.core.GraftSession]]'s (the benchmarked engine);
   * experiment confs ride in through `SPARK_GRAFT_CONF="k1=v1,k2=v2"`.
   * Output: one JSON line per query on stdout, and the full array at
-  * SPARK_GRAFT_SCALE_OUT (default scale_out.json).
+  * SPARK_GRAFT_SCALE_OUT (default scale_out.json). Each line holds the
+  * cold and warm seconds, the rows, the retained driver heap, the state
+  * peaks, the memory and disk spill of all the query's runs, and
+  * `jobs_cold` / `jobs_warm`: every job of the cold run and of the median
+  * warm run, in start order, as `{"desc": label or call site, "s": wall
+  * seconds}` ([[graft.core.JobRecord]]) — where a query's seconds go.
+  * A query that fails reads -1 with empty job lists.
   */
 object Scale {
   /** The measured set: the most expensive query per family, biased toward
@@ -73,6 +84,14 @@ object Scale {
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
   }
 
+  /** One run's jobs as a JSON list; `[]` when the run did not happen. */
+  private def jobsList(run: Option[(Double, Long, JobRecord)]): String =
+    JsonMethods.compact(JsonMethods.render(JArray(run.toList.flatMap { case (_, _, r) =>
+      r.descriptions.zip(r.seconds).map { case (d, sec) =>
+        JObject("desc" -> JString(d), "s" -> JDouble(math.round(sec * 1e3) / 1e3))
+      }
+    })))
+
   def main(args: Array[String]): Unit = {
     val specs = (if (args.nonEmpty) args.toSeq else DefaultSet).map(graft.SparkEntry.spec)
     val repeats = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPEATS", "1").toInt
@@ -81,37 +100,18 @@ object Scale {
     val cpus = graft.core.GraftSession.cores
     val spark = graft.core.GraftSession.build("graft-scale")
 
-    graft.core.Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").foreach(_ => ())
-      catch { case _: Throwable => () }
-    }
+    graft.core.Tables.warm(spark, sfDir)
 
     // state-store observability: the limiting metric for stream-forever
     // queries is STATE size, not wall time — capture each run's
     // stateOperators peaks (rows held, memory) alongside the timings
     val stateListener = graft.streaming.StateMetrics.attach(spark)
-    // spill observability (guide §5): a change that trades shuffle for
-    // per-task memory (SHJ preference, one-pass aggregates) must prove it
-    // does not start spilling at scale — accumulate task-level
-    // memory/disk spill bytes, drained per query
-    val spillMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled): Unit
-          spillDisk.addAndGet(m.diskBytesSpilled): Unit
-        }
-      }
-    })
     val lines = specs.map { q =>
       val name = q.name
-      val (spillMem0, spillDisk0) = (spillMem.get(), spillDisk.get())
-      def once(): (Double, Long) = {
+      def once(): (Double, Long, JobRecord) = {
         val t0 = System.nanoTime()
-        val n = graft.Bench.fullCount(q.run(spark, sfDir))
-        ((System.nanoTime() - t0) / 1e9, n)
+        val (n, record) = JobRecorder.record(spark)(graft.Bench.fullCount(q.run(spark, sfDir)))
+        ((System.nanoTime() - t0) / 1e9, n, record)
       }
       stateListener.drain()
       // SPARK_GRAFT_SCALE_REPEATS > 1 → warm_s is the MEDIAN of N warm
@@ -119,33 +119,37 @@ object Scale {
       // variance shifts one-decade exponents by ±0.2, so decision-grade
       // exponent sweeps need the repeat protocol (cold stays single-run
       // by nature — there is only one first execution)
-      val (cold, rows, warm, warmSpread, mb) =
+      val (cold, warms, mb) =
         graft.core.TempDirs.releasingScratch(spark, s"[scale] $name") {
-          val (cold, rows) =
-            try once() catch { case e: Throwable =>
+          val cold =
+            try Some(once()) catch { case e: Throwable =>
               System.err.println(s"[scale] $name FAILED: ${e.getMessage}")
-              (-1.0, -1L)
+              None
             }
-          val warms = if (cold >= 0) (1 to repeats).map(_ => once()._1) else Seq(-1.0)
-          val warm = warms.sorted.apply(warms.size / 2)
-          val warmSpread = if (warms.size > 1) warms.max - warms.min else 0.0
-          (cold, rows, warm, warmSpread, retainedHeapMb())
+          val warms = if (cold.nonEmpty) (1 to repeats).map(_ => once()).sortBy(_._1) else Nil
+          (cold, warms, retainedHeapMb())
         }
-      // listener events are async; let the final progress land before
-      // draining
-      Thread.sleep(200)
+      // the recorder drained the listener bus, streams queue included, so
+      // the final state progress has landed
       val (stRows, stMem) = stateListener.drain()
-      val spreadJson =
-        if (repeats > 1) f""","warm_spread_s":$warmSpread%.3f,"warm_runs":$repeats""" else ""
-      // spill deltas cover EVERY run of this query (cold + warms); state
-      // and spill fields are written even when zero
-      val (spMem, spDisk) =
-        (spillMem.get() - spillMem0, spillDisk.get() - spillDisk0)
+      val warm = if (warms.isEmpty) None else Some(warms(warms.size / 2))
+      val spreadJson = if (repeats > 1) {
+        val warmSpread = if (warms.size > 1) warms.last._1 - warms.head._1 else 0.0
+        f""","warm_spread_s":$warmSpread%.3f,"warm_runs":$repeats"""
+      } else ""
+      // spill (guide §5): a change that trades shuffle for per-task memory
+      // (SHJ preference, one-pass aggregates) must prove it does not start
+      // spilling at scale. It covers EVERY run of this query (cold +
+      // warms); state and spill fields are written even when zero
+      val records = (cold ++ warms).map(_._3)
       val stateJson =
         f""","state_rows_total":$stRows,"state_mem_mb":${stMem / 1e6}%.1f"""
-      val spillJson =
-        f""","spill_mem_mb":${spMem / 1e6}%.1f,"spill_disk_mb":${spDisk / 1e6}%.1f"""
-      val line = f"""{"q":"$name","cold_s":$cold%.3f,"warm_s":$warm%.3f,"rows":$rows,"driver_retained_mb":$mb%.0f$spreadJson$stateJson$spillJson}"""
+      val spillJson = f""","spill_mem_mb":${records.map(_.memorySpillBytes).sum / 1e6}%.1f""" +
+        f""","spill_disk_mb":${records.map(_.diskSpillBytes).sum / 1e6}%.1f"""
+      val jobsJson = s""","jobs_cold":${jobsList(cold)},"jobs_warm":${jobsList(warm)}"""
+      val line = f"""{"q":"$name","cold_s":${cold.fold(-1.0)(_._1)}%.3f,""" +
+        f""""warm_s":${warm.fold(-1.0)(_._1)}%.3f,"rows":${cold.fold(-1L)(_._2)},""" +
+        f""""driver_retained_mb":$mb%.0f$spreadJson$stateJson$spillJson$jobsJson}"""
       println(line)
       line
     }

@@ -42,4 +42,11 @@ class TablesSpec extends SparkSpec {
     val secs = ev.orderBy("event_id").select(col("ts").cast("long")).as[Long].collect()
     assert(secs.sameElements(Array(1704067230L, 1704075000L)))
   }
+
+  test("warm fails with the path of a missing fixture table") {
+    val dir = java.nio.file.Files.createTempDirectory("tables_warm").toString
+    Seq(1L).toDF("r_regionkey").write.parquet(s"$dir/region.parquet")
+    val e = intercept[IllegalArgumentException](Tables.warm(spark, dir))
+    assert(e.getMessage.contains(s"$dir/nation.parquet"), e.getMessage)
+  }
 }

@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FileOrderedScan
 
 import graft.SparkSpec
+import graft.core.JobRecorder
 import graft.ingestion.{GridOverrides, IngestPipeline}
 import graft.schema.TemplateRegistry
 import graft.sources.SegyRead
@@ -158,7 +159,7 @@ class ExportOrderSpec extends SparkSpec {
         orderKeys = dims, samplesCol = "samples", nSamples = wide,
         sampleInterval = 2000, textHeader = text,
         columns = Seq("samples" -> col("amplitude").cast("array<float>")))
-    val (arm, record) = recordJobs(export(opened, s"$dir/store.sgy"))
+    val (arm, record) = JobRecorder.record(spark)(export(opened, s"$dir/store.sgy"))
     assert(arm == "store order")
     assert(record.tasks.head >= 3, s"the key job ran ${record.tasks.head} tasks")
     assert(export(opened.copy(df = opened.df.where(lit(true))), s"$dir/sort.sgy") ==

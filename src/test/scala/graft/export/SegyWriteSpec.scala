@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.JobRecorder
 import graft.sources.SegyRead.StandardFields.{Crossline, Inline}
 
 class SegyWriteSpec extends SparkSpec {
@@ -78,7 +79,7 @@ class SegyWriteSpec extends SparkSpec {
   test("a fixed-width export persists nothing, with or without a shuffle") {
     val text = SegyHeaders.sanitizeTextHeader(Seq("C 1 NO CACHE"))
     val dir = Files.createTempDirectory("segynocache").toString
-    val record = recordJobs {
+    val record = JobRecorder.record(spark) {
       SegyExport.writeSegy(
         serialize(rows.toDF("il", "xl", "samples").orderBy("il", "xl")),
         s"$dir/sorted.sgy", text, binaryHeader)
@@ -93,7 +94,7 @@ class SegyWriteSpec extends SparkSpec {
 
   test("a 400-byte all-zero binary header is rejected before any job runs") {
     val out = Files.createTempDirectory("segyzero").toString + "/zero.sgy"
-    val jobs = recordJobs {
+    val jobs = JobRecorder.record(spark) {
       val e = intercept[IllegalArgumentException] {
         SegyExport.writeSegy(serialize(rows.toDF("il", "xl", "samples")), out,
           SegyHeaders.sanitizeTextHeader(Seq("C 1 ZERO")), new Array[Byte](400))
@@ -154,7 +155,7 @@ class SegyWriteSpec extends SparkSpec {
       .parallelize(rows.sortBy(r => (r._1, r._2)), 3).toDF("il", "xl", "samples"))
     val counts = plain.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
     SegyExport.writeSegy(plain, s"$dir/counted.sgy", text, binaryHeader)
-    val jobs = recordJobs {
+    val jobs = JobRecorder.record(spark) {
       SegyExport.writeSegy(plain, s"$dir/known.sgy", text, binaryHeader,
         knownCounts = Some(counts))
     }._2.jobs

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions.col
 
-import graft.{JobRecord, SparkSpec}
+import graft.SparkSpec
+import graft.core.{JobRecord, JobRecorder}
 import graft.`export`.SegyExport
 import graft.operators.Selection
 import graft.storage.MdioDataset
@@ -30,7 +31,7 @@ class EntryPointJobBudgetSpec extends SparkSpec {
   private lazy val (store: String, postStackImport: JobRecord) = {
     val dir = tmp()
     ImportFixtures.writePostStack(spark, s"$dir/in.sgy", nIl, nXl, nSamples)
-    val fp = recordJobs {
+    val fp = JobRecorder.record(spark) {
       assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", s"$dir/in.mdio") ++
         ImportFixtures.PostStackArgs, spark) == 0)
     }._2
@@ -78,7 +79,7 @@ class EntryPointJobBudgetSpec extends SparkSpec {
     val gNSamples = 500
     val n = ImportFixtures.writeGathers(spark, s"$dir/in.sgy", nSamples = gNSamples)
     val path = s"$dir/in.mdio"
-    val fp = recordJobs {
+    val fp = JobRecorder.record(spark) {
       assert(Cli.run(Seq("segy", "import", s"$dir/in.sgy", path) ++
         ImportFixtures.GathersArgs, spark) == 0)
     }._2
@@ -101,7 +102,7 @@ class EntryPointJobBudgetSpec extends SparkSpec {
   test("a 2-D isel box plus its collect runs one job per dim and one for " +
     "the result, with no shuffle") {
     val handle = graft.Mdio.openMdio(spark, store)
-    val (rows, fp) = recordJobs {
+    val (rows, fp) = JobRecorder.record(spark) {
       handle.isel("inline" -> Selection.ISlice(1, 11),
           "crossline" -> Selection.ISlice(2, 12))
         .select("inline", "crossline", "amplitude").collect().length
@@ -117,7 +118,7 @@ class EntryPointJobBudgetSpec extends SparkSpec {
   private def cliExport(mdio: String): (String, JobRecord, String) = {
     val out = Files.createTempDirectory("jobbudget").toString + "/out.sgy"
     val stdout = new java.io.ByteArrayOutputStream()
-    val record = recordJobs {
+    val record = JobRecorder.record(spark) {
       Console.withOut(stdout) {
         assert(Cli.run(Seq("segy", "export", mdio, out), spark) == 0)
       }

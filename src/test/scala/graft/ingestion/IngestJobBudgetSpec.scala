@@ -1,6 +1,7 @@
 package graft.ingestion
 
 import graft.SparkSpec
+import graft.core.JobRecorder
 
 /** Plan-shape budget for the end-to-end SEG-Y ingest composition
   * (`q_segy_file_ingest`): the round-10 audit found 29 driver-sequential
@@ -16,7 +17,7 @@ import graft.SparkSpec
 class IngestJobBudgetSpec extends SparkSpec {
 
   test("q_segy_file_ingest submits a bounded, data-size-independent job count") {
-    val jobs = recordJobs {
+    val jobs = JobRecorder.record(spark) {
       graft.SparkEntry.queries("q_segy_file_ingest")(spark, "/root/testdata/sf0.001")
         .count()
     }._2.jobs

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.JobRecorder
 import graft.schema.TemplateRegistry
 import graft.storage.MdioDataset
 import graft.tools.Cli
@@ -81,8 +82,8 @@ class ShotWrapIngestSpec extends SparkSpec {
     }
     val traces = rows.toDF("receiver", "shot_line", "gun", "shot_point", "ord",
       "group_coord_x", "source_coord_x", "amplitude")
-    val ((r, path), record) = recordJobs(ingest(traces, "ObnReceiverGathers3D",
-      GridOverrides(calculateShotIndex = true)))
+    val ((r, path), record) = JobRecorder.record(spark)(
+      ingest(traces, "ObnReceiverGathers3D", GridOverrides(calculateShotIndex = true)))
     val jobs = record.descriptions
     // CalculateShotIndex always dense-ranks, so it runs no gun detection:
     // QC 6, store write 4, dim tables 5, coordinate tables 6

@@ -426,16 +426,6 @@ class MultimodalSpec extends SparkSpec {
     assert(feats(0) == feats(1) && feats(0) != feats(2))
     assert(feats.flatten.forall(v => v >= -1.0 && v <= 1.0))
   }
-
-  test("sampleFrames takes every stride-th chunk") {
-    val text = "abcdefghij" // 10 bytes, chunk 2 → 5 chunks, stride 2 → chunks 0,2,4
-    val df = Seq(Tuple1(text)).toDF("text")
-    val r = Multimodal.sampleFrames(Multimodal.attachPayload(df), chunkBytes = 2, stride = 2)
-      .select("n_frames", "frames").collect().head
-    assert(r.getAs[Long]("n_frames") == 3L)
-    val frames = r.getSeq[Array[Byte]](r.fieldIndex("frames")).map(new String(_))
-    assert(frames == Seq("ab", "ef", "ij"))
-  }
 }
 
 class BatchDecodeSpec extends graft.SparkSpec {
@@ -602,25 +592,12 @@ class BatchDecodeSpec extends graft.SparkSpec {
 
 class TokenResizeSpec extends graft.SparkSpec {
   import spark.implicits._
-  import graft.llm.{Multimodal, TextAnalysis}
-  import org.apache.spark.sql.functions._
 
   test("bpeish tokens split contractions, numbers and punctuation") {
     val df = Seq((1L, "The fox's 42 jumps!")).toDF("doc_id", "text")
     val r = TextAnalysis.tokenCounts(df).collect().head
     assert(r.getAs[Long]("n_ws_tokens") == 4L)
     assert(r.getAs[Long]("n_bpeish") == 6L) // The| fox|'s| 42| jumps|!
-  }
-
-  test("resizeBatched stride-samples payloads to the target size") {
-    val df = Multimodal.attachPayload(
-      Seq((1L, "abcdefghij"), (2L, "xy")).toDF("doc_id", "text"))
-    val out = Multimodal.resizeBatched(df, targetBytes = 5)
-      .select("doc_id", "resized", "n_bytes_out")
-      .as[(Long, Array[Byte], Int)].collect()
-      .map { case (id, b, n) => id -> ((new String(b), n)) }.toMap
-    assert(out(1L) == ("aceg" + "i", 5) || out(1L)._2 == 5) // 5 sampled bytes
-    assert(out(2L)._2 == 2) // shorter payloads pass through
   }
 }
 

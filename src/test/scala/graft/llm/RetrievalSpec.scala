@@ -225,32 +225,14 @@ class RetrievalSpec extends SparkSpec {
     def scratchDirs() = Option(tmp.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("graft_scratch_bm25_widx_")).toSet
     val before = scratchDirs()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Retrieval.appendToIndex(docs.where($"doc_id" > 3), path)
-      // listener events are async: poll until the count is stable
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        if (jobs.get == last) stable += 1 else { stable = 0; last = jobs.get }
-      }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-    assert(jobs.get == 2,
-      s"append must be one materialize job + one write job, saw ${jobs.get}")
+    val jobs =
+      try graft.core.JobRecorder.record(spark)(
+        Retrieval.appendToIndex(docs.where($"doc_id" > 3), path))._2.jobs
+      finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    assert(jobs == 2,
+      s"append must be one materialize job + one write job, saw $jobs")
     assert(scratchDirs() == before,
       "the append path must not stage to scratch parquet")
     assertNoLingeringCache() // the append barrier cache must release on return

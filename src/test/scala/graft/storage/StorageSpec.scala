@@ -85,6 +85,30 @@ class MdioDatasetSpec extends SparkSpec {
     assert(ds.schema.layout.exists(_.partitionCols == Seq("il")))
   }
 
+  test("compact keeps a partitioned store's rows, directories and layout") {
+    val path = tmp()
+    // string partition values that type inference would read as numbers
+    val df = sampleDf.withColumn("blk", format_string("%02d", col("il")))
+    MdioDataset.write(df, path, sampleSchema, sortDims = Seq("il", "xl"),
+      partitionDims = Seq("blk"))
+    (1 to 3).foreach(_ => MdioDataset.write(df, path, sampleSchema, MdioDataset.WriteMode.A))
+    def rows() = MdioDataset.open(spark, path).df
+      .select("blk", "il", "xl", "amplitude").as[(String, Int, Int, Double)]
+      .collect().toSeq.sorted
+    def dirs() = new java.io.File(s"$path/data").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    val (rowsBefore, layoutBefore) =
+      (rows(), MdioDataset.readSidecar(spark, path).flatMap(_.layout))
+    val (nBefore, nAfter) = MdioDataset.compact(spark, path)
+    assert(nBefore >= 4 && nAfter == 2, s"files $nBefore -> $nAfter")
+    assert(rows() == rowsBefore)
+    assert(rowsBefore.size == 16 && rowsBefore.head._1 == "01")
+    assert(dirs() == Set("blk=01", "blk=02"), dirs())
+    assert(MdioDataset.readSidecar(spark, path).flatMap(_.layout) == layoutBefore)
+    assert(layoutBefore.exists(_.partitionCols == Seq("blk")))
+    assert(!new java.io.File(s"$path/.data_compacting").exists)
+  }
+
   test("r+ on a flat store and mismatched append layouts are rejected") {
     val path = tmp()
     MdioDataset.write(sampleDf, path, sampleSchema) // no sortDims → flat
