@@ -35,6 +35,21 @@ object Bench {
     */
   def fullCount(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
+
+  /** Run each warm-up query once, untimed. A failing one fails the run
+    * with its name, as [[graft.core.Tables.warm]] does for a fixture
+    * table: skipped, it would leave the sweep's first queries cold with
+    * nothing in the record to say so. */
+  def warmUp(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+             queries: Seq[graft.queries.QuerySpec]): Unit =
+    queries.foreach { q =>
+      try { q.run(spark, sfDir).count(); () }
+      catch { case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(
+          s"warm-up query ${q.name} failed: ${e.getMessage}", e)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     // every query name resolves before the session starts: an unknown one
     // fails here by name instead of silently dropping out of the record
@@ -70,9 +85,7 @@ object Bench {
     // first query look 2× its steady-state cost). Four untimed
     // representatives warm the aggregate, kernel-expression,
     // parquet-write and generate+window+fold paths.
-    warmups.foreach { q =>
-      try { q.run(spark, sfDir).count(); () } catch { case _: Throwable => () }
-    }
+    warmUp(spark, sfDir, warmups)
 
     // Box-health controls: a bench total is only comparable across rounds
     // if the box was equally healthy both days — two consecutive closing
@@ -88,8 +101,11 @@ object Bench {
       val secs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         try { fullCount(q.run(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 } // a broken control reads -1,
-                                            // never kills the record
+        catch { case e: Throwable =>
+          // a broken control reads -1, never kills the record
+          System.err.println(s"[bench] control ${q.name} FAILED: ${e.getMessage}")
+          -1.0
+        }
       }.sorted
       q.name -> secs(1)
     }

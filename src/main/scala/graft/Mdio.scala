@@ -159,23 +159,14 @@ object Mdio {
     }
   }
 
-  /** O1: materialize `fast_<dim>` clustered (optionally quantized) copies
-    * and register them so [[graft.plans.AccessPatternRule]] swaps scans. */
+  /** O1: write a `fast_<dim>` clustered copy of the store per dim, exact
+    * at quality 0 and quantized to quality × sidecar-std otherwise
+    * ([[graft.operators.AccessPatterns.optimizeStore]]). Read a copy by
+    * name ([[graft.operators.AccessPatterns.resolve]]); the store's own
+    * scan keeps reading its exact data. Returns the tolerance. */
   def optimizeAccessPatterns(handle: MdioDatasetHandle, dims: Seq[String],
-                             variable: String, quality: Double = 0.0): Double = {
-    val tol =
-      if (quality > 0.0)
-        graft.operators.AccessPatterns.optimizeStore(handle, dims, variable, quality)
-      else {
-        graft.operators.AccessPatterns.optimize(handle.df, handle.path, dims)
-        0.0
-      }
-    dims.foreach { d =>
-      graft.plans.AccessPatternCatalog.register(s"${handle.path}/data", d,
-        graft.operators.AccessPatterns.fastTablePath(handle.path, d))
-    }
-    tol
-  }
+                             variable: String, quality: Double = 0.0): Double =
+    graft.operators.AccessPatterns.optimizeStore(handle, dims, variable, quality)
 
   /** Maintenance: fold append-accumulated micro-batch files back into the
     * sidecar-recorded layout (row-identical; safe between stream triggers).

@@ -2,12 +2,12 @@ package graft
 
 import graft.functions.CrossHash
 
-/** DuckDB oracle-SQL generator for the sketch/ANN queries.
+/** DuckDB oracle-SQL generator for the sketch queries.
   *
   * Every hash these queries use is md5-60 ([[CrossHash]]), so the oracle can
-  * recompute the *identical* values: the permutation constants and the ±1
-  * hyperplane matrices are generated by the same fixed-seed code the Spark
-  * expressions use, and inlined here as SQL literals. Floating-point folds
+  * recompute the *identical* values: the permutation constants are generated
+  * by the same fixed-seed code the Spark expressions use, and inlined here
+  * as SQL literals. Floating-point folds
   * are written as `list_reduce((a, b) -> a + b)` — the same left-to-right
   * association Spark's `aggregate` performs, so doubles match bit-for-bit.
   */

@@ -113,38 +113,4 @@ object CrossHash {
     while (b < bits) { if (votes(b) > 0) fp |= (1L << b); b += 1 }
     fp
   }
-
-  /** Random-hyperplane ±1 sign matrix [table][bit][dim], fixed seed — the
-    * ANN LSH planes, identical in the Spark expression and the oracle SQL.
-    */
-  def planeSigns(tables: Int, bits: Int, dim: Int): Array[Array[Array[Double]]] = {
-    val next = lcg(0x9a57ee1a1a9e5L)
-    Array.tabulate(tables, bits, dim) { (_, _, _) =>
-      if ((next() >>> 17 & 1L) == 1L) 1.0 else -1.0
-    }
-  }
-
-  /** Hyperplane signature of a float vector: bit p set iff the dot product
-    * with plane p is positive. Double accumulation in array order — the same
-    * left fold the oracle's `list_reduce` performs.
-    */
-  def planeSig(v: Array[Float], planes: Array[Array[Double]]): Long = {
-    // a mis-specified dim would silently truncate the dot product, putting
-    // vectors in different buckets than the oracle and degrading recall —
-    // fail loudly instead
-    require(planes.isEmpty || planes(0).length == v.length,
-      s"hyperplane dim ${planes(0).length} != embedding dim ${v.length} — " +
-        "pass the embedding dimension explicitly (the hyperplane_sigs dim)")
-    var sig = 0L
-    var p = 0
-    while (p < planes.length) {
-      val pl = planes(p)
-      var acc = 0.0
-      var i = 0
-      while (i < pl.length) { acc += v(i).toDouble * pl(i); i += 1 }
-      if (acc > 0) sig |= (1L << p)
-      p += 1
-    }
-    sig
-  }
 }

@@ -57,11 +57,6 @@ object CrossHashExprs {
   def simhash(c: Column, bits: Int = 60): Column =
     ColumnBridge.column(SimhashExpr(ColumnBridge.expression(c), bits))
 
-  /** array<float> vector → array<long> of hyperplane LSH buckets, one per
-    * table (element t = table t's bucket for (bits, dim)). */
-  def planeSigs(c: Column, tables: Int, bits: Int, dim: Int): Column =
-    ColumnBridge.column(PlaneSigsExpr(ColumnBridge.expression(c), tables, bits, dim))
-
   /** Count of agreeing positions between two minhash signatures. */
   def sigAgree(a: Column, b: Column): Column =
     ColumnBridge.column(SigAgreeExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -351,53 +346,5 @@ final case class WinnowExpr(child: Expression, kChars: Int, window: Int)
   }
 
   override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
-    copy(child = newChild)
-}
-
-/** Hyperplane buckets for ALL `tables` LSH tables in one pass:
-  * `array<long>` with element t = table t's bucket. One kernel call per
-  * vector replaces a tables-way self-union of per-table expressions — the
-  * union shape scanned the input `tables` times per action (tables× the
-  * I/O at corpus scale) and, on a foreachBatch micro-batch, duplicated the
-  * upstream stateful-dedup subtree `tables` times inside ONE action
-  * (concurrent same-version state-store access — RocksDB state stores
-  * refuse it outright). The ±1 planes derive from (tables, bits, dim) via
-  * [[CrossHash.planeSigns]] — never serialized.
-  */
-final case class PlaneSigsExpr(child: Expression, tables: Int, bits: Int, dim: Int)
-    extends UnaryExpression with Serializable {
-  require(tables > 0, s"tables must be positive, got $tables")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hyperplane_sigs"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs array<float>, got $t")
-    }
-
-  @transient private lazy val planes: Array[Array[Array[Double]]] =
-    CrossHash.planeSigns(tables, bits, dim)
-
-  def kernel(in: ArrayData): ArrayData = {
-    val v = in.toFloatArray()
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) { out(t) = CrossHash.planeSig(v, planes(t)); t += 1 }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planesigsself", this, classOf[PlaneSigsExpr].getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ref.kernel($in);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PlaneSigsExpr =
     copy(child = newChild)
 }

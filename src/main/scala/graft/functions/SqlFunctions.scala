@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType, IntegerTy
   * }}}
   *
   * Shape parameters (n, k, bits, bins…) must be integer/double literals —
-  * they fix kernel constants (hash permutations, plane matrices, buffer
-  * sizes) at resolution time.
+  * they fix kernel constants (hash permutations, buffer sizes) at
+  * resolution time.
   */
 object SqlFunctions {
 
@@ -62,12 +62,6 @@ object SqlFunctions {
       require(args.length == 1 || args.length == 2, "simhash60(hashes[, bits])")
       SimhashExpr(args.head,
         if (args.length == 2) intArg(args(1), "simhash60", "bits") else 60)
-    },
-    reg("hyperplane_sigs", classOf[PlaneSigsExpr]) { args =>
-      require(args.length == 4, "hyperplane_sigs(vec, tables, bits, dim)")
-      PlaneSigsExpr(args.head, intArg(args(1), "hyperplane_sigs", "tables"),
-        intArg(args(2), "hyperplane_sigs", "bits"),
-        intArg(args(3), "hyperplane_sigs", "dim"))
     },
     reg("sig_agree", classOf[SigAgreeExpr]) { args =>
       require(args.length == 2, "sig_agree(sig_a, sig_b)")

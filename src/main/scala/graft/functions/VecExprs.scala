@@ -37,10 +37,9 @@ object VecExprs {
   }
 
   /** Fail-loud dimension check shared by the pairwise kernels. The HOF folds
-    * these kernels replaced returned NULL on mismatched lengths and
-    * [[CrossHash.planeSig]] throws — silently truncating to the shorter side
-    * would produce plausible-but-wrong similarities, so the kernels throw
-    * with the same policy as planeSig.
+    * these kernels replaced returned NULL on mismatched lengths — silently
+    * truncating to the shorter side would produce plausible-but-wrong
+    * similarities, so the kernels throw instead.
     */
   private[functions] def sameDim(op: String, a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements()

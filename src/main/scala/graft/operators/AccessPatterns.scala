@@ -11,20 +11,15 @@ import org.apache.spark.sql.functions._
   * access axis, optionally lossy-compressed with tolerance = quality × std.
   * In Spark the "rechunk" is a `repartitionByRange(dim) + sortWithinPartitions
   * (dim)` rewrite: the same rows, clustered so predicates on `dim` prune
-  * files via Parquet min/max stats — a materialized view, chosen per query by
-  * `resolve` (catalog-level selection; SURVEY §4 notes a Catalyst relation-
-  * swap Rule as the later upgrade).
+  * files via Parquet min/max stats. As in the reference, a reader picks a
+  * copy by name ([[resolve]] or [[fastTablePath]]); a store's own scan
+  * always reads its exact data.
   */
 object AccessPatterns {
 
   def fastTablePath(basePath: String, dim: String): String = s"$basePath/fast_$dim"
 
-  /** Materialize one clustering per requested dim. Callers that want the
-    * optimizer swap must re-register each fast table afterwards
-    * ([[graft.Mdio.optimizeAccessPatterns]] does) — registration is also
-    * what invalidates the rule's cached analyzed relation, so a rewrite
-    * without it would keep serving the previous file listing.
-    */
+  /** Materialize one clustering per requested dim under `basePath`. */
   def optimize(df: DataFrame, basePath: String, dims: Seq[String],
                partitions: Int = 0): Unit =
     dims.foreach { d =>
@@ -82,9 +77,8 @@ object AccessPatterns {
     *
     * By default the transient `_zkey` sort column is DROPPED before the
     * write (the projection after the sort keeps row order), so the layout
-    * is schema-identical to the base table and the optimizer's relation
-    * swap ([[graft.plans.AccessPatternRule]]) can serve it to unchanged
-    * queries; `keepKey = true` stores it for inspection.
+    * is schema-identical to the base table and a query written against the
+    * base reads it unchanged; `keepKey = true` stores it for inspection.
     */
   def optimizeZorder(df: DataFrame, basePath: String, dims: Seq[String],
                      bits: Int, partitions: Int = 0,
@@ -151,40 +145,43 @@ object AccessPatterns {
     quality * stats.std
   }
 
-  /** O1 with the lossy path wired in: materialize a `fast_<dim>` clustering
-    * of the store's data per requested dim, quantizing `variable` to
-    * tolerance = quality × sidecar-std, and record the Zfp tolerance in each
-    * fast copy's own sidecar (so a reader knows the copy is lossy and by how
-    * much — the reference stores the same in the ZFP codec config).
+  /** O1 on a store: write a `fast_<dim>` clustering of the store's data per
+    * requested dim through [[optimize]], each with its own sidecar. Quality 0
+    * copies the rows exactly. A positive quality quantizes `variable` to
+    * tolerance = quality × sidecar-std (element-wise for a trace array,
+    * keeping its element type) and records the Zfp tolerance in each copy's
+    * sidecar, so a reader knows the copy is lossy and by how much (the
+    * reference stores the same in the ZFP codec config). Returns the
+    * tolerance, 0 when lossless.
     */
   def optimizeStore(handle: graft.storage.MdioDatasetHandle, dims: Seq[String],
                     variable: String, quality: Double,
                     partitions: Int = 0): Double = {
-    import graft.schema.{Zfp, MdioSchema}
-    val tol = toleranceFor(handle, variable, quality)
-    val quantized = handle.df.withColumn(variable, quantize(col(variable), tol))
-    val spark = handle.df.sparkSession
-    dims.foreach { d =>
-      val n = if (partitions > 0) partitions
-        else spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val fastPath = fastTablePath(handle.path, d)
-      quantized.repartitionByRange(n, col(d))
-        .sortWithinPartitions(col(d))
-        .write.mode("overwrite")
-        .parquet(fastPath)
-      val fastSchema: MdioSchema = handle.schema.copy(
-        variables = handle.schema.variables.map(v =>
-          if (v.name == variable)
-            v.copy(compressor = Some(Zfp("fixed_accuracy", tolerance = Some(tol))))
-          else v))
-      graft.storage.MdioDataset.writeSidecar(spark, fastPath, fastSchema)
-    }
+    import graft.schema.Zfp
+    import org.apache.spark.sql.types.ArrayType
+    val lossy = quality > 0.0
+    val tol = if (lossy) toleranceFor(handle, variable, quality) else 0.0
+    val data =
+      if (!lossy) handle.df
+      else handle.df.withColumn(variable, handle.df.schema(variable).dataType match {
+        case ArrayType(et, _) => transform(col(variable), x => quantize(x, tol).cast(et))
+        case _ => quantize(col(variable), tol)
+      })
+    optimize(data, handle.path, dims, partitions)
+    val fastSchema =
+      if (!lossy) handle.schema
+      else handle.schema.copy(variables = handle.schema.variables.map(v =>
+        if (v.name == variable)
+          v.copy(compressor = Some(Zfp("fixed_accuracy", tolerance = Some(tol))))
+        else v))
+    dims.foreach(d => graft.storage.MdioDataset.writeSidecar(
+      handle.df.sparkSession, fastTablePath(handle.path, d), fastSchema))
     tol
   }
 
-  /** Pick the best materialization for a predicate dim: `fast_<dim>` when it
-    * exists, else the base table. Catalog-level resolve — the caller's query
-    * shape is unchanged either way.
+  /** Read the materialization for a predicate dim by name: `fast_<dim>`
+    * when it exists, else the base table. The caller's query shape is
+    * unchanged either way.
     */
   def resolve(spark: SparkSession, basePath: String, baseTable: String,
               predicateDim: String): DataFrame = {

@@ -132,8 +132,27 @@ object MdioDataset {
       if (layout.partitionCols.isEmpty) base
       else base.partitionBy(layout.partitionCols: _*)
     val writer = codec.fold(writer0)(c => writer0.option("compression", c))
+    removeDerived(df.sparkSession, path, mode)
     writer.parquet(dataPath(path))
     writeSidecar(df.sparkSession, path, schema.copy(layout = Some(layout)))
+  }
+
+  /** `dims/`, `coords/` and `fast_<dim>` copies are derived from the rows a
+    * write replaces or extends; left behind, they answer `isel` and
+    * [[graft.operators.AccessPatterns.resolve]] with the previous rows. The
+    * ingest writes its own after the data write. A `w-` write onto existing
+    * data fails, so it leaves that store's tables alone.
+    */
+  private def removeDerived(spark: SparkSession, path: String,
+                            mode: WriteMode.Value): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root) &&
+        !(mode == WriteMode.WMinus && fs.exists(new Path(dataPath(path)))))
+      fs.listStatus(root).map(_.getPath)
+        .filter(p => p.getName == "dims" || p.getName == "coords" ||
+          p.getName.startsWith("fast_"))
+        .foreach(fs.delete(_, true))
   }
 
   /** Write (or rewrite) the sidecar alone — used to patch post-write

@@ -29,9 +29,12 @@ class MdioFacadeSpec extends SparkSpec {
     val info = Mdio.info(spark, store).collect().head
     assert(info.getAs[Long]("inline_n") == 10L)
 
-    // access-pattern materialization registers with the optimizer catalog
+    // access-pattern materialization: a reader picks the copy by name
     Mdio.optimizeAccessPatterns(handle, Seq("inline"), "amplitude")
-    assert(graft.plans.AccessPatternCatalog.registered.nonEmpty)
+    val fast = graft.operators.AccessPatterns.resolve(spark, store, "data", "inline")
+    assert(fast.inputFiles.nonEmpty &&
+      fast.inputFiles.forall(_.contains("/fast_inline/")))
+    assert(fast.where(col("inline") === 12).count() == 10L)
 
     // masked export through the facade
     val out = Files.createTempDirectory("facade-out").toString + "/f.sgy"
@@ -63,7 +66,28 @@ class MdioFacadeSpec extends SparkSpec {
     assert(na < nb && na >= 1)
     assert(Mdio.openMdio(spark, copied).df.count() == 102L)
     assert(Mdio.openMdio(spark, copied).schema.layout == h.schema.layout)
-    graft.plans.AccessPatternCatalog.clear()
+  }
+
+  test("sel reads the store's exact data after a lossy optimizeAccessPatterns, " +
+       "with the SQL extensions installed") {
+    graft.functions.GraftSparkExtensions.install(spark)
+    val rows = for (il <- 10 until 20; xl <- 100 until 103)
+      yield (il, xl, il * 1000.0 + xl + 0.123)
+    val store = Files.createTempDirectory("facade-lossy").toString
+    Mdio.segyToMdio(spark, rows.toDF("inline", "crossline", "amplitude"),
+      TemplateRegistry.instance.get("PostStack3DTime"), GridOverrides(),
+      store, ordinal = Seq("inline", "crossline"), valueCol = "amplitude")
+    val tol = Mdio.optimizeAccessPatterns(Mdio.openMdio(spark, store),
+      Seq("inline"), "amplitude", quality = 1.0)
+    assert(tol > 0.0)
+    val got = Mdio.openMdio(spark, store)
+      .sel("inline" -> graft.operators.Selection.Point(12))
+      .select("amplitude").as[Double].collect().sorted.toSeq
+    assert(got == Seq(12100.123, 12101.123, 12102.123))
+    // the lossy copy is there, read by name
+    val fast = graft.operators.AccessPatterns.resolve(spark, store, "data", "inline")
+      .where(col("inline") === 12).select("amplitude").as[Double].collect()
+    assert(fast.length == 3 && !fast.contains(12100.123))
   }
 
   test("segyStandardToMdio ingests a real byte-stream file (the reference's " +

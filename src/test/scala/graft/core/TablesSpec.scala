@@ -49,4 +49,15 @@ class TablesSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](Tables.warm(spark, dir))
     assert(e.getMessage.contains(s"$dir/nation.parquet"), e.getMessage)
   }
+
+  test("Bench.warmUp fails with the name of a failing warm-up query") {
+    import graft.queries.QuerySpec
+    val dir = java.nio.file.Files.createTempDirectory("bench_warm").toString
+    val ok = QuerySpec("q_ok", (s, _) => s.range(3).toDF(), "SELECT 1")
+    val broken = QuerySpec("q_broken", (s, d) => Tables.lineitem(s, d), "SELECT 1")
+    graft.Bench.warmUp(spark, dir, Seq(ok))
+    val e = intercept[IllegalStateException](
+      graft.Bench.warmUp(spark, dir, Seq(ok, broken)))
+    assert(e.getMessage.startsWith("warm-up query q_broken failed: "), e.getMessage)
+  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftSparkExtensions
 import org.apache.spark.sql.functions._
 
 /** The SQL surface of the native kernels: pure-SQL sessions must compute
@@ -53,24 +52,6 @@ class SqlFunctionsSpec extends SparkSpec {
       .as[(Double, Double)].collect()
     assert(math.abs(rows(0)._1 - 1.0) < 1e-12 && math.abs(rows(0)._2 - 1.0) < 1e-12)
     assert(rows(1)._1 == 0.0 && rows(1)._2 == 0.0)
-  }
-
-  test("SQL hyperplane_sigs equals the Column API and the serial kernel " +
-      "per table") {
-    GraftSparkExtensions.install(spark)
-    val vecs = Seq((1L, Array.tabulate(8)(i => (i + 1) * 0.5f)),
-      (2L, Array.tabulate(8)(i => (3 - i).toFloat)))
-    vecs.toDF("vec_id", "v").createOrReplaceTempView("sqlfn_planes")
-    val viaSql = spark.sql(
-      "SELECT vec_id, hyperplane_sigs(v, 4, 6, 8) AS sigs FROM sqlfn_planes")
-      .as[(Long, Seq[Long])].collect().toMap
-    val viaApi = vecs.toDF("vec_id", "v")
-      .select(col("vec_id"), CrossHashExprs.planeSigs(col("v"), 4, 6, 8).as("sigs"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val planes = CrossHash.planeSigns(4, 6, 8)
-    val serial = vecs.map { case (id, v) =>
-      id -> (0 until 4).map(t => CrossHash.planeSig(v, planes(t))) }.toMap
-    assert(viaSql == viaApi && viaApi == serial)
   }
 
   test("SQL sig_agree / vec_l2sq equal the Column API") {

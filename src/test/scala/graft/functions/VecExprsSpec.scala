@@ -1,13 +1,12 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.plans.GraftSparkExtensions
 import org.apache.spark.sql.functions._
 
 /** The dense-vector kernels: value parity with the column formulas they
   * replaced, and the fail-loud dimension policy (mismatched lengths throw —
-  * the HOF folds returned NULL and `planeSig` throws; silently truncating
-  * to the shorter side would fabricate plausible-but-wrong similarities).
+  * the HOF folds returned NULL; silently truncating to the shorter side
+  * would fabricate plausible-but-wrong similarities).
   * Squared L2 has no Column wrapper; it is reached through its SQL name.
   */
 class VecExprsSpec extends SparkSpec {
@@ -31,7 +30,7 @@ class VecExprsSpec extends SparkSpec {
     assert(r(1).getDouble(2) == 9.0)
   }
 
-  test("mismatched dimensions fail loudly, like planeSig — never truncate") {
+  test("mismatched dimensions fail loudly — never truncate") {
     val bad = Seq((Array(1.0f, 2.0f), Array(1.0, 2.0, 3.0))).toDF("a", "b")
     for (k <- Seq(VecExprs.dot(col("a"), col("b")),
                   VecExprs.cosineSim(col("a"), col("b")),

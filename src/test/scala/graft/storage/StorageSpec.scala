@@ -58,11 +58,38 @@ class MdioDatasetSpec extends SparkSpec {
   test("write modes: w- fails on existing, a appends") {
     val path = tmp()
     MdioDataset.write(sampleDf, path, sampleSchema)
+    val dimTable = new java.io.File(path, "dims/il")
+    assert(dimTable.mkdirs())
     intercept[Exception] {
       MdioDataset.write(sampleDf, path, sampleSchema, MdioDataset.WriteMode.WMinus)
     }
+    assert(dimTable.isDirectory, "a refused w- leaves the store's tables alone")
     MdioDataset.write(sampleDf, path, sampleSchema, MdioDataset.WriteMode.A)
     assert(MdioDataset.open(spark, path).df.count() == 8)
+    assert(!new java.io.File(path, "dims").exists(), "an append drops stale dim tables")
+  }
+
+  test("a w rewrite drops the previous ingest's dim tables and fast copies") {
+    import graft.Mdio
+    val path = tmp()
+    def grid(ils: Range) = (for (il <- ils; xl <- 100 until 110)
+      yield (il, xl, il * 1000.0 + xl)).toDF("inline", "crossline", "amplitude")
+    Mdio.segyToMdio(spark, grid(10 until 20),
+      TemplateRegistry.instance.get("PostStack3DTime"),
+      graft.ingestion.GridOverrides(), path,
+      ordinal = Seq("inline", "crossline"), valueCol = "amplitude")
+    Mdio.optimizeAccessPatterns(Mdio.openMdio(spark, path), Seq("inline"), "amplitude")
+    val children = () => new java.io.File(path).list().toSet
+    assert(Set("dims", "fast_inline").subsetOf(children()))
+    Mdio.toMdio(grid(50 until 60), path, Mdio.openMdio(spark, path).schema,
+      MdioDataset.WriteMode.W)
+    assert(children().filter(c => c == "dims" || c == "coords" ||
+      c.startsWith("fast_")).isEmpty, children())
+    val first = Mdio.openMdio(spark, path).isel("inline" -> Selection.IPoint(0))
+    assert(first.select("inline").as[Int].collect().toSet == Set(50))
+    assert(first.count() == 10L)
+    assert(AccessPatterns.resolve(spark, path, "data", "inline")
+      .where(col("inline") < 50).count() == 0L)
   }
 
   test("w records layout; r+ replaces only the written region (S5)") {

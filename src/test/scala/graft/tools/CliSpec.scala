@@ -222,6 +222,40 @@ class CliSpec extends SparkSpec {
       legacyCols.mkString(","))
   }
 
+  test("segy import --lossless false keeps the store exact and writes a " +
+       "quantized fast_<dim0> copy with its Zfp tolerance") {
+    import graft.operators.AccessPatterns
+    val segy = writeFixture()
+    val store = Files.createTempDirectory("clilossy").toString + "/l.mdio"
+    assert(Cli.run(Seq("segy", "import", segy, store,
+      "--header-locations", "189,193", "--header-names", "inline,crossline",
+      "--lossless", "false", "--compression-tolerance", "0.5"), spark) == 0)
+    def samples(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Seq[Float]] =
+      df.select(col("inline").cast("long"), col("crossline").cast("long"),
+          col("amplitude")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Float](2)).toMap
+    val handle = graft.Mdio.openMdio(spark, store)
+    val base = samples(handle.df)
+    assert(base == Map(
+      (1L, 10L) -> Seq(1.5f, 2.5f), (1L, 11L) -> Seq(3.0f, 4.0f),
+      (2L, 10L) -> Seq(5.0f, 6.0f), (2L, 11L) -> Seq(7.5f, 8.5f),
+      (3L, 10L) -> Seq(9.0f, 10.0f), (3L, 11L) -> Seq(11.5f, 12.5f)))
+    val tol = AccessPatterns.toleranceFor(handle, "amplitude", 0.5)
+    val fastPath = AccessPatterns.fastTablePath(store, "inline")
+    val fastDf = spark.read.parquet(fastPath)
+    assert(fastDf.schema("amplitude").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
+    val fast = samples(fastDf)
+    assert(fast.keySet == base.keySet && fast != base)
+    for ((k, b) <- base; (x, q) <- b.zip(fast(k)))
+      assert(math.abs(x - q) <= tol + 1e-5, s"$k: $x -> $q (tolerance $tol)")
+    val sidecar = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(fastPath, ".mdio.json")), "UTF-8")
+    assert(graft.schema.SchemaJson.fromJson(sidecar).variable("amplitude")
+      .flatMap(_.compressor) ==
+      Some(graft.schema.Zfp("fixed_accuracy", tolerance = Some(tol))))
+  }
+
   test("segy import rejects malformed input with its cause and leaves no store") {
     val good = Files.readAllBytes(java.nio.file.Paths.get(writeFixture()))
     val dir = Files.createTempDirectory("climalformed").toString
